@@ -225,21 +225,33 @@ def widen_scan(df: DataFrame) -> DataFrame:
     return df
 
 
+# Node-count gate shared by the iterative graph loops (PageRank, k-core
+# and label propagation in plans/graph.py, connected components in
+# operators/components.py). Below it each round broadcasts the
+# node-cardinality table (16 bytes/row) onto stationary edges; past
+# ~5e7 nodes that broadcast blows the executor/driver memory budget, so
+# the co-partitioned sort-merge branch runs instead.
+GRAPH_BROADCAST_MAX_NODES = 50_000_000
+
+CKPT_SOURCE_MAX_BYTES = 2 * 1024**3  # ckpt_if_bounded's default gate
+
+
 @functools.lru_cache(maxsize=None)
 def _source_bytes(path: str) -> int:
     """On-disk bytes of one table source (file or directory of parts);
     cached per path for the process lifetime — it gates a plan-shape
-    decision, not a correctness one, so staleness is harmless."""
-    try:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-        return sum(
-            os.path.getsize(p)
-            for p in glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(p)
-        )
-    except OSError:
-        return 0
+    decision, not a correctness one, so staleness is harmless. A
+    missing path raises FileNotFoundError, which lru_cache does not
+    cache, so a source that lands later is measured then."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    if not os.path.isdir(path):
+        raise FileNotFoundError(path)
+    return sum(
+        os.path.getsize(p)
+        for p in glob.glob(os.path.join(path, "**", "*"), recursive=True)
+        if os.path.isfile(p)
+    )
 
 
 def ckpt_if_bounded(df: DataFrame, sf_dir: str, table: str = "documents") -> DataFrame:
@@ -254,15 +266,23 @@ def ckpt_if_bounded(df: DataFrame, sf_dir: str, table: str = "documents") -> Dat
     re-planning the explode once per consumer is the cheaper trade and
     the cluster-level answer is a maintained model table, not a
     checkpoint. The gate compares the source parquet's on-disk size
-    against ``SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES`` (default 2 GiB):
-    below it the cut is taken (every local/bench SF qualifies, so the
-    measured sharing wins stand), above it the frame is returned
-    unchanged. Results are identical either way — only the plan shape
-    differs."""
-    limit = int(
-        os.environ.get("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", str(2 * 1024**3))
-    )
-    if _source_bytes(f"{sf_dir}/{table}.parquet") <= limit:
+    against ``SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES`` (default 2 GiB; a
+    malformed value falls back to the default): below it the cut is
+    taken (every local/bench SF qualifies, so the measured sharing wins
+    stand), above it the frame is returned unchanged. An unreadable
+    source counts as 0 bytes. Results are identical either way — only
+    the plan shape differs."""
+    try:
+        limit = int(
+            os.environ.get("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", CKPT_SOURCE_MAX_BYTES)
+        )
+    except ValueError:
+        limit = CKPT_SOURCE_MAX_BYTES
+    try:
+        size = _source_bytes(f"{sf_dir}/{table}.parquet")
+    except OSError:
+        size = 0
+    if size <= limit:
         return df.localCheckpoint(eager=False)
     return df
 

@@ -32,20 +32,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..catalog import load_table
+from ..catalog import GRAPH_BROADCAST_MAX_NODES, load_table
 from ..functions.dedup_sql import duck_components_ctes
 from ..plans.registry import query
 
 MAX_ROUNDS = 10  # backstop; near-dup graphs converge in 2-4
 
-# Size gate for broadcasting the node-cardinality label table onto the
-# stationary edge partitions — the same Pregel-style optimization (and
-# the same threshold discipline) as plans/graph.PR_BROADCAST_MAX_NODES:
-# below the gate each round is broadcast-hash joins with ZERO edge
-# exchange; above it the co-partitioned shuffle form runs instead, with
-# edges hash-partitioned once and stationary thereafter.
-CC_BROADCAST_MAX_NODES = 50_000_000
+# Rounds are size-gated on catalog.GRAPH_BROADCAST_MAX_NODES, the gate
+# the plans/graph.py loops share.
 CC_SHUFFLE_PARTS = 32  # edge/label co-partitioning width, big branch
 
 
@@ -70,7 +66,19 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     Per-round plan is size-gated on node count: small graphs broadcast
     the label table onto the stationary checkpointed edges; big graphs
     fall back to edges hash-partitioned on the probe key once, labels
-    shuffling each round (the only side that must move)."""
+    shuffling each round (the only side that must move).
+
+    Ids must be integral: the fixpoint test sums labels as decimals, and
+    a string id would fail mid-loop under ANSI mode or, with ANSI off,
+    turn the sums null and stop the loop early. Other types raise
+    TypeError here, read off the schema before any job runs."""
+    for col in (src, dst):
+        dtype = edges.schema[col].dataType
+        if not isinstance(dtype, T.IntegralType):
+            raise TypeError(
+                f"connected_components: id column {col!r} is "
+                f"{dtype.simpleString()}; integral ids are required"
+            )
     sym = edges.selectExpr(f"{src} AS a", f"{dst} AS b").unionByName(
         edges.selectExpr(f"{dst} AS a", f"{src} AS b")
     )
@@ -90,7 +98,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
     ).collect()[0]
-    small = init["n"] <= CC_BROADCAST_MAX_NODES
+    small = init["n"] <= GRAPH_BROADCAST_MAX_NODES
     cur_sum = init["s"]
     sym = (
         sym.localCheckpoint(eager=False)  # built once; never moves again

@@ -207,7 +207,7 @@ def _duck_kmeans_oracle() -> str:
 # hash-checks always recomputes from the codebook either way.
 _CODEBOOK_CACHE: dict[tuple, list] = {}
 
-# Code-version component of the cross-process cache key (r13 advice —
+# Code-version component of the codebook scratch key (r13 advice —
 # mirrors IVF_INDEX_VERSION): bump whenever the Lloyd arithmetic
 # (_assign / _update / the _MEAN6 rounding) changes, or a new process
 # would silently read a stale pre-change codebook from /tmp for up to

@@ -1356,7 +1356,7 @@ IVF_COMPACT_VERSION = 1  # bump when the compaction staging changes
 def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> str:
     """(sf, mtime)-keyed COMPACTED copy of the incrementally maintained
     delta index: copy the published base+delta layout (maintenance must
-    never mutate a shared cross-process artifact in place — the real
+    never mutate a published artifact in place — the real
     rollout compacts during its single-writer window), then
     ``compact_partitions(max_files=1)`` merges exactly the fragmented
     cells. ``_pre_stats.json`` / ``_compact_manifest.json`` /

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import GRAPH_BROADCAST_MAX_NODES, load_table
 from .registry import query
 
 # --- market-basket brand affinity ------------------------------------------
@@ -158,14 +158,11 @@ PR_SCALE = 1_000_000_000
 PR_BASE = 150_000_000  # 0.15 * PR_SCALE
 PR_ITERS = 5
 
-# Broadcast boundary for the per-iteration rank attach: the rank table
-# is node-cardinality (16 bytes/row), so past ~5e7 nodes a broadcast
-# blows the executor/driver memory budget (the r5 judge's one "weak"
-# item). Below the gate we broadcast (zero exchange on the edge side);
-# above it we fall back to a sort-merge join against the STATIONARY
+# The per-iteration rank attach is gated on GRAPH_BROADCAST_MAX_NODES
+# (catalog.py): below it the rank table broadcasts (zero exchange on the
+# edge side); above it a sort-merge join runs against the STATIONARY
 # hash-partitioned edge table — edges still never move, the only
 # per-iteration exchange is the (much smaller) rank table itself.
-PR_BROADCAST_MAX_NODES = 50_000_000
 PR_SHUFFLE_PARTS = 32  # edge/rank co-partitioning width for the big branch
 
 
@@ -176,7 +173,7 @@ def _pagerank_ranks(ed: DataFrame, deg: DataFrame, *, broadcast_ranks: bool) -> 
 
     - broadcast_ranks=True: rank table broadcast onto the checkpointed
       edge partitions — zero edge-side exchange, right up to
-      PR_BROADCAST_MAX_NODES.
+      GRAPH_BROADCAST_MAX_NODES.
     - broadcast_ranks=False: the 100 TB branch. Edges are hash-
       partitioned on the source key ONCE and checkpointed (localCheckpoint
       preserves the hash partitioning); each iteration repartitions only
@@ -243,7 +240,7 @@ def _copurchase_edges(
     deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("dout")).localCheckpoint(eager=False)
     # degree table is node-cardinality: broadcast the attach so the edge
     # rows never pass through another exchange before the checkpoint.
-    # In the shuffle branch (past PR_BROADCAST_MAX_NODES) this attach,
+    # In the shuffle branch (past GRAPH_BROADCAST_MAX_NODES) this attach,
     # too, is a plain join on s — _pagerank_ranks repartitions ed on s
     # right after, so the join's exchange is subsumed by the one the
     # branch pays anyway.
@@ -295,7 +292,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket-bounded fan-out, then checkpointed with per-edge out-degree
     attached (built once, reused by all iterations). The per-iteration
     rank attach is SIZE-GATED (_pagerank_ranks): below
-    PR_BROADCAST_MAX_NODES the node-cardinality rank table broadcasts
+    GRAPH_BROADCAST_MAX_NODES the node-cardinality rank table broadcasts
     onto the stationary edge partitions (the Pregel optimization —
     measured 2.1x over the shuffle-join form at sf0.1); above it, the
     co-partitioned sort-merge branch runs instead, edges still
@@ -310,12 +307,12 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     and out-edges)."""
     ed, deg = _copurchase_edges(spark, sf_dir)
     n_nodes = deg.count()
-    return _pagerank_ranks(ed, deg, broadcast_ranks=n_nodes <= PR_BROADCAST_MAX_NODES)
+    return _pagerank_ranks(ed, deg, broadcast_ranks=n_nodes <= GRAPH_BROADCAST_MAX_NODES)
 
 
 @query("pagerank_copurchase_shuffle", oracle=_PR_ORACLE)
 def pagerank_copurchase_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The >PR_BROADCAST_MAX_NODES branch of pagerank_copurchase, forced
+    """The >GRAPH_BROADCAST_MAX_NODES branch of pagerank_copurchase, forced
     at demo scale so the 100 TB code path carries its own value-hash
     row: plain co-partitioned joins everywhere (degree attach AND the
     per-iteration rank attach), edges hash-partitioned on the source
@@ -503,7 +500,6 @@ GROUP BY s
 """
 
 
-KCORE_BROADCAST_MAX_NODES = PR_BROADCAST_MAX_NODES
 KCORE_SHUFFLE_PARTS = PR_SHUFFLE_PARTS
 
 
@@ -561,7 +557,7 @@ def _kcore_peel_broadcast(e: DataFrame) -> DataFrame:
 
 
 def _kcore_peel_shuffle(e: DataFrame) -> DataFrame:
-    """The >KCORE_BROADCAST_MAX_NODES branch: decrement-maintained
+    """The >GRAPH_BROADCAST_MAX_NODES branch: decrement-maintained
     peeling with the edge table STATIONARY. Edges are hash-partitioned
     on the source key once and checkpointed, then NEVER rewritten or
     re-shuffled: each round computes the dropped frontier (deg < K),
@@ -636,7 +632,7 @@ def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint). Pure integer counting — engine-exact.
 
     Plan/scale: SIZE-GATED like pagerank_copurchase. Below
-    KCORE_BROADCAST_MAX_NODES the survivor set broadcasts into both
+    GRAPH_BROADCAST_MAX_NODES the survivor set broadcasts into both
     semi joins and the checkpointed edge partitions never move; above
     it the decrement-maintained branch runs (_kcore_peel_shuffle) —
     edges stationary forever, per-round exchange bounded by the
@@ -646,14 +642,14 @@ def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle branch carries its own driver-checked row below."""
     e = _kcore_edges(spark, sf_dir)
     n_nodes = e.select("s").distinct().count()
-    if n_nodes <= KCORE_BROADCAST_MAX_NODES:
+    if n_nodes <= GRAPH_BROADCAST_MAX_NODES:
         return _kcore_peel_broadcast(e)
     return _kcore_peel_shuffle(e)
 
 
 @query("graph_kcore_members_shuffle", oracle=_KCORE_ORACLE)
 def graph_kcore_members_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The >KCORE_BROADCAST_MAX_NODES branch of graph_kcore_members,
+    """The >GRAPH_BROADCAST_MAX_NODES branch of graph_kcore_members,
     forced at demo scale so the 100 TB code path carries its own
     value-hash row (the pagerank_copurchase_shuffle discipline):
     decrement-maintained peeling over a stationary hash-partitioned
@@ -718,38 +714,64 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     converges (oscillation is a property of the update rule, not of
     either engine).
 
-    Plan/scale: the edge list is hash-partitioned ONCE on ``d`` — the
-    per-round join key (``e.d == labels.node``) — and checkpointed, so
-    it is STATIONARY (the PageRank/k-core shape): each round only the
-    node-cardinality label table exchanges (repartitioned on ``node``
-    to attach to the stationary edge partitions as a co-partitioned
-    SMJ); the (node, label) count is one map-side-combined aggregate
-    over edge-cardinality messages, and the argmax is a hash max_by —
-    no unpartitioned window, no self-join. Partitioning on ``s`` here
-    would be useless: the join re-exchanges on ``d`` every round once
-    labels exceed the broadcast threshold (pinned by
-    test_lpa_edges_stationary). localCheckpoint truncates each round's
-    lineage. At 100 TB rounds are edge-linear, the same cost envelope
-    as one PageRank iteration."""
-    e = _kcore_edges(spark, sf_dir).repartition(KCORE_SHUFFLE_PARTS, "d").localCheckpoint(eager=False)
-    return _lpa_propagate(e).select(
+    Plan/scale: SIZE-GATED like pagerank_copurchase and k-core, on the
+    node count of the edge table (one bounded control-plane job). Below
+    GRAPH_BROADCAST_MAX_NODES the edges are checkpointed as they are and
+    each round broadcasts the node-cardinality label table onto them —
+    no exchange of edges or labels for the attach. Above it the
+    co-partitioned branch runs: edges hash-partitioned ONCE on ``d``
+    (the per-round join key, ``e.d == labels.node``) and checkpointed,
+    so they stay STATIONARY while each round exchanges only the label
+    table, repartitioned on ``node`` into a co-partitioned SMJ
+    (test_lpa_edges_stationary). Partitioning on ``s`` there would be
+    useless — the join re-exchanges on ``d`` every round — and so is a
+    width of 1: Spark plans ``repartition(1, "d")`` as SinglePartition,
+    which the SMJ does not accept as hash-partitioned, so it
+    re-exchanges the edges at the shuffle width. In both branches round
+    1 runs without a join — under identity labels each neighbor counts
+    once, so the tie order picks min(d) — and in later rounds the
+    (node, label) count is one map-side-combined aggregate over
+    edge-cardinality messages and the argmax a hash max_by — no
+    unpartitioned window, no self-join — and localCheckpoint truncates
+    each round's lineage. The total tie order makes both branches
+    bit-identical (test_lpa_branches_identical). At 100 TB rounds are
+    edge-linear, the same cost envelope as one PageRank iteration."""
+    e = _kcore_edges(spark, sf_dir)
+    n_nodes = e.select("s").distinct().count()
+    return _lpa_propagate(
+        e, broadcast_labels=n_nodes <= GRAPH_BROADCAST_MAX_NODES
+    ).select(
         F.col("node").alias("part_key"), F.col("label").cast("bigint").alias("community")
     )
 
 
-def _lpa_propagate(e: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
-    """LPA_ITERS synchronous label-propagation rounds over an edge table
-    already hash-partitioned on ``d`` and checkpointed (stationary).
-    Shared by graph_lpa_communities and the scaling probe's lpa_shape."""
-    labels = e.select(F.col("s").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for i in range(iters):
+def _lpa_propagate(
+    e: DataFrame, *, broadcast_labels: bool, iters: int = LPA_ITERS
+) -> DataFrame:
+    """LPA_ITERS synchronous label-propagation rounds over a symmetric,
+    duplicate-free (s, d) edge table, which this checkpoints once and
+    never moves again. broadcast_labels=True broadcasts the label table
+    onto the edges as they are; False is the >GRAPH_BROADCAST_MAX_NODES
+    branch, edges hash-partitioned on ``d`` and labels repartitioned on
+    ``node`` each round. Shared by graph_lpa_communities, the tests
+    and the scaling probe's lpa_shape (which forces the big branch)."""
+    # round 1 under identity labels needs no label join: the edges are
+    # distinct, so every neighbor label counts once and the tie order
+    # (count desc, label asc) picks the smallest — min(d)
+    labels = e.groupBy(F.col("s").alias("node")).agg(F.min("d").alias("label"))
+    if broadcast_labels:
+        e = e.localCheckpoint(eager=False)
+    else:
+        e = e.repartition(KCORE_SHUFFLE_PARTS, "d").localCheckpoint(eager=False)
+    for _ in range(1, iters):
+        labels = labels.localCheckpoint(eager=False)
+        rhs = (
+            F.broadcast(labels)
+            if broadcast_labels
+            else labels.repartition(KCORE_SHUFFLE_PARTS, "node")
+        )
         cnt = (
-            e.join(
-                labels.repartition(KCORE_SHUFFLE_PARTS, "node"),
-                e.d == labels.node,
-            )
+            e.join(rhs, e.d == rhs.node)
             .groupBy("s", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
@@ -764,6 +786,4 @@ def _lpa_propagate(e: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
             .agg(F.expr("max_by(label, struct(cnt, -label))").alias("label"))
             .select(F.col("s").alias("node"), "label")
         )
-        if i < iters - 1:
-            labels = labels.localCheckpoint(eager=False)
     return labels

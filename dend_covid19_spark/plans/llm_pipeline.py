@@ -312,7 +312,7 @@ DECON_NGRAM = 5
 DECON_MOD = 11
 
 
-# Code-version component of the cross-process decon scratch key
+# Code-version component of the pid-keyed decon scratch key
 # (mirrors IVF_INDEX_VERSION / CODEBOOK_VERSION): bump when the
 # tokenize/shingle/hash derivation OR the bloom packing changes, so a
 # new process never reads a stale pre-change artifact.
@@ -355,8 +355,8 @@ def _decon_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derived the full tokenize + md5-shingle pipeline per run; the
     overlap row was the single slowest sweep query (9.4 s — the md5
     derivation dominates; the join/aggregate is cheap). Scratch
-    survives the bench's clearCache isolation AND process boundaries
-    (r14: cross-process keyed, the derivation is exact md5 integers so
+    survives the bench's clearCache isolation (pid-keyed since r18, so
+    not process boundaries; the derivation is exact md5 integers so
     reuse is value-identical by construction) and is the production
     shape anyway: a contamination index you maintain, not a per-query
     derivation."""
@@ -504,7 +504,7 @@ def _decon_bloom_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch (r13 verdict perf item: rebuilding the filter per process
     cost 6.2 s sweep-cold vs 2-3.5 s warm). Deterministic given the
     key — xxhash64 positions and bit_or packing are exact integer
-    arithmetic — so cross-process reuse is value-identical by
+    arithmetic — so reuse of the scratch is value-identical by
     construction; the params ride the key so a constant change can
     never read a stale filter."""
     return spark.read.schema("w bigint, bits bigint").parquet(

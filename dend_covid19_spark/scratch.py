@@ -106,13 +106,14 @@ def materialize_once(path: str, write_fn) -> str:
     killed mid-write, exactly what this helper exists to never trust.
 
     Every cache HIT touches the published dir and its parent (r13
-    advice): the unmarked cross-process artifacts (ivfcell_*,
-    codebook_*, deconsh_*) are reaped by gc_scratch's mtime age gate,
-    and reads never bump mtime on their own — without the touch, a
-    newly started process could reap an index another live process is
-    actively probing mid-scan (FileNotFound task failures, or a
-    silently partial scan in a narrow listing race). With it, the age
-    gate measures time since last USE, not since publish."""
+    advice): a dir without a live owner marker is reaped by
+    gc_scratch's mtime age gate, and reads never bump mtime on their
+    own — without the touch, a newly started process could reap an
+    index still being probed mid-scan (FileNotFound task failures, or
+    a silently partial scan in a narrow listing race). With it, the
+    age gate measures time since last USE, not since publish. Since
+    r18 the ivfcell_*, codebook_* and deconsh_* artifacts are pid-keyed
+    under scratch_dir and reaped once their owner exits."""
     if os.path.isdir(path):
         if os.path.exists(os.path.join(path, "_SUCCESS")):
             _touch_live(path)

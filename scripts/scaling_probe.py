@@ -527,18 +527,15 @@ def kcore_shuffle_shape(spark, k: int):
 
 def lpa_shape(spark, k: int):
     """graph_lpa_communities' synchronous label propagation over k x the
-    co-purchase graph: edges hash-partitioned once on the join key (d)
-    and checkpointed; per round one co-partitioned label attach + one
-    map-side-combined (node,label) count + a max_by hash argmax. The
-    claimed edge-linear-per-round envelope, measured."""
-    from dend_covid19_spark.plans.graph import KCORE_SHUFFLE_PARTS, _lpa_propagate
+    co-purchase graph, forced onto the >GRAPH_BROADCAST_MAX_NODES branch:
+    edges hash-partitioned once on the join key (d) and checkpointed;
+    per round one co-partitioned label attach + one map-side-combined
+    (node,label) count + a max_by hash argmax. The claimed
+    edge-linear-per-round envelope of the path that runs at scale,
+    measured."""
+    from dend_covid19_spark.plans.graph import _lpa_propagate
 
-    e = (
-        _copurchase_edges(spark, k)
-        .repartition(KCORE_SHUFFLE_PARTS, "d")
-        .localCheckpoint()
-    )
-    return _lpa_propagate(e)
+    return _lpa_propagate(_copurchase_edges(spark, k), broadcast_labels=False)
 
 
 def funnel_shape(spark, k: int):

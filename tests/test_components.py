@@ -3,6 +3,8 @@ union-find over the same verified near-dup pairs."""
 
 from __future__ import annotations
 
+import pytest
+
 from dend_covid19_spark.operators.components import dedup_components
 from dend_covid19_spark.operators.dedup import dedup_ngram_jaccard
 from tests.conftest import SF_DIR
@@ -133,7 +135,7 @@ def test_incremental_delta_is_has_new_subset_of_full_lsh(spark):
 
 
 def test_cc_shuffle_branch_matches_broadcast_branch(spark, monkeypatch):
-    """The >CC_BROADCAST_MAX_NODES branch (labels shuffle, edges
+    """The >GRAPH_BROADCAST_MAX_NODES branch (labels shuffle, edges
     hash-partitioned once and stationary) must produce the identical
     fixpoint as the demo-scale broadcast branch — forced here so the
     100 TB code path carries its own executed check, the pagerank-
@@ -145,9 +147,32 @@ def test_cc_shuffle_branch_matches_broadcast_branch(spark, monkeypatch):
         (r.node, r.component)
         for r in C.connected_components(pairs, "doc_a", "doc_b").collect()
     }
-    monkeypatch.setattr(C, "CC_BROADCAST_MAX_NODES", 0)  # force big branch
+    monkeypatch.setattr(C, "GRAPH_BROADCAST_MAX_NODES", 0)  # force big branch
     got = {
         (r.node, r.component)
         for r in C.connected_components(pairs, "doc_a", "doc_b").collect()
     }
     assert got == want and got
+
+
+@pytest.mark.parametrize(
+    ("schema", "bad"),
+    [("src string, dst string", "src"), ("src bigint, dst string", "dst")],
+)
+def test_cc_rejects_non_integral_ids(spark, schema, bad):
+    """String ids would break the decimal label-sum fixpoint test
+    mid-loop (ANSI on) or end the loop early with null sums (ANSI off).
+    connected_components must refuse them up front, naming the column,
+    from the schema alone — before any job is scheduled."""
+    from dend_covid19_spark.operators.components import connected_components
+
+    rows = [("1", "2"), ("2", "3")] if bad == "src" else [(1, "2"), (2, "3")]
+    edges = spark.createDataFrame(rows, schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_id_type_check", "connected_components id check")
+    try:
+        with pytest.raises(TypeError, match=f"'{bad}'"):
+            connected_components(edges)
+        assert not sc.statusTracker().getJobIdsForGroup("cc_id_type_check")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

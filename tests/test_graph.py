@@ -137,7 +137,7 @@ def test_pagerank_branches_identical(spark):
     """The broadcast and co-partitioned-shuffle branches are physically
     different plans over identical integer arithmetic — their results
     must be bit-identical (this is what lets the size gate switch
-    branches at PR_BROADCAST_MAX_NODES without changing answers)."""
+    branches at GRAPH_BROADCAST_MAX_NODES without changing answers)."""
     a = {(r.part_key, r.rank_e9) for r in pagerank_copurchase(spark, SF_DIR).collect()}
     b = {
         (r.part_key, r.rank_e9)
@@ -267,7 +267,7 @@ def test_kcore_branches_identical(spark):
     """The broadcast (filter-based) and shuffle (decrement-maintained)
     peeling branches are physically different algorithms over the same
     integer counting — their results must be bit-identical, which is
-    what lets the size gate switch at KCORE_BROADCAST_MAX_NODES
+    what lets the size gate switch at GRAPH_BROADCAST_MAX_NODES
     without changing answers."""
     from dend_covid19_spark.plans.graph import (
         graph_kcore_members,
@@ -406,6 +406,51 @@ def test_lpa_edges_stationary(spark):
     # label build side may exchange (it is node-cardinality)
     left = [ln for ln in lines[join_at + 1 :] if ln.lstrip().startswith(":")]
     assert left and all("Exchange" not in ln for ln in left), plan
+
+
+def test_lpa_branches_identical(spark):
+    """The broadcast branch (what graph_lpa_communities runs below
+    GRAPH_BROADCAST_MAX_NODES) and the forced co-partitioned branch are
+    physically different plans over the same total tie order — their
+    labels must be bit-identical, which is what lets the size gate
+    switch without changing answers."""
+    from dend_covid19_spark.plans.graph import (
+        _kcore_edges,
+        _lpa_propagate,
+        graph_lpa_communities,
+    )
+
+    a = {
+        (r.part_key, r.community)
+        for r in graph_lpa_communities(spark, SF_DIR).collect()
+    }
+    big = _lpa_propagate(_kcore_edges(spark, SF_DIR), broadcast_labels=False)
+    b = {(r.node, r.label) for r in big.collect()}
+    assert a == b and len(a) > 0
+
+
+def test_lpa_broadcast_branch_edges_stationary(spark):
+    """Sub-gate contract: a round's label attach reads the checkpointed
+    edge partitions in place — no Exchange anywhere on the edge side of
+    the join — and the label side arrives as a BroadcastExchange. The
+    plan is the real _lpa_propagate's, cut to its first joined round
+    (round 1 joins nothing)."""
+    from dend_covid19_spark.plans.graph import _kcore_edges, _lpa_propagate
+
+    two_rounds = _lpa_propagate(
+        _kcore_edges(spark, SF_DIR), broadcast_labels=True, iters=2
+    )
+    lines = two_rounds._jdf.queryExecution().executedPlan().toString().splitlines()
+    join_at = next(i for i, ln in enumerate(lines) if "BroadcastHashJoin" in ln)
+    # children print one indent level below the join: the edge (streamed)
+    # side under ":- ", the label (build) side under "+- " in the same column
+    col = lines[join_at].index("BroadcastHashJoin")
+    right_at = next(
+        i for i in range(join_at + 1, len(lines)) if lines[i][col : col + 2] == "+-"
+    )
+    edge_side = lines[join_at + 1 : right_at]
+    assert edge_side and all("Exchange" not in ln for ln in edge_side), lines
+    assert "BroadcastExchange" in lines[right_at], lines
 
 
 def test_lpa_communities_nontrivial(spark):

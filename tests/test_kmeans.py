@@ -69,8 +69,8 @@ def test_kmeans_matches_mirrored_reference(spark):
 
 
 def test_codebook_scratch_cache_is_bit_exact(spark):
-    """The r13 disk cache (train once per (sf, mtime, seeds), shared
-    across processes) must be VALUE-IDENTICAL to a fresh derivation —
+    """The r13 disk cache (train once per (sf, mtime, seeds) and
+    process — pid-keyed since r18) must be VALUE-IDENTICAL to a fresh derivation —
     this equality is what exempts the codebook consumers from a RECHECK
     declaration: every centroid is a 6 dp integer quotient cast to
     double, and json round-trips shortest-repr doubles exactly. Compares

@@ -673,3 +673,29 @@ def test_corpus_stream_ckpt_gated_on_scale(spark, name, monkeypatch):
         cat._source_bytes.cache_clear()
     gen_nodes = len(re.findall(r"^\(\d+\) Generate", plan, re.M))
     assert gen_nodes >= 2, f"gate ignored: stream still checkpointed\n{plan}"
+
+
+def _is_checkpointed(df) -> bool:
+    return "LogicalRDD" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_ckpt_gate_malformed_env_falls_back_to_default(spark, monkeypatch):
+    """An env override must never crash plan construction: a value that
+    is not an integer falls back to the 2 GiB default, so the cut is
+    still taken at test scale."""
+    import dend_covid19_spark.catalog as cat
+
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", "2GiB")
+    assert _is_checkpointed(cat.ckpt_if_bounded(spark.range(3), SF_DIR))
+
+
+def test_ckpt_gate_missing_source_not_cached(spark, monkeypatch, tmp_path):
+    """A source path that does not exist yet reads as 0 bytes for that
+    call only — once the source lands, its real size gates the cut."""
+    import dend_covid19_spark.catalog as cat
+
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", "0")
+    df = spark.range(3)
+    assert _is_checkpointed(cat.ckpt_if_bounded(df, str(tmp_path)))
+    (tmp_path / "documents.parquet").write_bytes(b"x" * 10)
+    assert cat.ckpt_if_bounded(df, str(tmp_path)) is df

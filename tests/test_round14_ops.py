@@ -1,5 +1,5 @@
 """Round-14 surfaces: the split exact+sketch hourly agg, the
-materialized decon bloom words, and the cross-process decon scratch."""
+materialized decon bloom words, and the pid-keyed decon scratch."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ from conftest import SF_DIR
 def test_decon_bloom_words_cache_is_value_identical(spark):
     """The materialized packed bloom words must equal a fresh
     derivation from the bench slice exactly — xxhash64 positions and
-    bit_or packing are integer arithmetic, so cross-process reuse is
+    bit_or packing are integer arithmetic, so reusing the cached words is
     bit-identical by construction, and a stale/wrong artifact would
     change the gate's pruning (never its output, bloom = no false
     negatives — which is why this is pinned at the words level, where
@@ -316,8 +316,8 @@ def test_ivf_cell_compaction_composition(spark, tmp_path):
     those cells, and the index CONTENT (vec_id, cell, norm, vector) is
     identical before and after, which makes every probe's result
     invariant by construction. Run on a COPY: the published index is a
-    shared cross-process artifact and maintenance must never mutate a
-    cache others read (the real rollout compacts in place during the
+    cached artifact later probes in this process read, and maintenance
+    must never mutate a cache in use (the real rollout compacts in place during the
     single-writer maintenance window, like any partition compaction)."""
     import shutil
 

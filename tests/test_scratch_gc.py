@@ -169,10 +169,13 @@ def test_materialize_once_atomic_and_rebuilds_partials(tmp_path):
 
 
 def test_materialize_once_touches_on_hit(tmp_path):
-    """r13 advice: unmarked age-gated artifacts (ivfcell_*, codebook_*,
-    deconsh_*) must stay inside gc_scratch's 6-hour age gate while
-    actively USED — reads don't bump mtime on their own, so every
-    cache hit touches the published dir and its top-level parent."""
+    """r13 advice: reads don't bump mtime on their own, so every cache
+    hit touches the published dir and its top-level parent. Since r18
+    the ivfcell_*, codebook_* and deconsh_* artifacts are pid-keyed and
+    reaped once their owning process exits; a dir without a live owner
+    marker (this one, or a pre-r18 leftover) falls to gc_scratch's
+    6-hour age gate, which the touch keeps measuring time since last
+    USE."""
     import os
 
     from dend_covid19_spark.scratch import materialize_once
@@ -254,7 +257,7 @@ def test_materialize_once_reraises_non_race_rename_failure(tmp_path, monkeypatch
 
 
 def test_codebook_cache_key_includes_code_version(tmp_path, monkeypatch):
-    """r13 advice: the cross-process codebook cache key carries
+    """r13 advice: the pid-keyed codebook scratch key carries
     CODEBOOK_VERSION (like IVF_INDEX_VERSION) so a change to the Lloyd
     arithmetic can never silently read a stale pre-change artifact."""
     import dend_covid19_spark.operators.kmeans as km
