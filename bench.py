@@ -128,6 +128,27 @@ HEADLINE = [
 ]
 
 
+# The bench's consumer keeps the last 2000 bytes of stdout; the last line
+# must fit whole, with room for the newline and any stray trailing output.
+CONTRACT_LINE_MAX_BYTES = 1900
+
+
+def contract_line(
+    metric: str, value: float, timings: dict[str, float], sf, limit: int = CONTRACT_LINE_MAX_BYTES
+) -> str:
+    """The LAST stdout line: metric, value, unit, sf and the per-query
+    steady medians, at most ``limit`` bytes. Per-query seconds are
+    rounded to 0.01 s, else 0.1 s; if neither fits, the line carries the
+    totals only (``n_queries`` instead of the ``queries`` map)."""
+    head = {"metric": metric, "value": value, "unit": "sec"}
+    for digits in (2, 1):
+        queries = {k: round(v, digits) for k, v in timings.items()}
+        line = json.dumps({**head, "queries": queries, "sf": sf}, separators=(",", ":"))
+        if len(line.encode()) <= limit:
+            return line
+    return json.dumps({**head, "n_queries": len(timings), "sf": sf}, separators=(",", ":"))
+
+
 def _load_gate() -> dict:
     """Refuse to record a comparability artifact on a busy host (r12
     verdict item 2: BENCH_r12.json was recorded at loadavg 3.7-5.4 and
@@ -346,10 +367,11 @@ def main() -> None:
     # (r17 verdict item 2). So: persist the full artifact to disk, print
     # it (head may truncate harmlessly), then a compact totals+conditions
     # line, and END stdout with a minimal contract line — metric, value,
-    # unit, sf AND the per-query steady medians at centisecond precision
-    # (~1.8 KB for 58 rows, measured 1770 bytes: fits whole inside the
-    # 2000-byte tail, which always keeps the LAST line intact).
-    # Consumers parse the LAST line and get the full queries map back.
+    # unit, sf AND the per-query steady medians (``contract_line``: 1772
+    # bytes for 58 rows at centisecond precision; kept within
+    # CONTRACT_LINE_MAX_BYTES as rows are added, so the LAST line always
+    # fits whole inside the 2000-byte tail).
+    # Consumers parse the LAST line and get the queries map back.
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.json"), "w") as fh:
         json.dump(full, fh)
     print(json.dumps(full))
@@ -362,14 +384,7 @@ def main() -> None:
     compact.pop("full_registry_errs")
     print(json.dumps(compact))
     # Minimal LAST line: the original driver contract, queries included.
-    contract_line = {
-        "metric": full["metric"],
-        "value": full["value"],
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "sf": sf,
-    }
-    print(json.dumps(contract_line, separators=(",", ":")))
+    print(contract_line(full["metric"], full["value"], timings, sf))
 
 
 if __name__ == "__main__":

@@ -40,9 +40,10 @@ HIST_BINS = 16  # byte-histogram bins (byte >> 4)
 def _make_decode_stub():
     """Build the deterministic fake 'decode' used where a real media
     decoder would run. Built as a factory returning a nested function so
-    UDF closures capture it *by value* (cloudpickle) — executors never
-    need to import this package. Raises NotImplementedError for payloads
-    we can't fake (where PIL/librosa/ffmpeg would be required)."""
+    UDF closures capture it *by value* (cloudpickle) — in local mode the
+    only engine module a worker imports is the ``worker_daemon`` shim.
+    Raises NotImplementedError for payloads we can't fake (where
+    PIL/librosa/ffmpeg would be required)."""
     import hashlib
 
     def decode(payload: bytes) -> dict:

@@ -457,7 +457,8 @@ def user_event_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     history outgrows memory — streaming/stateful.py). The median here is
     pandas' interpolated middle, same definition as DuckDB median().
     The UDF closure imports pandas inside and references nothing from
-    this module, so executors never need the package importable.
+    this module, so it ships by value; in local mode the only engine
+    module a worker imports is the ``worker_daemon`` shim.
     """
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "event_id")
 

@@ -7,10 +7,11 @@ re-planning (post-shuffle coalescing, skew-join splitting, dynamic join
 strategy), and a fixed UTC session timezone so timestamp semantics are
 deterministic and match the DuckDB oracle.
 
-Scale posture: nothing in this module is local-mode-specific. On a real
-cluster the same builder is used with ``master`` left to spark-submit; the
-shuffle-partition default (32 for tests) should be overridden to ~2-3x the
-cluster core count — AQE coalesces down from there at runtime.
+Scale posture: only the Python worker daemon (``worker_daemon_conf``) is
+local-mode-specific. On a real cluster the same builder is used with
+``master`` left to spark-submit; the shuffle-partition default (32 for
+tests) should be overridden to ~2-3x the cluster core count — AQE
+coalesces down from there at runtime.
 """
 
 from __future__ import annotations
@@ -20,6 +21,19 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+
+def worker_daemon_conf(master: str) -> dict[str, str]:
+    """Confs that start Python workers from ``worker_daemon`` (see its
+    docstring): set for ``local*`` masters, empty otherwise. PYTHONPATH
+    names the package's parent so the daemon imports it even when the
+    calling process found the package through ``sys.path`` alone."""
+    if not master.startswith("local"):
+        return {}
+    return {
+        "spark.python.daemon.module": "dend_covid19_spark.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    }
 
 
 def get_spark(
@@ -39,6 +53,11 @@ def get_spark(
         host's zone — required for oracle-stable hashes.
       - parquet timestamps read with int96 off / ntz handling default; test
         data is plain int64 timestamps.
+      - local masters only (``worker_daemon_conf``): Python workers fork
+        from ``worker_daemon``, which stops each task's
+        ``importlib.invalidate_caches()`` from re-reading pyspark.zip and
+        the spark-core jar (0.1-0.2 s CPU per task). Other masters keep the
+        stock daemon, since their executors may not see this checkout.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -66,6 +85,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        .config(map=worker_daemon_conf(master))
     )
     # Reap dead processes' /tmp scratch before this one starts writing
     # its own (SURVEY.md §8 queue item c): side-effecting queries leave

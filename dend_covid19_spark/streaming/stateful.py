@@ -26,7 +26,8 @@ GAP_US = 30 * 60 * 1_000_000
 
 def _make_session_fn(gap_us: int):
     """Factory for the per-user state machine — a nested function so
-    cloudpickle ships it by value (executors never import this package).
+    cloudpickle ships it by value (in local mode the only engine module a
+    worker imports is the ``worker_daemon`` shim).
 
     Events inside a micro-batch are sorted by (ts, event_id) — same total
     order as the batch operator — and folded into

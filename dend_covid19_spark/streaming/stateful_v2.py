@@ -17,7 +17,8 @@ new API adds at scale:
 - **Initial state / TTL hooks** for bootstrap and GDPR-style eviction.
 
 The processor class is defined inside a factory so cloudpickle ships it
-by value — executors never need this package importable.
+by value — in local mode the only engine module a worker imports is the
+``worker_daemon`` shim.
 
 Runtime gate: transformWithState's Python<->JVM state protocol rides on
 protobuf (``pyspark.sql.streaming.proto``), which is an optional

@@ -1,4 +1,4 @@
-"""Profile registered queries: wall time + Spark job/stage/task counts.
+"""Profile registered queries: wall time, Spark job counts and a CPU split.
 
 Usage:
     python scripts/profile_query.py name1 name2 ...
@@ -6,21 +6,61 @@ Usage:
 
 For each query: builds the DataFrame fresh each run, runs it through the
 noop sink (the bench's timed action), and reports per-run wall seconds
-plus how many jobs/stages/tasks the run scheduled (SparkStatusTracker
-deltas) — fixed scheduling overhead vs data work is the first split the
-optimization guide asks for.
+plus how many jobs the run scheduled (SparkStatusTracker deltas) — fixed
+scheduling overhead vs data work is the first split the optimization
+guide asks for.
+
+Each run's CPU seconds are then split three ways, read from ``/proc``
+over this process tree: ``driver_py`` (this Python process), ``jvm`` (its
+children: the JVM spark-submit starts) and ``py_workers`` (everything
+below the JVM: Python worker daemons and the workers they fork). Every
+process counts its own user + system time plus that of the children it
+has reaped. The worker daemon ignores SIGCHLD, so a worker that exits
+takes its CPU with it; reused workers live for the whole session, so
+this rarely shows. A large ``py_workers`` share on a query whose UDFs do
+little work points at per-task worker overhead.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import sys
 import time
+from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("SPARK_GRAFT_PROFILE_RUNS", "3"))
+TICK_S = 1.0 / os.sysconf("SC_CLK_TCK")
+CPU_PARTS = ("driver_py", "jvm", "py_workers")
+
+
+def cpu_split() -> dict[str, float]:
+    """CPU seconds used so far by this process, its children (the JVM)
+    and everything below them (Python workers), reaped children included."""
+    ticks, children = {}, defaultdict(list)
+    for path in glob.glob("/proc/[0-9]*/stat"):
+        try:
+            with open(path) as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except (OSError, IndexError, ValueError):
+            continue  # the process exited
+        pid = int(path.split("/")[2])
+        children[int(fields[1])].append(pid)
+        ticks[pid] = sum(map(int, fields[11:15]))  # utime stime cutime cstime
+
+    def subtree(pid: int) -> int:
+        return ticks.get(pid, 0) + sum(subtree(c) for c in children[pid])
+
+    me = os.getpid()
+    jvms = children[me]
+    return {
+        "driver_py": ticks[me] * TICK_S,
+        "jvm": sum(ticks.get(p, 0) for p in jvms) * TICK_S,
+        "py_workers": sum(subtree(c) for p in jvms for c in children[p]) * TICK_S,
+    }
 
 
 def main() -> None:
@@ -44,19 +84,24 @@ def main() -> None:
             jobs0 = tracker.getJobIdsForGroup(None)
             n0 = len(jobs0)
             sc.setJobDescription(f"profile:{name}:run{i}")
+            cpu0 = cpu_split()
             t0 = time.perf_counter()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
+            cpu1 = cpu_split()
             jobs1 = tracker.getJobIdsForGroup(None)
-            rows.append((dt, len(jobs1) - n0))
+            rows.append((dt, len(jobs1) - n0, {k: cpu1[k] - cpu0[k] for k in CPU_PARTS}))
             spark.catalog.clearCache()
         cold = rows[0]
         steady = sorted(r[0] for r in rows[1:])[len(rows[1:]) // 2]
         print(
             f"{name}: cold={cold[0]:.3f}s/{cold[1]}jobs "
             f"steady_median={steady:.3f}s "
-            f"runs={[f'{d:.3f}s/{j}j' for d, j in rows[1:]]}"
+            f"runs={[f'{d:.3f}s/{j}j' for d, j, _ in rows[1:]]}"
         )
+        for i, (_, _, cpu) in enumerate(rows):
+            parts = " ".join(f"{k}={cpu[k]:.2f}s" for k in CPU_PARTS)
+            print(f"  run{i} cpu: {parts} total={sum(cpu.values()):.2f}s")
         sc.setJobDescription(None)
 
 
