@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..plans.registry import query
+from ..session import session_conf, session_memo
 
 
 _REAGG = {
@@ -422,9 +423,8 @@ _SKEW_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": "-1",
 }
 
-_SKEW_SNAP_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-
+@session_memo
 def _skew_join_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the planted-hot-key join under the scoped skew confs and
     return the materialized (localCheckpoint) join output, asserting
@@ -445,13 +445,6 @@ def _skew_join_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         the join's output partitioning vetoes the split (the rule
         refuses plan surgery that would break a downstream
         distribution requirement)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SKEW_SNAP_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in _SKEW_SNAP_CACHE if k[0] != key[0]]:
-        del _SKEW_SNAP_CACHE[k]
-
     ev = load_table(spark, "events", sf_dir)
     fact = ev.select(
         F.when(F.col("user_id") % 10 != 0, F.lit(0))
@@ -462,20 +455,10 @@ def _skew_join_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(8)
     dim = fact.select("k", (F.col("k") % 3).alias("seg")).distinct()
     jj = fact.join(dim, "k")
-    saved = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
-    try:
-        for k, v in _SKEW_CONFS.items():
-            spark.conf.set(k, v)
+    with session_conf(spark, _SKEW_CONFS):
         snap = jj.localCheckpoint()  # materializes THIS plan under AQE
         plan = jj._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, f"AQE skew split did not fire:\n{plan}"
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    _SKEW_SNAP_CACHE[key] = snap
     return snap
 
 
@@ -500,10 +483,10 @@ def agg_skew_aqe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement of agg_salted_event_stats (manual salting fixes skewed
     group-bys; AQE's OptimizeSkewedJoin fixes skewed joins at runtime
     with no query rewrite). The query plants a 90%-hot key, executes
-    the sort-merge join with the skew thresholds scoped down
-    (set/restored, the ingest_overwrite_idempotent conf discipline),
-    ASSERTS the executed plan marks the join ``skew=true``, then
-    aggregates the materialized join output — so a green driver row
+    the sort-merge join with the skew thresholds scoped down by
+    ``session_conf``, ASSERTS the executed plan marks the join
+    ``skew=true``, then aggregates the materialized join output — so
+    a green driver row
     certifies both that the split fired and that it left the values
     bit-identical to the oracle's plain SQL (the whole point of AQE:
     plan surgery, no semantic drift).

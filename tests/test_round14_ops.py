@@ -208,8 +208,7 @@ def test_streaming_join_state_eviction(spark, duck):
         get_spec("streaming_join_state_eviction_executed").oracle,
         "streaming_join_state_eviction_executed",
     )
-    key = (spark.sparkContext.applicationId, SF_DIR)
-    metrics = _STREAM_EVICT_METRICS[key]
+    metrics = _STREAM_EVICT_METRICS[SF_DIR]
     assert len(metrics) >= 3, metrics
     removed = sum(m["numRowsRemoved"] for m in metrics)
     updated = sum(m["numRowsUpdated"] for m in metrics)

@@ -137,8 +137,6 @@ def test_side_effecting_rows_are_reentrant(spark):
     advanced current pointer) and the sink row must not assert a fresh
     drain's manifests against a no-op drain."""
     from dend_covid19_spark.plans.ingest import (
-        _LAKEHOUSE_CACHE,
-        _STREAM_COMPACT_CACHE,
         lakehouse_manifest_roundtrip,
         streaming_compaction_sink_executed,
     )
@@ -148,7 +146,7 @@ def test_side_effecting_rows_are_reentrant(spark):
 
     first_lh = digest(lakehouse_manifest_roundtrip(spark, SF_DIR))
     first_sc = digest(streaming_compaction_sink_executed(spark, SF_DIR))
-    _LAKEHOUSE_CACHE.clear()
-    _STREAM_COMPACT_CACHE.clear()
+    lakehouse_manifest_roundtrip.cache_clear()
+    streaming_compaction_sink_executed.cache_clear()
     assert digest(lakehouse_manifest_roundtrip(spark, SF_DIR)) == first_lh
     assert digest(streaming_compaction_sink_executed(spark, SF_DIR)) == first_sc

@@ -128,10 +128,6 @@ def test_round16_rows_are_reentrant(spark):
     return the same result, and the fresh-drain/fresh-build asserts
     must not fire against the completed state."""
     from dend_covid19_spark.plans.ingest import (
-        _LH_EVOLVE_CACHE,
-        _LH_PRUNE_CACHE,
-        _LH_RACE_CACHE,
-        _STREAM_COMPACT_RESTART_CACHE,
         lakehouse_concurrent_commit,
         lakehouse_pruned_scan,
         lakehouse_schema_evolution,
@@ -139,14 +135,14 @@ def test_round16_rows_are_reentrant(spark):
     )
 
     rows = [
-        (lakehouse_pruned_scan, _LH_PRUNE_CACHE),
-        (lakehouse_concurrent_commit, _LH_RACE_CACHE),
-        (lakehouse_schema_evolution, _LH_EVOLVE_CACHE),
-        (streaming_compaction_restart_executed, _STREAM_COMPACT_RESTART_CACHE),
+        lakehouse_pruned_scan,
+        lakehouse_concurrent_commit,
+        lakehouse_schema_evolution,
+        streaming_compaction_restart_executed,
     ]
-    for fn, cache in rows:
+    for fn in rows:
         first = _digest(fn(spark, SF_DIR))
-        cache.clear()
+        fn.cache_clear()
         assert _digest(fn(spark, SF_DIR)) == first, fn.__name__
 
 
@@ -178,7 +174,6 @@ def test_prebuilt_manifest_sink_row_matches_batch(spark):
     r17 registration is one decorator). Also pins re-entrancy."""
     import duckdb
     from dend_covid19_spark.plans.ingest import (
-        _MANIFEST_SINK_CACHE,
         _MANIFEST_SINK_ORACLE,
         streaming_manifest_sink_executed,
     )
@@ -210,7 +205,7 @@ def test_prebuilt_manifest_sink_row_matches_batch(spark):
     assert spark_rows == oracle
 
     first = _digest(got)
-    _MANIFEST_SINK_CACHE.clear()
+    streaming_manifest_sink_executed.cache_clear()
     assert _digest(streaming_manifest_sink_executed(spark, SF_DIR)) == first
 
 def test_migration_equivalence_swap_scenario_through_manifest(spark, tmp_path):

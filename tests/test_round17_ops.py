@@ -279,7 +279,6 @@ def test_prebuilt_asof_history_row_matches_batch(spark):
 
     from dend_covid19_spark.plans.ingest import (
         _ASOF_CUTS,
-        _ASOF_HISTORY_CACHE,
         _ASOF_HISTORY_ORACLE,
         lakehouse_asof_history,
     )
@@ -316,7 +315,7 @@ def test_prebuilt_asof_history_row_matches_batch(spark):
     assert spark_rows == oracle
 
     first = _digest(got)
-    _ASOF_HISTORY_CACHE.clear()
+    lakehouse_asof_history.cache_clear()
     assert _digest(lakehouse_asof_history(spark, SF_DIR)) == first
 
 
@@ -536,7 +535,6 @@ def test_prebuilt_partition_exact_scan_matches_duckdb(spark):
     rebuilds the same digest with every in-query resolution assert
     re-run against the committed audit."""
     from dend_covid19_spark.plans.ingest import (
-        _PART_EXACT_CACHE,
         _PART_EXACT_ORACLE,
         lakehouse_partition_exact_scan,
     )
@@ -549,7 +547,7 @@ def test_prebuilt_partition_exact_scan_matches_duckdb(spark):
     assert len(spark_rows) >= 1
 
     first = _digest(got)
-    _PART_EXACT_CACHE.clear()
+    lakehouse_partition_exact_scan.cache_clear()
     assert _digest(lakehouse_partition_exact_scan(spark, SF_DIR)) == first
 
 
@@ -559,7 +557,6 @@ def test_prebuilt_spec_evolution_scan_matches_duckdb(spark):
     its DuckDB twin, both probe slices are non-empty on real data, and
     re-entry rebuilds the same digest."""
     from dend_covid19_spark.plans.ingest import (
-        _SPEC_EVO_CACHE,
         _SPEC_EVO_ORACLE,
         lakehouse_spec_evolution_scan,
     )
@@ -572,7 +569,7 @@ def test_prebuilt_spec_evolution_scan_matches_duckdb(spark):
     assert {r[0] for r in spark_rows} == {"day", "hour"}
 
     first = _digest(got)
-    _SPEC_EVO_CACHE.clear()
+    lakehouse_spec_evolution_scan.cache_clear()
     assert _digest(lakehouse_spec_evolution_scan(spark, SF_DIR)) == first
 
 
@@ -720,7 +717,6 @@ def test_prebuilt_transform_migration_scan_matches_duckdb(spark):
     old-era probe (pre-migration unprunable) is non-empty, and
     re-entry rebuilds the same digest."""
     from dend_covid19_spark.plans.ingest import (
-        _TRANSFORM_MIG_CACHE,
         _TRANSFORM_MIG_ORACLE,
         lakehouse_transform_migration_scan,
     )
@@ -733,7 +729,7 @@ def test_prebuilt_transform_migration_scan_matches_duckdb(spark):
     assert {r[0] for r in spark_rows} == {"old_era", "new_era"}
 
     first = _digest(got)
-    _TRANSFORM_MIG_CACHE.clear()
+    lakehouse_transform_migration_scan.cache_clear()
     assert _digest(lakehouse_transform_migration_scan(spark, SF_DIR)) == first
 
 
