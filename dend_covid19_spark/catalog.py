@@ -215,9 +215,9 @@ def widen_scan(df: DataFrame) -> DataFrame:
     splits >= cores) the branch never fires, so nothing is shuffled at
     100 TB. Only for CPU-dense stages — byte-dense stages should keep
     their scan partitioning. Callers: operators/dedup._minhash_sigs and
-    _simhash_fps (each once per (sf, data mtime, pid) behind their
-    write-once parquet scratch, so the ``df.rdd`` plan-conversion cost
-    of the partition probe is paid once, not per query).
+    _simhash_fps (each once behind their write-once parquet scratch,
+    so the ``df.rdd`` plan-conversion cost of the partition probe is
+    paid once, not per query).
     """
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:

@@ -140,8 +140,8 @@ GROUP BY node
 
 def _dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, component) labels over the verified near-dup pairs,
-    materialized ONCE per (sf_dir, data mtime, pid) to parquet scratch —
-    the same write-once discipline as dedup._minhash_sigs. Five
+    materialized once to keyed parquet scratch — the same write-once
+    discipline as dedup._minhash_sigs. Five
     registered rows consume the labels (components, cluster histogram,
     dup rate, corpus canonical apply, decontamination grouping); before
     r11 each re-ran the full LSH -> verify -> iterative label
@@ -149,25 +149,18 @@ def _dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     overhead at demo scale). The label table is the production shape
     anyway: a dedup pipeline materializes its group assignment once per
     corpus snapshot and every downstream decision reads it."""
-    import hashlib
     import os
 
-    from ..scratch import scratch_dir
+    from ..scratch import keyed_dir, materialize_once
 
-    mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    token = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()
-    ).hexdigest()[:12]
-    scratch = scratch_dir(f"cclabel_{token}_{os.getpid()}")
-    path = os.path.join(scratch, "labels")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def _write(tmp: str) -> None:
         from .dedup import dedup_ngram_jaccard  # deferred: avoids import cycle
 
         pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-        connected_components(pairs, "doc_a", "doc_b").write.mode(
-            "overwrite"
-        ).parquet(path)
-    return spark.read.parquet(path)
+        connected_components(pairs, "doc_a", "doc_b").write.parquet(tmp)
+
+    scratch = keyed_dir(spark, "cclabel", sf_dir, ("documents",))
+    return spark.read.parquet(materialize_once(os.path.join(scratch, "labels"), _write))
 
 
 @query("dedup_components", oracle=_COMPONENTS_ORACLE)

@@ -193,11 +193,8 @@ def _duck_kmeans_oracle() -> str:
 # ARTIFACT (k*64 doubles) — so train once and reuse, exactly the
 # signature-table discipline. Two levels (r12 verdict item 6):
 #   L1 — driver-memory dict (immune to clearCache());
-#   L2 — /tmp scratch JSON keyed by (sf, mtime, seeds, K, ITERS), so a
-#        NEW PROCESS (pytest, driver_sim, bench, the driver itself)
-#        reads the trained artifact instead of re-running Lloyd —
-#        `queries_cold` showed codebook train among the top cold costs
-#        with two seed panels re-derived per process.
+#   L2 — a JSON file in a keyed scratch dir, which outlives L1's
+#        eviction on a scale switch within the application.
 # The round-trip is BIT-EXACT by construction: every centroid value is
 # a 6 dp round-half-away integer quotient cast to double, and Python's
 # json emits shortest-round-trip reprs — so the cached read equals the
@@ -209,30 +206,25 @@ _CODEBOOK_CACHE: dict[tuple, list] = {}
 
 # Code-version component of the codebook scratch key (r13 advice —
 # mirrors IVF_INDEX_VERSION): bump whenever the Lloyd arithmetic
-# (_assign / _update / the _MEAN6 rounding) changes, or a new process
-# would silently read a stale pre-change codebook from /tmp for up to
-# the 6-hour GC age gate and consumers would trust it without recheck.
+# (_assign / _update / the _MEAN6 rounding) changes, or consumers would
+# trust a stale pre-change codebook without recheck.
 CODEBOOK_VERSION = 1
 
 
-def _codebook_scratch_path(sf_dir: str, mtime: float, seed_ids: list[int]) -> str:
-    import hashlib
+def _codebook_scratch_path(
+    spark: SparkSession, sf_dir: str, seed_ids: list[int]
+) -> str:
+    """Codebook file in a keyed dir: each application trains once
+    (first consumer pays, _CODEBOOK_CACHE and this file amortize the
+    rest). Publish stays atomic via os.replace."""
     import os
 
-    from ..scratch import scratch_dir
+    from ..scratch import keyed_dir
 
-    token = hashlib.md5(
-        f"codebook{CODEBOOK_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
-        f"{seed_ids}:{K}:{ITERS}".encode()
-    ).hexdigest()[:12]
-    # PID-KEYED since r18 (verdict item 3): the pre-r18 cross-process
-    # key let a bench process read a codebook some earlier process
-    # trained, so its timings never included the Lloyd train. Now each
-    # process trains once (first consumer pays, _CODEBOOK_CACHE +
-    # this per-pid file amortize the rest of the process) and
-    # gc_scratch reaps the dir when the owner exits. Publish stays
-    # atomic via os.replace.
-    path = scratch_dir(f"codebook_{token}_{os.getpid()}")
+    path = keyed_dir(
+        spark, "codebook", sf_dir, ("embeddings",),
+        (CODEBOOK_VERSION, seed_ids, K, ITERS),
+    )
     return os.path.join(path, "codebook.json")
 
 
@@ -266,7 +258,7 @@ def _trained_codebook(
         return cached
     for k in [k for k in _CODEBOOK_CACHE if k[:2] != key[:2]]:
         del _CODEBOOK_CACHE[k]  # one live sf per seed panel
-    path = _codebook_scratch_path(sf_dir, mtime, list(seed_ids))
+    path = _codebook_scratch_path(spark, sf_dir, list(seed_ids))
     try:
         with open(path) as fh:
             cents = [(int(cid), [float(x) for x in vec]) for cid, vec in json.load(fh)]

@@ -991,26 +991,19 @@ def read_ivf_index(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _ivf_cell_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> str:
-    """Write-once (sf, mtime)-keyed cell-partitioned index: (vec_id, v,
-    nrm) parquet partitioned by the trained-codebook cell. Norms are
+    """Write-once keyed cell-partitioned index: (vec_id, v, nrm)
+    parquet partitioned by the trained-codebook cell. Norms are
     precomputed INTO the index (the semdedup discipline — pay |v| once
     at build, not per probe). Atomic publish via materialize_once."""
-    import hashlib
     import os
 
-    from ..scratch import materialize_once, scratch_dir
+    from ..scratch import keyed_dir, materialize_once
     from .kmeans import ITERS, K, SEMDEDUP_SEED_IDS, _assign
 
-    mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
-    token = hashlib.md5(
-        f"ivfcell{IVF_INDEX_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
-        f"{SEMDEDUP_SEED_IDS}:{K}:{ITERS}".encode()
-    ).hexdigest()[:12]
-    # PID-KEYED since r18 (verdict item 3): each process builds its own
-    # index once — the build cost lands in that process's cold first
-    # probe and never leaks into another process's bench timings.
-    # gc_scratch reaps the dir when the owning process exits.
-    parent = scratch_dir(f"ivfcell_{token}_{os.getpid()}")
+    parent = keyed_dir(
+        spark, "ivfcell", sf_dir, ("embeddings",),
+        (IVF_INDEX_VERSION, SEMDEDUP_SEED_IDS, K, ITERS),
+    )
     path = os.path.join(parent, "index")
 
     def _write(tmp: str) -> None:
@@ -1089,7 +1082,7 @@ def ann_ivf_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rounded-L2 probe ranking with cid ties, 6 dp cosines, (cosine
     DESC, vec_id) total order). The index stores precomputed norms.
 
-    Plan/scale: index build is write-once per (sf, mtime) — one
+    Plan/scale: index build is write-once per keyed dir — one
     assignment pass + a partitioned write, amortized across every probe
     (the FAISS inverted-file shape on parquet); the probe itself reads
     nprobe directories, broadcasts the 1-row query, and TakeOrdereds
@@ -1165,26 +1158,22 @@ DELTA_QUERY_VEC_ID = 8  # query INSIDE the delta slice (8 % 5 == 3)
 
 
 def _ivf_delta_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> str:
-    """(sf, mtime)-keyed cell-partitioned index built INCREMENTALLY:
-    base slice written first, delta slice appended with the frozen
-    codebook — no base rewrite. ``_base_manifest.json`` /
+    """Keyed cell-partitioned index built INCREMENTALLY: base slice
+    written first, delta slice appended with the frozen codebook — no
+    base rewrite. ``_base_manifest.json`` /
     ``_full_manifest.json`` (underscore-prefixed: invisible to scans)
     snapshot the data files after each phase so the no-rewrite claim is
     checkable, not asserted."""
-    import hashlib
     import json
     import os
 
-    from ..scratch import materialize_once, scratch_dir
+    from ..scratch import keyed_dir, materialize_once
     from .kmeans import ITERS, K, SEMDEDUP_SEED_IDS, _assign
 
-    mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
-    token = hashlib.md5(
-        f"ivfdelta{IVF_INDEX_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
-        f"{SEMDEDUP_SEED_IDS}:{K}:{ITERS}:{DELTA_MOD}:{DELTA_REM}".encode()
-    ).hexdigest()[:12]
-    # pid-keyed per-process build — see _ivf_cell_index_path (r18).
-    parent = scratch_dir(f"ivfcell_{token}_{os.getpid()}")
+    parent = keyed_dir(
+        spark, "ivfdelta", sf_dir, ("embeddings",),
+        (IVF_INDEX_VERSION, SEMDEDUP_SEED_IDS, K, ITERS, DELTA_MOD, DELTA_REM),
+    )
     path = os.path.join(parent, "index")
 
     def _manifest(root: str) -> dict:
@@ -1354,8 +1343,8 @@ IVF_COMPACT_VERSION = 1  # bump when the compaction staging changes
 
 
 def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> str:
-    """(sf, mtime)-keyed COMPACTED copy of the incrementally maintained
-    delta index: copy the published base+delta layout (maintenance must
+    """Keyed COMPACTED copy of the incrementally maintained delta
+    index: copy the published base+delta layout (maintenance must
     never mutate a published artifact in place — the real
     rollout compacts during its single-writer window), then
     ``compact_partitions(max_files=1)`` merges exactly the fragmented
@@ -1363,23 +1352,21 @@ def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str, cents_rows: list
     ``_post_stats.json`` snapshot the file inventory around the rewrite
     so pytest proves selectivity (only multi-file cells rewritten,
     single-file cells byte-identical) instead of asserting it."""
-    import hashlib
     import json
     import os
     import shutil
 
-    from ..scratch import materialize_once, scratch_dir
+    from ..scratch import keyed_dir, materialize_once
     from .kmeans import ITERS, K, SEMDEDUP_SEED_IDS
     from .maintenance import compact_partitions, partition_file_stats
 
-    mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
-    token = hashlib.md5(
-        f"ivfcompact{IVF_INDEX_VERSION}.{IVF_COMPACT_VERSION}:"
-        f"{os.path.abspath(sf_dir)}:{mtime}:{SEMDEDUP_SEED_IDS}:{K}:{ITERS}:"
-        f"{DELTA_MOD}:{DELTA_REM}".encode()
-    ).hexdigest()[:12]
-    # pid-keyed per-process build — see _ivf_cell_index_path (r18).
-    parent = scratch_dir(f"ivfcell_{token}_{os.getpid()}")
+    parent = keyed_dir(
+        spark, "ivfcompact", sf_dir, ("embeddings",),
+        (
+            IVF_INDEX_VERSION, IVF_COMPACT_VERSION, SEMDEDUP_SEED_IDS, K, ITERS,
+            DELTA_MOD, DELTA_REM,
+        ),
+    )
     path = os.path.join(parent, "index")
 
     def _write(tmp: str) -> None:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..scratch import keyed_dir
 from .parity import EVENT_TYPES
 from .registry import query
 
@@ -418,22 +419,9 @@ def scd2_apply_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- snapshot time travel (AS OF VERSION) -----------------------------------
-# Scratch store the time-travel query materializes once per (source
-# data version, pid) — same write-once scoping discipline as
-# operators/scale._bucket_scratch (concurrent sessions / scale
-# switches never race a shared path).
+# Scratch store the time-travel query materializes once into a keyed
+# dir (concurrent sessions / scale switches never race a shared path).
 _SNAPSHOT_BOUND: dict[str, str] = {}
-
-
-def _snapshot_scratch(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from ..scratch import scratch_dir
-
-    mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
-    token = hashlib.md5(f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    return scratch_dir(f"snap_{token}_{os.getpid()}")
 
 
 def _ensure_snapshot_store(spark: SparkSession, sf_dir: str) -> str:
@@ -445,7 +433,7 @@ def _ensure_snapshot_store(spark: SparkSession, sf_dir: str) -> str:
     which the version resolver must never serve."""
     import os
 
-    scratch = _snapshot_scratch(sf_dir)
+    scratch = keyed_dir(spark, "snap", sf_dir, ("events",))
     if _SNAPSHOT_BOUND.get("dir") == scratch and os.path.exists(
         os.path.join(scratch, "v1", "_SUCCESS")
     ):
@@ -648,19 +636,6 @@ _EVO_CUTOFF = "2024-01-16 00:00:00"
 _EVO_BOUND: dict[str, str] = {}
 
 
-def _evolution_scratch(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from ..scratch import scratch_dir
-
-    mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
-    token = hashlib.md5(
-        f"evo:{os.path.abspath(sf_dir)}:{mtime}".encode()
-    ).hexdigest()[:12]
-    return scratch_dir(f"snap_evo_{token}_{os.getpid()}")
-
-
 def _ensure_evolution_batches(spark: SparkSession, sf_dir: str) -> str:
     """Stage the two-epoch CDC directory: batch b0 (pre-cutoff rows,
     v1 schema WITHOUT ``channel``) and batch b1 (post-cutoff rows, v2
@@ -668,7 +643,7 @@ def _ensure_evolution_batches(spark: SparkSession, sf_dir: str) -> str:
     whose physical footers genuinely differ."""
     import os
 
-    scratch = _evolution_scratch(sf_dir)
+    scratch = keyed_dir(spark, "snap_evo", sf_dir, ("events",))
     if _EVO_BOUND.get("dir") == scratch and os.path.exists(
         os.path.join(scratch, "b1", "_SUCCESS")
     ):

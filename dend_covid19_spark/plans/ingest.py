@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import SCHEMAS, load_table
-from ..scratch import link_or_copy
+from ..scratch import keyed_dir, link_or_copy, materialize_once, scratch_dir
 from ..session import env_positive_int, session_conf, session_memo
 from ..sources.readers import (
     from_rows,
@@ -63,16 +63,6 @@ GROUP BY lang
 """
 
 
-def _scratch(name: str) -> str:
-    """Fixed per-query scratch dir: every invocation overwrites the same
-    path (writers run mode('overwrite')), so repeated bench/correctness
-    runs reuse one directory instead of leaking a mkdtemp copy each.
-    pid-stamped so gc_scratch can reap it once this process dies."""
-    from ..scratch import scratch_dir
-
-    return scratch_dir(name)
-
-
 def _digest(df: DataFrame) -> DataFrame:
     return df.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -96,7 +86,7 @@ def ingest_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON encode/decode loop is lossless.
     """
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(_scratch("jsonl"), "docs")
+    path = os.path.join(scratch_dir("jsonl"), "docs")
     write_jsonl(docs, path, compression="gzip")
     back = read_jsonl(spark, os.path.join(path, "*.json.gz"), SCHEMAS["documents"])
     return _digest(back)
@@ -122,7 +112,7 @@ def ingest_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     both the write layout and the pruned read.
     """
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(_scratch("partitioned"), "docs_by_lang")
+    path = os.path.join(scratch_dir("partitioned"), "docs_by_lang")
     write_partitioned(docs, path, ["lang"])
     back = read_partitioned(spark, path, lang=_PRUNE_LANG)
     return _digest(back).select(
@@ -188,7 +178,7 @@ def ingest_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     erasure); the value-hash match certifies the writer's quoting and
     the reader's parsing are mutually lossless for real text data."""
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(_scratch("csv"), "docs_csv")
+    path = os.path.join(scratch_dir("csv"), "docs_csv")
     write_csv(docs, path)
     back = read_csv(spark, path, SCHEMAS["documents"])
     return _digest(back)
@@ -201,7 +191,7 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hive/Trino ORC-first lakes, on the same columnar footing (pushdown,
     pruning) as parquet."""
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(_scratch("orc"), "docs_orc")
+    path = os.path.join(scratch_dir("orc"), "docs_orc")
     write_orc(docs, path)
     back = read_orc(spark, path, SCHEMAS["documents"])
     return _digest(back)
@@ -238,7 +228,7 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently mis-bind, which is why every reader in this package binds
     by name."""
     docs = load_table(spark, "documents", sf_dir)
-    base = os.path.join(_scratch("evolution"), "docs_gen")
+    base = os.path.join(scratch_dir("evolution"), "docs_gen")
     gen1 = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text", "n_chars")
     gen2 = docs.where(F.col("doc_id") % 2 == 1).select(
         "doc_id", "text", "n_chars", "lang"
@@ -373,6 +363,21 @@ def _stream_width() -> str:
     return str(env_positive_int("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8))
 
 
+def _events_src(
+    spark: SparkSession, name: str, sf_dir: str, inputs: tuple = ("events",)
+) -> tuple[str, str]:
+    """(scratch, src): a keyed scratch dir for a drain and its ``src``
+    subdir holding the dataset's events.parquet, the file source the
+    drain streams."""
+    scratch = keyed_dir(spark, name, sf_dir, inputs)
+    src = os.path.join(scratch, "src")
+    os.makedirs(src, exist_ok=True)
+    link_or_copy(
+        os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet")
+    )
+    return scratch, src
+
+
 @query(
     "streaming_dedup_executed",
     oracle="""
@@ -403,14 +408,9 @@ def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-cardinality rows, not the stream."""
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash((os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamdedup_{token}")
-    src = os.path.join(scratch, "src")
-    os.makedirs(src, exist_ok=True)
-    link = os.path.join(src, "events.parquet")
-    link_or_copy(os.path.join(sf_dir, "events.parquet"), link)
+    scratch, src = _events_src(spark, "streamdedup", sf_dir)
 
-    sink = f"stream_dedup_sink_{token}"
+    sink = os.path.basename(scratch)
     events = read_events_stream(spark, src)
     # dropDuplicatesWithinWatermark keeps one state entry per
     # (user_id, event_type) inside the watermark — KB-scale state here,
@@ -467,17 +467,12 @@ def streaming_enrich_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     selective-scan + broadcast-probe."""
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash(("enrich", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamenrich_{token}")
-    src = os.path.join(scratch, "src")
-    os.makedirs(src, exist_ok=True)
-    link = os.path.join(src, "events.parquet")
-    link_or_copy(os.path.join(sf_dir, "events.parquet"), link)
+    scratch, src = _events_src(spark, "streamenrich", sf_dir, ("events", "customer"))
 
     cust = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_mktsegment"
     )
-    sink = f"stream_enrich_sink_{token}"
+    sink = os.path.basename(scratch)
     events = read_events_stream(spark, src)
     q = (
         events.where(F.col("event_type") == "purchase")
@@ -507,22 +502,15 @@ _OVR_DAYS = ("2024-01-05", "2024-01-07")  # inclusive window
 _OVR_RERUN_DAY = "2024-01-06"
 
 
-def _ovr_scratch(sf_dir: str) -> str:
-    """(dataset, pid)-keyed overwrite-store scratch. Dynamic partition
-    overwrite replaces ONLY partitions present in the incoming frame, so
-    a path shared across datasets would carry stale partitions of a
-    previously-run sf_dir whenever a window day is absent at the new
-    scale (hash mismatch); shared across processes, two concurrent runs
-    would race (overwrite deletes files a live reader is scanning).
-    Keyed exactly like cdc._snapshot_scratch: sf_dir path + events mtime
-    + pid."""
-    import hashlib
-
-    mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
-    token = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()
-    ).hexdigest()[:12]
-    return _scratch(f"ovr_{token}_{os.getpid()}")
+def _ovr_scratch(spark: SparkSession, sf_dir: str) -> str:
+    """Overwrite-store scratch, keyed like every derived dir (see
+    ``scratch.keyed_dir``). Dynamic partition overwrite replaces ONLY
+    partitions present in the incoming frame, so a path shared across
+    datasets would carry stale partitions of a previously-run sf_dir
+    whenever a window day is absent at the new scale (hash mismatch);
+    shared across processes, two concurrent runs would race (overwrite
+    deletes files a live reader is scanning)."""
+    return keyed_dir(spark, "ovr", sf_dir, ("events",))
 
 
 @query(
@@ -566,7 +554,7 @@ def ingest_overwrite_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day", F.to_date("ts")
     )
     win = ev.where(F.col("day").between(*_OVR_DAYS))
-    path = os.path.join(_ovr_scratch(sf_dir), "events_by_day")
+    path = os.path.join(_ovr_scratch(spark, sf_dir), "events_by_day")
 
     with session_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         win.write.partitionBy("day").mode("overwrite").parquet(path)
@@ -638,14 +626,9 @@ def streaming_session_window_executed(spark: SparkSession, sf_dir: str) -> DataF
     projection of that."""
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash(("sesswin", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamsesswin_{token}")
-    src = os.path.join(scratch, "src")
-    os.makedirs(src, exist_ok=True)
-    link = os.path.join(src, "events.parquet")
-    link_or_copy(os.path.join(sf_dir, "events.parquet"), link)
+    scratch, src = _events_src(spark, "streamsesswin", sf_dir)
 
-    sink = f"stream_sesswin_sink_{token}"
+    sink = os.path.basename(scratch)
     events = read_events_stream(spark, src)
     # session_window keeps one open session per active user in the
     # state store — state-store-bound, so the drain takes the narrow
@@ -712,14 +695,9 @@ def streaming_interval_join_executed(spark: SparkSession, sf_dir: str) -> DataFr
     precondition as the other streaming rows."""
     from ..streaming.daily import read_events_stream, attribution_stream
 
-    token = abs(hash(("attrjoin", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamattr_{token}")
-    src = os.path.join(scratch, "src")
-    os.makedirs(src, exist_ok=True)
-    link = os.path.join(src, "events.parquet")
-    link_or_copy(os.path.join(sf_dir, "events.parquet"), link)
+    scratch, src = _events_src(spark, "streamattr", sf_dir)
 
-    sink = f"stream_attr_sink_{token}"
+    sink = os.path.basename(scratch)
     events = read_events_stream(spark, src)
     # The join's state-store width freezes at the session's shuffle
     # width when the checkpoint is created — 200 under a vanilla
@@ -798,8 +776,7 @@ def streaming_join_state_eviction_executed(spark: SparkSession, sf_dir: str) -> 
     width freezes at checkpoint creation)."""
     from ..streaming.daily import attribution_stream, read_events_stream
 
-    token = abs(hash(("evictjoin", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamevict_{token}")
+    scratch = keyed_dir(spark, "streamevict", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
 
@@ -820,7 +797,7 @@ def streaming_join_state_eviction_executed(spark: SparkSession, sf_dir: str) -> 
         t = now - 1000 + i * 100
         os.utime(os.path.join(src, f"p{i}.parquet"), (t, t))
 
-    sink = f"stream_evict_sink_{token}"
+    sink = os.path.basename(scratch)
     with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
         events = read_events_stream(spark, src, max_files_per_trigger=1)
         q = (
@@ -905,8 +882,7 @@ def streaming_late_drop_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB hit the watermark gate, not the state store."""
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash(("latedrop", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamlate_{token}")
+    scratch = keyed_dir(spark, "streamlate", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     f1 = os.path.join(src, "a_events.parquet")
@@ -941,7 +917,7 @@ def streaming_late_drop_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.utime(f2, (now - 500, now - 500))
     os.utime(f3, (now, now))
 
-    sink = f"stream_late_sink_{token}"
+    sink = os.path.basename(scratch)
     events = read_events_stream(spark, src, max_files_per_trigger=1)
     # The state-store partition count freezes at the session's shuffle
     # width when the checkpoint is created — 200 under the driver's
@@ -1026,10 +1002,9 @@ def _drain_mode(
     the given output mode and return the memory sink's final contents."""
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash((mode, os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streammode_{mode}_{token}")
+    scratch = keyed_dir(spark, f"streammode_{mode}", sf_dir, ("events",))
     src = _two_batch_src(spark, sf_dir, scratch)
-    sink = f"stream_{mode}_sink_{token}"
+    sink = os.path.basename(scratch)
     with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
         q = (
             read_events_stream(spark, src, max_files_per_trigger=1)
@@ -1168,16 +1143,11 @@ def streaming_stateful_sessionize_executed(
     uses). Plan/scale: state is one 4-field tuple per user; emission
     is session-cardinality; the Python stage is Arrow-batched per
     micro-batch group, not per row."""
-    token = abs(hash(("statefulsess", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamstateful_{token}")
-    src = os.path.join(scratch, "src")
-    os.makedirs(src, exist_ok=True)
-    link = os.path.join(src, "events.parquet")
-    link_or_copy(os.path.join(sf_dir, "events.parquet"), link)
+    scratch, src = _events_src(spark, "streamstateful", sf_dir)
 
     from ..streaming.stateful import run_sessionize_available_now
 
-    sink = f"stream_stateful_sink_{token}"
+    sink = os.path.basename(scratch)
     # keyed state is one 4-field tuple per user (KB-scale) — the
     # groupBy shuffle width is also the state-store width, so the
     # drain takes the narrow width (interleaved A/B: 2.4-4.9x at 8).
@@ -1293,8 +1263,7 @@ def streaming_restart_resume_executed(spark: SparkSession, sf_dir: str) -> DataF
     the same resume works after a 100 TB backfill."""
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash(("resume", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamresume_{token}")
+    scratch = keyed_dir(spark, "streamresume", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     sink = os.path.join(scratch, "sink")
@@ -1382,8 +1351,7 @@ def streaming_upsert_sink_executed(spark: SparkSession, sf_dir: str) -> DataFram
         run_conditional_upsert_available_now,
     )
 
-    token = abs(hash(("upsert", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamupsert_{token}")
+    scratch = keyed_dir(spark, "streamupsert", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     store = os.path.join(scratch, "store")
@@ -1466,8 +1434,7 @@ def streaming_drift_monitor_executed(spark: SparkSession, sf_dir: str) -> DataFr
     from ..streaming.daily import run_counts_merge_available_now
     from .timeseries import drift_tv_from_daily
 
-    token = abs(hash(("driftmon", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamdrift_{token}")
+    scratch = keyed_dir(spark, "streamdrift", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     store = os.path.join(scratch, "store")
@@ -1570,8 +1537,7 @@ def streaming_funnel_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import run_funnel_available_now
     from .timeseries import FUNNEL_STAGES, FUNNEL_WINDOW_MIN
 
-    token = abs(hash(("funnel", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamfunnel_{token}")
+    scratch = keyed_dir(spark, "streamfunnel", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
 
@@ -1595,7 +1561,7 @@ def streaming_funnel_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = now - 1000 + i * 100
         os.utime(os.path.join(src, f"p{i}.parquet"), (t, t))
 
-    sink = f"stream_funnel_sink_{token}"
+    sink = os.path.basename(scratch)
     with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
         run_funnel_available_now(
             spark,
@@ -1670,8 +1636,7 @@ def streaming_compaction_sink_executed(spark: SparkSession, sf_dir: str) -> Data
 
     from ..streaming.daily import run_partitioned_sink_with_compaction
 
-    token = abs(hash(("compactsink", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamcompact_{token}")
+    scratch = keyed_dir(spark, "streamcompact", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     out = os.path.join(scratch, "sink")
@@ -1800,8 +1765,7 @@ def snapshot_time_travel_compacted(spark: SparkSession, sf_dir: str) -> DataFram
         run_conditional_upsert_available_now,
     )
 
-    token = abs(hash(("snaptt", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"snaptt_{token}")
+    scratch = keyed_dir(spark, "snaptt", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     store = os.path.join(scratch, "store")
@@ -1915,8 +1879,7 @@ def lakehouse_manifest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table,
     )
 
-    token = abs(hash(("lakehouse", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"lakehouse_{token}")
+    scratch = keyed_dir(spark, "lakehouse", sf_dir, ("events",))
     root = os.path.join(scratch, "table")
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -1977,7 +1940,7 @@ _COMPACT_MAX_FILES = 3  # breach rule: compact partitions with more files
 
 
 def _compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
-    """(sf, mtime)-keyed scratch: the events table laid out by
+    """Keyed scratch build: the events table laid out by
     ``event_date`` with planted small-file debris (dates with
     day-of-month <= _COMPACT_FRAG_DOM written via round-robin
     ``repartition(6)`` -> ~6 files each, the rest one file each), then
@@ -1992,19 +1955,12 @@ def _compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
     compactor's selective/lossless contract (test_round14_ops.py) — the
     registered row migrated to the manifest-commit build below
     (_manifest_compacted_events_root), one maintenance story."""
-    import hashlib
-
     from ..operators.maintenance import compact_partitions, partition_file_stats
-    from ..scratch import materialize_once, scratch_dir
 
-    mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
-    token = hashlib.md5(
-        f"compactev{_COMPACT_DEMO_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
-        f"{_COMPACT_FRAG_FILES}:{_COMPACT_FRAG_DOM}:{_COMPACT_MAX_FILES}".encode()
-    ).hexdigest()[:12]
-    # pid-keyed per-process build (r18 verdict item 3) — each process
-    # builds its own fixture; gc_scratch reaps it when the owner exits.
-    parent = scratch_dir(f"compactev_{token}_{os.getpid()}")
+    parent = keyed_dir(
+        spark, "compactev", sf_dir, ("events",),
+        (_COMPACT_DEMO_VERSION, _COMPACT_FRAG_FILES, _COMPACT_FRAG_DOM, _COMPACT_MAX_FILES),
+    )
     path = os.path.join(parent, "data")
 
     def _write(tmp: str) -> None:
@@ -2042,7 +1998,7 @@ def _compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _manifest_compacted_events_root(spark: SparkSession, sf_dir: str) -> str:
-    """(sf, mtime)-keyed scratch: the compaction_incremental_events
+    """Keyed scratch build: the compaction_incremental_events
     scenario rebuilt through the MANIFEST-COMMIT path (the r16->r17
     swap->manifest migration; equivalence pinned first in
     tests/test_round16_ops.py::test_migration_equivalence_swap_scenario_
@@ -2060,8 +2016,6 @@ def _manifest_compacted_events_root(spark: SparkSession, sf_dir: str) -> str:
     OPTIMIZE record and the pre-compact touched resolution — so the
     registered row re-proves selectivity on every invocation (driver-
     side metadata asserts) instead of trusting the build."""
-    import hashlib
-
     from ..operators.lakehouse import (
         append_manifest_table,
         compact_manifest_table,
@@ -2069,16 +2023,11 @@ def _manifest_compacted_events_root(spark: SparkSession, sf_dir: str) -> str:
         files_for_values,
         write_manifest_table,
     )
-    from ..scratch import materialize_once, scratch_dir
 
-    mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
-    token = hashlib.md5(
-        f"mcompactev{_COMPACT_DEMO_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
-        f"{_COMPACT_FRAG_FILES}:{_COMPACT_FRAG_DOM}".encode()
-    ).hexdigest()[:12]
-    # pid-keyed per-process build (r18 verdict item 3) — each process
-    # builds its own fixture; gc_scratch reaps it when the owner exits.
-    parent = scratch_dir(f"mcompactev_{token}_{os.getpid()}")
+    parent = keyed_dir(
+        spark, "mcompactev", sf_dir, ("events",),
+        (_COMPACT_DEMO_VERSION, _COMPACT_FRAG_FILES, _COMPACT_FRAG_DOM),
+    )
     path = os.path.join(parent, "table")
 
     def _write(tmp: str) -> None:
@@ -2221,10 +2170,9 @@ def compaction_incremental_events(spark: SparkSession, sf_dir: str) -> DataFrame
 # The r15 verdict's owed oracle rows on the manifest-commit protocol
 # (operators/lakehouse.py), each proven at the library level in r15
 # (tests/test_lakehouse.py) and put under the cross-engine value hash
-# here. Each table builds once per (process, sf) into a pid-stamped
-# scratch, every build re-runs the metadata asserts (driver-side,
-# cheap), and the digest hashes against a DuckDB oracle over the
-# ORIGINAL events parquet.
+# here. Each table builds once into a keyed scratch dir, every build
+# re-runs the metadata asserts (driver-side, cheap), and the digest
+# hashes against a DuckDB oracle over the ORIGINAL events parquet.
 
 _LH_PRUNE_FILES = 8  # clustered width: disjoint event_id ranges
 
@@ -2280,8 +2228,7 @@ def lakehouse_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table,
     )
 
-    token = abs(hash(("lhprune", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"lhprune_{token}")
+    scratch = keyed_dir(spark, "lhprune", sf_dir, ("events",))
     root = os.path.join(scratch, "table")
 
     if not os.path.exists(os.path.join(root, "_manifests", "m1.json")):
@@ -2371,8 +2318,7 @@ def lakehouse_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table,
     )
 
-    token = abs(hash(("lhrace", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"lhrace_{token}")
+    scratch = keyed_dir(spark, "lhrace", sf_dir, ("events",))
     root = os.path.join(scratch, "table")
 
     if not os.path.exists(os.path.join(root, "_manifests", "m1.json")):
@@ -2485,8 +2431,7 @@ def lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_manifest_table,
     )
 
-    token = abs(hash(("lhevolve", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"lhevolve_{token}")
+    scratch = keyed_dir(spark, "lhevolve", sf_dir, ("events",))
     root = os.path.join(scratch, "table")
 
     if not os.path.exists(os.path.join(root, "_manifests", "m1.json")):
@@ -2583,10 +2528,7 @@ def streaming_compaction_restart_executed(spark: SparkSession, sf_dir: str) -> D
 
     from ..streaming.daily import run_partitioned_sink_with_compaction
 
-    token = abs(hash(("compactrestart", os.path.abspath(sf_dir), os.getpid()))) % (
-        1 << 32
-    )
-    scratch = _scratch(f"streamcres_{token}")
+    scratch = keyed_dir(spark, "streamcres", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     out = os.path.join(scratch, "sink")
@@ -2734,10 +2676,7 @@ def streaming_manifest_sink_executed(spark: SparkSession, sf_dir: str) -> DataFr
     )
     from ..streaming.daily import run_manifest_sink_with_compaction
 
-    token = abs(hash(("manifestsink", os.path.abspath(sf_dir), os.getpid()))) % (
-        1 << 32
-    )
-    scratch = _scratch(f"manifestsink_{token}")
+    scratch = keyed_dir(spark, "manifestsink", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     root = os.path.join(scratch, "table")
@@ -2887,8 +2826,7 @@ def lakehouse_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table,
     )
 
-    token = abs(hash(("asofhist", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"asofhist_{token}")
+    scratch = keyed_dir(spark, "asofhist", sf_dir, ("events",))
     root = os.path.join(scratch, "table")
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -3019,8 +2957,7 @@ def lakehouse_partition_exact_scan(spark: SparkSession, sf_dir: str) -> DataFram
         write_manifest_table,
     )
 
-    token = abs(hash(("pexact", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"pexact_{token}")
+    scratch = keyed_dir(spark, "pexact", sf_dir, ("events",))
     root = os.path.join(scratch, "table")
     audit_path = os.path.join(scratch, "_build_audit.json")
 
@@ -3214,8 +3151,7 @@ def lakehouse_spec_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         write_manifest_table,
     )
 
-    token = abs(hash(("specevo", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"specevo_{token}")
+    scratch = keyed_dir(spark, "specevo", sf_dir, ("events",))
     root = os.path.join(scratch, "table")
     audit_path = os.path.join(scratch, "_build_audit.json")
 
@@ -3407,8 +3343,7 @@ def lakehouse_transform_migration_scan(spark: SparkSession, sf_dir: str) -> Data
         write_manifest_table,
     )
 
-    token = abs(hash(("tmig", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"tmig_{token}")
+    scratch = keyed_dir(spark, "tmig", sf_dir, ("events",))
     root = os.path.join(scratch, "table")
     audit_path = os.path.join(scratch, "_build_audit.json")
 

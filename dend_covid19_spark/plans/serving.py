@@ -12,10 +12,10 @@ window driving both sides per execution date).
 The managed database is pinned to a pid-scoped /tmp LOCATION so the
 query is independent of the driver's cwd (the default warehouse dir is
 cwd-relative) and concurrent processes can't race each other's
-DROP/INSERT. ETL executes once per (session, sf_dir) and the digest
-plan is cached — identical to the streaming-drain discipline in
-plans/ingest.py: re-invocations (the driver times each query several
-times) re-read the loaded tables instead of replaying the backfill.
+DROP/INSERT. ETL executes once per (application, sf_dir) and the
+digest plan is cached: re-invocations (the driver times each query
+several times) re-read the loaded tables instead of replaying the
+backfill.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import backfill
-from ..scratch import scratch_dir
+from ..scratch import keyed_dir, scratch_dir
 from .annotate import _SENTIMENT_CTE
 from .registry import query
 
@@ -78,6 +78,10 @@ SELECT
 FROM mv CROSS JOIN hist
 """
 
+# One entry at a time, not session_memo's one per (application,
+# sf_dir): every sf_dir shares the one _DB database, so a frame cached
+# for one scale would read another scale's rows after that scale's
+# reset.
 _SERVING_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -107,6 +111,8 @@ def serving_tables_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in [k for k in _SERVING_CACHE if k != cache_key]:
         del _SERVING_CACHE[k]
 
+    # not a keyed_dir: the database is shared by every sf_dir, and
+    # CREATE DATABASE IF NOT EXISTS keeps the first location it was given
     loc = scratch_dir(f"servingdb_{os.getpid()}")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {_DB} LOCATION '{loc}'")
     backfill(
@@ -248,7 +254,7 @@ def jdbc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    url = derby_url(os.path.join(scratch_dir(f"derby_{os.getpid()}"), "db"))
+    url = derby_url(os.path.join(keyed_dir(spark, "derby", sf_dir, ("events",)), "db"))
     write_jdbc_staged(spark, agg, url, "daily_events")
     bounds = agg.agg(F.min("cnt"), F.max("cnt")).first()
     if bounds[0] is None:

@@ -885,27 +885,19 @@ SPAN_NGRAM = 4
 def _gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, i, gh): the 32-bit hash of the 4-gram starting at token
     position i (1-based), for every position of every document —
-    materialized ONCE per (sf_dir, data mtime, pid) to parquet scratch
-    (the _minhash_sigs discipline) and shared by dedup_ngram_spans and
-    dedup_span_merge. Before r11 each consumer re-exploded and re-md5'd
-    every position per call (~2-6 s at sf0.1); the position table is
-    also the production shape — ExactSubstr pipelines materialize their
-    gram index once per corpus snapshot."""
-    import hashlib
+    materialized once to keyed parquet scratch (the _minhash_sigs
+    discipline) and shared by dedup_ngram_spans and dedup_span_merge.
+    Before r11 each consumer re-exploded and re-md5'd every position
+    per call (~2-6 s at sf0.1); the position table is also the
+    production shape — ExactSubstr pipelines materialize their gram
+    index once per corpus snapshot."""
     import os
 
+    from ..catalog import widen_scan
     from ..functions import hashing as H
-    from ..scratch import scratch_dir
+    from ..scratch import keyed_dir, materialize_once
 
-    mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    token = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()
-    ).hexdigest()[:12]
-    scratch = scratch_dir(f"grampos_{token}_{os.getpid()}")
-    path = os.path.join(scratch, "grams")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from ..catalog import widen_scan
-
+    def _write(tmp: str) -> None:
         docs = widen_scan(load_table(spark, "documents", sf_dir))
         tok = docs.select("doc_id", F.split("text", " ").alias("toks")).where(
             F.expr(f"size(toks) >= {SPAN_NGRAM}")
@@ -924,10 +916,11 @@ def _gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("pos", "gh"),
             )
             .select("doc_id", (F.col("pos") + 1).cast("int").alias("i"), "gh")
-            .write.mode("overwrite")
-            .parquet(path)
+            .write.parquet(tmp)
         )
-    return spark.read.parquet(path)
+
+    scratch = keyed_dir(spark, "grampos", sf_dir, ("documents",))
+    return spark.read.parquet(materialize_once(os.path.join(scratch, "grams"), _write))
 
 
 @query(
@@ -974,8 +967,8 @@ def dedup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram approximation first because it is one shuffle + one join.
     Output is docs with >= 1 duplicated position, with ppm coverage in
     exact integer arithmetic."""
-    # The gram-position table materializes once per (sf, mtime, pid)
-    # scratch (see _gram_positions) and is shared with dedup_span_merge;
+    # The gram-position table materializes once into keyed scratch
+    # (see _gram_positions) and is shared with dedup_span_merge;
     # at 100 TB this is the classic materialize-vs-recompute call —
     # |grams| ~ 10x corpus bytes, so production checkpoints the index to
     # cluster storage or recomputes if storage-starved; the md5 cost
@@ -1094,7 +1087,7 @@ def dedup_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries to the 4-gram grid."""
     from pyspark.sql import Window
 
-    # shared once-per-(sf, mtime, pid) gram index — see _gram_positions
+    # shared gram index — see _gram_positions
     g = _gram_positions(spark, sf_dir)
     f = (
         g.groupBy("gh")

@@ -1,11 +1,19 @@
 """Process-scoped /tmp scratch management with liveness-checked GC.
 
 Side-effecting queries (ingest round-trips, streaming drains, CDC
-snapshot stores, bucketed-table demos) materialize intermediate data
-under ``$TMPDIR/spark_graft_ingest/<name>``. Names are either fixed
-per query (overwritten every run — no growth) or token-suffixed per
-(dataset, pid) — and THOSE accumulate a few MB per process when many
-driver rounds share a machine (SURVEY.md §8 queue item c).
+snapshot stores, bucketed-table demos) and derived tables (signature,
+fingerprint and label tables, IVF indexes, codebooks) materialize data
+under ``$TMPDIR/spark_graft_ingest/<name>``. Names are either fixed per
+query (overwritten every run, so no growth) or built by ``keyed_dir``.
+
+The key rule, in one place: a keyed dir is named
+``<name>_<token>_<pid>``, where ``token`` hashes the Spark application
+id, the dataset dir, the mtime of every input table the dir derives
+from and the caller's code versions and parameters. A dir therefore
+lives exactly as long as the application that wrote it, which is the
+scope ``session.session_memo`` caches in: a second application (even
+in the same process) starts from an empty checkpoint, sink or store
+instead of resuming the first one's.
 
 ``scratch_dir`` stamps every directory it creates with an ``owner.pid``
 marker; ``gc_scratch`` removes directories whose owning process is no
@@ -20,6 +28,7 @@ finished — the pid marker here is the single-machine projection of that.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import shutil
@@ -30,10 +39,10 @@ SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_ingest")
 _PID_MARKER = "owner.pid"
 # dirs created before the marker existed encode the owner as a trailing
 # _<pid> name segment — but ONLY for the known legacy families (cdc
-# snap_*, scale bucketed_*, serving servingdb_*). Other token-suffixed
-# names (streamdedup_<hash>, streamenrich_<hash>) end in a 32-bit hash
-# that must NOT be misread as a pid: a hash that matches no live pid
-# would make GC reap a directory a live pre-marker process still uses.
+# snap_*, scale bucketed_*, serving servingdb_*). Older ingest names
+# (streamdedup_<hash>, streamenrich_<hash>) end in a 32-bit hash that
+# must NOT be misread as a pid: a hash that matches no live pid would
+# make GC reap a directory a live pre-marker process still uses.
 _TRAILING_PID = re.compile(r"^(?:snap|bucketed|servingdb)_.*?(\d+)$")
 
 # unmarked, un-suffixed dirs (fixed-name ingest scratch) are only
@@ -86,6 +95,25 @@ def scratch_dir(name: str, root: str = SCRATCH_ROOT) -> str:
     return path
 
 
+def keyed_dir(
+    spark, name: str, sf_dir: str, inputs: tuple = (), key: tuple = ()
+) -> str:
+    """``scratch_dir("<name>_<token>_<pid>")`` for a dir derived from
+    ``sf_dir``. ``token`` is the first 12 hex digits of the md5 of the
+    Spark application id, ``abspath(sf_dir)``, the mtime of each
+    ``<input>.parquet`` named in ``inputs`` and ``key`` (code versions
+    and parameters). A new application, a rewritten input, another
+    dataset or another version each get a fresh dir; the same call
+    within one application returns the same dir. The ``_<pid>`` suffix
+    means a keyed name always ends in its owner's pid, so
+    ``_TRAILING_PID`` can never misread the hash as one."""
+    parts = [spark.sparkContext.applicationId, os.path.abspath(sf_dir)]
+    parts += [os.path.getmtime(os.path.join(sf_dir, f"{t}.parquet")) for t in inputs]
+    parts += key
+    token = hashlib.md5(repr(parts).encode()).hexdigest()[:12]
+    return scratch_dir(f"{name}_{token}_{os.getpid()}")
+
+
 def materialize_once(path: str, write_fn) -> str:
     """Publish a cached derivation directory ATOMICALLY (r12 advice 1):
     ``write_fn(tmp_path)`` writes into a unique sibling temp dir, which
@@ -111,9 +139,7 @@ def materialize_once(path: str, write_fn) -> str:
     own — without the touch, a newly started process could reap an
     index still being probed mid-scan (FileNotFound task failures, or
     a silently partial scan in a narrow listing race). With it, the
-    age gate measures time since last USE, not since publish. Since
-    r18 the ivfcell_*, codebook_* and deconsh_* artifacts are pid-keyed
-    under scratch_dir and reaped once their owner exits."""
+    age gate measures time since last USE, not since publish."""
     if os.path.isdir(path):
         if os.path.exists(os.path.join(path, "_SUCCESS")):
             _touch_live(path)

@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dend_covid19_spark.catalog import load_table
+from dend_covid19_spark.session import session_conf
 from dend_covid19_spark.streaming.daily import read_events_stream
 
 from conftest import SF_DIR
@@ -31,15 +32,10 @@ def _stage(df, scratch: str, dest: str, name: str) -> None:
     # write ts as TIMESTAMP_MICROS: the stream reader footer-sniffs the
     # source dir, and Spark's default INT96 output would sniff as ns
     # (pyarrow reads INT96 as timestamp[ns]) while the file isn't INT64
-    spark = df.sparkSession
-    key = "spark.sql.parquet.outputTimestampType"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "TIMESTAMP_MICROS")
+    micros = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+    with session_conf(df.sparkSession, micros):
         d = os.path.join(scratch, name)
         df.coalesce(1).write.mode("overwrite").parquet(d)
-    finally:
-        spark.conf.set(key, old)
     (part,) = glob.glob(os.path.join(d, "part-*.parquet"))
     shutil.move(part, dest)
 
@@ -59,11 +55,8 @@ def _day_span(ev):
 
 @pytest.fixture()
 def narrow_shuffle(spark):
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    yield
-    spark.conf.set(key, old)
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        yield
 
 
 @pytest.mark.parametrize("seed", SEEDS)

@@ -21,7 +21,15 @@ from dend_covid19_spark.plans.graph import (
     pagerank_copurchase,
     pagerank_copurchase_shuffle,
 )
+from dend_covid19_spark.session import session_conf
 from tests.conftest import SF_DIR
+
+# the *_edges_stationary pins read the at-scale plan: no broadcast
+# auto-planning, and no AQE re-planning of the checkpointed partitions
+_NO_BROADCAST_NO_AQE = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.enabled": "false",
+}
 
 
 def test_pagerank_mass_and_floor(spark):
@@ -155,11 +163,7 @@ def test_pagerank_shuffle_branch_edges_stationary(spark):
     is the at-scale plan."""
     from pyspark.sql import functions as F
 
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with session_conf(spark, _NO_BROADCAST_NO_AQE):
         ed, deg = _copurchase_edges(spark, SF_DIR, broadcast_deg=False)
         edc = ed.repartition(PR_SHUFFLE_PARTS, "s").localCheckpoint()
         ranks = deg.select(
@@ -167,9 +171,6 @@ def test_pagerank_shuffle_branch_edges_stationary(spark):
         )
         j = edc.join(ranks, edc.s == ranks.node)
         plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
     assert "Broadcast" not in plan, plan
     exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
     # at most the rank side moves — and when the rank table derives from
@@ -332,11 +333,7 @@ def test_kcore_shuffle_branch_edges_stationary(spark):
         _kcore_edges,
     )
 
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with session_conf(spark, _NO_BROADCAST_NO_AQE):
         e = _kcore_edges(spark, SF_DIR).repartition(
             KCORE_SHUFFLE_PARTS, "s"
         ).localCheckpoint()
@@ -349,9 +346,6 @@ def test_kcore_shuffle_branch_edges_stationary(spark):
         dropped = alive.where(F.col("deg") < KCORE_K).select("s")
         j = e.join(dropped.repartition(KCORE_SHUFFLE_PARTS, "s"), "s")
         plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
     assert "Broadcast" not in plan, plan
     exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
     # at most the frontier side moves; the checkpointed edge partitions
@@ -379,11 +373,7 @@ def test_lpa_edges_stationary(spark):
         _kcore_edges,
     )
 
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with session_conf(spark, _NO_BROADCAST_NO_AQE):
         e = _kcore_edges(spark, SF_DIR).repartition(
             KCORE_SHUFFLE_PARTS, "d"
         ).localCheckpoint()
@@ -395,9 +385,6 @@ def test_lpa_edges_stationary(spark):
             e.d == labels.node,
         )
         plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
     assert "Broadcast" not in plan, plan
     lines = plan.splitlines()
     join_at = next(i for i, ln in enumerate(lines) if "SortMergeJoin" in ln)

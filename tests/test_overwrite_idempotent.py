@@ -33,26 +33,26 @@ def test_rerun_twice_converges(spark):
 
 def test_sibling_partitions_survive(spark):
     ingest_overwrite_idempotent(spark, SF_DIR).collect()
-    store = os.path.join(_ovr_scratch(SF_DIR), "events_by_day")
+    store = os.path.join(_ovr_scratch(spark, SF_DIR), "events_by_day")
     days = sorted(
         os.path.basename(p) for p in glob.glob(os.path.join(store, "day=*"))
     )
     assert days == [f"day={_OVR_DAYS[0]}", "day=2024-01-06", f"day={_OVR_DAYS[1]}"]
 
 
-def test_scratch_keyed_by_dataset_and_pid(tmp_path):
+def test_scratch_keyed_by_dataset_and_pid(spark, tmp_path):
     """The overwrite store must never be shared across datasets or
     processes: a different sf_dir (or the same dir with regenerated
     files) and a different pid must each map to a distinct path."""
-    a = _ovr_scratch(SF_DIR)
-    assert a == _ovr_scratch(SF_DIR)  # deterministic for (dataset, pid)
+    a = _ovr_scratch(spark, SF_DIR)
+    assert a == _ovr_scratch(spark, SF_DIR)  # deterministic for (dataset, pid)
     assert str(os.getpid()) in os.path.basename(a)
     import shutil
 
     other = tmp_path / "sfX"
     other.mkdir()
     shutil.copy(os.path.join(SF_DIR, "events.parquet"), other / "events.parquet")
-    assert _ovr_scratch(str(other)) != a
+    assert _ovr_scratch(spark, str(other)) != a
 
 
 def test_overwrite_mode_conf_restored(spark):

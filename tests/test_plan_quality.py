@@ -727,3 +727,19 @@ def test_session_state_goes_through_the_shared_helpers():
         "session.py: spark.conf.set(k, v)",
         f"streaming/daily.py: {nanos}",
     ], sets
+
+
+def test_scratch_keys_go_through_keyed_dir():
+    """Scratch-dir keys have one home, ``scratch.keyed_dir``: a
+    hand-built ``abs(hash(...))`` or md5-token name elsewhere would bring
+    back keys that miss the application (a second application resumes
+    the first one's checkpoints) or an input the dir derives from."""
+    root = pathlib.Path(dend_covid19_spark.__file__).parent
+    hits = sorted(
+        f"{path.relative_to(root)}: {line.strip()}"
+        for path in root.rglob("*.py")
+        if path != root / "scratch.py"
+        for line in path.read_text().splitlines()
+        if "abs(hash(" in line or "hexdigest()[:12]" in line
+    )
+    assert hits == [], hits

@@ -44,7 +44,7 @@ def test_decon_scratch_is_process_keyed(spark):
     )
 
     _decon_shingle_hashes(spark, SF_DIR)  # ensure built
-    parent = _decon_scratch_parent(SF_DIR)
+    parent = _decon_scratch_parent(spark, SF_DIR)
     assert re.search(rf"_{os.getpid()}$", parent)
     assert os.path.exists(os.path.join(parent, "owner.pid"))
     assert os.path.exists(os.path.join(parent, "gh", "_SUCCESS"))

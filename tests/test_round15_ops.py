@@ -122,7 +122,7 @@ def test_bloom_delta_artifact_equals_rebuild_and_no_base_rewrite(spark):
 
     import glob
 
-    parent = _decon_scratch_parent(SF_DIR)
+    parent = _decon_scratch_parent(spark, SF_DIR)
     [delta_dir] = glob.glob(os.path.join(parent, "bloomwords_*_delta*"))
     with open(os.path.join(delta_dir, "_base_words_manifest.json")) as fh:
         man = json.load(fh)

@@ -12,6 +12,7 @@ from dend_covid19_spark.operators.scale import (
     salted_aggregate,
     write_bucketed,
 )
+from dend_covid19_spark.session import session_conf
 from tests.conftest import SF_DIR
 
 
@@ -52,21 +53,19 @@ def test_bucketed_join_has_no_exchange(spark):
     write_bucketed(
         li.withColumnRenamed("l_orderkey", "o_orderkey"), "lineitem_b", "o_orderkey", 4
     )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # at test scale the planner would broadcast (and skip bucketing);
+    # disable broadcast to exercise the co-located SMJ path that a
+    # fact-fact join takes at 100 TB
     try:
-        # at test scale the planner would broadcast (and skip bucketing);
-        # disable broadcast to exercise the co-located SMJ path that a
-        # fact-fact join takes at 100 TB
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "orders_b", "lineitem_b", on="o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, (
-            f"bucketed join still shuffles:\n{plan}"
-        )
-        assert "SortMergeJoin" in plan
-        assert joined.count() == li.count()
+        with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = bucketed_join(spark, "orders_b", "lineitem_b", on="o_orderkey")
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning" not in plan, (
+                f"bucketed join still shuffles:\n{plan}"
+            )
+            assert "SortMergeJoin" in plan
+            assert joined.count() == li.count()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS orders_b")
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
@@ -81,22 +80,13 @@ def test_aqe_skew_join_splits(spark):
     100 TB partition would; confs are restored afterwards."""
     import pyspark.sql.functions as F
 
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
+    skew_confs = {
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "2KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    try:
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2KB"
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2KB")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with session_conf(spark, skew_confs):
         # Synthetic 1M-row fact with 90% of rows on key 0 — sized so the
         # hot partition's COMPRESSED shuffle bytes clear the threshold
         # (the sf0.001 fixture compresses below any sane threshold).
@@ -120,12 +110,6 @@ def test_aqe_skew_join_splits(spark):
         j.collect()  # AQE decides at runtime; materialize THIS plan
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bitmap_equals_count_distinct(spark):

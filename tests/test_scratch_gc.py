@@ -6,8 +6,11 @@ No Spark needed — pure filesystem semantics."""
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import subprocess
 import time
+from types import SimpleNamespace
 
 from dend_covid19_spark.scratch import gc_scratch, scratch_dir
 
@@ -262,7 +265,52 @@ def test_codebook_cache_key_includes_code_version(tmp_path, monkeypatch):
     arithmetic can never silently read a stale pre-change artifact."""
     import dend_covid19_spark.operators.kmeans as km
 
-    p1 = km._codebook_scratch_path("/x", 1.0, [1, 2, 3])
+    (tmp_path / "embeddings.parquet").write_bytes(b"")
+    spark, sf = _fake_spark("app-1"), str(tmp_path)
+    p1 = km._codebook_scratch_path(spark, sf, [1, 2, 3])
     monkeypatch.setattr(km, "CODEBOOK_VERSION", km.CODEBOOK_VERSION + 1)
-    p2 = km._codebook_scratch_path("/x", 1.0, [1, 2, 3])
+    p2 = km._codebook_scratch_path(spark, sf, [1, 2, 3])
     assert p1 != p2
+    for p in (p1, p2):
+        shutil.rmtree(os.path.dirname(p), ignore_errors=True)
+
+
+def _fake_spark(app_id: str) -> SimpleNamespace:
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_keyed_dir_token_tracks_every_key_part(tmp_path):
+    """keyed_dir names ``<name>_<12 hex>_<pid>`` and stamps owner.pid.
+    The token is stable for the same (application, sf_dir, input mtimes,
+    key) and changes when any one of them changes; a table not named in
+    ``inputs`` does not move it."""
+    from dend_covid19_spark.scratch import keyed_dir
+
+    sf, other = tmp_path / "sf", tmp_path / "sf2"
+    for d in (sf, other):
+        d.mkdir()
+        for t in ("events", "customer"):
+            (d / f"{t}.parquet").write_bytes(b"")
+            os.utime(d / f"{t}.parquet", (1_000_000, 1_000_000))
+    made = []
+
+    def kd(app="app-1", sf_dir=str(sf), key=(1, "v")):
+        made.append(keyed_dir(_fake_spark(app), "unit", sf_dir, ("events",), key))
+        return made[-1]
+
+    try:
+        base = kd()
+        assert re.fullmatch(rf"unit_[0-9a-f]{{12}}_{os.getpid()}", os.path.basename(base))
+        with open(os.path.join(base, "owner.pid")) as fh:
+            assert os.getpid() in [int(x) for x in fh.read().split()]
+        assert kd() == base
+        os.utime(sf / "customer.parquet", (2_000_000, 2_000_000))
+        assert kd() == base
+        assert kd(app="app-2") != base
+        assert kd(sf_dir=str(other)) != base
+        assert kd(key=(2, "v")) != base
+        os.utime(sf / "events.parquet", (2_000_000, 2_000_000))
+        assert kd() != base
+    finally:
+        for p in set(made):
+            shutil.rmtree(p, ignore_errors=True)

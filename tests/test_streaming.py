@@ -7,12 +7,17 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dend_covid19_spark.plans.timeseries import events_tumbling_daily
+from dend_covid19_spark.session import session_conf
 from dend_covid19_spark.streaming.daily import (
     run_available_now,
     run_dedup_available_now,
     run_enriched_available_now,
 )
 from tests.conftest import SF_DIR
+
+# the compaction-sink drills run at the narrow state width the ingest
+# drains use
+_NARROW_SHUFFLE = {"spark.sql.shuffle.partitions": "8"}
 
 
 def test_available_now_matches_batch(spark, tmp_path):
@@ -513,10 +518,7 @@ def test_partitioned_sink_compaction_keeps_pace(spark, tmp_path):
 
     out, ckpt = tmp_path / "cpc_out", tmp_path / "cpc_ckpt"
     manifests: list = []
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, "8")
+    with session_conf(spark, _NARROW_SHUFFLE):
         run_partitioned_sink_with_compaction(
             spark,
             str(src),
@@ -526,8 +528,6 @@ def test_partitioned_sink_compaction_keeps_pace(spark, tmp_path):
             manifests=manifests,
             max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
     assert len(manifests) == 2, [m[0] for m in manifests]
     touched_sets = [set(m) for _bid, m in manifests]
@@ -665,10 +665,7 @@ def test_partitioned_sink_compaction_resumes_incrementally(spark, tmp_path):
 
     out, ckpt = tmp_path / "cpr_out", tmp_path / "cpr_ckpt"
     manifests: list = []
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, "8")
+    with session_conf(spark, _NARROW_SHUFFLE):
         run_partitioned_sink_with_compaction(
             spark, str(src), str(out), str(ckpt),
             max_files=0, manifests=manifests, max_files_per_trigger=1,
@@ -684,8 +681,6 @@ def test_partitioned_sink_compaction_resumes_incrementally(spark, tmp_path):
             spark, str(src), str(out), str(ckpt),
             max_files=0, manifests=manifests, max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
     assert len(manifests) == 3, [m[0] for m in manifests]
     late_days = {
@@ -771,16 +766,11 @@ def test_manifest_sink_exactly_once_and_scoped_optimize(spark, tmp_path):
         os.utime(src_ev / f"p{i}.parquet", (now - 100 + i * 10, now - 100 + i * 10))
 
     manifests: list = []
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, "8")
+    with session_conf(spark, _NARROW_SHUFFLE):
         run_manifest_sink_with_compaction(
             spark, str(src_ev), root, str(tmp_path / "ms_ckpt"),
             manifests=manifests, max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
     assert len(manifests) == 2
     assert all(rec is not None and rec["files_rewritten"] >= 1 for _, rec in manifests)
@@ -801,14 +791,11 @@ def test_manifest_sink_exactly_once_and_scoped_optimize(spark, tmp_path):
     # FULL replay: fresh checkpoint re-delivers batches 0 and 1; the
     # committed watermarks make both appends no-ops — nothing commits
     v_before = m["version"]
-    try:
-        spark.conf.set(conf_key, "8")
+    with session_conf(spark, _NARROW_SHUFFLE):
         run_manifest_sink_with_compaction(
             spark, str(src_ev), root, str(tmp_path / "ms_ckpt_replay"),
             manifests=manifests, max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
     assert current_manifest(root)["version"] == v_before
     assert digest(read_manifest_table(spark, root)) == want
 
@@ -853,17 +840,12 @@ def test_manifest_sink_inband_retention(spark, tmp_path):
         )
         os.utime(src / f"p{i}.parquet", (now - 100 + i * 10, now - 100 + i * 10))
 
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, "8")
+    with session_conf(spark, _NARROW_SHUFFLE):
         run_manifest_sink_with_compaction(
             spark, str(src), root, str(tmp_path / "mr_ckpt"),
             max_files_per_trigger=1,
             vacuum_keep_last=2, vacuum_grace_seconds=0,
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
     hist = manifest_table_history(root)
     assert len(hist) == 2  # retention trimmed the 5-version chain
@@ -916,15 +898,10 @@ def test_manifest_sink_superset_replay_is_skipped_whole(spark, tmp_path):
     batch = ev.where((d >= cut) & (d < "2024-01-15"))
     _stage_single_parquet(batch, str(tmp_path / "sr_stage"), str(src / "p0.parquet"))
 
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, "8")
+    with session_conf(spark, _NARROW_SHUFFLE):
         run_manifest_sink_with_compaction(
             spark, str(src), root, str(tmp_path / "sr_ckpt")
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
     m = current_manifest(root)
     assert m["txns"] == {"manifest_sink": 0}
@@ -992,16 +969,11 @@ def test_manifest_sink_allnull_day_batch_appends_without_optimize(spark, tmp_pat
 
     v0 = current_manifest(root)["version"]
     manifests: list = []
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, "8")
+    with session_conf(spark, _NARROW_SHUFFLE):
         run_manifest_sink_with_compaction(
             spark, str(src), root, str(tmp_path / "nn_ckpt"),
             manifests=manifests, max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
     # batch 0 (all-null days): append only — rec None, ONE version bump
     assert manifests[0][0] == 0 and manifests[0][1] is None, manifests
@@ -1061,10 +1033,7 @@ def test_manifest_sink_restart_reoptimizes_already_clustered_day(spark, tmp_path
     os.utime(src / "p0.parquet", (now - 100, now - 100))
 
     manifests: list = []
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, "8")
+    with session_conf(spark, _NARROW_SHUFFLE):
         run_manifest_sink_with_compaction(
             spark, str(src), root, str(tmp_path / "rc_ckpt"), manifests=manifests
         )
@@ -1085,8 +1054,6 @@ def test_manifest_sink_restart_reoptimizes_already_clustered_day(spark, tmp_path
         run_manifest_sink_with_compaction(
             spark, str(src), root, str(tmp_path / "rc_ckpt"), manifests=manifests
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
     assert len(manifests) == 2
     rec = manifests[-1][1]
