@@ -15,10 +15,14 @@ from __future__ import annotations
 import functools
 import glob
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .session import session_conf
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -233,58 +237,142 @@ def widen_scan(df: DataFrame) -> DataFrame:
 # the co-partitioned sort-merge branch runs instead.
 GRAPH_BROADCAST_MAX_NODES = 50_000_000
 
-CKPT_SOURCE_MAX_BYTES = 2 * 1024**3  # ckpt_if_bounded's default gate
+CKPT_SOURCE_MAX_BYTES = 2 * 1024**3  # share_if_bounded's default gate
+
+
+def _part_files(path: str) -> list[str]:
+    """The files of one table source: the file itself, or every file
+    under a directory of parts. A missing path raises FileNotFoundError."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        raise FileNotFoundError(path)
+    return [
+        p
+        for p in glob.glob(os.path.join(path, "**", "*"), recursive=True)
+        if os.path.isfile(p)
+    ]
 
 
 @functools.lru_cache(maxsize=None)
 def _source_bytes(path: str) -> int:
-    """On-disk bytes of one table source (file or directory of parts);
-    cached per path for the process lifetime — it gates a plan-shape
-    decision, not a correctness one, so staleness is harmless. A
-    missing path raises FileNotFoundError, which lru_cache does not
-    cache, so a source that lands later is measured then."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    if not os.path.isdir(path):
-        raise FileNotFoundError(path)
-    return sum(
-        os.path.getsize(p)
-        for p in glob.glob(os.path.join(path, "**", "*"), recursive=True)
-        if os.path.isfile(p)
+    """On-disk bytes of one table source; cached per path for the
+    process lifetime. It sizes cut widths and gates the per-occurrence
+    cuts of ``share_if_bounded``, which leave results unchanged, so
+    staleness is harmless. A missing path raises FileNotFoundError,
+    which lru_cache does not cache, so a source that lands later is
+    measured then."""
+    return sum(os.path.getsize(p) for p in _part_files(path))
+
+
+def _table_bytes(sf_dir: str, table: str) -> int:
+    """``_source_bytes`` of ``<sf_dir>/<table>.parquet``; an unreadable
+    source counts as 0 bytes."""
+    try:
+        return _source_bytes(f"{sf_dir}/{table}.parquet")
+    except OSError:
+        return 0
+
+
+@functools.lru_cache(maxsize=None)
+def rows_bound(sf_dir: str, table: str) -> int:
+    """Row count of ``<sf_dir>/<table>.parquet`` (a file or a directory
+    of parts), summed from the parquet footers: no Spark job runs.
+    Cached like ``_source_bytes``. A graph builder reads it as an upper
+    bound on its node count (see ``broadcast_gate``)."""
+    import pyarrow.parquet as pq
+
+    parts = _part_files(f"{sf_dir}/{table}.parquet")
+    return sum(pq.read_metadata(p).num_rows for p in parts if p.endswith(".parquet"))
+
+
+def broadcast_gate(sf_dir: str, table: str, nodes: DataFrame) -> bool:
+    """Whether a graph loop's node table fits GRAPH_BROADCAST_MAX_NODES,
+    i.e. whether its rounds may broadcast it. ``table`` is the source
+    whose row count bounds the node count; while that footer bound is
+    under the gate the answer is yes with no job, and only above it
+    does the exact ``nodes.count()`` run."""
+    return (
+        rows_bound(sf_dir, table) <= GRAPH_BROADCAST_MAX_NODES
+        or nodes.count() <= GRAPH_BROADCAST_MAX_NODES
     )
 
 
-def ckpt_if_bounded(df: DataFrame, sf_dir: str, table: str = "documents") -> DataFrame:
-    """Lazy lineage-truncation checkpoint, gated on SOURCE scale.
+def share_width(spark: SparkSession, sf_dir: str, table: str) -> int:
+    """Shuffle width of a cut over ``table``: ceil(source bytes /
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``), clamped to
+    [1, ``spark.sql.shuffle.partitions``]. That is the partition count
+    AQE would coalesce a shuffle of the source's bytes to, fixed up
+    front; below the advisory size (64 MB by default) it is 1."""
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    advisory = to_bytes(spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    width = -(-_table_bytes(sf_dir, table) // advisory)
+    return max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")), width))
 
-    ``localCheckpoint`` materializes the frame to the executor block
-    store (disk-spillable but NOT fault-tolerant: losing an executor
-    fails the job instead of recomputing). For a per-occurrence stream
-    (exploded tokens/bigrams) the materialized bytes are a small
-    multiple of the source table's bytes — fine while the source is
-    bounded, corpus-scale storage at the 100 TB regime, where
-    re-planning the explode once per consumer is the cheaper trade and
-    the cluster-level answer is a maintained model table, not a
-    checkpoint. The gate compares the source parquet's on-disk size
-    against ``SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES`` (default 2 GiB; a
-    malformed value falls back to the default): below it the cut is
-    taken (every local/bench SF qualifies, so the measured sharing wins
-    stand), above it the frame is returned unchanged. An unreadable
-    source counts as 0 bytes. Results are identical either way — only
-    the plan shape differs."""
+
+@contextmanager
+def share_scope(spark: SparkSession, sf_dir: str, table: str) -> Iterator[None]:
+    """Plan the body with AQE off at ``share_width(table)``: the
+    planning scope of ``share``. A builder whose loop collects a
+    driver-side value each round (PCA's power step, the CC and k-means
+    convergence reads) runs the loop in it too, so each read is one job
+    instead of one per query stage."""
+    width = share_width(spark, sf_dir, table)
+    with session_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(width),
+        },
+    ):
+        yield
+
+
+def share(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
+    """The package's one lineage cut: ``df`` behind a lazy
+    ``localCheckpoint``, so every consumer reads one materialization
+    and later rounds of a loop plan against a constant-depth lineage.
+    It always cuts: some sites need the cut for their results (a range
+    layout sampled over a nondeterministic row order must be frozen so
+    that a collected summary and the final scan see the same
+    partitions), and the graph loops need it to keep their edges
+    stationary.
+
+    The cut is planned inside ``share_scope``. With AQE on (the session
+    default), a lazy ``localCheckpoint`` over a shuffle runs its
+    query stages at call time, one job per stage, and the result drops
+    the cut's hash partitioning. With AQE off it launches no job (only a
+    broadcast inside the cut starts its build), keeps
+    ``hashpartitioning(k, w)``, and materializes inside the first action
+    that reads it — which still runs with AQE on. The width ``w`` comes
+    from ``share_width``, sized from the source's bytes and not from the
+    core count: one task per core in every tiny stage cost more CPU than
+    the parallelism saved."""
+    with share_scope(df.sparkSession, sf_dir, table):
+        return df.localCheckpoint(eager=False)
+
+
+def share_if_bounded(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
+    """``share(df)`` while the source is bounded, else ``df`` uncut.
+
+    For the per-occurrence streams (exploded tokens, bigrams,
+    user-item pairs) whose cut only saves re-planning: their bytes are
+    a small multiple of the source's, and ``localCheckpoint`` keeps them
+    in the executor block store (disk-spillable but not fault-tolerant:
+    losing an executor fails the job instead of recomputing). So above
+    ``SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES`` of source (default 2 GiB; a
+    malformed value falls back to the default) each consumer re-plans
+    the stream instead. An unreadable source counts as 0 bytes. Results
+    are identical either way; only the plan differs."""
     try:
         limit = int(
             os.environ.get("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", CKPT_SOURCE_MAX_BYTES)
         )
     except ValueError:
         limit = CKPT_SOURCE_MAX_BYTES
-    try:
-        size = _source_bytes(f"{sf_dir}/{table}.parquet")
-    except OSError:
-        size = 0
-    if size <= limit:
-        return df.localCheckpoint(eager=False)
-    return df
+    if _table_bytes(sf_dir, table) > limit:
+        return df
+    return share(df, sf_dir, table)
 
 
 def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

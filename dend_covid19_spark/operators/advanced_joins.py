@@ -463,7 +463,9 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .components import connected_components
 
     pairs = _fuzzy_pairs_scratch(spark, sf_dir).select("part_a", "part_b")
-    comp = connected_components(pairs, src="part_a", dst="part_b")
+    comp = connected_components(
+        pairs, src="part_a", dst="part_b", sf_dir=sf_dir, table="part"
+    )
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_members"))
     return (
         comp.join(sizes, "component")

@@ -16,8 +16,9 @@ the canonical-document pick.
 Scale: each iteration is one join edges⋈labels + one min-aggregate —
 shuffle-bound on |edges|; rounds needed = graph diameter (near-dup
 graphs are shallow — dup groups are cliques-ish, so 2-4 rounds).
-``localCheckpoint`` truncates the lineage each round, keeping plan depth
-constant. This is the standard large-graph CC shape (GraphX/GraphFrames
+A ``catalog.share`` cut truncates the lineage each round, keeping plan
+depth constant, and the rounds run inside ``share_scope`` so each
+round's convergence read is one job. This is the standard large-graph CC shape (GraphX/GraphFrames
 use the same alternating join under the hood).
 
 The Spark side iterates to a fixpoint, but the RESULT is still
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import GRAPH_BROADCAST_MAX_NODES, load_table
+from ..catalog import GRAPH_BROADCAST_MAX_NODES, load_table, share, share_scope
 from ..functions.dedup_sql import duck_components_ctes
 from ..plans.registry import query
 
@@ -45,9 +46,18 @@ MAX_ROUNDS = 10  # backstop; near-dup graphs converge in 2-4
 CC_SHUFFLE_PARTS = 32  # edge/label co-partitioning width, big branch
 
 
-def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def connected_components(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    *,
+    sf_dir: str,
+    table: str,
+) -> DataFrame:
     """(src, dst) undirected edges -> (node, component) with component =
-    min node id reachable. Iterates to exact fixpoint.
+    min node id reachable. Iterates to exact fixpoint. ``table`` in
+    ``sf_dir`` is the source the edges derive from; it sizes the
+    rounds' cuts (``catalog.share``).
 
     r18 round shape (A/B-measured 30 -> 22 scheduled jobs on the
     entity-resolution graph, digest-equal): the symmetric edge table
@@ -64,7 +74,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     actions of the changed-count form.
 
     Per-round plan is size-gated on node count: small graphs broadcast
-    the label table onto the stationary checkpointed edges; big graphs
+    the label table onto the stationary cut edges; big graphs
     fall back to edges hash-partitioned on the probe key once, labels
     shuffling each round (the only side that must move).
 
@@ -87,40 +97,41 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     sym = sym.unionByName(
         nodes.select(F.col("node").alias("a"), F.col("node").alias("b"))
     )
-    # round 0: min over N(v) + {v} of the identity labels is min(b)
-    labels = (
-        sym.groupBy("a")
-        .agg(F.min("b").alias("component"))
-        .withColumnRenamed("a", "node")
-        .localCheckpoint(eager=False)
-    )
-    init = labels.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
-    ).collect()[0]
-    small = init["n"] <= GRAPH_BROADCAST_MAX_NODES
-    cur_sum = init["s"]
-    sym = (
-        sym.localCheckpoint(eager=False)  # built once; never moves again
-        if small
-        else sym.repartition(CC_SHUFFLE_PARTS, "b").localCheckpoint(eager=False)
-    )
-    for _ in range(MAX_ROUNDS):
-        rhs = F.broadcast(labels) if small else labels
-        new_labels = (
-            sym.join(rhs, sym.b == rhs.node)
-            .groupBy("a")
-            .agg(F.min("component").alias("component"))
-            .withColumnRenamed("a", "node")
-            .localCheckpoint(eager=False)  # truncate lineage: constant plan depth per round
+    with share_scope(edges.sparkSession, sf_dir, table):
+        # round 0: min over N(v) + {v} of the identity labels is min(b)
+        labels = share(
+            sym.groupBy("a")
+            .agg(F.min("b").alias("component"))
+            .withColumnRenamed("a", "node"),
+            sf_dir,
+            table,
         )
-        new_sum = new_labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).collect()[0][0]  # O(1) driver scalar
-        labels = new_labels
-        if new_sum == cur_sum:
-            break
-        cur_sum = new_sum
+        init = labels.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
+        ).collect()[0]
+        small = init["n"] <= GRAPH_BROADCAST_MAX_NODES
+        cur_sum = init["s"]
+        if not small:
+            sym = sym.repartition(CC_SHUFFLE_PARTS, "b")
+        sym = share(sym, sf_dir, table)  # built once; never moves again
+        for _ in range(MAX_ROUNDS):
+            rhs = F.broadcast(labels) if small else labels
+            new_labels = share(  # truncate lineage: constant plan depth per round
+                sym.join(rhs, sym.b == rhs.node)
+                .groupBy("a")
+                .agg(F.min("component").alias("component"))
+                .withColumnRenamed("a", "node"),
+                sf_dir,
+                table,
+            )
+            new_sum = new_labels.agg(
+                F.sum(F.col("component").cast("decimal(38,0)"))
+            ).collect()[0][0]  # O(1) driver scalar
+            labels = new_labels
+            if new_sum == cur_sum:
+                break
+            cur_sum = new_sum
     return labels
 
 
@@ -157,7 +168,9 @@ def _dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .dedup import dedup_ngram_jaccard  # deferred: avoids import cycle
 
         pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-        connected_components(pairs, "doc_a", "doc_b").write.parquet(tmp)
+        connected_components(
+            pairs, "doc_a", "doc_b", sf_dir=sf_dir, table="documents"
+        ).write.parquet(tmp)
 
     scratch = keyed_dir(spark, "cclabel", sf_dir, ("documents",))
     return spark.read.parquet(materialize_once(os.path.join(scratch, "labels"), _write))

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, widen_scan
+from ..catalog import load_table, share, widen_scan
 from ..functions import hashing as H
 from ..functions.dedup_sql import duck_minhash_cte
 from ..plans.registry import query
@@ -183,7 +183,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both self-join sides consume the band table; the lineage cut runs
     # the md5 band-key explode once (interleaved A/B on the identical
     # jaccard shape: wins every adjacent pair, output equal)
-    bands = bands.localCheckpoint(eager=False)
+    bands = share(bands, sf_dir, "documents")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -266,7 +266,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # delta probe and corpus side both derive from the band table; the
     # lineage cut runs the md5 band-key explode once
-    bands = bands.localCheckpoint(eager=False)
+    bands = share(bands, sf_dir, "documents")
     new_bands = bands.where(F.col("doc_id") % DELTA_MOD == 0)
     n, a = F.broadcast(new_bands).alias("n"), bands.alias("a")
     cand = (
@@ -334,7 +334,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the md5 band-key explode once (interleaved A/B at sf0.1: wins
     # every adjacent pair — 3.81->3.46, 3.91->2.66, 1.54->0.69,
     # 1.50->0.83 s — output identical)
-    bands = bands.localCheckpoint(eager=False)
+    bands = share(bands, sf_dir, "documents")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -391,7 +391,7 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.expr(H.spark_band_structs("sig"))).alias("band")
     ).select("doc_id", "band.band_id", "band.band_key")
     # lineage cut: md5 band-key explode once (see dedup_ngram_jaccard)
-    bands = bands.localCheckpoint(eager=False)
+    bands = share(bands, sf_dir, "documents")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -805,7 +805,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # batch probe and corpus side both derive from the band table; the
     # lineage cut runs the md5 band-key explode once
-    bands = bands.localCheckpoint(eager=False)
+    bands = share(bands, sf_dir, "documents")
     batch = bands.where(F.col("doc_id") % INCR_BATCH_MOD == 0)
     corpus = bands.where(F.col("doc_id") % INCR_BATCH_MOD != 0)
     a, b = batch.alias("a"), corpus.alias("b")
@@ -904,7 +904,7 @@ def _prefix_len_expr(n: str) -> str:
     return f"{n} - ({n} + 1) DIV 2 + 1"
 
 
-def _ppjoin_candidates(sigs: DataFrame, with_filters: bool) -> DataFrame:
+def _ppjoin_candidates(sigs: DataFrame, sf_dir: str, with_filters: bool) -> DataFrame:
     """Prefix-filter candidate pairs (doc_a, doc_b) for tau = 1/2, with
     PPJoin's length + position filters togglable so the r13 pin can
     measure the candidate reduction against the prefix-only form.
@@ -925,10 +925,10 @@ def _ppjoin_candidates(sigs: DataFrame, with_filters: bool) -> DataFrame:
     )
     # the prefix stream is BOTH sides of the candidate self-join; without
     # a lineage cut the whole explode -> dfreq join -> per-doc window
-    # chain plans twice. Lazy localCheckpoint runs it once (interleaved
-    # A/B at sf0.1: wins every adjacent pair ~30%, output identical;
-    # checkpointing ex as well measured no better).
-    prefix = prefix.localCheckpoint(eager=False)
+    # chain plans twice. The cut runs it once (interleaved A/B at sf0.1:
+    # wins every adjacent pair ~30%, output identical; cutting ex as
+    # well measured no better).
+    prefix = share(prefix, sf_dir, "documents")
     a, b = prefix.alias("a"), prefix.alias("b")
     cond = (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id"))
     if with_filters:
@@ -1033,7 +1033,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round13_ops.py pins the measured candidate drop and the
     output identity vs the prefix-only form."""
     sigs = _minhash_sigs(spark, sf_dir).select("doc_id", "shingles")
-    cand = _ppjoin_candidates(sigs, with_filters=True).select("doc_a", "doc_b")
+    cand = _ppjoin_candidates(sigs, sf_dir, with_filters=True).select("doc_a", "doc_b")
     sh_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sh_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     jac = F.expr(
@@ -1094,7 +1094,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number() over an unpartitioned window serializes the corpus
     through one task. This runs the distributed two-phase rank instead:
     repartitionByRange on the sort key + sortWithinPartitions (the
-    parallel ORDER BY), localCheckpoint to freeze the sampled range
+    parallel ORDER BY), a lineage cut to freeze the sampled range
     boundaries, then per-partition counts (a bounded control-plane
     collect of SNM_PARTS integers) turned into prefix offsets that are
     broadcast-joined back so global_rank = partition_offset + local
@@ -1111,11 +1111,12 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair with its score; the dedup decision is a downstream WHERE)."""
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "lang", "n_chars")
     keys = ["lang", "n_chars", "doc_id"]
-    s = (
+    s = share(  # freeze sampled boundaries: counts and ranks must see one layout
         docs.repartitionByRange(SNM_PARTS, *[F.col(k) for k in keys])
         .sortWithinPartitions(*keys)
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # freeze sampled boundaries: counts and ranks must see one layout
+        .withColumn("pid", F.spark_partition_id()),
+        sf_dir,
+        "documents",
     )
     counts = {r["pid"]: r["cnt"] for r in s.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     offsets, acc = [], 0
@@ -1131,7 +1132,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both banded-pairing sides consume the global rank; the lineage cut
     # runs the offset join + rank window once instead of twice
-    ranked = ranked.localCheckpoint(eager=False)
+    ranked = share(ranked, sf_dir, "documents")
     band = SNM_WINDOW - 1
     a = ranked.select(
         F.col("doc_id").alias("doc_a"),
@@ -1423,7 +1424,7 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # per config, both self-join sides consume this band table; the
         # lineage cut runs each config's md5 band-key explode once
-        bands = bands.localCheckpoint(eager=False)
+        bands = share(bands, sf_dir, "documents")
         x, y = bands.alias("a"), bands.alias("b")
         cand = (
             x.join(
@@ -1514,7 +1515,7 @@ def dedup_crossmodal_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("band.band_key").alias("band_key"),
     )
     # lineage cut: md5 band-key explode once (see dedup_ngram_jaccard)
-    bands = bands.localCheckpoint(eager=False)
+    bands = share(bands, sf_dir, "documents")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(

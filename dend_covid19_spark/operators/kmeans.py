@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, share, share_scope
 from ..plans.registry import query
 
 K = 4
@@ -269,7 +269,8 @@ def _trained_codebook(
 
         _touch_live(path)
     except (OSError, ValueError):
-        cents = _train_codebook(emb, list(seed_ids))
+        with share_scope(spark, sf_dir, "embeddings"):  # one job per Lloyd step
+            cents = _train_codebook(emb, list(seed_ids))
         tmp = f"{path}.tmp.{os.getpid()}"
         try:
             with open(tmp, "w") as fh:
@@ -646,15 +647,15 @@ def semdedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb.persist()
     cents = _trained_codebook(spark, emb, sf_dir, SEMDEDUP_SEED_IDS)
-    fin = (
-        _assign(emb, cents)
-        .select(
+    fin = share(
+        _assign(emb, cents).select(
             "vec_id",
             "v",
             "cluster",
             F.expr("sqrt(aggregate(v, 0D, (acc, a) -> acc + a * a))").alias("nrm"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        sf_dir,
+        "embeddings",
     )
     x = fin.select(
         F.col("vec_id").alias("x_id"), F.col("v").alias("x_v"),

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, share_scope
 from ..plans.registry import query
 
 D = 64
@@ -137,8 +137,9 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb.persist()
     try:
         v = [V0] * D
-        for _ in range(PCA_ITERS):
-            v = _power_step(emb, v)
+        with share_scope(spark, sf_dir, "embeddings"):  # one job per step
+            for _ in range(PCA_ITERS):
+                v = _power_step(emb, v)
         return emb.select(
             "vec_id", "label", F.expr(_spark_dot(_vlit(v))).alias("pc1_score")
         )

@@ -434,7 +434,10 @@ def _skew_join_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = fact.select("k", (F.col("k") % 3).alias("seg")).distinct()
     jj = fact.join(dim, "k")
     with session_conf(spark, _SKEW_CONFS):
-        snap = jj.localCheckpoint()  # materializes THIS plan under AQE
+        # The package's one cut outside catalog.share, on purpose: share
+        # plans with AQE off, and this snapshot exists to run the join
+        # eagerly under AQE so its skew split fires and can be asserted.
+        snap = jj.localCheckpoint()
         plan = jj._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, f"AQE skew split did not fire:\n{plan}"
     return snap

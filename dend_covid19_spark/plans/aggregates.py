@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, register_views
+from ..catalog import load_table, register_views, share
 from .parity import _sql_dsum, dsum
 from .registry import query
 
@@ -858,14 +858,15 @@ def chisq_brand_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
     n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_regionkey")
     r = load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
-    obs = (
+    obs = share(  # 125 cells; margins reuse it, not the fact scan
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("p_brand").alias("brand"), F.col("r_name").alias("region"))
-        .agg(F.count(F.lit(1)).alias("o"))
-        .localCheckpoint(eager=False)  # 125 cells; margins reuse it, not the fact scan
+        .agg(F.count(F.lit(1)).alias("o")),
+        sf_dir,
+        "lineitem",
     )
     rb = obs.groupBy("brand").agg(F.sum("o").cast("bigint").alias("rb"))
     cr = obs.groupBy("region").agg(F.sum("o").cast("bigint").alias("cr"))
@@ -1098,7 +1099,8 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)"
         ).alias("cents")
-    ).localCheckpoint(eager=False)  # three consumers: cutoff, totals, filter
+    )
+    c = share(c, sf_dir, "orders")  # three consumers: cutoff, totals, filter
     cut = c.agg(F.percentile_approx("cents", 0.90, PCTL_ACCURACY).alias("p90"))
     t = c.agg(
         F.sum("cents").cast("bigint").alias("total_cents"),
@@ -1201,7 +1203,7 @@ def cms_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ex feeds two plan branches (point-query spine + final join) and is
     # deliberately NOT materialized: an interleaved A/B at sf0.1 (8 reps
-    # each) measured localCheckpoint's extra job costing MORE than the
+    # each) measured a lineage cut's extra job costing MORE than the
     # duplicated single-column scan + partial agg it saves (median 1.15s
     # vs 1.09s) — the r10->r9 0.83->0.96 drift on this row is host
     # noise, not a plan change (plan identical since r6).
@@ -1452,7 +1454,7 @@ def skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     window; the Spark side runs the DISTRIBUTED form of the same scan —
     the two-phase prefix pattern shared with
     dedup_sorted_neighborhood's global rank: repartitionByRange on
-    spend + localCheckpoint (freeze sampled boundaries), per-partition
+    spend + a lineage cut (freeze sampled boundaries), per-partition
     running max via a RANGE frame, per-partition summary maxes
     (SKYLINE_PARTS rows, bounded control-plane collect) prefix-folded
     and broadcast back, so the global running max = greatest(local,
@@ -1472,11 +1474,12 @@ def skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(datediff(max(o_orderdate), DATE '{_RFM_EPOCH}') AS BIGINT)"
         ).alias("rdays"),
     )
-    s = (
+    s = share(  # freeze boundaries: summaries and scan see one layout
         base.repartitionByRange(SKYLINE_PARTS, F.col("cents"))
         .sortWithinPartitions("cents")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # freeze boundaries: summaries and scan see one layout
+        .withColumn("pid", F.spark_partition_id()),
+        sf_dir,
+        "orders",
     )
     summ = {
         r["pid"]: r["mx"]

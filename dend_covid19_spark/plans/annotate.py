@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import ckpt_if_bounded, load_table
+from ..catalog import load_table, share_if_bounded
 from ..functions.annotator import _NEGATIVE, _POSITIVE, annotate_sentiment
 from .registry import query
 
@@ -502,9 +502,8 @@ def quality_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("b"),
     ).select("doc_id", "b.tok_a", "b.tok_b")
     # shared bigram stream: model build + scoring probe both consume occ
-    # (same scale-gated lineage cut as bigram_lm_doc_score — one explode
-    # while the source is bounded, re-planned past the 100 TB gate)
-    occ = ckpt_if_bounded(occ, sf_dir)
+    # (same lineage cut as bigram_lm_doc_score)
+    occ = share_if_bounded(occ, sf_dir, "documents")
     uc = (
         tok.select(F.explode("toks").alias("token"))
         .groupBy("token")

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import GRAPH_BROADCAST_MAX_NODES, load_table
+from ..catalog import broadcast_gate, load_table, share
 from .registry import query
 
 # --- market-basket brand affinity ------------------------------------------
@@ -106,11 +106,12 @@ def basket_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the (order, brand) set once: five consumers (both pair
     # sides, two per-brand count joins, the basket total) would otherwise
     # each rescan the fact table and re-pay the distinct shuffle
-    ob = (
+    ob = share(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .select("l_orderkey", "p_brand")
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        sf_dir,
+        "lineitem",
     )
     tot = ob.agg(F.countDistinct("l_orderkey").alias("n_baskets"))
     bc = ob.groupBy("p_brand").agg(F.count(F.lit(1)).alias("n_b"))
@@ -166,26 +167,28 @@ PR_ITERS = 5
 PR_SHUFFLE_PARTS = 32  # edge/rank co-partitioning width for the big branch
 
 
-def _pagerank_ranks(ed: DataFrame, deg: DataFrame, *, broadcast_ranks: bool) -> DataFrame:
+def _pagerank_ranks(
+    ed: DataFrame, deg: DataFrame, sf_dir: str, *, broadcast_ranks: bool
+) -> DataFrame:
     """PR_ITERS synchronous integer-PageRank iterations over a prebuilt
     (s, d, dout) edge table. Two physically different, numerically
     IDENTICAL branches (integer arithmetic, associative-exact sums):
 
-    - broadcast_ranks=True: rank table broadcast onto the checkpointed
-      edge partitions — zero edge-side exchange, right up to
+    - broadcast_ranks=True: rank table broadcast onto the cut edge
+      partitions — zero edge-side exchange, right up to
       GRAPH_BROADCAST_MAX_NODES.
     - broadcast_ranks=False: the 100 TB branch. Edges are hash-
-      partitioned on the source key ONCE and checkpointed (localCheckpoint
-      preserves the hash partitioning); each iteration repartitions only
-      the rank table to the same key, so the sort-merge join exchanges
+      partitioned on the source key ONCE and cut (``share`` keeps the
+      hash partitioning); each iteration repartitions only the rank
+      table to the same key, so the sort-merge join exchanges
       node-cardinality rows per iteration while the edge side stays
       stationary (pinned by tests/test_graph.py::
       test_pagerank_shuffle_branch_edges_stationary).
     """
     if broadcast_ranks:
-        ed = ed.localCheckpoint(eager=False)  # built once; edges never move
+        ed = share(ed, sf_dir, "lineitem")  # built once; edges never move
     else:
-        ed = ed.repartition(PR_SHUFFLE_PARTS, "s").localCheckpoint(eager=False)
+        ed = share(ed.repartition(PR_SHUFFLE_PARTS, "s"), sf_dir, "lineitem")
     ranks = deg.select(
         F.col("s").alias("node"), F.lit(PR_SCALE).cast("bigint").alias("r")
     )
@@ -197,18 +200,14 @@ def _pagerank_ranks(ed: DataFrame, deg: DataFrame, *, broadcast_ranks: bool) -> 
         ranks = msgs.groupBy(F.col("d").alias("node")).agg(
             (F.lit(PR_BASE) + F.sum("c")).cast("bigint").alias("r")
         )
-        # Checkpoint every OTHER iteration, not every one: the
-        # checkpoint's value — bounded lineage so a task retry or a
-        # 50-iteration variant never recomputes the whole chain — only
-        # needs PERIODIC truncation, while each checkpoint costs a
-        # persist pass over the rank table. Interval 2 keeps the worst
-        # retry at one extra iteration of recompute and the lineage
-        # depth constant. eager=False folds materialization into the
-        # next iteration's first job instead of scheduling a dedicated
-        # job barrier per checkpoint (measured at sf0.1: 23->18 jobs,
-        # steady noop-sink median 6.8s->4.7s on the same host).
+        # Cut every OTHER iteration, not every one: the cut's value —
+        # bounded lineage so a task retry or a 50-iteration variant
+        # never recomputes the whole chain — only needs PERIODIC
+        # truncation, while each cut costs a persist pass over the rank
+        # table. Interval 2 keeps the worst retry at one extra iteration
+        # of recompute and the lineage depth constant.
         if i % 2 == 1 and i < PR_ITERS - 1:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = share(ranks, sf_dir, "lineitem")
     return ranks.select(F.col("node").alias("part_key"), F.col("r").alias("rank_e9"))
 
 
@@ -223,23 +222,23 @@ def _copurchase_edges(
     a, b = op.alias("a"), op.alias("b")
     # canonical a<b pairs first (halves the dedup shuffle volume), then
     # symmetrize with a union — same distinct directed edge set
-    canon = (
+    canon = share(  # two consumers below (forward + reversed)
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
         .select(F.col("a.l_partkey").alias("s"), F.col("b.l_partkey").alias("d"))
-        .distinct()
-        .localCheckpoint(eager=False)  # two consumers below (forward + reversed)
+        .distinct(),
+        sf_dir,
+        "lineitem",
     )
     e = canon.unionAll(canon.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    # node-cardinality and consumed three ways (size gate count, rank
-    # init, degree attach) — materialize once so the gate's count job
-    # doesn't re-pay the degree aggregate
-    deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("dout")).localCheckpoint(eager=False)
+    # node-cardinality and consumed by the rank init and the degree
+    # attach (and the exact gate count past the footer bound)
+    deg = share(e.groupBy("s").agg(F.count(F.lit(1)).alias("dout")), sf_dir, "lineitem")
     # degree table is node-cardinality: broadcast the attach so the edge
-    # rows never pass through another exchange before the checkpoint.
+    # rows never pass through another exchange before the cut.
     # In the shuffle branch (past GRAPH_BROADCAST_MAX_NODES) this attach,
     # too, is a plain join on s — _pagerank_ranks repartitions ed on s
     # right after, so the join's exchange is subsumed by the one the
@@ -289,7 +288,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, which is associative-exact.
 
     Plan/scale: the edge list is one shuffle on the order key with
-    basket-bounded fan-out, then checkpointed with per-edge out-degree
+    basket-bounded fan-out, then cut with per-edge out-degree
     attached (built once, reused by all iterations). The per-iteration
     rank attach is SIZE-GATED (_pagerank_ranks): below
     GRAPH_BROADCAST_MAX_NODES the node-cardinality rank table broadcasts
@@ -298,16 +297,18 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned sort-merge branch runs instead, edges still
     stationary (the r5 judge's ask — no more documented-but-
     unimplemented scale path; the shuffle branch also has its own
-    driver-checked twin below). The gate reads the degree-table count —
-    one bounded control-plane job against an aggregate that every
-    iteration needs anyway. localCheckpoint() truncates the growing
-    lineage each round (the kmeans discipline) so the 5-deep loop
-    doesn't replan or re-execute prior iterations; dangling nodes don't
+    driver-checked twin below). The gate (``broadcast_gate``) bounds the
+    node count by lineitem's footer row count, with no job; only past
+    the threshold does it count the degree table exactly. A ``share``
+    cut truncates the growing lineage every other round (the kmeans
+    discipline) so the 5-deep loop doesn't replan or re-execute prior
+    iterations; dangling nodes don't
     exist here (the co-purchase graph is symmetric, every node has in-
     and out-edges)."""
     ed, deg = _copurchase_edges(spark, sf_dir)
-    n_nodes = deg.count()
-    return _pagerank_ranks(ed, deg, broadcast_ranks=n_nodes <= GRAPH_BROADCAST_MAX_NODES)
+    return _pagerank_ranks(
+        ed, deg, sf_dir, broadcast_ranks=broadcast_gate(sf_dir, "lineitem", deg)
+    )
 
 
 @query("pagerank_copurchase_shuffle", oracle=_PR_ORACLE)
@@ -320,7 +321,7 @@ def pagerank_copurchase_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic -> identical oracle. Plan shape pinned by
     tests/test_graph.py::test_pagerank_shuffle_branch_edges_stationary."""
     ed, deg = _copurchase_edges(spark, sf_dir, broadcast_deg=False)
-    return _pagerank_ranks(ed, deg, broadcast_ranks=False)
+    return _pagerank_ranks(ed, deg, sf_dir, broadcast_ranks=False)
 
 
 # --- triangle counting (degree-ordered node-iterator) -----------------------
@@ -405,15 +406,16 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     x, y = op.alias("x"), op.alias("y")
-    e = (
+    e = share(  # consumed by degree + orientation: build once
         x.join(
             y,
             (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
             & (F.col("x.l_partkey") < F.col("y.l_partkey")),
         )
         .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=False)  # consumed by degree + orientation: build once
+        .distinct(),
+        sf_dir,
+        "lineitem",
     )
     deg = (
         e.select(F.col("a").alias("n"))
@@ -425,7 +427,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     okt = deg.select("n", (F.col("degree") * _ORD_BIG + F.col("n")).alias("ok"))
     oa = okt.select(F.col("n").alias("a"), F.col("ok").alias("ok_a"))
     ob = okt.select(F.col("n").alias("b"), F.col("ok").alias("ok_b"))
-    oriented = (
+    oriented = share(  # wedge sides + closing edges: 3 consumers
         e.join(oa, "a")
         .join(ob, "b")
         .select(
@@ -436,8 +438,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("a"))
             .alias("dst"),
             F.greatest("ok_a", "ok_b").alias("ok_dst"),
-        )
-        .localCheckpoint(eager=False)  # wedge sides + closing edges: 3 consumers
+        ),
+        sf_dir,
+        "lineitem",
     )
     w1, w2 = oriented.alias("w1"), oriented.alias("w2")
     wedges = w1.join(
@@ -518,48 +521,50 @@ def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     x, y = op.alias("x"), op.alias("y")
-    ec = (
+    ec = share(
         x.join(
             y,
             (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
             & (F.col("x.l_partkey") < F.col("y.l_partkey")),
         )
         .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        sf_dir,
+        "lineitem",
     )
     return ec.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
         ec.select(F.col("b").alias("s"), F.col("a").alias("d"))
     )
 
 
-def _kcore_peel_broadcast(e: DataFrame) -> DataFrame:
+def _kcore_peel_broadcast(e: DataFrame, sf_dir: str) -> DataFrame:
     """Sub-gate branch: filter-based peeling with the survivor set
-    EXPLICITLY broadcast into both semi joins — the checkpointed edge
+    EXPLICITLY broadcast into both semi joins — the cut edge
     partitions are probed in place every round, zero edge-side
     exchange (pinned by tests/test_graph.py::
     test_kcore_broadcast_branch_edges_stationary). Survivors are
     node-cardinality, the same budget PageRank broadcasts under the
     same gate."""
-    e = e.localCheckpoint(eager=False)
+    e = share(e, sf_dir, "lineitem")
     for _ in range(KCORE_ITERS):
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= KCORE_K).select("s")
-        e = (
+        e = share(
             e.join(F.broadcast(keep), "s", "left_semi")
             .join(F.broadcast(keep.select(F.col("s").alias("d"))), "d", "left_semi")
-            .select("s", "d")
-            .localCheckpoint(eager=False)
+            .select("s", "d"),
+            sf_dir,
+            "lineitem",
         )
     return e.groupBy(F.col("s").alias("part_key")).agg(
         F.count(F.lit(1)).cast("bigint").alias("core_degree")
     )
 
 
-def _kcore_peel_shuffle(e: DataFrame) -> DataFrame:
+def _kcore_peel_shuffle(e: DataFrame, sf_dir: str) -> DataFrame:
     """The >GRAPH_BROADCAST_MAX_NODES branch: decrement-maintained
     peeling with the edge table STATIONARY. Edges are hash-partitioned
-    on the source key once and checkpointed, then NEVER rewritten or
+    on the source key once and cut, then NEVER rewritten or
     re-shuffled: each round computes the dropped frontier (deg < K),
     reads the frontier's edges off the stationary partitions (the only
     thing exchanged toward the edge table is the node-cardinality
@@ -584,12 +589,13 @@ def _kcore_peel_shuffle(e: DataFrame) -> DataFrame:
     plan shape (frontier attach leaves the edge side exchange-free) is
     pinned by tests/test_graph.py::
     test_kcore_shuffle_branch_edges_stationary."""
-    e = e.repartition(KCORE_SHUFFLE_PARTS, "s").localCheckpoint(eager=False)
-    alive = (
+    e = share(e.repartition(KCORE_SHUFFLE_PARTS, "s"), sf_dir, "lineitem")
+    alive = share(
         e.groupBy("s")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .repartition(KCORE_SHUFFLE_PARTS, "s")
-        .localCheckpoint(eager=False)
+        .repartition(KCORE_SHUFFLE_PARTS, "s"),
+        sf_dir,
+        "lineitem",
     )
     for _ in range(KCORE_ITERS):
         dropped = alive.where(F.col("deg") < KCORE_K).select("s")
@@ -599,14 +605,15 @@ def _kcore_peel_shuffle(e: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("dec"))
         )
         survivors = alive.where(F.col("deg") >= KCORE_K)
-        alive = (
+        alive = share(
             survivors.join(dec, survivors.s == dec.d, "left")
             .select(
                 "s",
                 (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0))).alias("deg"),
             )
-            .repartition(KCORE_SHUFFLE_PARTS, "s")
-            .localCheckpoint(eager=False)
+            .repartition(KCORE_SHUFFLE_PARTS, "s"),
+            sf_dir,
+            "lineitem",
         )
     return alive.where(F.col("deg") >= 1).select(
         F.col("s").alias("part_key"), F.col("deg").cast("bigint").alias("core_degree")
@@ -633,18 +640,18 @@ def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan/scale: SIZE-GATED like pagerank_copurchase. Below
     GRAPH_BROADCAST_MAX_NODES the survivor set broadcasts into both
-    semi joins and the checkpointed edge partitions never move; above
+    semi joins and the cut edge partitions never move; above
     it the decrement-maintained branch runs (_kcore_peel_shuffle) —
     edges stationary forever, per-round exchange bounded by the
-    dropped frontier. The gate reads the node count off the
-    first-round degree table, one bounded control-plane job. Both
+    dropped frontier. The gate (``broadcast_gate``) bounds the node
+    count by part's footer row count, with no job; only past the
+    threshold does it count the edge table's nodes exactly. Both
     branches are bit-identical (test_kcore_branches_identical) and the
     shuffle branch carries its own driver-checked row below."""
     e = _kcore_edges(spark, sf_dir)
-    n_nodes = e.select("s").distinct().count()
-    if n_nodes <= GRAPH_BROADCAST_MAX_NODES:
-        return _kcore_peel_broadcast(e)
-    return _kcore_peel_shuffle(e)
+    if broadcast_gate(sf_dir, "part", e.select("s").distinct()):
+        return _kcore_peel_broadcast(e, sf_dir)
+    return _kcore_peel_shuffle(e, sf_dir)
 
 
 @query("graph_kcore_members_shuffle", oracle=_KCORE_ORACLE)
@@ -654,7 +661,7 @@ def graph_kcore_members_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash row (the pagerank_copurchase_shuffle discipline):
     decrement-maintained peeling over a stationary hash-partitioned
     edge table — identical integer counting, identical oracle."""
-    return _kcore_peel_shuffle(_kcore_edges(spark, sf_dir))
+    return _kcore_peel_shuffle(_kcore_edges(spark, sf_dir), sf_dir)
 
 
 # --- label-propagation communities ------------------------------------------
@@ -715,12 +722,13 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     either engine).
 
     Plan/scale: SIZE-GATED like pagerank_copurchase and k-core, on the
-    node count of the edge table (one bounded control-plane job). Below
-    GRAPH_BROADCAST_MAX_NODES the edges are checkpointed as they are and
+    node count of the edge table (bounded by part's footer row count;
+    counted exactly only past the threshold). Below
+    GRAPH_BROADCAST_MAX_NODES the edges are cut as they are and
     each round broadcasts the node-cardinality label table onto them —
     no exchange of edges or labels for the attach. Above it the
     co-partitioned branch runs: edges hash-partitioned ONCE on ``d``
-    (the per-round join key, ``e.d == labels.node``) and checkpointed,
+    (the per-round join key, ``e.d == labels.node``) and cut,
     so they stay STATIONARY while each round exchanges only the label
     table, repartitioned on ``node`` into a co-partitioned SMJ
     (test_lpa_edges_stationary). Partitioning on ``s`` there would be
@@ -732,24 +740,23 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, so the tie order picks min(d) — and in later rounds the
     (node, label) count is one map-side-combined aggregate over
     edge-cardinality messages and the argmax a hash max_by — no
-    unpartitioned window, no self-join — and localCheckpoint truncates
+    unpartitioned window, no self-join — and a ``share`` cut truncates
     each round's lineage. The total tie order makes both branches
     bit-identical (test_lpa_branches_identical). At 100 TB rounds are
     edge-linear, the same cost envelope as one PageRank iteration."""
     e = _kcore_edges(spark, sf_dir)
-    n_nodes = e.select("s").distinct().count()
     return _lpa_propagate(
-        e, broadcast_labels=n_nodes <= GRAPH_BROADCAST_MAX_NODES
+        e, sf_dir, broadcast_labels=broadcast_gate(sf_dir, "part", e.select("s").distinct())
     ).select(
         F.col("node").alias("part_key"), F.col("label").cast("bigint").alias("community")
     )
 
 
 def _lpa_propagate(
-    e: DataFrame, *, broadcast_labels: bool, iters: int = LPA_ITERS
+    e: DataFrame, sf_dir: str, *, broadcast_labels: bool, iters: int = LPA_ITERS
 ) -> DataFrame:
     """LPA_ITERS synchronous label-propagation rounds over a symmetric,
-    duplicate-free (s, d) edge table, which this checkpoints once and
+    duplicate-free (s, d) edge table, which this cuts once and
     never moves again. broadcast_labels=True broadcasts the label table
     onto the edges as they are; False is the >GRAPH_BROADCAST_MAX_NODES
     branch, edges hash-partitioned on ``d`` and labels repartitioned on
@@ -759,12 +766,11 @@ def _lpa_propagate(
     # distinct, so every neighbor label counts once and the tie order
     # (count desc, label asc) picks the smallest — min(d)
     labels = e.groupBy(F.col("s").alias("node")).agg(F.min("d").alias("label"))
-    if broadcast_labels:
-        e = e.localCheckpoint(eager=False)
-    else:
-        e = e.repartition(KCORE_SHUFFLE_PARTS, "d").localCheckpoint(eager=False)
+    if not broadcast_labels:
+        e = e.repartition(KCORE_SHUFFLE_PARTS, "d")
+    e = share(e, sf_dir, "lineitem")
     for _ in range(1, iters):
-        labels = labels.localCheckpoint(eager=False)
+        labels = share(labels, sf_dir, "lineitem")
         rhs = (
             F.broadcast(labels)
             if broadcast_labels

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, share, share_if_bounded
 from ..functions import hashing as H
 from ..functions.dedup_sql import duck_components_ctes
 from . import textops as _textops
@@ -1100,11 +1100,8 @@ def negative_sampling_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ui feeds BOTH the user spine and the anti-join; without a lineage
     # cut the lineitem⋈orders distinct is planned twice (r18 interleaved
     # A/B at sf0.1: 12.8->8.9, 6.1->5.3, 5.1->4.9 s in adjacent pairs,
-    # digests equal). ui is interaction-cardinality — Θ(facts) — so the
-    # cut is scale-gated on the lineitem source like the occ streams.
-    from ..catalog import ckpt_if_bounded
-
-    ui = ckpt_if_bounded(ui, sf_dir, table="lineitem")
+    # digests equal).
+    ui = share_if_bounded(ui, sf_dir, "lineitem")
     users = ui.select("user_id").distinct()
     h_pair = (
         "CAST(conv(substring(md5(concat(CAST(user_id AS STRING), '#',"
@@ -1309,8 +1306,8 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"
         f" % {ERASURE_MOD} = 0"
     )
-    del_users = (
-        ev.select("user_id").where(F.expr(hexpr)).distinct().localCheckpoint(eager=False)
+    del_users = share(
+        ev.select("user_id").where(F.expr(hexpr)).distinct(), sf_dir, "events"
     )
     n_subjects = del_users.count()
 
@@ -1917,9 +1914,9 @@ def ngram_novelty_by_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bg feeds BOTH the first-occurrence table and the novelty probe;
     # without a lineage cut the scan + distinct shuffle plan twice (no
-    # ReuseExchange across the join sides). Lazy localCheckpoint runs
-    # the distinct once and both consumers read the stored blocks.
-    bg = bg.localCheckpoint(eager=False)
+    # ReuseExchange across the join sides). The cut runs the distinct
+    # once and both consumers read the stored blocks.
+    bg = share(bg, sf_dir, "documents")
     fb = bg.groupBy("gh").agg(F.min("batch").alias("first_batch"))
     return (
         bg.join(fb, "gh")
@@ -2000,7 +1997,7 @@ def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the SNM DISTRIBUTED RANK (operators/dedup.py::
     dedup_sorted_neighborhood's two-phase scheme, extended to reset
     per epoch): repartitionByRange on (epoch, hk, doc_id) +
-    sortWithinPartitions (the parallel ORDER BY), localCheckpoint to
+    sortWithinPartitions (the parallel ORDER BY), a lineage cut to
     freeze the sampled boundaries, per-(partition, epoch) counts (a
     bounded control-plane collect of parts x epochs integers) turned
     into per-epoch prefix offsets broadcast back, so position =
@@ -2018,11 +2015,12 @@ def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hk"),
     )
     parts = SHUFFLE_RANK_PARTS
-    s = (
+    s = share(  # freeze sampled boundaries for counts + ranks
         h.repartitionByRange(parts, F.col("epoch"), F.col("hk"), F.col("doc_id"))
         .sortWithinPartitions("epoch", "hk", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # freeze sampled boundaries for counts + ranks
+        .withColumn("pid", F.spark_partition_id()),
+        sf_dir,
+        "documents",
     )
     counts = {
         (r.pid, r.epoch): r.cnt

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import ckpt_if_bounded, load_table
+from ..catalog import load_table, share, share_if_bounded
 from .registry import query
 
 # Tiny deterministic stopword lexicons (heuristic language ID — the
@@ -307,11 +307,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select("doc_id", F.explode(F.expr("split(text, ' ')")).alias("token"))
     # tok feeds BOTH the TF and DF aggregates; the lineage cut runs the
     # token explode once (the shared-model-table pattern, see
-    # collocation_pmi_bigrams). tok is the PER-OCCURRENCE token stream —
-    # Θ(corpus tokens) — so the cut is scale-gated (r17 advice item 1):
-    # past the source-size bound, materializing it would cost
-    # corpus-scale block-store storage and the double explode is cheaper.
-    tok = ckpt_if_bounded(tok, sf_dir)
+    # collocation_pmi_bigrams)
+    tok = share_if_bounded(tok, sf_dir, "documents")
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tok.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -556,7 +553,7 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf feeds BOTH the df table and the scoring join; the lineage cut
     # plans the explode+filter+agg once (the shared-model-table pattern,
     # see collocation_pmi_bigrams)
-    tf = tf.localCheckpoint(eager=False)
+    tf = share(tf, sf_dir, "documents")
     dfq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     return (
         tf.join(dl, "doc_id")
@@ -645,10 +642,10 @@ def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # uc feeds THREE consumers (corpus total, tok_a side, tok_b side) and
     # bgc two (bigram total, the PMI table) — without a lineage cut each
-    # reference re-plans the token/bigram explode + aggregate. Lazy
-    # localCheckpoints build each model table once (interleaved A/B at
-    # sf0.1: 0.58-1.13s -> 0.21-0.34s every adjacent pair, output equal).
-    uc = uc.localCheckpoint(eager=False)
+    # reference re-plans the token/bigram explode + aggregate. The cuts
+    # build each model table once (interleaved A/B at sf0.1:
+    # 0.58-1.13s -> 0.21-0.34s every adjacent pair, output equal).
+    uc = share(uc, sf_dir, "documents")
     u = uc.agg(F.expr("sum(c) AS u_total"))
     bg = tok.select(
         F.explode(
@@ -666,7 +663,7 @@ def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok_a", "tok_b")
         .agg(F.count(F.lit(1)).alias("c_ab"))
     )
-    bgc = bgc.localCheckpoint(eager=False)  # see uc note above
+    bgc = share(bgc, sf_dir, "documents")  # see uc note above
     t = bgc.agg(F.expr("sum(c_ab) AS t_total"))
     ca = uc.select(F.col("token").alias("tok_a"), F.col("c").alias("c_a"))
     cb = uc.select(F.col("token").alias("tok_b"), F.col("c").alias("c_b"))
@@ -746,7 +743,7 @@ def vocab_oov_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wc feeds BOTH the corpus totals and the top-N vocab spine; the
     # lineage cut runs the word-count explode+agg once (the shared-
     # model-table pattern, see collocation_pmi_bigrams)
-    wc = wc.localCheckpoint(eager=False)
+    wc = share(wc, sf_dir, "documents")
     tot = wc.agg(
         F.sum("cnt").cast("bigint").alias("total_occurrences"),
         F.count(F.lit(1)).alias("n_types"),
@@ -837,11 +834,12 @@ def vocab_coverage_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     # |V|-sized word counts feed three consumers (total, count-of-counts,
     # membership join) — materialize once instead of three corpus scans
-    wc = (
+    wc = share(
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        sf_dir,
+        "documents",
     )
     tot = wc.agg(F.sum("cnt").cast("bigint").alias("total"))
     cc = wc.groupBy("cnt").agg(
@@ -1631,7 +1629,7 @@ def bpe_merge_round4(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rounds cost O(|vocab|) each. The oracle unrolls the identical
     rounds as CTEs."""
     docs = load_table(spark, "documents", sf_dir)
-    rules = _bpe_train_rules(docs)
+    rules = _bpe_train_rules(docs, sf_dir)
     out = rules[0].select(
         F.lit(1).alias("merge_round"),
         F.col("exp").alias("merge_rule"),
@@ -1648,7 +1646,7 @@ def bpe_merge_round4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _bpe_train_rules(docs: DataFrame) -> list[DataFrame]:
+def _bpe_train_rules(docs: DataFrame, sf_dir: str) -> list[DataFrame]:
     """The N-round BPE train loop (see bpe_merge_round4): returns one
     one-row DataFrame per round with (sym — the 2-char rule in sentinel
     symbol space, cnt — its count at selection, exp — the rule expanded
@@ -1656,19 +1654,20 @@ def _bpe_train_rules(docs: DataFrame) -> list[DataFrame]:
     bpe_encode_corpus (train -> apply).
 
     Materialization discipline: the weighted vocabulary and each
-    one-row rule are localCheckpoint'ed PER ROUND. Left lazy, round r's
+    one-row rule are cut (``share``) PER ROUND. Left lazy, round r's
     rule embeds the whole prior-round lineage — the corpus scan
     multiplies into every branch (a 41-scan / 81-exchange plan at
-    N=4, caught by plan audit). Checkpointed, the CORPUS is scanned
+    N=4, caught by plan audit). Cut, the CORPUS is scanned
     exactly once (the initial wordcount); every later round reads the
     vocab-cardinality table — which is also how a real distributed
     trainer persists its vocab between merge rounds."""
-    words = (
+    words = share(
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .where(F.length("word") >= 2)
         .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("freq")),
+        sf_dir,
+        "documents",
     )
     pair_of = (
         "transform(sequence(1, length(word) - 1),"
@@ -1697,13 +1696,16 @@ def _bpe_train_rules(docs: DataFrame) -> list[DataFrame]:
                 F.broadcast(prev.select(F.col("exp").alias(f"__exp_{i}")))
             )
             exp_expr = f"replace({exp_expr}, chr({i}), __exp_{i})"
-        rule = rule.select("sym", "cnt", F.expr(exp_expr).alias("exp")).localCheckpoint(eager=False)
+        rule = share(
+            rule.select("sym", "cnt", F.expr(exp_expr).alias("exp")), sf_dir, "documents"
+        )
         rules.append(rule)
-        words = (
+        words = share(
             words.crossJoin(F.broadcast(rule.select("sym")))
             .select(F.expr(f"replace(word, sym, chr({r}))").alias("word"), "freq")
-            .where(F.length("word") >= 2)
-            .localCheckpoint(eager=False)
+            .where(F.length("word") >= 2),
+            sf_dir,
+            "documents",
         )
     return rules
 
@@ -1744,7 +1746,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources| aggregate. This is the standard model: learn on the
     compact weighted vocab, stamp the corpus map-side."""
     docs = load_table(spark, "documents", sf_dir)
-    rules = _bpe_train_rules(docs)
+    rules = _bpe_train_rules(docs, sf_dir)
     enc = docs.select("source", "text")
     ap = "text"
     for r, rule in enumerate(rules, start=1):
@@ -1835,14 +1837,11 @@ def bigram_lm_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("b"),
     ).select("doc_id", "b.tok_a", "b.tok_b")
     # occ feeds BOTH the bigram-count model build and the scoring probe;
-    # without a lineage cut Spark plans the scan+split+explode twice.
-    # Lazy localCheckpoint materializes the occurrence stream once and
-    # both consumers read the stored blocks (interleaved A/B at sf0.1:
+    # without a lineage cut Spark plans the scan+split+explode twice;
+    # the cut materializes the occurrence stream once and both
+    # consumers read the stored blocks (interleaved A/B at sf0.1:
     # 1.01-1.34s -> 0.81-1.00s in every adjacent pair, digests equal).
-    # occ is Θ(corpus tokens), so the cut is scale-gated (r17 advice
-    # item 1): past the source bound the double explode is the cheaper
-    # trade and the 100 TB shape ships a trained model table instead.
-    occ = ckpt_if_bounded(occ, sf_dir)
+    occ = share_if_bounded(occ, sf_dir, "documents")
     uc = (
         tok.select(F.explode("toks").alias("token"))
         .groupBy("token")
@@ -1952,9 +1951,8 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("b"),
     ).select("doc_id", "lang", "b.tok_a", "b.tok_b")
     # shared bigram stream: model build + scoring probe both consume occ
-    # (same scale-gated lineage cut as bigram_lm_doc_score — one explode
-    # while the source is bounded, re-planned past the 100 TB gate)
-    occ = ckpt_if_bounded(occ, sf_dir)
+    # (same lineage cut as bigram_lm_doc_score)
+    occ = share_if_bounded(occ, sf_dir, "documents")
     uc = (
         tok.select(F.explode("toks").alias("token"))
         .groupBy("token")
@@ -2034,7 +2032,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row joins; the aggregate shuffles |langs| groups with map-side
     partials. Integer floor divisions only — engine-stable."""
     docs = load_table(spark, "documents", sf_dir)
-    rules = _bpe_train_rules(docs)
+    rules = _bpe_train_rules(docs, sf_dir)
     enc = docs.select("lang", "text")
     ap = "text"
     for r, rule in enumerate(rules, start=1):

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, share
 from .parity import _sql_dsum, dsum
 from .registry import query
 
@@ -318,7 +318,7 @@ def funnel_signup_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each stage frame feeds the NEXT stage's join AND the final
     # left-join cascade; lineage cuts build each stage once instead of
     # re-planning the events aggregate chain per consumer
-    s = s.localCheckpoint(eager=False)
+    s = share(s, sf_dir, "events")
     v = (
         ev.where(F.col("event_type") == "view")
         .join(s, "user_id")
@@ -326,7 +326,7 @@ def funnel_signup_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("us").alias("t_view"))
     )
-    v = v.localCheckpoint(eager=False)  # see s above
+    v = share(v, sf_dir, "events")  # see s above
     p = (
         ev.where(F.col("event_type") == "purchase")
         .join(v, "user_id")
@@ -1345,11 +1345,14 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("event_type").over(w).alias("prev_type"),
         F.col("event_type").alias("next_type"),
     ).where(F.col("prev_type").isNotNull())
-    t = (
-        s.groupBy("prev_type", "next_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_trans"))
-        .localCheckpoint(eager=False)  # |types|^2 rows; row totals reuse it instead
-        # of re-running the per-user window a second time
+    # |types|^2 rows; row totals reuse it instead of re-running the
+    # per-user window a second time
+    t = share(
+        s.groupBy("prev_type", "next_type").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_trans")
+        ),
+        sf_dir,
+        "events",
     )
     r = t.groupBy("prev_type").agg(F.sum("n_trans").cast("bigint").alias("n_from"))
     return (
@@ -1395,7 +1398,7 @@ def daily_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     # key-cardinality pair set, two consumers (first-seen agg + classify
     # join): materialize once instead of re-scanning events
-    d = ev.select(F.to_date("ts").alias("day"), "user_id").distinct().localCheckpoint(eager=False)
+    d = share(ev.select(F.to_date("ts").alias("day"), "user_id").distinct(), sf_dir, "events")
     f = d.groupBy("user_id").agg(F.min("day").alias("first_day"))
     return (
         d.join(f, "user_id")
@@ -1793,20 +1796,15 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .aggregates import PCTL_ACCURACY
 
     ev = load_table(spark, "events", sf_dir)
-    d = (
-        ev.groupBy(
-            F.expr("CAST(date_trunc('day', ts) AS DATE)").alias("day"), "event_type"
-        )
-        .agg(
-            F.expr("CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)").alias(
-                "cents"
-            )
-        )
-        # three consumers (median, deviation build, final report) — the
-        # (day, type)-cardinality table materializes once so the raw
-        # event scan isn't re-paid per branch
-        .localCheckpoint(eager=False)
+    d = ev.groupBy(
+        F.expr("CAST(date_trunc('day', ts) AS DATE)").alias("day"), "event_type"
+    ).agg(
+        F.expr("CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)").alias("cents")
     )
+    # three consumers (median, deviation build, final report) — the
+    # (day, type)-cardinality table materializes once so the raw event
+    # scan isn't re-paid per branch
+    d = share(d, sf_dir, "events")
     med = d.groupBy("event_type").agg(
         F.percentile_approx("cents", 0.5, PCTL_ACCURACY).alias("med_cents")
     )
@@ -1884,7 +1882,8 @@ def audience_overlap_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(user_id % 63 AS INT)))"
         ).alias("bits")
-    ).localCheckpoint(eager=False)  # three consumers: sizes + both pair sides
+    )
+    b = share(b, sf_dir, "events")  # three consumers: sizes + both pair sides
     sz = b.groupBy("event_type").agg(
         F.expr("CAST(sum(bit_count(bits)) AS BIGINT)").alias("n_users")
     )
@@ -2392,7 +2391,7 @@ def events_trend_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("i", "n")
     # both pair sides consume the |days| spine; the lineage cut runs the
     # events scan + day aggregate once instead of twice
-    d = d.localCheckpoint(eager=False)
+    d = share(d, sf_dir, "events")
     a = d.select(F.col("i").alias("ai"), F.col("n").alias("an"))
     b = d.select(F.col("i").alias("bi"), F.col("n").alias("bn"))
     slopes = (

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, share
 from .parity import _sql_dsum, dsum
 from .registry import query
 
@@ -275,7 +275,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lineage cut makes the docstring's "detail rows are never
     # re-scanned" true in the physical plan (it planned the lineitem
     # join + aggregate twice before)
-    part_value = part_value.localCheckpoint(eager=False)
+    part_value = share(part_value, sf_dir, "lineitem")
     threshold = part_value.agg((F.sum("value") * F.lit(0.001)).alias("threshold"))
     return (
         part_value.join(F.broadcast(threshold))

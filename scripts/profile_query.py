@@ -6,9 +6,18 @@ Usage:
 
 For each query: builds the DataFrame fresh each run, runs it through the
 noop sink (the bench's timed action), and reports per-run wall seconds
-plus how many jobs the run scheduled (SparkStatusTracker deltas) — fixed
+plus how many jobs the run scheduled, split into build jobs (launched
+before the builder returned: its eager counts, collects and lineage
+cuts) and run jobs (the action's). Each phase runs in its own job
+group and the SparkStatusTracker counts the group's jobs — fixed
 scheduling overhead vs data work is the first split the optimization
-guide asks for.
+guide asks for. The last line sums run 0's build jobs over every named
+query; ``SPARK_GRAFT_PROFILE_RUNS=0`` skips the steady runs, so
+
+    SPARK_GRAFT_PROFILE_RUNS=0 python scripts/profile_query.py $(python -c \
+        "from dend_covid19_spark import plans; print(*plans.all_queries())")
+
+is the registry-wide build-job count.
 
 Each run's CPU seconds are then split three ways, read from ``/proc``
 over this process tree: ``driver_py`` (this Python process), ``jvm`` (its
@@ -77,33 +86,42 @@ def main() -> None:
 
     reg = plans.all_queries()
     tracker = sc.statusTracker()
+
+    def jobs(group: str) -> int:
+        return len(tracker.getJobIdsForGroup(group))
+
+    build_total = 0
     for name in names:
         fn = reg[name]
         rows = []
         for i in range(RUNS + 1):  # run 0 = cold (plan/codegen), kept separate
-            jobs0 = tracker.getJobIdsForGroup(None)
-            n0 = len(jobs0)
-            sc.setJobDescription(f"profile:{name}:run{i}")
+            group = f"profile:{name}:run{i}"
             cpu0 = cpu_split()
             t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            sc.setJobGroup(f"{group}:build", f"{group}:build")
+            df = fn(spark, SF_DIR)
+            sc.setJobGroup(f"{group}:run", f"{group}:run")
+            df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             cpu1 = cpu_split()
-            jobs1 = tracker.getJobIdsForGroup(None)
-            rows.append((dt, len(jobs1) - n0, {k: cpu1[k] - cpu0[k] for k in CPU_PARTS}))
+            build, run = jobs(f"{group}:build"), jobs(f"{group}:run")
+            rows.append((dt, build, run, {k: cpu1[k] - cpu0[k] for k in CPU_PARTS}))
             spark.catalog.clearCache()
-        cold = rows[0]
-        steady = sorted(r[0] for r in rows[1:])[len(rows[1:]) // 2]
-        print(
-            f"{name}: cold={cold[0]:.3f}s/{cold[1]}jobs "
-            f"steady_median={steady:.3f}s "
-            f"runs={[f'{d:.3f}s/{j}j' for d, j, _ in rows[1:]]}"
-        )
-        for i, (_, _, cpu) in enumerate(rows):
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        build_total += rows[0][1]
+        cold, steady_rows = rows[0], rows[1:]
+        line = f"{name}: cold={cold[0]:.3f}s/{cold[1]}+{cold[2]}jobs"
+        if steady_rows:
+            steady = sorted(r[0] for r in steady_rows)[len(steady_rows) // 2]
+            line += (
+                f" steady_median={steady:.3f}s"
+                f" runs={[f'{d:.3f}s/{b}+{r}j' for d, b, r, _ in steady_rows]}"
+            )
+        print(line)
+        for i, (_, _, _, cpu) in enumerate(rows):
             parts = " ".join(f"{k}={cpu[k]:.2f}s" for k in CPU_PARTS)
             print(f"  run{i} cpu: {parts} total={sum(cpu.values()):.2f}s")
-        sc.setJobDescription(None)
-
+    print(f"build jobs, run 0, over {len(names)} queries: {build_total}")
 
 if __name__ == "__main__":
     main()

@@ -522,7 +522,7 @@ def kcore_shuffle_shape(spark, k: int):
     time is that claim measured."""
     from dend_covid19_spark.plans.graph import _kcore_peel_shuffle
 
-    return _kcore_peel_shuffle(_copurchase_edges(spark, k))
+    return _kcore_peel_shuffle(_copurchase_edges(spark, k), SF_DIR)
 
 
 def lpa_shape(spark, k: int):
@@ -535,7 +535,7 @@ def lpa_shape(spark, k: int):
     measured."""
     from dend_covid19_spark.plans.graph import _lpa_propagate
 
-    return _lpa_propagate(_copurchase_edges(spark, k), broadcast_labels=False)
+    return _lpa_propagate(_copurchase_edges(spark, k), SF_DIR, broadcast_labels=False)
 
 
 def funnel_shape(spark, k: int):

@@ -145,12 +145,16 @@ def test_cc_shuffle_branch_matches_broadcast_branch(spark, monkeypatch):
     pairs = dedup_ngram_jaccard(spark, SF_DIR).select("doc_a", "doc_b")
     want = {
         (r.node, r.component)
-        for r in C.connected_components(pairs, "doc_a", "doc_b").collect()
+        for r in C.connected_components(
+            pairs, "doc_a", "doc_b", sf_dir=SF_DIR, table="documents"
+        ).collect()
     }
     monkeypatch.setattr(C, "GRAPH_BROADCAST_MAX_NODES", 0)  # force big branch
     got = {
         (r.node, r.component)
-        for r in C.connected_components(pairs, "doc_a", "doc_b").collect()
+        for r in C.connected_components(
+            pairs, "doc_a", "doc_b", sf_dir=SF_DIR, table="documents"
+        ).collect()
     }
     assert got == want and got
 
@@ -172,7 +176,7 @@ def test_cc_rejects_non_integral_ids(spark, schema, bad):
     sc.setJobGroup("cc_id_type_check", "connected_components id check")
     try:
         with pytest.raises(TypeError, match=f"'{bad}'"):
-            connected_components(edges)
+            connected_components(edges, sf_dir=SF_DIR, table="documents")
         assert not sc.statusTracker().getJobIdsForGroup("cc_id_type_check")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

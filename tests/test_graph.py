@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from dend_covid19_spark.operators.scale import zorder_layout_orders
@@ -21,15 +22,23 @@ from dend_covid19_spark.plans.graph import (
     pagerank_copurchase,
     pagerank_copurchase_shuffle,
 )
+import dend_covid19_spark.catalog as cat
+from dend_covid19_spark.catalog import share
 from dend_covid19_spark.session import session_conf
 from tests.conftest import SF_DIR
 
 # the *_edges_stationary pins read the at-scale plan: no broadcast
-# auto-planning, and no AQE re-planning of the checkpointed partitions
-_NO_BROADCAST_NO_AQE = {
-    "spark.sql.autoBroadcastJoinThreshold": "-1",
-    "spark.sql.adaptive.enabled": "false",
-}
+# auto-planning. AQE stays at the session's default (on): the cuts go
+# through share, which keeps their hash partitioning under it.
+_NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+
+
+@pytest.fixture
+def past_ckpt_gate(monkeypatch):
+    """Every source reads as larger than share_if_bounded's gate, as it
+    does at the scale the shuffle branches exist for: the loops' cuts
+    must still be taken there."""
+    monkeypatch.setattr(cat, "_source_bytes", lambda path: cat.CKPT_SOURCE_MAX_BYTES + 1)
 
 
 def test_pagerank_mass_and_floor(spark):
@@ -154,18 +163,18 @@ def test_pagerank_branches_identical(spark):
     assert a == b and len(a) > 0
 
 
-def test_pagerank_shuffle_branch_edges_stationary(spark):
+def test_pagerank_shuffle_branch_edges_stationary(spark, past_ckpt_gate):
     """The 100 TB branch's contract: after the one-time
-    repartition(s) + localCheckpoint, the per-iteration rank attach
+    repartition(s) + share cut, the per-iteration rank attach
     exchanges ONLY the node-cardinality rank table — the checkpointed
     edge partitions are read in place (no Exchange above the edge
     scan). Broadcast auto-planning is disabled so the demo-scale plan
     is the at-scale plan."""
     from pyspark.sql import functions as F
 
-    with session_conf(spark, _NO_BROADCAST_NO_AQE):
+    with session_conf(spark, _NO_BROADCAST):
         ed, deg = _copurchase_edges(spark, SF_DIR, broadcast_deg=False)
-        edc = ed.repartition(PR_SHUFFLE_PARTS, "s").localCheckpoint()
+        edc = share(ed.repartition(PR_SHUFFLE_PARTS, "s"), SF_DIR, "lineitem")
         ranks = deg.select(
             F.col("s").alias("node"), F.lit(PR_SCALE).cast("bigint").alias("r")
         )
@@ -293,7 +302,7 @@ def test_kcore_broadcast_branch_edges_stationary(spark):
     (no shuffle Exchange of the edge table)."""
     from dend_covid19_spark.plans.graph import KCORE_K, _kcore_edges
 
-    e = _kcore_edges(spark, SF_DIR).localCheckpoint()
+    e = share(_kcore_edges(spark, SF_DIR), SF_DIR, "lineitem")
     deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     keep = deg.where(F.col("deg") >= KCORE_K).select("s")
     j = e.join(F.broadcast(keep), "s", "left_semi").join(
@@ -319,9 +328,9 @@ def test_kcore_broadcast_branch_edges_stationary(spark):
     assert not shuffles, plan
 
 
-def test_kcore_shuffle_branch_edges_stationary(spark):
+def test_kcore_shuffle_branch_edges_stationary(spark, past_ckpt_gate):
     """The 100 TB branch's contract: after the one-time
-    repartition(s) + localCheckpoint, the per-round frontier attach
+    repartition(s) + share cut, the per-round frontier attach
     exchanges ONLY the node-cardinality dropped set — the checkpointed
     edge partitions are read in place (no Exchange above the edge
     scan). Broadcast auto-planning is disabled so the demo-scale plan
@@ -333,15 +342,18 @@ def test_kcore_shuffle_branch_edges_stationary(spark):
         _kcore_edges,
     )
 
-    with session_conf(spark, _NO_BROADCAST_NO_AQE):
-        e = _kcore_edges(spark, SF_DIR).repartition(
-            KCORE_SHUFFLE_PARTS, "s"
-        ).localCheckpoint()
-        alive = (
+    with session_conf(spark, _NO_BROADCAST):
+        e = share(
+            _kcore_edges(spark, SF_DIR).repartition(KCORE_SHUFFLE_PARTS, "s"),
+            SF_DIR,
+            "lineitem",
+        )
+        alive = share(
             e.groupBy("s")
             .agg(F.count(F.lit(1)).alias("deg"))
-            .repartition(KCORE_SHUFFLE_PARTS, "s")
-            .localCheckpoint()
+            .repartition(KCORE_SHUFFLE_PARTS, "s"),
+            SF_DIR,
+            "lineitem",
         )
         dropped = alive.where(F.col("deg") < KCORE_K).select("s")
         j = e.join(dropped.repartition(KCORE_SHUFFLE_PARTS, "s"), "s")
@@ -357,7 +369,7 @@ def test_kcore_shuffle_branch_edges_stationary(spark):
     assert left and all("Exchange" not in ln for ln in left), plan
 
 
-def test_lpa_edges_stationary(spark):
+def test_lpa_edges_stationary(spark, past_ckpt_gate):
     """LPA's 100 TB contract, mirroring
     test_kcore_shuffle_branch_edges_stationary: the edge table is
     hash-partitioned once on ``d`` — the per-round join key — and
@@ -373,10 +385,12 @@ def test_lpa_edges_stationary(spark):
         _kcore_edges,
     )
 
-    with session_conf(spark, _NO_BROADCAST_NO_AQE):
-        e = _kcore_edges(spark, SF_DIR).repartition(
-            KCORE_SHUFFLE_PARTS, "d"
-        ).localCheckpoint()
+    with session_conf(spark, _NO_BROADCAST):
+        e = share(
+            _kcore_edges(spark, SF_DIR).repartition(KCORE_SHUFFLE_PARTS, "d"),
+            SF_DIR,
+            "lineitem",
+        )
         labels = e.select(F.col("s").alias("node")).distinct().select(
             "node", F.col("node").alias("label")
         )
@@ -411,7 +425,7 @@ def test_lpa_branches_identical(spark):
         (r.part_key, r.community)
         for r in graph_lpa_communities(spark, SF_DIR).collect()
     }
-    big = _lpa_propagate(_kcore_edges(spark, SF_DIR), broadcast_labels=False)
+    big = _lpa_propagate(_kcore_edges(spark, SF_DIR), SF_DIR, broadcast_labels=False)
     b = {(r.node, r.label) for r in big.collect()}
     assert a == b and len(a) > 0
 
@@ -425,7 +439,7 @@ def test_lpa_broadcast_branch_edges_stationary(spark):
     from dend_covid19_spark.plans.graph import _kcore_edges, _lpa_propagate
 
     two_rounds = _lpa_propagate(
-        _kcore_edges(spark, SF_DIR), broadcast_labels=True, iters=2
+        _kcore_edges(spark, SF_DIR), SF_DIR, broadcast_labels=True, iters=2
     )
     lines = two_rounds._jdf.queryExecution().executedPlan().toString().splitlines()
     join_at = next(i for i, ln in enumerate(lines) if "BroadcastHashJoin" in ln)

@@ -688,7 +688,7 @@ def test_ckpt_gate_malformed_env_falls_back_to_default(spark, monkeypatch):
     import dend_covid19_spark.catalog as cat
 
     monkeypatch.setenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", "2GiB")
-    assert _is_checkpointed(cat.ckpt_if_bounded(spark.range(3), SF_DIR))
+    assert _is_checkpointed(cat.share_if_bounded(spark.range(3), SF_DIR, "documents"))
 
 
 def test_ckpt_gate_missing_source_not_cached(spark, monkeypatch, tmp_path):
@@ -698,9 +698,28 @@ def test_ckpt_gate_missing_source_not_cached(spark, monkeypatch, tmp_path):
 
     monkeypatch.setenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", "0")
     df = spark.range(3)
-    assert _is_checkpointed(cat.ckpt_if_bounded(df, str(tmp_path)))
+    assert _is_checkpointed(cat.share_if_bounded(df, str(tmp_path), "documents"))
     (tmp_path / "documents.parquet").write_bytes(b"x" * 10)
-    assert cat.ckpt_if_bounded(df, str(tmp_path)) is df
+    assert cat.share_if_bounded(df, str(tmp_path), "documents") is df
+
+
+def test_lineage_cuts_go_through_share():
+    """Every lineage cut in the package is ``catalog.share``: a bare
+    ``localCheckpoint(`` elsewhere would be planned under the session's
+    AQE, run its stages at call time and drop its hash partitioning.
+    The one exception is agg_skew_aqe_join's snapshot, which must run
+    under AQE (its comment says why)."""
+    root = pathlib.Path(dend_covid19_spark.__file__).parent
+    sites = sorted(
+        f"{path.relative_to(root)}: {line.strip()}"
+        for path in root.rglob("*.py")
+        for line in path.read_text().splitlines()
+        if "localCheckpoint(" in line
+    )
+    assert sites == [
+        "catalog.py: return df.localCheckpoint(eager=False)",
+        "operators/scale.py: snap = jj.localCheckpoint()",
+    ], sites
 
 
 def test_session_state_goes_through_the_shared_helpers():

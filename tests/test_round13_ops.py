@@ -129,8 +129,8 @@ def test_ppjoin_filters_prune_candidates_not_results(spark):
     )
 
     sigs = _minhash_sigs(spark, SF_DIR).select("doc_id", "shingles")
-    plain = _ppjoin_candidates(sigs, with_filters=False)
-    filt = _ppjoin_candidates(sigs, with_filters=True)
+    plain = _ppjoin_candidates(sigs, SF_DIR, with_filters=False)
+    filt = _ppjoin_candidates(sigs, SF_DIR, with_filters=True)
     n_plain, n_filt = plain.count(), filt.count()
     assert n_filt < n_plain, (n_filt, n_plain)
 
