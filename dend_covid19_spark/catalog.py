@@ -15,7 +15,7 @@ from __future__ import annotations
 import functools
 import glob
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -229,13 +229,10 @@ def widen_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-# Node-count gate shared by the iterative graph loops (PageRank, k-core
-# and label propagation in plans/graph.py, connected components in
-# operators/components.py). Below it each round broadcasts the
-# node-cardinality table (16 bytes/row) onto stationary edges; past
-# ~5e7 nodes that broadcast blows the executor/driver memory budget, so
-# the co-partitioned sort-merge branch runs instead.
+# Node-count gate and big-branch width of ``propagate``, the one round
+# loop of the graph family (see its docstring).
 GRAPH_BROADCAST_MAX_NODES = 50_000_000
+GRAPH_SHUFFLE_PARTS = 32
 
 CKPT_SOURCE_MAX_BYTES = 2 * 1024**3  # share_if_bounded's default gate
 
@@ -373,6 +370,68 @@ def share_if_bounded(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     if _table_bytes(sf_dir, table) > limit:
         return df
     return share(df, sf_dir, table)
+
+
+def propagate(
+    edges: DataFrame,
+    key: str,
+    state: DataFrame,
+    step: Callable[..., DataFrame],
+    *,
+    small: bool,
+    rounds: int,
+    sf_dir: str,
+    table: str,
+    converged: Callable[[DataFrame], bool] | None = None,
+) -> DataFrame:
+    """The graph family's one round loop (PageRank, k-core and label
+    propagation in plans/graph.py, connected components in
+    operators/components.py): up to ``rounds`` synchronous rounds of
+    ``state = step(edges, state, attach)``, each one join of a
+    node-cardinality table onto the edges plus one aggregate.
+
+    ``step`` joins ``attach(nodes)`` onto ``edges`` on ``key``, where
+    ``nodes`` is the state or a table derived from it (k-core's dropped
+    frontier) keyed by a ``node`` column. ``small`` is the caller's gate,
+    true while the node count fits ``GRAPH_BROADCAST_MAX_NODES``
+    (``broadcast_gate``, or CC's own round-0 count). Past ~5e7 nodes a
+    broadcast of the node table blows the executor/driver memory budget.
+    The gate picks only how ``attach`` moves the node table:
+
+    - ``small``: the edges are cut as they are and ``attach`` broadcasts
+      the node table, so no exchange touches the edges.
+    - otherwise: the edges are hash-partitioned on ``key`` once, at
+      ``GRAPH_SHUFFLE_PARTS``, and cut (``share`` keeps the
+      partitioning); ``attach`` repartitions the node table on ``node``
+      to the same width, so the sort-merge join exchanges only
+      node-cardinality rows each round. The width is a constant, not
+      ``share_width``: Spark plans ``repartition(1, key)`` as
+      SinglePartition, which the join does not accept as
+      hash-partitioned, so at width 1 it would re-exchange the edges.
+
+    Either way the edges are built once and stay stationary; the
+    ``*_edges_stationary`` tests in tests/test_graph.py pin both
+    plans. Each round's state is cut (``share``): the plan depth stays
+    constant, and the caller's action runs every round in one job (a
+    broadcast inside a cut starts its build when the cut is taken). With
+    ``converged``, it is called on each round's cut state and a true
+    result ends the loop; the loop runs in ``share_scope``, so each such
+    driver-side read is one job."""
+    if not small:
+        edges = edges.repartition(GRAPH_SHUFFLE_PARTS, key)
+    edges = share(edges, sf_dir, table)
+
+    def attach(nodes: DataFrame) -> DataFrame:
+        if small:
+            return F.broadcast(nodes)
+        return nodes.repartition(GRAPH_SHUFFLE_PARTS, "node")
+
+    with share_scope(edges.sparkSession, sf_dir, table):
+        for _ in range(rounds):
+            state = share(step(edges, state, attach), sf_dir, table)
+            if converged is not None and converged(state):
+                break
+    return state
 
 
 def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -16,10 +16,9 @@ the canonical-document pick.
 Scale: each iteration is one join edges⋈labels + one min-aggregate —
 shuffle-bound on |edges|; rounds needed = graph diameter (near-dup
 graphs are shallow — dup groups are cliques-ish, so 2-4 rounds).
-A ``catalog.share`` cut truncates the lineage each round, keeping plan
-depth constant, and the rounds run inside ``share_scope`` so each
-round's convergence read is one job. This is the standard large-graph CC shape (GraphX/GraphFrames
-use the same alternating join under the hood).
+The rounds run through ``catalog.propagate``, the graph family's one
+loop. This is the standard large-graph CC shape (GraphX/GraphFrames use
+the same alternating join under the hood).
 
 The Spark side iterates to a fixpoint, but the RESULT is still
 SQL-expressible: DuckDB's WITH RECURSIVE computes the same min-reachable
@@ -35,15 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import GRAPH_BROADCAST_MAX_NODES, load_table, share, share_scope
+from ..catalog import GRAPH_BROADCAST_MAX_NODES, load_table, propagate, share, share_scope
 from ..functions.dedup_sql import duck_components_ctes
 from ..plans.registry import query
 
 MAX_ROUNDS = 10  # backstop; near-dup graphs converge in 2-4
-
-# Rounds are size-gated on catalog.GRAPH_BROADCAST_MAX_NODES, the gate
-# the plans/graph.py loops share.
-CC_SHUFFLE_PARTS = 32  # edge/label co-partitioning width, big branch
 
 
 def connected_components(
@@ -73,10 +68,9 @@ def connected_components(
     exactly "no node changed" — one O(1) aggregate per round, half the
     actions of the changed-count form.
 
-    Per-round plan is size-gated on node count: small graphs broadcast
-    the label table onto the stationary cut edges; big graphs
-    fall back to edges hash-partitioned on the probe key once, labels
-    shuffling each round (the only side that must move).
+    Rounds run through ``catalog.propagate``, keyed on ``b``. The gate
+    is this loop's own: the round-0 aggregate's node count, read in the
+    same job as its label sum.
 
     Ids must be integral: the fixpoint test sums labels as decimals, and
     a string id would fail mid-loop under ANSI mode or, with ANSI off,
@@ -110,29 +104,35 @@ def connected_components(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
         ).collect()[0]
-        small = init["n"] <= GRAPH_BROADCAST_MAX_NODES
-        cur_sum = init["s"]
-        if not small:
-            sym = sym.repartition(CC_SHUFFLE_PARTS, "b")
-        sym = share(sym, sf_dir, table)  # built once; never moves again
-        for _ in range(MAX_ROUNDS):
-            rhs = F.broadcast(labels) if small else labels
-            new_labels = share(  # truncate lineage: constant plan depth per round
-                sym.join(rhs, sym.b == rhs.node)
-                .groupBy("a")
-                .agg(F.min("component").alias("component"))
-                .withColumnRenamed("a", "node"),
-                sf_dir,
-                table,
-            )
-            new_sum = new_labels.agg(
-                F.sum(F.col("component").cast("decimal(38,0)"))
-            ).collect()[0][0]  # O(1) driver scalar
-            labels = new_labels
-            if new_sum == cur_sum:
-                break
-            cur_sum = new_sum
-    return labels
+    label_sum = init["s"]
+
+    def step(sym: DataFrame, labels: DataFrame, attach) -> DataFrame:
+        rhs = attach(labels)
+        return (
+            sym.join(rhs, sym.b == rhs.node)
+            .groupBy("a")
+            .agg(F.min("component").alias("component"))
+            .withColumnRenamed("a", "node")
+        )
+
+    def unchanged(labels: DataFrame) -> bool:
+        nonlocal label_sum
+        prev, label_sum = label_sum, labels.agg(
+            F.sum(F.col("component").cast("decimal(38,0)"))
+        ).collect()[0][0]  # O(1) driver scalar
+        return label_sum == prev
+
+    return propagate(
+        sym,
+        "b",
+        labels,
+        step,
+        small=init["n"] <= GRAPH_BROADCAST_MAX_NODES,
+        rounds=MAX_ROUNDS,
+        sf_dir=sf_dir,
+        table=table,
+        converged=unchanged,
+    )
 
 
 # The oracle rebuilds the verified near-dup pairs (the dedup_ngram_jaccard

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import broadcast_gate, load_table, share
+from ..catalog import broadcast_gate, load_table, propagate, share
 from .registry import query
 
 # --- market-basket brand affinity ------------------------------------------
@@ -159,97 +159,83 @@ PR_SCALE = 1_000_000_000
 PR_BASE = 150_000_000  # 0.15 * PR_SCALE
 PR_ITERS = 5
 
-# The per-iteration rank attach is gated on GRAPH_BROADCAST_MAX_NODES
-# (catalog.py): below it the rank table broadcasts (zero exchange on the
-# edge side); above it a sort-merge join runs against the STATIONARY
-# hash-partitioned edge table — edges still never move, the only
-# per-iteration exchange is the (much smaller) rank table itself.
-PR_SHUFFLE_PARTS = 32  # edge/rank co-partitioning width for the big branch
 
-
-def _pagerank_ranks(
-    ed: DataFrame, deg: DataFrame, sf_dir: str, *, broadcast_ranks: bool
+def _canonical_pairs(
+    spark: SparkSession, sf_dir: str, *, max_size: int | None = None
 ) -> DataFrame:
-    """PR_ITERS synchronous integer-PageRank iterations over a prebuilt
-    (s, d, dout) edge table. Two physically different, numerically
-    IDENTICAL branches (integer arithmetic, associative-exact sums):
-
-    - broadcast_ranks=True: rank table broadcast onto the cut edge
-      partitions — zero edge-side exchange, right up to
-      GRAPH_BROADCAST_MAX_NODES.
-    - broadcast_ranks=False: the 100 TB branch. Edges are hash-
-      partitioned on the source key ONCE and cut (``share`` keeps the
-      hash partitioning); each iteration repartitions only the rank
-      table to the same key, so the sort-merge join exchanges
-      node-cardinality rows per iteration while the edge side stays
-      stationary (pinned by tests/test_graph.py::
-      test_pagerank_shuffle_branch_edges_stationary).
-    """
-    if broadcast_ranks:
-        ed = share(ed, sf_dir, "lineitem")  # built once; edges never move
-    else:
-        ed = share(ed.repartition(PR_SHUFFLE_PARTS, "s"), sf_dir, "lineitem")
-    ranks = deg.select(
-        F.col("s").alias("node"), F.lit(PR_SCALE).cast("bigint").alias("r")
-    )
-    for i in range(PR_ITERS):
-        rhs = F.broadcast(ranks) if broadcast_ranks else ranks
-        msgs = ed.join(rhs, ed.s == rhs.node).select(
-            "d", F.expr("(85 * r) DIV (100 * dout)").alias("c")
-        )
-        ranks = msgs.groupBy(F.col("d").alias("node")).agg(
-            (F.lit(PR_BASE) + F.sum("c")).cast("bigint").alias("r")
-        )
-        # Cut every OTHER iteration, not every one: the cut's value —
-        # bounded lineage so a task retry or a 50-iteration variant
-        # never recomputes the whole chain — only needs PERIODIC
-        # truncation, while each cut costs a persist pass over the rank
-        # table. Interval 2 keeps the worst retry at one extra iteration
-        # of recompute and the lineage depth constant.
-        if i % 2 == 1 and i < PR_ITERS - 1:
-            ranks = share(ranks, sf_dir, "lineitem")
-    return ranks.select(F.col("node").alias("part_key"), F.col("r").alias("rank_e9"))
-
-
-def _copurchase_edges(
-    spark: SparkSession, sf_dir: str, *, broadcast_deg: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """Distinct directed co-purchase edge list with out-degree attached,
-    plus the degree table: one shuffle on the order key, basket-bounded
-    fan-out (module docstring)."""
+    """Distinct co-purchase pairs (a, b) with a < b, two parts bought in
+    the same order, behind one cut. With ``max_size``, only parts with
+    p_size <= max_size take part. One shuffle on the order key,
+    basket-bounded fan-out (module docstring)."""
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    op = li.distinct()
-    a, b = op.alias("a"), op.alias("b")
-    # canonical a<b pairs first (halves the dedup shuffle volume), then
-    # symmetrize with a union — same distinct directed edge set
-    canon = share(  # two consumers below (forward + reversed)
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    if max_size is not None:
+        sp = (
+            load_table(spark, "part", sf_dir)
+            .where(F.col("p_size") <= max_size)
+            .select("p_partkey")
         )
-        .select(F.col("a.l_partkey").alias("s"), F.col("b.l_partkey").alias("d"))
+        li = li.join(F.broadcast(sp), li.l_partkey == sp.p_partkey).select(
+            "l_orderkey", "l_partkey"
+        )
+    op = li.distinct()
+    x, y = op.alias("x"), op.alias("y")
+    return share(
+        x.join(
+            y,
+            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
+        )
+        .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
         .distinct(),
         sf_dir,
         "lineitem",
     )
-    e = canon.unionAll(canon.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    # node-cardinality and consumed by the rank init and the degree
-    # attach (and the exact gate count past the footer bound)
-    deg = share(e.groupBy("s").agg(F.count(F.lit(1)).alias("dout")), sf_dir, "lineitem")
-    # degree table is node-cardinality: broadcast the attach so the edge
-    # rows never pass through another exchange before the cut.
-    # In the shuffle branch (past GRAPH_BROADCAST_MAX_NODES) this attach,
-    # too, is a plain join on s — _pagerank_ranks repartitions ed on s
-    # right after, so the join's exchange is subsumed by the one the
-    # branch pays anyway.
-    if broadcast_deg:
-        ed = e.join(F.broadcast(deg), "s")
-    else:
-        ed = e.repartition(PR_SHUFFLE_PARTS, "s").join(
-            deg.repartition(PR_SHUFFLE_PARTS, "s"), "s"
+
+
+def _copurchase_edges(
+    spark: SparkSession, sf_dir: str, *, max_size: int | None = None
+) -> DataFrame:
+    """The symmetric, duplicate-free directed edge list (s, d) of
+    ``_canonical_pairs``: canonical pairs first (halves the dedup
+    shuffle volume), then both directions by a union."""
+    pairs = _canonical_pairs(spark, sf_dir, max_size=max_size)
+    return pairs.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
+        pairs.select(F.col("b").alias("s"), F.col("a").alias("d"))
+    )
+
+
+def _pagerank_ranks(
+    e: DataFrame, sf_dir: str, *, small: bool | None = None, rounds: int = PR_ITERS
+) -> DataFrame:
+    """``rounds`` synchronous integer-PageRank iterations over a
+    symmetric (s, d) edge table, through ``catalog.propagate`` keyed on
+    the source ``s``. ``small`` defaults to ``broadcast_gate`` over the
+    node table. The state is (node, r, dout): on a symmetric graph a
+    node's in-edge count is its out-degree, so each round's aggregate
+    carries dout forward and the edges need no degree attach. Every
+    node sends the same message (85 * r) // (100 * dout) to each
+    neighbor, so it is computed once per node before the attach."""
+    ranks = e.groupBy(F.col("s").alias("node")).agg(
+        F.lit(PR_SCALE).cast("bigint").alias("r"), F.count(F.lit(1)).alias("dout")
+    )
+    if small is None:
+        small = broadcast_gate(sf_dir, "lineitem", ranks)
+
+    def step(e: DataFrame, ranks: DataFrame, attach) -> DataFrame:
+        msg = attach(ranks.select("node", F.expr("(85 * r) DIV (100 * dout)").alias("c")))
+        return (
+            e.join(msg, e.s == msg.node)
+            .groupBy(F.col("d").alias("node"))
+            .agg(
+                (F.lit(PR_BASE) + F.sum("c")).cast("bigint").alias("r"),
+                F.count(F.lit(1)).alias("dout"),
+            )
         )
-    return ed, deg
+
+    ranks = propagate(
+        e, "s", ranks, step, small=small, rounds=rounds, sf_dir=sf_dir, table="lineitem"
+    )
+    return ranks.select(F.col("node").alias("part_key"), F.col("r").alias("rank_e9"))
 
 
 def _duck_pr_iter(prev: str, nxt: str) -> str:
@@ -288,40 +274,23 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, which is associative-exact.
 
     Plan/scale: the edge list is one shuffle on the order key with
-    basket-bounded fan-out, then cut with per-edge out-degree
-    attached (built once, reused by all iterations). The per-iteration
-    rank attach is SIZE-GATED (_pagerank_ranks): below
-    GRAPH_BROADCAST_MAX_NODES the node-cardinality rank table broadcasts
-    onto the stationary edge partitions (the Pregel optimization —
-    measured 2.1x over the shuffle-join form at sf0.1); above it, the
-    co-partitioned sort-merge branch runs instead, edges still
-    stationary (the r5 judge's ask — no more documented-but-
-    unimplemented scale path; the shuffle branch also has its own
-    driver-checked twin below). The gate (``broadcast_gate``) bounds the
-    node count by lineitem's footer row count, with no job; only past
-    the threshold does it count the degree table exactly. A ``share``
-    cut truncates the growing lineage every other round (the kmeans
-    discipline) so the 5-deep loop doesn't replan or re-execute prior
-    iterations; dangling nodes don't
-    exist here (the co-purchase graph is symmetric, every node has in-
-    and out-edges)."""
-    ed, deg = _copurchase_edges(spark, sf_dir)
-    return _pagerank_ranks(
-        ed, deg, sf_dir, broadcast_ranks=broadcast_gate(sf_dir, "lineitem", deg)
-    )
+    basket-bounded fan-out, cut once; the iterations run through
+    ``catalog.propagate`` (the broadcast attach is the Pregel
+    optimization, measured 2.1x over the shuffle-join form at sf0.1).
+    The gate (``broadcast_gate``) bounds the node count by lineitem's
+    footer row count, with no job; only past the threshold does it
+    count the node table exactly. Dangling nodes don't exist here (the
+    co-purchase graph is symmetric, every node has in- and
+    out-edges)."""
+    return _pagerank_ranks(_copurchase_edges(spark, sf_dir), sf_dir)
 
 
 @query("pagerank_copurchase_shuffle", oracle=_PR_ORACLE)
 def pagerank_copurchase_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The >GRAPH_BROADCAST_MAX_NODES branch of pagerank_copurchase, forced
     at demo scale so the 100 TB code path carries its own value-hash
-    row: plain co-partitioned joins everywhere (degree attach AND the
-    per-iteration rank attach), edges hash-partitioned on the source
-    key once and stationary thereafter. Identical integer fixed-point
-    arithmetic -> identical oracle. Plan shape pinned by
-    tests/test_graph.py::test_pagerank_shuffle_branch_edges_stationary."""
-    ed, deg = _copurchase_edges(spark, sf_dir, broadcast_deg=False)
-    return _pagerank_ranks(ed, deg, sf_dir, broadcast_ranks=False)
+    row. Identical integer fixed-point arithmetic -> identical oracle."""
+    return _pagerank_ranks(_copurchase_edges(spark, sf_dir), sf_dir, small=False)
 
 
 # --- triangle counting (degree-ordered node-iterator) -----------------------
@@ -394,29 +363,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Every triangle is counted once (each has exactly one node ordered
     below both others), then credited to all three corners."""
-    sp = (
-        load_table(spark, "part", sf_dir)
-        .where(F.col("p_size") <= TRI_MAX_SIZE)
-        .select("p_partkey")
-    )
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    op = (
-        li.join(F.broadcast(sp), li.l_partkey == sp.p_partkey)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    x, y = op.alias("x"), op.alias("y")
-    e = share(  # consumed by degree + orientation: build once
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
-        .distinct(),
-        sf_dir,
-        "lineitem",
-    )
+    # consumed by degree + orientation: built once behind the cut
+    e = _canonical_pairs(spark, sf_dir, max_size=TRI_MAX_SIZE)
     deg = (
         e.select(F.col("a").alias("n"))
         .unionAll(e.select(F.col("b").alias("n")))
@@ -503,80 +451,23 @@ GROUP BY s
 """
 
 
-KCORE_SHUFFLE_PARTS = PR_SHUFFLE_PARTS
-
-
-def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric distinct co-purchase edge list over the bounded
-    subgraph (same TRI_MAX_SIZE cut as the triangle count)."""
-    sp = (
-        load_table(spark, "part", sf_dir)
-        .where(F.col("p_size") <= TRI_MAX_SIZE)
-        .select("p_partkey")
-    )
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    op = (
-        li.join(F.broadcast(sp), li.l_partkey == sp.p_partkey)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    x, y = op.alias("x"), op.alias("y")
-    ec = share(
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
-        .distinct(),
-        sf_dir,
-        "lineitem",
-    )
-    return ec.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
-        ec.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    )
-
-
-def _kcore_peel_broadcast(e: DataFrame, sf_dir: str) -> DataFrame:
-    """Sub-gate branch: filter-based peeling with the survivor set
-    EXPLICITLY broadcast into both semi joins — the cut edge
-    partitions are probed in place every round, zero edge-side
-    exchange (pinned by tests/test_graph.py::
-    test_kcore_broadcast_branch_edges_stationary). Survivors are
-    node-cardinality, the same budget PageRank broadcasts under the
-    same gate."""
-    e = share(e, sf_dir, "lineitem")
-    for _ in range(KCORE_ITERS):
-        deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= KCORE_K).select("s")
-        e = share(
-            e.join(F.broadcast(keep), "s", "left_semi")
-            .join(F.broadcast(keep.select(F.col("s").alias("d"))), "d", "left_semi")
-            .select("s", "d"),
-            sf_dir,
-            "lineitem",
-        )
-    return e.groupBy(F.col("s").alias("part_key")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("core_degree")
-    )
-
-
-def _kcore_peel_shuffle(e: DataFrame, sf_dir: str) -> DataFrame:
-    """The >GRAPH_BROADCAST_MAX_NODES branch: decrement-maintained
-    peeling with the edge table STATIONARY. Edges are hash-partitioned
-    on the source key once and cut, then NEVER rewritten or
-    re-shuffled: each round computes the dropped frontier (deg < K),
-    reads the frontier's edges off the stationary partitions (the only
-    thing exchanged toward the edge table is the node-cardinality
-    frontier itself), and folds per-destination decrements into the
-    maintained degree table — deg(v) always equals v's count of
-    not-yet-dropped neighbors, the same value the filter formulation
+def _kcore_peel(
+    e: DataFrame, sf_dir: str, *, small: bool | None = None, rounds: int = KCORE_ITERS
+) -> DataFrame:
+    """Decrement-maintained peeling over a symmetric (s, d) edge table,
+    through ``catalog.propagate`` keyed on ``s``; ``small`` defaults to
+    ``broadcast_gate`` over the node table. The edges are never
+    rewritten: each round computes the dropped frontier (deg < K),
+    attaches it to the edges (the only thing moved toward them is the
+    node-cardinality frontier itself), and folds per-destination
+    decrements into the maintained degree table — deg(v) always equals
+    v's count of not-yet-dropped neighbors, the same value the oracle
     recomputes from a rewritten edge list.
 
-    Equivalence to the filter/oracle rounds: a node drops exactly once
-    (it leaves the alive table and can never re-enter the frontier); an
+    Equivalence to the oracle rounds: a node drops exactly once (it
+    leaves the alive table and can never re-enter the frontier); an
     edge (u, v) decrements v exactly when u drops while v is still
-    alive — precisely the edge removals the filter branch applies; and
+    alive — precisely the edge removals the oracle applies; and
     decrements aimed at already-dead nodes vanish in the survivor-side
     join. After KCORE_ITERS rounds the maintained degree equals the
     within-core degree over the oracle's e_ITERS, with deg >= 1
@@ -585,38 +476,33 @@ def _kcore_peel_shuffle(e: DataFrame, sf_dir: str) -> DataFrame:
 
     Scale: per-round exchanged volume is the dropped frontier plus its
     incident edges — summed over all rounds that is at most |V| + |E|,
-    against the filter formulation's per-round full edge rewrite. The
-    plan shape (frontier attach leaves the edge side exchange-free) is
-    pinned by tests/test_graph.py::
-    test_kcore_shuffle_branch_edges_stationary."""
-    e = share(e.repartition(KCORE_SHUFFLE_PARTS, "s"), sf_dir, "lineitem")
+    against a filter formulation's per-round full edge rewrite."""
+    # read twice by round 1 (frontier and survivors): cut once
     alive = share(
-        e.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .repartition(KCORE_SHUFFLE_PARTS, "s"),
+        e.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("deg")),
         sf_dir,
         "lineitem",
     )
-    for _ in range(KCORE_ITERS):
-        dropped = alive.where(F.col("deg") < KCORE_K).select("s")
+    if small is None:
+        small = broadcast_gate(sf_dir, "part", alive)
+
+    def step(e: DataFrame, alive: DataFrame, attach) -> DataFrame:
+        dropped = attach(alive.where(F.col("deg") < KCORE_K).select("node"))
         dec = (
-            e.join(dropped.repartition(KCORE_SHUFFLE_PARTS, "s"), "s")
+            e.join(dropped, e.s == dropped.node)
             .groupBy("d")
             .agg(F.count(F.lit(1)).alias("dec"))
         )
         survivors = alive.where(F.col("deg") >= KCORE_K)
-        alive = share(
-            survivors.join(dec, survivors.s == dec.d, "left")
-            .select(
-                "s",
-                (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0))).alias("deg"),
-            )
-            .repartition(KCORE_SHUFFLE_PARTS, "s"),
-            sf_dir,
-            "lineitem",
+        return survivors.join(dec, survivors.node == dec.d, "left").select(
+            "node", (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0))).alias("deg")
         )
+
+    alive = propagate(
+        e, "s", alive, step, small=small, rounds=rounds, sf_dir=sf_dir, table="lineitem"
+    )
     return alive.where(F.col("deg") >= 1).select(
-        F.col("s").alias("part_key"), F.col("deg").cast("bigint").alias("core_degree")
+        F.col("node").alias("part_key"), F.col("deg").cast("bigint").alias("core_degree")
     )
 
 
@@ -636,32 +522,20 @@ def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the true K-core, not a truncation.
 
     Output: surviving nodes with their within-core degree (>= K at
-    fixpoint). Pure integer counting — engine-exact.
-
-    Plan/scale: SIZE-GATED like pagerank_copurchase. Below
-    GRAPH_BROADCAST_MAX_NODES the survivor set broadcasts into both
-    semi joins and the cut edge partitions never move; above
-    it the decrement-maintained branch runs (_kcore_peel_shuffle) —
-    edges stationary forever, per-round exchange bounded by the
-    dropped frontier. The gate (``broadcast_gate``) bounds the node
-    count by part's footer row count, with no job; only past the
-    threshold does it count the edge table's nodes exactly. Both
-    branches are bit-identical (test_kcore_branches_identical) and the
-    shuffle branch carries its own driver-checked row below."""
-    e = _kcore_edges(spark, sf_dir)
-    if broadcast_gate(sf_dir, "part", e.select("s").distinct()):
-        return _kcore_peel_broadcast(e, sf_dir)
-    return _kcore_peel_shuffle(e, sf_dir)
+    fixpoint). Pure integer counting — engine-exact. The peel is
+    ``_kcore_peel``; its gate bounds the node count by part's footer
+    row count, with no job."""
+    return _kcore_peel(_copurchase_edges(spark, sf_dir, max_size=TRI_MAX_SIZE), sf_dir)
 
 
 @query("graph_kcore_members_shuffle", oracle=_KCORE_ORACLE)
 def graph_kcore_members_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The >GRAPH_BROADCAST_MAX_NODES branch of graph_kcore_members,
     forced at demo scale so the 100 TB code path carries its own
-    value-hash row (the pagerank_copurchase_shuffle discipline):
-    decrement-maintained peeling over a stationary hash-partitioned
-    edge table — identical integer counting, identical oracle."""
-    return _kcore_peel_shuffle(_kcore_edges(spark, sf_dir), sf_dir)
+    value-hash row (the pagerank_copurchase_shuffle discipline)."""
+    return _kcore_peel(
+        _copurchase_edges(spark, sf_dir, max_size=TRI_MAX_SIZE), sf_dir, small=False
+    )
 
 
 # --- label-propagation communities ------------------------------------------
@@ -721,61 +595,42 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     converges (oscillation is a property of the update rule, not of
     either engine).
 
-    Plan/scale: SIZE-GATED like pagerank_copurchase and k-core, on the
-    node count of the edge table (bounded by part's footer row count;
-    counted exactly only past the threshold). Below
-    GRAPH_BROADCAST_MAX_NODES the edges are cut as they are and
-    each round broadcasts the node-cardinality label table onto them —
-    no exchange of edges or labels for the attach. Above it the
-    co-partitioned branch runs: edges hash-partitioned ONCE on ``d``
-    (the per-round join key, ``e.d == labels.node``) and cut,
-    so they stay STATIONARY while each round exchanges only the label
-    table, repartitioned on ``node`` into a co-partitioned SMJ
-    (test_lpa_edges_stationary). Partitioning on ``s`` there would be
-    useless — the join re-exchanges on ``d`` every round — and so is a
-    width of 1: Spark plans ``repartition(1, "d")`` as SinglePartition,
-    which the SMJ does not accept as hash-partitioned, so it
-    re-exchanges the edges at the shuffle width. In both branches round
-    1 runs without a join — under identity labels each neighbor counts
+    Plan/scale: rounds run through ``catalog.propagate``, keyed on
+    ``d`` (``_lpa_propagate``); the gate bounds the node count by part's
+    footer row count, counting exactly only past the threshold. Round 1
+    runs without a join — under identity labels each neighbor counts
     once, so the tie order picks min(d) — and in later rounds the
     (node, label) count is one map-side-combined aggregate over
     edge-cardinality messages and the argmax a hash max_by — no
-    unpartitioned window, no self-join — and a ``share`` cut truncates
-    each round's lineage. The total tie order makes both branches
-    bit-identical (test_lpa_branches_identical). At 100 TB rounds are
+    unpartitioned window, no self-join. The total tie order makes both
+    branches of the gate bit-identical. At 100 TB rounds are
     edge-linear, the same cost envelope as one PageRank iteration."""
-    e = _kcore_edges(spark, sf_dir)
     return _lpa_propagate(
-        e, sf_dir, broadcast_labels=broadcast_gate(sf_dir, "part", e.select("s").distinct())
+        _copurchase_edges(spark, sf_dir, max_size=TRI_MAX_SIZE), sf_dir
     ).select(
         F.col("node").alias("part_key"), F.col("label").cast("bigint").alias("community")
     )
 
 
 def _lpa_propagate(
-    e: DataFrame, sf_dir: str, *, broadcast_labels: bool, iters: int = LPA_ITERS
+    e: DataFrame, sf_dir: str, *, small: bool | None = None, rounds: int = LPA_ITERS
 ) -> DataFrame:
-    """LPA_ITERS synchronous label-propagation rounds over a symmetric,
-    duplicate-free (s, d) edge table, which this cuts once and
-    never moves again. broadcast_labels=True broadcasts the label table
-    onto the edges as they are; False is the >GRAPH_BROADCAST_MAX_NODES
-    branch, edges hash-partitioned on ``d`` and labels repartitioned on
-    ``node`` each round. Shared by graph_lpa_communities, the tests
-    and the scaling probe's lpa_shape (which forces the big branch)."""
+    """``rounds`` synchronous label-propagation rounds over a symmetric,
+    duplicate-free (s, d) edge table, through ``catalog.propagate``;
+    ``small`` defaults to ``broadcast_gate`` over the node table. The
+    key is ``d``, the round's join key (``e.d == labels.node``):
+    partitioning the edges on ``s`` would re-exchange them on ``d``
+    every round. Shared by graph_lpa_communities, the tests and the
+    scaling probe's lpa_shape (which forces the big branch)."""
     # round 1 under identity labels needs no label join: the edges are
     # distinct, so every neighbor label counts once and the tie order
     # (count desc, label asc) picks the smallest — min(d)
     labels = e.groupBy(F.col("s").alias("node")).agg(F.min("d").alias("label"))
-    if not broadcast_labels:
-        e = e.repartition(KCORE_SHUFFLE_PARTS, "d")
-    e = share(e, sf_dir, "lineitem")
-    for _ in range(1, iters):
-        labels = share(labels, sf_dir, "lineitem")
-        rhs = (
-            F.broadcast(labels)
-            if broadcast_labels
-            else labels.repartition(KCORE_SHUFFLE_PARTS, "node")
-        )
+    if small is None:
+        small = broadcast_gate(sf_dir, "part", labels)
+
+    def step(e: DataFrame, labels: DataFrame, attach) -> DataFrame:
+        rhs = attach(labels)
         cnt = (
             e.join(rhs, e.d == rhs.node)
             .groupBy("s", "label")
@@ -787,9 +642,13 @@ def _lpa_propagate(
         # residual tie) — as a second HASH aggregate instead of a
         # sort-based window: one less per-round sort, bit-identical
         # labels (verified against the window form at sf0.1).
-        labels = (
+        return (
             cnt.groupBy("s")
             .agg(F.expr("max_by(label, struct(cnt, -label))").alias("label"))
             .select(F.col("s").alias("node"), "label")
         )
-    return labels
+
+    return propagate(
+        e, "d", labels, step, small=small, rounds=rounds - 1, sf_dir=sf_dir,
+        table="lineitem",
+    )

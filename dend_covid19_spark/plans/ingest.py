@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import SCHEMAS, load_table
-from ..scratch import keyed_dir, link_or_copy, materialize_once, scratch_dir
+from ..scratch import keyed_dir, link_or_copy, materialize_once
 from ..session import env_positive_int, session_conf, session_memo
 from ..sources.readers import (
     from_rows,
@@ -86,7 +86,7 @@ def ingest_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON encode/decode loop is lossless.
     """
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(scratch_dir("jsonl"), "docs")
+    path = os.path.join(keyed_dir(spark, "jsonl", sf_dir, ("documents",)), "docs")
     write_jsonl(docs, path, compression="gzip")
     back = read_jsonl(spark, os.path.join(path, "*.json.gz"), SCHEMAS["documents"])
     return _digest(back)
@@ -112,7 +112,8 @@ def ingest_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     both the write layout and the pruned read.
     """
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(scratch_dir("partitioned"), "docs_by_lang")
+    scratch = keyed_dir(spark, "partitioned", sf_dir, ("documents",))
+    path = os.path.join(scratch, "docs_by_lang")
     write_partitioned(docs, path, ["lang"])
     back = read_partitioned(spark, path, lang=_PRUNE_LANG)
     return _digest(back).select(
@@ -178,7 +179,7 @@ def ingest_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     erasure); the value-hash match certifies the writer's quoting and
     the reader's parsing are mutually lossless for real text data."""
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(scratch_dir("csv"), "docs_csv")
+    path = os.path.join(keyed_dir(spark, "csv", sf_dir, ("documents",)), "docs_csv")
     write_csv(docs, path)
     back = read_csv(spark, path, SCHEMAS["documents"])
     return _digest(back)
@@ -191,7 +192,7 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hive/Trino ORC-first lakes, on the same columnar footing (pushdown,
     pruning) as parquet."""
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(scratch_dir("orc"), "docs_orc")
+    path = os.path.join(keyed_dir(spark, "orc", sf_dir, ("documents",)), "docs_orc")
     write_orc(docs, path)
     back = read_orc(spark, path, SCHEMAS["documents"])
     return _digest(back)
@@ -228,7 +229,8 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently mis-bind, which is why every reader in this package binds
     by name."""
     docs = load_table(spark, "documents", sf_dir)
-    base = os.path.join(scratch_dir("evolution"), "docs_gen")
+    scratch = keyed_dir(spark, "evolution", sf_dir, ("documents",))
+    base = os.path.join(scratch, "docs_gen")
     gen1 = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text", "n_chars")
     gen2 = docs.where(F.col("doc_id") % 2 == 1).select(
         "doc_id", "text", "n_chars", "lang"

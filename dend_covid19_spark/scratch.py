@@ -3,8 +3,10 @@
 Side-effecting queries (ingest round-trips, streaming drains, CDC
 snapshot stores, bucketed-table demos) and derived tables (signature,
 fingerprint and label tables, IVF indexes, codebooks) materialize data
-under ``$TMPDIR/spark_graft_ingest/<name>``. Names are either fixed per
-query (overwritten every run, so no growth) or built by ``keyed_dir``.
+under ``$TMPDIR/spark_graft_ingest/<name>``. Every name is built by
+``keyed_dir``, so two processes never write the same dir; the one
+exception is plans/serving.py's ``servingdb_<pid>``, which every
+dataset dir shares.
 
 The key rule, in one place: a keyed dir is named
 ``<name>_<token>_<pid>``, where ``token`` hashes the Spark application
@@ -45,9 +47,9 @@ _PID_MARKER = "owner.pid"
 # make GC reap a directory a live pre-marker process still uses.
 _TRAILING_PID = re.compile(r"^(?:snap|bucketed|servingdb)_.*?(\d+)$")
 
-# unmarked, un-suffixed dirs (fixed-name ingest scratch) are only
-# reaped when untouched for this long — they are overwrite-in-place by
-# design, so age implies the writing process family is gone
+# unmarked, un-suffixed dirs (the fixed-name ingest scratch of older
+# versions) are only reaped when untouched for this long — they were
+# overwritten in place, so age implies the writing process family is gone
 _STALE_AGE_SEC = 6 * 3600
 
 

@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from dend_covid19_spark.catalog import load_table  # noqa: E402
+from dend_covid19_spark.catalog import load_table, share  # noqa: E402
 from dend_covid19_spark.plans.parity import dsum  # noqa: E402
 from dend_covid19_spark.session import get_spark  # noqa: E402
 
@@ -501,15 +501,16 @@ def _copurchase_edges(spark, k: int):
     )
     op = li.distinct()
     a, b = op.alias("a"), op.alias("b")
-    canon = (
+    canon = share(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
         .select(F.col("a.l_partkey").alias("s"), F.col("b.l_partkey").alias("d"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        SF_DIR,
+        "lineitem",
     )
     return canon.unionAll(canon.select(F.col("d").alias("s"), F.col("s").alias("d")))
 
@@ -520,9 +521,9 @@ def kcore_shuffle_shape(spark, k: int):
     exchange bounded by the dropped frontier + its incident edges
     (claimed <= |V| + |E| summed over all rounds). Linear-in-k wall
     time is that claim measured."""
-    from dend_covid19_spark.plans.graph import _kcore_peel_shuffle
+    from dend_covid19_spark.plans.graph import _kcore_peel
 
-    return _kcore_peel_shuffle(_copurchase_edges(spark, k), SF_DIR)
+    return _kcore_peel(_copurchase_edges(spark, k), SF_DIR, small=False)
 
 
 def lpa_shape(spark, k: int):
@@ -535,7 +536,7 @@ def lpa_shape(spark, k: int):
     measured."""
     from dend_covid19_spark.plans.graph import _lpa_propagate
 
-    return _lpa_propagate(_copurchase_edges(spark, k), SF_DIR, broadcast_labels=False)
+    return _lpa_propagate(_copurchase_edges(spark, k), SF_DIR, small=False)
 
 
 def funnel_shape(spark, k: int):

@@ -134,31 +134,6 @@ def test_incremental_delta_is_has_new_subset_of_full_lsh(spark):
     assert "BroadcastHashJoin" in plan  # the delta probe side broadcasts
 
 
-def test_cc_shuffle_branch_matches_broadcast_branch(spark, monkeypatch):
-    """The >GRAPH_BROADCAST_MAX_NODES branch (labels shuffle, edges
-    hash-partitioned once and stationary) must produce the identical
-    fixpoint as the demo-scale broadcast branch — forced here so the
-    100 TB code path carries its own executed check, the pagerank-
-    shuffle-twin discipline."""
-    from dend_covid19_spark.operators import components as C
-
-    pairs = dedup_ngram_jaccard(spark, SF_DIR).select("doc_a", "doc_b")
-    want = {
-        (r.node, r.component)
-        for r in C.connected_components(
-            pairs, "doc_a", "doc_b", sf_dir=SF_DIR, table="documents"
-        ).collect()
-    }
-    monkeypatch.setattr(C, "GRAPH_BROADCAST_MAX_NODES", 0)  # force big branch
-    got = {
-        (r.node, r.component)
-        for r in C.connected_components(
-            pairs, "doc_a", "doc_b", sf_dir=SF_DIR, table="documents"
-        ).collect()
-    }
-    assert got == want and got
-
-
 @pytest.mark.parametrize(
     ("schema", "bad"),
     [("src string, dst string", "src"), ("src bigint, dst string", "dst")],

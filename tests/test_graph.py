@@ -15,21 +15,21 @@ from dend_covid19_spark.operators.scale import zorder_layout_orders
 from dend_covid19_spark.plans.graph import (
     PR_BASE,
     PR_SCALE,
-    PR_SHUFFLE_PARTS,
+    TRI_MAX_SIZE,
     _copurchase_edges,
+    _kcore_peel,
+    _lpa_propagate,
+    _pagerank_ranks,
     _staged_lift_ppm,
     graph_triangle_count,
     pagerank_copurchase,
-    pagerank_copurchase_shuffle,
 )
 import dend_covid19_spark.catalog as cat
-from dend_covid19_spark.catalog import share
 from dend_covid19_spark.session import session_conf
 from tests.conftest import SF_DIR
 
-# the *_edges_stationary pins read the at-scale plan: no broadcast
-# auto-planning. AQE stays at the session's default (on): the cuts go
-# through share, which keeps their hash partitioning under it.
+# the shuffle-branch *_edges_stationary pins read the at-scale plan:
+# no broadcast auto-planning.
 _NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 
@@ -39,6 +39,74 @@ def past_ckpt_gate(monkeypatch):
     does at the scale the shuffle branches exist for: the loops' cuts
     must still be taken there."""
     monkeypatch.setattr(cat, "_source_bytes", lambda path: cat.CKPT_SOURCE_MAX_BYTES + 1)
+
+
+def _subgraph_edges(spark):
+    return _copurchase_edges(spark, SF_DIR, max_size=TRI_MAX_SIZE)
+
+
+@pytest.fixture
+def round_plans(monkeypatch):
+    """The physical plan of every cut ``catalog.propagate`` takes while
+    the test runs, planned the way ``share`` plans it (in
+    ``share_scope``): the last one is the last round's."""
+    plans: list[str] = []
+    real = cat.share
+
+    def recording(df, sf_dir, table):
+        with cat.share_scope(df.sparkSession, sf_dir, table):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, sf_dir, table)
+
+    monkeypatch.setattr(cat, "share", recording)
+    return plans
+
+
+def _child_col(line: str) -> int:
+    """Column of a printed plan node's text, past its tree prefix: its
+    children's ':- ' / '+- ' markers start there."""
+    i = 0
+    while line[i : i + 3] in ("   ", ":  ", ":- ", "+- "):
+        i += 3
+    return i
+
+
+def _edge_join_sides(plan: str, join: str) -> tuple[list[str], list[str]]:
+    """The printed lines of the edge (left) and node (right) subtrees of
+    the first inner ``join`` in ``plan``. The first child prints under
+    ':- ', the last under '+- ', and the last child's own subtree is
+    indented by blanks in that column."""
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if join in ln and ", Inner" in ln)
+    col = _child_col(lines[at])
+    right = next(i for i in range(at + 1, len(lines)) if lines[i][col : col + 2] == "+-")
+    end = next(
+        (i for i in range(right + 1, len(lines)) if lines[i][col : col + 3] != "   "),
+        len(lines),
+    )
+    return lines[at + 1 : right], lines[right:end]
+
+
+def _assert_broadcast_edges_stationary(plan: str) -> None:
+    """propagate's sub-gate contract: a round's attach reads the cut
+    edge partitions in place (no Exchange anywhere on the edge side of
+    the join) and the node table arrives as a BroadcastExchange."""
+    edge, nodes = _edge_join_sides(plan, "BroadcastHashJoin")
+    assert edge and all("Exchange" not in ln for ln in edge), plan
+    assert any("ExistingRDD" in ln for ln in edge), plan
+    assert "BroadcastExchange" in nodes[0], plan
+
+
+def _assert_shuffle_edges_stationary(plan: str) -> None:
+    """propagate's 100 TB contract: the edges were hash-partitioned
+    once on the round's join key and cut, so the sort-merge join reads
+    the cut partitions in place (no Exchange on the edge side); only
+    the node-cardinality side may move. Plan it with broadcast
+    auto-planning off, so the demo-scale plan is the at-scale plan."""
+    assert "Broadcast" not in plan, plan
+    edge, _ = _edge_join_sides(plan, "SortMergeJoin")
+    assert edge and all("Exchange" not in ln for ln in edge), plan
+    assert any("ExistingRDD" in ln for ln in edge), plan
 
 
 def test_pagerank_mass_and_floor(spark):
@@ -150,49 +218,12 @@ def test_triangle_counts_consistent(spark):
     assert total > 0
 
 
-def test_pagerank_branches_identical(spark):
-    """The broadcast and co-partitioned-shuffle branches are physically
-    different plans over identical integer arithmetic — their results
-    must be bit-identical (this is what lets the size gate switch
-    branches at GRAPH_BROADCAST_MAX_NODES without changing answers)."""
-    a = {(r.part_key, r.rank_e9) for r in pagerank_copurchase(spark, SF_DIR).collect()}
-    b = {
-        (r.part_key, r.rank_e9)
-        for r in pagerank_copurchase_shuffle(spark, SF_DIR).collect()
-    }
-    assert a == b and len(a) > 0
-
-
-def test_pagerank_shuffle_branch_edges_stationary(spark, past_ckpt_gate):
-    """The 100 TB branch's contract: after the one-time
-    repartition(s) + share cut, the per-iteration rank attach
-    exchanges ONLY the node-cardinality rank table — the checkpointed
-    edge partitions are read in place (no Exchange above the edge
-    scan). Broadcast auto-planning is disabled so the demo-scale plan
-    is the at-scale plan."""
-    from pyspark.sql import functions as F
-
+def test_pagerank_shuffle_branch_edges_stationary(spark, past_ckpt_gate, round_plans):
+    """PageRank's big branch, read off the real loop cut to two rounds:
+    the second round attaches the first round's cut ranks."""
     with session_conf(spark, _NO_BROADCAST):
-        ed, deg = _copurchase_edges(spark, SF_DIR, broadcast_deg=False)
-        edc = share(ed.repartition(PR_SHUFFLE_PARTS, "s"), SF_DIR, "lineitem")
-        ranks = deg.select(
-            F.col("s").alias("node"), F.lit(PR_SCALE).cast("bigint").alias("r")
-        )
-        j = edc.join(ranks, edc.s == ranks.node)
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" not in plan, plan
-    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    # at most the rank side moves — and when the rank table derives from
-    # the checkpointed degree table (whose hash partitioning on the node
-    # key survives the checkpoint and the alias), even that exchange
-    # vanishes: both sides arrive co-partitioned
-    assert len(exchanges) <= 1, plan
-    # the join's LEFT subtree (edge side; toString prefixes it with ':')
-    # must be exchange-free — the checkpointed partitions are read in place
-    lines = plan.splitlines()
-    join_at = next(i for i, ln in enumerate(lines) if "SortMergeJoin" in ln)
-    left = [ln for ln in lines[join_at + 1 :] if ln.lstrip().startswith(":")]
-    assert left and all("Exchange" not in ln for ln in left), plan
+        _pagerank_ranks(_copurchase_edges(spark, SF_DIR), SF_DIR, small=False, rounds=2)
+    _assert_shuffle_edges_stationary(round_plans[-1])
 
 
 def test_staged_lift_ppm_exact(spark, duck):
@@ -273,185 +304,85 @@ def test_kcore_fixpoint_reached(spark):
     )[:5]
 
 
-def test_kcore_branches_identical(spark):
-    """The broadcast (filter-based) and shuffle (decrement-maintained)
-    peeling branches are physically different algorithms over the same
-    integer counting — their results must be bit-identical, which is
-    what lets the size gate switch at GRAPH_BROADCAST_MAX_NODES
-    without changing answers."""
-    from dend_covid19_spark.plans.graph import (
-        graph_kcore_members,
-        graph_kcore_members_shuffle,
-    )
-
-    a = {
-        (r.part_key, r.core_degree)
-        for r in graph_kcore_members(spark, SF_DIR).collect()
-    }
-    b = {
-        (r.part_key, r.core_degree)
-        for r in graph_kcore_members_shuffle(spark, SF_DIR).collect()
-    }
-    assert a == b and len(a) > 0
+def test_kcore_broadcast_branch_edges_stationary(spark, round_plans):
+    """k-core's sub-gate branch, read off the real peel cut to one round:
+    the dropped frontier broadcasts onto the cut edges."""
+    _kcore_peel(_subgraph_edges(spark), SF_DIR, small=True, rounds=1)
+    _assert_broadcast_edges_stationary(round_plans[-1])
 
 
-def test_kcore_broadcast_branch_edges_stationary(spark):
-    """Sub-gate contract: each peel round probes the checkpointed edge
-    partitions in place — both semi joins broadcast the survivor set,
-    so the plan above the edge scan contains broadcast exchanges ONLY
-    (no shuffle Exchange of the edge table)."""
-    from dend_covid19_spark.plans.graph import KCORE_K, _kcore_edges
-
-    e = share(_kcore_edges(spark, SF_DIR), SF_DIR, "lineitem")
-    deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    keep = deg.where(F.col("deg") >= KCORE_K).select("s")
-    j = e.join(F.broadcast(keep), "s", "left_semi").join(
-        F.broadcast(keep.select(F.col("s").alias("d"))), "d", "left_semi"
-    )
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    # The probe spine (edge scan up to the joins) prints BEFORE the
-    # first BroadcastExchange; shuffle Exchanges are legitimate only
-    # INSIDE the broadcast build subtrees (node-cardinality degree
-    # aggregates), i.e. after it. A shuffle of the edge table would
-    # surface on the probe spine — before any BroadcastExchange.
-    lines = plan.splitlines()
-    first_bcast = next(
-        i for i, ln in enumerate(lines) if "BroadcastExchange" in ln
-    )
-    probe_spine = lines[:first_bcast]
-    assert any("BroadcastHashJoin" in ln for ln in probe_spine), plan
-    shuffles = [
-        ln
-        for ln in probe_spine
-        if "Exchange" in ln and "Broadcast" not in ln
-    ]
-    assert not shuffles, plan
-
-
-def test_kcore_shuffle_branch_edges_stationary(spark, past_ckpt_gate):
-    """The 100 TB branch's contract: after the one-time
-    repartition(s) + share cut, the per-round frontier attach
-    exchanges ONLY the node-cardinality dropped set — the checkpointed
-    edge partitions are read in place (no Exchange above the edge
-    scan). Broadcast auto-planning is disabled so the demo-scale plan
-    is the at-scale plan. Mirrors
-    test_pagerank_shuffle_branch_edges_stationary."""
-    from dend_covid19_spark.plans.graph import (
-        KCORE_K,
-        KCORE_SHUFFLE_PARTS,
-        _kcore_edges,
-    )
-
+def test_kcore_shuffle_branch_edges_stationary(spark, past_ckpt_gate, round_plans):
+    """k-core's big branch, read off the real peel cut to two rounds:
+    the second round's frontier derives from the first round's cut."""
     with session_conf(spark, _NO_BROADCAST):
-        e = share(
-            _kcore_edges(spark, SF_DIR).repartition(KCORE_SHUFFLE_PARTS, "s"),
-            SF_DIR,
-            "lineitem",
-        )
-        alive = share(
-            e.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .repartition(KCORE_SHUFFLE_PARTS, "s"),
-            SF_DIR,
-            "lineitem",
-        )
-        dropped = alive.where(F.col("deg") < KCORE_K).select("s")
-        j = e.join(dropped.repartition(KCORE_SHUFFLE_PARTS, "s"), "s")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" not in plan, plan
-    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    # at most the frontier side moves; the checkpointed edge partitions
-    # arrive co-partitioned and are read in place
-    assert len(exchanges) <= 1, plan
-    lines = plan.splitlines()
-    join_at = next(i for i, ln in enumerate(lines) if "SortMergeJoin" in ln)
-    left = [ln for ln in lines[join_at + 1 :] if ln.lstrip().startswith(":")]
-    assert left and all("Exchange" not in ln for ln in left), plan
+        _kcore_peel(_subgraph_edges(spark), SF_DIR, small=False, rounds=2)
+    _assert_shuffle_edges_stationary(round_plans[-1])
 
 
-def test_lpa_edges_stationary(spark, past_ckpt_gate):
-    """LPA's 100 TB contract, mirroring
-    test_kcore_shuffle_branch_edges_stationary: the edge table is
-    hash-partitioned once on ``d`` — the per-round join key — and
-    checkpointed; each round's label attach exchanges ONLY the
-    node-cardinality label table (repartitioned on node), the
-    checkpointed edge partitions are read in place. Partitioning on
-    ``s`` instead would re-exchange the whole edge table on ``d``
-    every round — the regression this pin exists to catch. Broadcast
-    auto-planning is disabled so the demo-scale plan is the at-scale
-    plan."""
-    from dend_covid19_spark.plans.graph import (
-        KCORE_SHUFFLE_PARTS,
-        _kcore_edges,
-    )
-
+def test_lpa_edges_stationary(spark, past_ckpt_gate, round_plans):
+    """LPA's big branch, read off the real loop cut to its first joined
+    round (round 1 joins nothing): the edges are partitioned on ``d``,
+    the round's join key. Partitioning them on ``s`` instead would
+    re-exchange the whole edge table on ``d`` every round — the
+    regression this pin exists to catch."""
     with session_conf(spark, _NO_BROADCAST):
-        e = share(
-            _kcore_edges(spark, SF_DIR).repartition(KCORE_SHUFFLE_PARTS, "d"),
-            SF_DIR,
-            "lineitem",
-        )
-        labels = e.select(F.col("s").alias("node")).distinct().select(
-            "node", F.col("node").alias("label")
-        )
-        j = e.join(
-            labels.repartition(KCORE_SHUFFLE_PARTS, "node"),
-            e.d == labels.node,
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" not in plan, plan
-    lines = plan.splitlines()
-    join_at = next(i for i, ln in enumerate(lines) if "SortMergeJoin" in ln)
-    # the edge (streamed/left) side below the join must carry no
-    # Exchange — the checkpointed partitions are read in place; the
-    # label build side may exchange (it is node-cardinality)
-    left = [ln for ln in lines[join_at + 1 :] if ln.lstrip().startswith(":")]
-    assert left and all("Exchange" not in ln for ln in left), plan
+        _lpa_propagate(_subgraph_edges(spark), SF_DIR, small=False, rounds=2)
+    _assert_shuffle_edges_stationary(round_plans[-1])
 
 
-def test_lpa_branches_identical(spark):
-    """The broadcast branch (what graph_lpa_communities runs below
-    GRAPH_BROADCAST_MAX_NODES) and the forced co-partitioned branch are
-    physically different plans over the same total tie order — their
-    labels must be bit-identical, which is what lets the size gate
-    switch without changing answers."""
-    from dend_covid19_spark.plans.graph import (
-        _kcore_edges,
-        _lpa_propagate,
-        graph_lpa_communities,
-    )
+def test_lpa_broadcast_branch_edges_stationary(spark, round_plans):
+    """LPA's sub-gate branch, read off the real loop cut to its first
+    joined round (round 1 joins nothing)."""
+    _lpa_propagate(_subgraph_edges(spark), SF_DIR, small=True, rounds=2)
+    _assert_broadcast_edges_stationary(round_plans[-1])
 
-    a = {
-        (r.part_key, r.community)
-        for r in graph_lpa_communities(spark, SF_DIR).collect()
+
+def _cc_rows(spark, small: bool, monkeypatch) -> set:
+    from dend_covid19_spark.operators import components as C
+    from dend_covid19_spark.operators.dedup import dedup_ngram_jaccard
+
+    # CC gates on its round-0 node count: force that gate both ways
+    monkeypatch.setattr(C, "GRAPH_BROADCAST_MAX_NODES", 1 << 62 if small else 0)
+    pairs = dedup_ngram_jaccard(spark, SF_DIR).select("doc_a", "doc_b")
+    return {
+        (r.node, r.component)
+        for r in C.connected_components(
+            pairs, "doc_a", "doc_b", sf_dir=SF_DIR, table="documents"
+        ).collect()
     }
-    big = _lpa_propagate(_kcore_edges(spark, SF_DIR), SF_DIR, broadcast_labels=False)
-    b = {(r.node, r.label) for r in big.collect()}
+
+
+_BRANCH_ROWS = {
+    "pagerank": lambda spark, small, _: {
+        (r.part_key, r.rank_e9)
+        for r in _pagerank_ranks(
+            _copurchase_edges(spark, SF_DIR), SF_DIR, small=small
+        ).collect()
+    },
+    "kcore": lambda spark, small, _: {
+        (r.part_key, r.core_degree)
+        for r in _kcore_peel(_subgraph_edges(spark), SF_DIR, small=small).collect()
+    },
+    "lpa": lambda spark, small, _: {
+        (r.node, r.label)
+        for r in _lpa_propagate(_subgraph_edges(spark), SF_DIR, small=small).collect()
+    },
+    "cc": _cc_rows,
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_BRANCH_ROWS))
+def test_propagate_branches_identical(spark, monkeypatch, loop):
+    """Each propagate loop's broadcast and co-partitioned branches are
+    physically different plans over the same integer arithmetic (and,
+    for LPA, the same total tie order) — their results must be
+    bit-identical, which is what lets the gate switch branches at
+    GRAPH_BROADCAST_MAX_NODES without changing answers. Each runs
+    through its real builder with the gate forced both ways."""
+    rows = _BRANCH_ROWS[loop]
+    a = rows(spark, True, monkeypatch)
+    b = rows(spark, False, monkeypatch)
     assert a == b and len(a) > 0
-
-
-def test_lpa_broadcast_branch_edges_stationary(spark):
-    """Sub-gate contract: a round's label attach reads the checkpointed
-    edge partitions in place — no Exchange anywhere on the edge side of
-    the join — and the label side arrives as a BroadcastExchange. The
-    plan is the real _lpa_propagate's, cut to its first joined round
-    (round 1 joins nothing)."""
-    from dend_covid19_spark.plans.graph import _kcore_edges, _lpa_propagate
-
-    two_rounds = _lpa_propagate(
-        _kcore_edges(spark, SF_DIR), SF_DIR, broadcast_labels=True, iters=2
-    )
-    lines = two_rounds._jdf.queryExecution().executedPlan().toString().splitlines()
-    join_at = next(i for i, ln in enumerate(lines) if "BroadcastHashJoin" in ln)
-    # children print one indent level below the join: the edge (streamed)
-    # side under ":- ", the label (build) side under "+- " in the same column
-    col = lines[join_at].index("BroadcastHashJoin")
-    right_at = next(
-        i for i in range(join_at + 1, len(lines)) if lines[i][col : col + 2] == "+-"
-    )
-    edge_side = lines[join_at + 1 : right_at]
-    assert edge_side and all("Exchange" not in ln for ln in edge_side), lines
-    assert "BroadcastExchange" in lines[right_at], lines
 
 
 def test_lpa_communities_nontrivial(spark):

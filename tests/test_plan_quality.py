@@ -17,6 +17,7 @@ which is exactly why they need their own tests.
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -762,3 +763,43 @@ def test_scratch_keys_go_through_keyed_dir():
         if "abs(hash(" in line or "hexdigest()[:12]" in line
     )
     assert hits == [], hits
+    # a fixed scratch_dir name is shared by every process that runs the
+    # query, so concurrent runs overwrite each other's files; the one
+    # exception is serving's per-process database location
+    fixed = sorted(
+        f"{path.relative_to(root)}: {line.strip()}"
+        for path in root.rglob("*.py")
+        if path != root / "scratch.py"
+        for line in path.read_text().splitlines()
+        if "scratch_dir(" in line
+    )
+    assert fixed == [
+        'plans/serving.py: loc = scratch_dir(f"servingdb_{os.getpid()}")'
+    ], fixed
+
+
+def test_graph_loops_go_through_propagate():
+    """The graph family's rounds have one home, ``catalog.propagate``,
+    which owns the gate's physical choice and the one big-branch width
+    ``GRAPH_SHUFFLE_PARTS``. A per-loop width constant, or a broadcast
+    or repartition inside a round loop of the graph modules, would
+    bring back a hand-rolled loop with its own gate and width."""
+    root = pathlib.Path(dend_covid19_spark.__file__).parent
+    widths = {
+        name
+        for path in root.rglob("*.py")
+        for name in re.findall(r"\b\w+_SHUFFLE_PARTS\b", path.read_text())
+    }
+    assert widths == {"GRAPH_SHUFFLE_PARTS"}, widths
+    for rel in ("plans/graph.py", "operators/components.py"):
+        tree = ast.parse((root / rel).read_text())
+        hits = [
+            f"{rel}:{call.lineno}: {call.func.attr}"
+            for loop in ast.walk(tree)
+            if isinstance(loop, (ast.For, ast.While))
+            for call in ast.walk(loop)
+            if isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Attribute)
+            and call.func.attr in ("broadcast", "repartition")
+        ]
+        assert hits == [], hits
