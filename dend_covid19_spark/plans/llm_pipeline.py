@@ -377,6 +377,25 @@ def _decon_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema("doc_id bigint, gh bigint").parquet(path)
 
 
+def _decon_report(train: DataFrame, bench: DataFrame) -> DataFrame:
+    """The contamination report every decontamination row ends in:
+    ``train``'s (doc_id, gh) rows joined to the broadcast ``bench``
+    (bench_id, gh) rows on the n-gram hash, then per doc the distinct
+    leaked n-grams and the distinct benchmark docs they touch. Each
+    count is ``size(collect_set(...))``: exact, null-ignoring like
+    ``countDistinct``, and planned without the Expand that two distinct
+    aggregates in one ``agg`` need (whose projection order also varied
+    from one process to the next)."""
+    return (
+        train.join(F.broadcast(bench), "gh")
+        .groupBy("doc_id")
+        .agg(
+            F.size(F.collect_set("gh")).cast("bigint").alias("n_overlap_ngrams"),
+            F.size(F.collect_set("bench_id")).cast("bigint").alias("n_bench_docs"),
+        )
+    )
+
+
 @query(
     "decontaminate_ngram_overlap",
     oracle=f"""
@@ -415,14 +434,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("bench_id"), "gh"
     )
     train = sh.where(F.col("doc_id") % DECON_MOD != 0)
-    return (
-        train.join(F.broadcast(bench), "gh")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("gh").alias("n_overlap_ngrams"),
-            F.countDistinct("bench_id").alias("n_bench_docs"),
-        )
-    )
+    return _decon_report(train, bench)
 
 
 # Bloom-prefilter decontamination. Spark 4.1.2 does NOT expose
@@ -541,14 +553,7 @@ def decontaminate_bloom_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = sh.where(F.col("doc_id") % DECON_MOD != 0)
     gated = _bloom_gate(train, bench, words=_decon_bloom_words(spark, sf_dir))
-    return (
-        gated.join(F.broadcast(bench), "gh")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("gh").alias("n_overlap_ngrams"),
-            F.countDistinct("bench_id").alias("n_bench_docs"),
-        )
-    )
+    return _decon_report(gated, bench)
 
 
 def _bloom_gate(
@@ -694,14 +699,7 @@ def decontaminate_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = sh.where((m != 0) & (m != BLOOM_DELTA_REM))
     gated = _bloom_gate(train, bench, words=_decon_bloom_delta_words(spark, sf_dir))
-    return (
-        gated.join(F.broadcast(bench), "gh")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("gh").alias("n_overlap_ngrams"),
-            F.countDistinct("bench_id").alias("n_bench_docs"),
-        )
-    )
+    return _decon_report(gated, bench)
 
 
 @query(

@@ -9,11 +9,12 @@ re-planning (post-shuffle coalescing, skew-join splitting, dynamic join
 strategy), and a fixed UTC session timezone so timestamp semantics are
 deterministic and match the DuckDB oracle.
 
-Scale posture: only the Python worker daemon (``worker_daemon_conf``) is
-local-mode-specific. On a real cluster the same builder is used with
-``master`` left to spark-submit; the shuffle-partition default (32 for
-tests) should be overridden to ~2-3x the cluster core count — AQE
-coalesces down from there at runtime.
+Scale posture: only the Python worker daemon and the streaming
+checkpoint manager (``local_mode_conf``) are local-mode-specific. On a
+real cluster the same builder is used with ``master`` left to
+spark-submit; the shuffle-partition default (32 for tests) should be
+overridden to ~2-3x the cluster core count — AQE coalesces down from
+there at runtime.
 """
 
 from __future__ import annotations
@@ -101,9 +102,10 @@ def session_memo(fn: Callable) -> Callable:
     return wrapper
 
 
-def worker_daemon_conf(master: str) -> dict[str, str]:
-    """Confs that start Python workers from ``worker_daemon`` (see its
-    docstring): set for ``local*`` masters, empty otherwise. PYTHONPATH
+def local_mode_conf(master: str) -> dict[str, str]:
+    """Confs for ``local*`` masters, empty otherwise: Python workers
+    start from ``worker_daemon`` (see its docstring), and streaming
+    checkpoints are written through the ``FileSystem`` API. PYTHONPATH
     names the package's parent so the daemon imports it even when the
     calling process found the package through ``sys.path`` alone."""
     if not master.startswith("local"):
@@ -111,6 +113,9 @@ def worker_daemon_conf(master: str) -> dict[str, str]:
     return {
         "spark.python.daemon.module": "dend_covid19_spark.worker_daemon",
         "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+        ),
     }
 
 
@@ -131,11 +136,21 @@ def get_spark(
         host's zone — required for oracle-stable hashes.
       - parquet timestamps read with int96 off / ntz handling default; test
         data is plain int64 timestamps.
-      - local masters only (``worker_daemon_conf``): Python workers fork
+      - local masters only (``local_mode_conf``): Python workers fork
         from ``worker_daemon``, which stops each task's
         ``importlib.invalidate_caches()`` from re-reading pyspark.zip and
         the spark-core jar (0.1-0.2 s CPU per task). Other masters keep the
         stock daemon, since their executors may not see this checkout.
+      - local masters only (``local_mode_conf``): streaming offsets,
+        commits, source logs and state-store deltas are written by
+        ``FileSystemBasedCheckpointFileManager`` (``create`` + ``rename``).
+        The default ``FileContext`` manager's link-status lookups fork
+        ``readlink`` for every file it creates or renames when libhadoop
+        is missing. Both managers refuse a second non-overwrite commit
+        of a file and keep Hadoop ``.crc`` files, and Spark's own
+        checkpoint checksums stay on. Other masters keep the
+        ``FileContext`` manager, the right one for HDFS and object
+        stores.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -163,7 +178,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        .config(map=worker_daemon_conf(master))
+        .config(map=local_mode_conf(master))
     )
     # Reap dead processes' /tmp scratch before this one starts writing
     # its own (SURVEY.md §8 queue item c): side-effecting queries leave

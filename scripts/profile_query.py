@@ -19,15 +19,20 @@ query; ``SPARK_GRAFT_PROFILE_RUNS=0`` skips the steady runs, so
 
 is the registry-wide build-job count.
 
-Each run's CPU seconds are then split three ways, read from ``/proc``
+Each run's CPU seconds are then split four ways, read from ``/proc``
 over this process tree: ``driver_py`` (this Python process), ``jvm`` (its
-children: the JVM spark-submit starts) and ``py_workers`` (everything
-below the JVM: Python worker daemons and the workers they fork). Every
-process counts its own user + system time plus that of the children it
-has reaped. The worker daemon ignores SIGCHLD, so a worker that exits
-takes its CPU with it; reused workers live for the whole session, so
-this rarely shows. A large ``py_workers`` share on a query whose UDFs do
-little work points at per-task worker overhead.
+children: the JVM spark-submit starts), ``jvm_children`` (the JVM's
+reaped children: the shell commands Hadoop forks, such as ``chmod`` on
+every local file it creates when libhadoop is missing) and
+``py_workers`` (everything still running below the JVM: Python worker
+daemons and the workers they fork). Every process counts its own user +
+system time, and ``driver_py`` and ``py_workers`` also that of the
+children they have reaped. The worker daemon lives for the whole
+session, so it never lands in ``jvm_children``, and it ignores SIGCHLD,
+so a worker that exits takes its CPU with it; reused workers live for
+the whole session, so this rarely shows. A large ``py_workers`` share
+on a query whose UDFs do little work points at per-task worker
+overhead; a large ``jvm_children`` share points at a fork storm.
 """
 
 from __future__ import annotations
@@ -43,13 +48,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("SPARK_GRAFT_PROFILE_RUNS", "3"))
 TICK_S = 1.0 / os.sysconf("SC_CLK_TCK")
-CPU_PARTS = ("driver_py", "jvm", "py_workers")
+CPU_PARTS = ("driver_py", "jvm", "jvm_children", "py_workers")
 
 
 def cpu_split() -> dict[str, float]:
-    """CPU seconds used so far by this process, its children (the JVM)
-    and everything below them (Python workers), reaped children included."""
-    ticks, children = {}, defaultdict(list)
+    """CPU seconds used so far by this process, its children (the JVM),
+    the JVM's reaped children and everything still below the JVM
+    (Python workers)."""
+    ticks, reaped, children = {}, {}, defaultdict(list)
     for path in glob.glob("/proc/[0-9]*/stat"):
         try:
             with open(path) as f:
@@ -59,6 +65,7 @@ def cpu_split() -> dict[str, float]:
         pid = int(path.split("/")[2])
         children[int(fields[1])].append(pid)
         ticks[pid] = sum(map(int, fields[11:15]))  # utime stime cutime cstime
+        reaped[pid] = sum(map(int, fields[13:15]))  # cutime cstime
 
     def subtree(pid: int) -> int:
         return ticks.get(pid, 0) + sum(subtree(c) for c in children[pid])
@@ -67,7 +74,8 @@ def cpu_split() -> dict[str, float]:
     jvms = children[me]
     return {
         "driver_py": ticks[me] * TICK_S,
-        "jvm": sum(ticks.get(p, 0) for p in jvms) * TICK_S,
+        "jvm": sum(ticks.get(p, 0) - reaped.get(p, 0) for p in jvms) * TICK_S,
+        "jvm_children": sum(reaped.get(p, 0) for p in jvms) * TICK_S,
         "py_workers": sum(subtree(c) for p in jvms for c in children[p]) * TICK_S,
     }
 

@@ -7,6 +7,7 @@ import os
 import re
 
 import pyspark.sql.functions as F
+import pytest
 from conftest import SF_DIR
 
 
@@ -65,6 +66,22 @@ def test_hourly_approx_plan_has_no_expand(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Expand" not in plan, f"multi-distinct Expand path resurfaced\n{plan}"
     assert "BroadcastHashJoin" in plan, f"sketch side not broadcast\n{plan}"
+
+
+@pytest.mark.parametrize(
+    "name", ["decontaminate_ngram_overlap", "decontaminate_bloom_gated", "decontaminate_bloom_delta"]
+)
+def test_decontaminate_plan_has_no_expand(spark, name):
+    """The decontamination report counts its two distinct columns as
+    ``size(collect_set(...))``: no Expand duplicating every joined row
+    per distinct aggregate, and no projection order that varies from
+    one process to the next."""
+    from dend_covid19_spark.plans import all_queries
+
+    df = all_queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Expand" not in plan, f"multi-distinct Expand path resurfaced\n{plan}"
+    assert dict(df.dtypes) == {"doc_id": "bigint", "n_overlap_ngrams": "bigint", "n_bench_docs": "bigint"}
 
 
 def test_hourly_approx_matches_single_agg_form(spark):

@@ -1,6 +1,8 @@
-"""The local-mode Python worker daemon: an archive on the worker's path is
+"""The local-mode confs. Python workers: an archive on the worker's path is
 re-read by ``importlib.invalidate_caches()`` only when it changed, and the
-session points Python workers at the daemon for local masters only."""
+session points Python workers at the daemon for local masters only.
+Streaming checkpoints: local masters write them through the ``FileSystem``
+manager, which still refuses a second commit of the same file."""
 
 from __future__ import annotations
 
@@ -13,7 +15,7 @@ import pandas as pd
 import pytest
 
 from dend_covid19_spark import worker_daemon
-from dend_covid19_spark.session import worker_daemon_conf
+from dend_covid19_spark.session import local_mode_conf
 
 
 @pytest.fixture
@@ -103,19 +105,54 @@ def test_pandas_udf_workers_do_not_reread_archives(spark):
     assert sorted(r.v for r in df.collect()) == [i * 10 for i in range(40)]
 
 
+FS_MANAGER = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
+
 @pytest.mark.parametrize("master", ["local", "local[4]", "local[*]", "local-cluster[2,1,1024]"])
 def test_daemon_conf_for_local_masters(master):
-    conf = worker_daemon_conf(master)
+    conf = local_mode_conf(master)
     assert conf["spark.python.daemon.module"] == "dend_covid19_spark.worker_daemon"
     root = conf["spark.executorEnv.PYTHONPATH"]
     assert os.path.isfile(os.path.join(root, "dend_covid19_spark", "worker_daemon.py"))
+    assert conf["spark.sql.streaming.checkpointFileManagerClass"] == FS_MANAGER
 
 
 @pytest.mark.parametrize("master", ["spark://host:7077", "yarn", "k8s://https://host:6443", "mesos://host:5050"])
 def test_no_daemon_conf_for_other_masters(master):
-    assert worker_daemon_conf(master) == {}
+    assert local_mode_conf(master) == {}
 
 
-def test_session_uses_daemon(spark):
+def _checkpoint_manager(spark, path: str):
+    """The manager a streaming query's checkpoint logs use for ``path``."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+
+
+def test_session_uses_daemon(spark, tmp_path):
     assert spark.sparkContext.master.startswith("local")
     assert spark.conf.get("spark.python.daemon.module") == "dend_covid19_spark.worker_daemon"
+    assert _checkpoint_manager(spark, str(tmp_path)).getClass().getName() == FS_MANAGER
+
+
+def test_checkpoint_commit_refuses_second_writer(spark, tmp_path):
+    """A second non-overwrite ``createAtomic`` onto a committed file
+    raises ``FileAlreadyExistsException`` and keeps the first bytes:
+    ``HDFSMetadataLog`` relies on this to refuse a second writer of a
+    batch."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    manager = _checkpoint_manager(spark, str(tmp_path))
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    out = manager.createAtomic(path, False)
+    out.write(bytearray(b"first"))
+    out.close()
+    out = manager.createAtomic(path, False)
+    out.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError) as err:
+        out.close()
+    exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(err.value.java_exception), err.value.java_exception
+    assert (tmp_path / "0").read_bytes() == b"first"
