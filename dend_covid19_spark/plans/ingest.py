@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import SCHEMAS, load_table
 from ..scratch import keyed_dir, link_or_copy, materialize_once
-from ..session import env_positive_int, session_conf, session_memo
+from ..session import session_conf, session_memo
 from ..sources.readers import (
     from_rows,
     read_csv,
@@ -44,6 +44,16 @@ from ..sources.readers import (
     write_jsonl,
     write_orc,
     write_partitioned,
+)
+from ..streaming.daily import (
+    attribution_stream,
+    drain,
+    read_events_stream,
+    read_snapshot,
+    run_conditional_upsert_available_now,
+    run_counts_merge_available_now,
+    run_manifest_sink_with_compaction,
+    run_partitioned_sink_with_compaction,
 )
 from .registry import query
 
@@ -347,24 +357,6 @@ def python_datasource_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Structured Streaming execution under the driver hash -------------------
 
 
-def _stream_width() -> str:
-    """State/shuffle width for the stateful streaming drains below.
-
-    A stateful operator pays a per-partition-per-batch floor — every
-    state partition launches a task and writes a state-store delta file
-    to the checkpoint each micro-batch regardless of rows — so width
-    should track STATE VOLUME (key cardinality x state bytes), never the
-    session's batch-shuffle default. These drains keep KB-scale state;
-    8 is the measured local sweet spot (interleaved 32-vs-8 A/B: 1.6-5.7x
-    per drain, identical output). Env-overridable so a cluster run sizes
-    it from state bytes (~100 MB-1 GB of state per partition); a value
-    that is not a positive integer falls back to 8. Applied
-    only to state-store-bound drains: the drift monitor's foreachBatch
-    counts merge is per-batch AGGREGATE-bound and measured SLOWER at 8,
-    so it keeps the session width."""
-    return str(env_positive_int("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8))
-
-
 def _events_src(
     spark: SparkSession, name: str, sf_dir: str, inputs: tuple = ("events",)
 ) -> tuple[str, str]:
@@ -378,6 +370,60 @@ def _events_src(
         os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet")
     )
     return scratch, src
+
+
+def _stage_chunks(chunks: list, scratch: str, src: str, first: int = 0) -> None:
+    """Stage each chunk DataFrame as one parquet file
+    ``src/p{first+i}.parquet``: the one way a drain's source file is
+    written. ts is written as TIMESTAMP_MICROS, because Spark's default
+    INT96 would break the source dir's one-physical-unit contract
+    (read_events_stream sniffs ONE footer for the whole dir). Each
+    file's mtime is pinned to ``now - 1000 + (first+i) * 100``: the file
+    source admits files oldest first at ms granularity, so the files
+    drain in list order, also when ``first`` stages a later file after
+    a drain. A file that already exists is kept (re-entry).
+
+    The writes overlap in a bounded driver pool (the per-chunk
+    coalesce(1) jobs are tiny and independent; measured at sf0.1 on the
+    4-way events split: 1.3-3.7 s sequential -> 0.4-0.7 s pooled). The
+    calling thread scopes the outputTimestampType conf once around the
+    pool, and session_conf's lock keeps any other thread's scope from
+    restoring it under the writers. Links happen after every write
+    completes, so a source file only appears with its full content."""
+    import glob as _glob
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    dests = [os.path.join(src, f"p{first + i}.parquet") for i in range(len(chunks))]
+    stages = [os.path.join(scratch, f"stage{first + i}") for i in range(len(chunks))]
+    todo = [i for i, dest in enumerate(dests) if not os.path.exists(dest)]
+    if todo:
+
+        def write(i: int) -> None:
+            chunks[i].coalesce(1).write.mode("overwrite").parquet(stages[i])
+
+        micros = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+        with session_conf(chunks[0].sparkSession, micros):
+            with ThreadPoolExecutor(max_workers=min(4, len(todo))) as pool:
+                list(pool.map(write, todo))
+        for i in todo:
+            link_or_copy(_glob.glob(os.path.join(stages[i], "part-*.parquet"))[0], dests[i])
+    now = time.time()
+    for i, dest in enumerate(dests):
+        t = now - 1000 + (first + i) * 100
+        os.utime(dest, (t, t))
+
+
+# the 4-way chronological split of the multi-batch drains
+_UPSERT_SPLIT_DAYS = ("2024-01-08", "2024-01-15", "2024-01-22")
+
+
+def _day_chunks(ev: DataFrame, days: tuple) -> list:
+    """``ev`` cut at the ``days`` boundaries into len(days) + 1
+    chronological chunks (a null-ts row lands in none)."""
+    d = F.to_date("ts")
+    inner = [ev.where((d >= lo) & (d < hi)) for lo, hi in zip(days, days[1:])]
+    return [ev.where(d < days[0]), *inner, ev.where(d >= days[-1])]
 
 
 @query(
@@ -408,28 +454,17 @@ def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark horizon (bounded by arrival rate x lateness in
     production; here by key cardinality); the memory sink holds
     key-cardinality rows, not the stream."""
-    from ..streaming.daily import read_events_stream
-
     scratch, src = _events_src(spark, "streamdedup", sf_dir)
 
     sink = os.path.basename(scratch)
-    events = read_events_stream(spark, src)
-    # dropDuplicatesWithinWatermark keeps one state entry per
-    # (user_id, event_type) inside the watermark — KB-scale state here,
-    # so the drain takes the narrow state width (see _stream_width).
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        q = (
-            events.withWatermark("ts", "60 days")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .select("user_id", "event_type")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = (
+        read_events_stream(spark, src)
+        .withWatermark("ts", "60 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
+    drain(spark, writer, os.path.join(scratch, "ckpt"))
     return (
         spark.table(sink)
         .groupBy("event_type")
@@ -467,27 +502,20 @@ def streaming_enrich_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     per batch; the stream side filters to purchases AT THE SOURCE
     (pushdown applies to file-source streams too), so per-batch work is
     selective-scan + broadcast-probe."""
-    from ..streaming.daily import read_events_stream
-
     scratch, src = _events_src(spark, "streamenrich", sf_dir, ("events", "customer"))
 
     cust = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_mktsegment"
     )
     sink = os.path.basename(scratch)
-    events = read_events_stream(spark, src)
-    q = (
-        events.where(F.col("event_type") == "purchase")
+    out = (
+        read_events_stream(spark, src)
+        .where(F.col("event_type") == "purchase")
         .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
         .select("user_id", "c_mktsegment")
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
+    drain(spark, writer, os.path.join(scratch, "ckpt"))
     return (
         spark.table(sink)
         .groupBy("c_mktsegment")
@@ -626,34 +654,23 @@ def streaming_session_window_executed(spark: SparkSession, sf_dir: str) -> DataF
     is tuned to tolerated lateness and sessions emit continuously as
     the watermark flows — the drain-at-end shape here is the bounded
     projection of that."""
-    from ..streaming.daily import read_events_stream
-
     scratch, src = _events_src(spark, "streamsesswin", sf_dir)
 
     sink = os.path.basename(scratch)
-    events = read_events_stream(spark, src)
-    # session_window keeps one open session per active user in the
-    # state store — state-store-bound, so the drain takes the narrow
-    # state width (interleaved A/B: 2.2-5.7x at width 8, same rows).
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        q = (
-            events.withWatermark("ts", "0 seconds")
-            .groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.unix_micros("sw.start").alias("start_us"),
-                F.unix_micros("sw.end").alias("end_us"),
-                "n_events",
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    out = (
+        read_events_stream(spark, src)
+        .withWatermark("ts", "0 seconds")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.unix_micros("sw.start").alias("start_us"),
+            F.unix_micros("sw.end").alias("end_us"),
+            "n_events",
         )
-        q.awaitTermination()
+    )
+    writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
+    drain(spark, writer, os.path.join(scratch, "ckpt"))
     return spark.table(sink).select("user_id", "start_us", "end_us", "n_events")
 
 
@@ -695,31 +712,12 @@ def streaming_interval_join_executed(spark: SparkSession, sf_dir: str) -> DataFr
     view_ts + horizon — so the join runs indefinitely on unbounded
     streams with bounded memory. Same single-file/single-batch
     precondition as the other streaming rows."""
-    from ..streaming.daily import read_events_stream, attribution_stream
-
     scratch, src = _events_src(spark, "streamattr", sf_dir)
 
     sink = os.path.basename(scratch)
     events = read_events_stream(spark, src)
-    # The join's state-store width freezes at the session's shuffle
-    # width when the checkpoint is created — 200 under a vanilla
-    # session — and a stream-stream join keeps per-partition state on
-    # BOTH sides, so this drain paid ~400 state-store instances for a
-    # user-cardinality key space. Scope it down for the stream start
-    # and restore (the late-drop row's discipline, r11 verdict item 3);
-    # production sizes state width from key cardinality, not the
-    # batch-join default.
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        q = (
-            attribution_stream(events)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = attribution_stream(events).writeStream.format("memory").queryName(sink)
+    drain(spark, writer.outputMode("append"), os.path.join(scratch, "ckpt"))
     return spark.table(sink).select(
         "view_id", "purchase_id", "user_id", "seconds_to_purchase"
     )
@@ -773,55 +771,28 @@ def streaming_join_state_eviction_executed(spark: SparkSession, sf_dir: str) -> 
     pair set equals the batch join, and the oracle is the batch twin's
     SQL verbatim.
 
-    Plan/scale: same late-drop discipline as the other drains —
-    shuffle width scoped to 8 around the stream start (state-store
-    width freezes at checkpoint creation)."""
-    from ..streaming.daily import attribution_stream, read_events_stream
-
+    Plan/scale: the eviction proof depends on chronological batch
+    order, which the staged files' pinned mtimes give."""
     scratch = keyed_dir(spark, "streamevict", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
-
     ev = load_table(spark, "events", sf_dir)
-    d = F.to_date("ts")
-    lo, mid, hi = _UPSERT_SPLIT_DAYS
-    chunks = [
-        ev.where(d < lo),
-        ev.where((d >= lo) & (d < mid)),
-        ev.where((d >= mid) & (d < hi)),
-        ev.where(d >= hi),
-    ]
-    _stage_chunks(chunks, scratch, src)
-    # strictly increasing mtimes: the file source orders by ms-mtime and
-    # the eviction proof depends on chronological batch order
-    now = __import__("time").time()
-    for i in range(len(chunks)):
-        t = now - 1000 + i * 100
-        os.utime(os.path.join(src, f"p{i}.parquet"), (t, t))
+    _stage_chunks(_day_chunks(ev, _UPSERT_SPLIT_DAYS), scratch, src)
 
     sink = os.path.basename(scratch)
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        events = read_events_stream(spark, src, max_files_per_trigger=1)
-        q = (
-            attribution_stream(events)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _STREAM_EVICT_METRICS[sf_dir] = [
-            {
-                "batch": p["batchId"],
-                "numRowsTotal": p["stateOperators"][0]["numRowsTotal"],
-                "numRowsUpdated": p["stateOperators"][0]["numRowsUpdated"],
-                "numRowsRemoved": p["stateOperators"][0]["numRowsRemoved"],
-            }
-            for p in (json.loads(x.json) for x in q.recentProgress)
-            if p.get("stateOperators")
-        ]
+    events = read_events_stream(spark, src, max_files_per_trigger=1)
+    writer = attribution_stream(events).writeStream.format("memory").queryName(sink)
+    q = drain(spark, writer.outputMode("append"), os.path.join(scratch, "ckpt"))
+    _STREAM_EVICT_METRICS[sf_dir] = [
+        {
+            "batch": p["batchId"],
+            "numRowsTotal": p["stateOperators"][0]["numRowsTotal"],
+            "numRowsUpdated": p["stateOperators"][0]["numRowsUpdated"],
+            "numRowsRemoved": p["stateOperators"][0]["numRowsRemoved"],
+        }
+        for p in (json.loads(x.json) for x in q.recentProgress)
+        if p.get("stateOperators")
+    ]
     return spark.table(sink).select(
         "view_id", "purchase_id", "user_id", "seconds_to_purchase"
     )
@@ -882,71 +853,32 @@ def streaming_late_drop_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the watermark horizon, not stream history; a dropped
     late row costs one filter, which is the point: replay storms at
     100 TB hit the watermark gate, not the state store."""
-    from ..streaming.daily import read_events_stream
-
     scratch = keyed_dir(spark, "streamlate", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
-    f1 = os.path.join(src, "a_events.parquet")
-    link_or_copy(os.path.join(sf_dir, "events.parquet"), f1)
-    f2 = os.path.join(src, "b_tick.parquet")
-    f3 = os.path.join(src, "c_replay.parquet")
-    if not (os.path.exists(f2) and os.path.exists(f3)):
-        import glob
-        import shutil
-
-        ev = load_table(spark, "events", sf_dir)
-
-        def _stage(df, dest, name):
-            stage = os.path.join(scratch, name)
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            shutil.move(part, dest)
-
-        # clock tick: the max-ts event(s) — beyond the final watermark,
-        # never emitted, exists only to activate the input filter
-        mx = ev.agg(F.max("ts").alias("m"))
-        _stage(ev.join(F.broadcast(mx), ev.ts == F.col("m")).drop("m"), f2, "tick")
-        _stage(
-            ev.where(F.to_date("ts") <= F.lit(LATE_REPLAY_LAST_DAY).cast("date")),
-            f3,
-            "replay",
-        )
-    # The file source admits oldest-modification-time first; pin the
-    # order explicitly: corpus, then tick, then the late replay.
-    now = __import__("time").time()
-    os.utime(f1, (now - 1000, now - 1000))
-    os.utime(f2, (now - 500, now - 500))
-    os.utime(f3, (now, now))
+    ev = load_table(spark, "events", sf_dir)
+    # clock tick: the max-ts event(s) — beyond the final watermark,
+    # never emitted, exists only to activate the input filter
+    mx = ev.agg(F.max("ts").alias("m"))
+    tick = ev.join(F.broadcast(mx), ev.ts == F.col("m")).drop("m")
+    replay = ev.where(F.to_date("ts") <= F.lit(LATE_REPLAY_LAST_DAY).cast("date"))
+    _stage_chunks([ev, tick, replay], scratch, src)
 
     sink = os.path.basename(scratch)
-    events = read_events_stream(spark, src, max_files_per_trigger=1)
-    # The state-store partition count freezes at the session's shuffle
-    # width when the checkpoint is created — 200 under the driver's
-    # vanilla session — and this drain pays it for THREE data batches
-    # plus finalization over ~30 day-window groups. Scope it down for
-    # the stream start and restore (the ingest_overwrite_idempotent
-    # conf discipline); production picks state width from key
-    # cardinality, not the batch-join default.
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        q = (
-            events.withWatermark("ts", LATE_WATERMARK)
-            .groupBy(F.window("ts", "1 day").alias("w"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
-                .cast("double")
-                .alias("value_sum"),
-            )
-            .select(F.to_date("w.start").alias("day"), "n_events", "value_sum")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    out = (
+        read_events_stream(spark, src, max_files_per_trigger=1)
+        .withWatermark("ts", LATE_WATERMARK)
+        .groupBy(F.window("ts", "1 day").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
+            .cast("double")
+            .alias("value_sum"),
         )
-        q.awaitTermination()
+        .select(F.to_date("w.start").alias("day"), "n_events", "value_sum")
+    )
+    writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
+    drain(spark, writer, os.path.join(scratch, "ckpt"))
     return spark.table(sink).select("day", "n_events", "value_sum")
 
 
@@ -966,60 +898,28 @@ def streaming_late_drop_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
 MODE_SPLIT_DAY = "2024-01-15"  # batch 1: day <= this; batch 2: the rest
 
 
-def _two_batch_src(spark: SparkSession, sf_dir: str, scratch: str) -> str:
-    """Source dir with the events table split into two mtime-ordered
-    parquet files at MODE_SPLIT_DAY — one micro-batch each under
-    maxFilesPerTrigger=1."""
-    import glob
-    import shutil
-    import time as _t
-
-    src = os.path.join(scratch, "src")
-    os.makedirs(src, exist_ok=True)
-    f1 = os.path.join(src, "a_early.parquet")
-    f2 = os.path.join(src, "b_late.parquet")
-    if not (os.path.exists(f1) and os.path.exists(f2)):
-        ev = load_table(spark, "events", sf_dir)
-
-        def stage(df, dest, name):
-            d = os.path.join(scratch, name)
-            df.coalesce(1).write.mode("overwrite").parquet(d)
-            (part,) = glob.glob(os.path.join(d, "part-*.parquet"))
-            shutil.move(part, dest)
-
-        split = F.lit(MODE_SPLIT_DAY).cast("date")
-        stage(ev.where(F.to_date("ts") <= split), f1, "early")
-        stage(ev.where(F.to_date("ts") > split), f2, "late")
-    now = _t.time()
-    os.utime(f1, (now - 1000,) * 2)
-    os.utime(f2, (now,) * 2)
-    return src
-
-
 @session_memo
 def _drain_mode(
     spark: SparkSession, sf_dir: str, mode: str
 ) -> DataFrame:
-    """Run the per-type count aggregate through a two-batch stream in
+    """Run the per-type count aggregate through a two-batch stream (the
+    events table split at MODE_SPLIT_DAY, one micro-batch per file) in
     the given output mode and return the memory sink's final contents."""
-    from ..streaming.daily import read_events_stream
-
     scratch = keyed_dir(spark, f"streammode_{mode}", sf_dir, ("events",))
-    src = _two_batch_src(spark, sf_dir, scratch)
+    src = os.path.join(scratch, "src")
+    os.makedirs(src, exist_ok=True)
+    ev = load_table(spark, "events", sf_dir)
+    split = F.lit(MODE_SPLIT_DAY).cast("date")
+    chunks = [ev.where(F.to_date("ts") <= split), ev.where(F.to_date("ts") > split)]
+    _stage_chunks(chunks, scratch, src)
     sink = os.path.basename(scratch)
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        q = (
-            read_events_stream(spark, src, max_files_per_trigger=1)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(mode)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = (
+        read_events_stream(spark, src, max_files_per_trigger=1)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    writer = out.writeStream.format("memory").queryName(sink).outputMode(mode)
+    drain(spark, writer, os.path.join(scratch, "ckpt"))
     return spark.table(sink).select("event_type", "n_events")
 
 
@@ -1055,8 +955,7 @@ def streaming_update_mode_executed(spark: SparkSession, sf_dir: str) -> DataFram
     this row isolates the MODE contract.
 
     Plan/scale: state is |types| rows; the sink accumulates one row per
-    (batch, changed key). Same state-width scoping as the other
-    executed rows."""
+    (batch, changed key)."""
     return _drain_mode(spark, sf_dir, "update")
 
 
@@ -1150,13 +1049,7 @@ def streaming_stateful_sessionize_executed(
     from ..streaming.stateful import run_sessionize_available_now
 
     sink = os.path.basename(scratch)
-    # keyed state is one 4-field tuple per user (KB-scale) — the
-    # groupBy shuffle width is also the state-store width, so the
-    # drain takes the narrow width (interleaved A/B: 2.4-4.9x at 8).
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        run_sessionize_available_now(
-            spark, src, os.path.join(scratch, "ckpt"), sink_table=sink
-        )
+    run_sessionize_available_now(spark, src, os.path.join(scratch, "ckpt"), sink_table=sink)
     return spark.table(sink).select(
         "user_id", "session_seq", "n_events", "session_date"
     )
@@ -1165,69 +1058,6 @@ def streaming_stateful_sessionize_executed(
 # --- checkpointed restart/resume (executed) ---------------------------------
 
 _RESUME_SPLIT_DAY = "2024-01-15"
-
-# staged source files are written in one physical ts unit (see below)
-_MICROS_TS = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
-
-
-def _stage_single_parquet(df, stage_dir: str, dest_link: str) -> None:
-    """Write df as one parquet file and hard-link it to dest_link (the
-    file-source dir wants flat files, not nested write dirs). ts is
-    forced to TIMESTAMP_MICROS for the write: Spark's default INT96
-    output would break the source dir's one-physical-unit contract
-    (read_events_stream sniffs ONE footer for the whole dir)."""
-    import glob as _glob
-
-    if os.path.exists(dest_link):
-        return
-    with session_conf(df.sparkSession, _MICROS_TS):
-        df.coalesce(1).write.mode("overwrite").parquet(stage_dir)
-    link_or_copy(_glob.glob(os.path.join(stage_dir, "part-*.parquet"))[0], dest_link)
-
-
-def _stage_chunks(chunks, scratch: str, src: str) -> None:
-    """Stage several independent chunk DataFrames as single parquet
-    files ``src/p<i>.parquet`` with the writes OVERLAPPED (guide §2.6:
-    the per-chunk coalesce(1) jobs are tiny and independent, so a
-    bounded driver pool lets later chunks back-fill the idle cluster
-    instead of paying one full job latency per chunk in sequence —
-    measured at sf0.1 on the 4-way events split: 1.3-3.7 s sequential
-    -> 0.4-0.7 s pooled, identical files). The outputTimestampType conf
-    is scoped once around the whole pool by the calling thread: the
-    pool's writer threads share that one scope, and session_conf's
-    lock keeps any other thread's scope from restoring it under them.
-    Links happen after every write completes, preserving the
-    single-call contract (a dest file only appears with its full
-    content behind it)."""
-    import glob as _glob
-    from concurrent.futures import ThreadPoolExecutor
-
-    todo = [
-        (i, chunk)
-        for i, chunk in enumerate(chunks)
-        if not os.path.exists(os.path.join(src, f"p{i}.parquet"))
-    ]
-    if not todo:
-        return
-    if len(todo) == 1:
-        i, chunk = todo[0]
-        _stage_single_parquet(
-            chunk, os.path.join(scratch, f"stage{i}"), os.path.join(src, f"p{i}.parquet")
-        )
-        return
-    with session_conf(todo[0][1].sparkSession, _MICROS_TS):
-
-        def _write(item):
-            i, chunk = item
-            chunk.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(scratch, f"stage{i}")
-            )
-
-        with ThreadPoolExecutor(max_workers=min(4, len(todo))) as pool:
-            list(pool.map(_write, todo))
-    for i, _ in todo:
-        part = _glob.glob(os.path.join(scratch, f"stage{i}", "part-*.parquet"))[0]
-        link_or_copy(part, os.path.join(src, f"p{i}.parquet"))
 
 
 @query(
@@ -1263,33 +1093,25 @@ def streaming_restart_resume_executed(spark: SparkSession, sf_dir: str) -> DataF
     cost is the seen-file log and per-batch sink manifest — the
     mechanism is O(files), independent of data volume, which is why
     the same resume works after a 100 TB backfill."""
-    from ..streaming.daily import read_events_stream
-
     scratch = keyed_dir(spark, "streamresume", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     sink = os.path.join(scratch, "sink")
-    ckpt = os.path.join(scratch, "ckpt")
 
     ev = load_table(spark, "events", sf_dir)
     half1 = ev.where(F.to_date("ts") <= _RESUME_SPLIT_DAY)
     half2 = ev.where(F.to_date("ts") > _RESUME_SPLIT_DAY)
 
     def _drain() -> None:
-        q = (
-            read_events_stream(spark, src)
-            .select("event_id", "user_id", "event_type", "value", "ts")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        out = read_events_stream(spark, src).select(
+            "event_id", "user_id", "event_type", "value", "ts"
         )
-        q.awaitTermination()
+        writer = out.writeStream.format("parquet").option("path", sink)
+        drain(spark, writer, os.path.join(scratch, "ckpt"))
 
-    _stage_single_parquet(half1, os.path.join(scratch, "stage1"), os.path.join(src, "p1.parquet"))
+    _stage_chunks([half1], scratch, src)
     _drain()
-    _stage_single_parquet(half2, os.path.join(scratch, "stage2"), os.path.join(src, "p2.parquet"))
+    _stage_chunks([half2], scratch, src, first=1)
     _drain()  # the restart: same checkpoint, same sink, new file only
 
     return (
@@ -1305,8 +1127,6 @@ def streaming_restart_resume_executed(spark: SparkSession, sf_dir: str) -> DataF
 
 
 # --- streaming foreachBatch idempotent-upsert sink (executed) ---------------
-
-_UPSERT_SPLIT_DAYS = ("2024-01-08", "2024-01-15", "2024-01-22")  # 4 chunks
 
 
 @query(
@@ -1348,43 +1168,22 @@ def streaming_upsert_sink_executed(spark: SparkSession, sf_dir: str) -> DataFram
     one broadcast-able full-outer join; the snapshot streams
     map-side. Versions grow monotonically across drains so a re-drain
     never overwrites a committed snapshot in place."""
-    from ..streaming.daily import (
-        read_snapshot,
-        run_conditional_upsert_available_now,
-    )
-
     scratch = keyed_dir(spark, "streamupsert", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     store = os.path.join(scratch, "store")
 
     ev = load_table(spark, "events", sf_dir)
-    d = F.to_date("ts")
-    lo, mid, hi = _UPSERT_SPLIT_DAYS
-    chunks = [
-        ev.where(d < lo),
-        ev.where((d >= lo) & (d < mid)),
-        ev.where((d >= mid) & (d < hi)),
-        ev.where(d >= hi),
-    ]
-    _stage_chunks(chunks, scratch, src)
+    _stage_chunks(_day_chunks(ev, _UPSERT_SPLIT_DAYS), scratch, src)
 
-    # The per-batch MERGE compaction + full-outer join inside
-    # foreachBatch shuffle at the session width (200 on a vanilla
-    # session) — pure task overhead for four small batches over a
-    # user-cardinality key, paid TWICE (drain + re-drain). Scope it
-    # down and restore (the late-drop row's discipline, r11 verdict
-    # item 3). The upsert is stateless streaming (foreachBatch), so
-    # nothing freezes into the checkpoint — this is batch-side width.
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        first_path = run_conditional_upsert_available_now(
-            spark, src, store, os.path.join(scratch, "ckpt1"), max_files_per_trigger=1
-        )
-        first = spark.read.parquet(first_path)
-        # the full-backfill retry: fresh checkpoint, same input, same store
-        final_path = run_conditional_upsert_available_now(
-            spark, src, store, os.path.join(scratch, "ckpt2"), max_files_per_trigger=1
-        )
+    first_path = run_conditional_upsert_available_now(
+        spark, src, store, os.path.join(scratch, "ckpt1"), max_files_per_trigger=1
+    )
+    first = spark.read.parquet(first_path)
+    # the full-backfill retry: fresh checkpoint, same input, same store
+    final_path = run_conditional_upsert_available_now(
+        spark, src, store, os.path.join(scratch, "ckpt2"), max_files_per_trigger=1
+    )
     assert final_path != first_path, "re-drain must write new versions"
     final = read_snapshot(spark, store)
     diff = (
@@ -1433,7 +1232,6 @@ def streaming_drift_monitor_executed(spark: SparkSession, sf_dir: str) -> DataFr
     |days| x |types| tables. This is the O(batch) daily-monitoring path
     — the full-corpus recompute (events_type_drift_tv) is the audit
     twin."""
-    from ..streaming.daily import run_counts_merge_available_now
     from .timeseries import drift_tv_from_daily
 
     scratch = keyed_dir(spark, "streamdrift", sf_dir, ("events",))
@@ -1442,15 +1240,7 @@ def streaming_drift_monitor_executed(spark: SparkSession, sf_dir: str) -> DataFr
     store = os.path.join(scratch, "store")
 
     ev = load_table(spark, "events", sf_dir)
-    d = F.to_date("ts")
-    lo, mid, hi = _UPSERT_SPLIT_DAYS
-    chunks = [
-        ev.where(d < lo),
-        ev.where((d >= lo) & (d < mid)),
-        ev.where((d >= mid) & (d < hi)),
-        ev.where(d >= hi),
-    ]
-    _stage_chunks(chunks, scratch, src)
+    _stage_chunks(_day_chunks(ev, _UPSERT_SPLIT_DAYS), scratch, src)
 
     final_path = run_counts_merge_available_now(
         spark, src, store, os.path.join(scratch, "ckpt"), max_files_per_trigger=1
@@ -1533,9 +1323,7 @@ def streaming_funnel_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan/scale: state per user is (int, long) — |active users| bound,
     never history bound; emission is transition-cardinality; the
     Python stage is Arrow-batched. The deepest-stage derivation is one
-    user-keyed aggregate over the (tiny) transition log. Shuffle width
-    scoped to 8 around the drain (the late-drop discipline: state
-    stores freeze the width per micro-batch)."""
+    user-keyed aggregate over the (tiny) transition log."""
     from ..streaming.stateful import run_funnel_available_now
     from .timeseries import FUNNEL_STAGES, FUNNEL_WINDOW_MIN
 
@@ -1544,36 +1332,20 @@ def streaming_funnel_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(src, exist_ok=True)
 
     ev = load_table(spark, "events", sf_dir)
-    d = F.to_date("ts")
-    lo, mid, hi = _UPSERT_SPLIT_DAYS
-    chunks = [
-        ev.where(d < lo),
-        ev.where((d >= lo) & (d < mid)),
-        ev.where((d >= mid) & (d < hi)),
-        ev.where(d >= hi),
-    ]
-    _stage_chunks(chunks, scratch, src)
-    # The file source admits oldest-modification-time first at ms
-    # granularity; the stateful funnel is order-sensitive, so a
-    # same-millisecond tie between staged files could drain batches out
-    # of chronological order (r13 advice). Pin strictly increasing
-    # mtimes explicitly, as the restart/CDC stagers do above.
-    now = __import__("time").time()
-    for i in range(len(chunks)):
-        t = now - 1000 + i * 100
-        os.utime(os.path.join(src, f"p{i}.parquet"), (t, t))
+    # the stateful funnel is order-sensitive: the staged files' pinned
+    # mtimes keep the batches chronological
+    _stage_chunks(_day_chunks(ev, _UPSERT_SPLIT_DAYS), scratch, src)
 
     sink = os.path.basename(scratch)
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        run_funnel_available_now(
-            spark,
-            src,
-            os.path.join(scratch, "ckpt"),
-            FUNNEL_STAGES,
-            FUNNEL_WINDOW_MIN * 60 * 1_000_000,
-            sink_table=sink,
-            max_files_per_trigger=1,
-        )
+    run_funnel_available_now(
+        spark,
+        src,
+        os.path.join(scratch, "ckpt"),
+        FUNNEL_STAGES,
+        FUNNEL_WINDOW_MIN * 60 * 1_000_000,
+        sink_table=sink,
+        max_files_per_trigger=1,
+    )
 
     return (
         spark.table(sink)
@@ -1632,12 +1404,7 @@ def streaming_compaction_sink_executed(spark: SparkSession, sf_dir: str) -> Data
     batch's fragmented bytes) — never O(table): the small-file debt of
     a 100 TB streaming table can never accumulate past one trigger.
     NULL-ts rows route to the hive default partition (never compacted,
-    never lost — the digest covers them). Shuffle width scoped to 8
-    around the drain."""
-    import time as _time
-
-    from ..streaming.daily import run_partitioned_sink_with_compaction
-
+    never lost — the digest covers them)."""
     scratch = keyed_dir(spark, "streamcompact", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
@@ -1652,12 +1419,7 @@ def streaming_compaction_sink_executed(spark: SparkSession, sf_dir: str) -> Data
     # adversarial null-ts data (the fuzz corpus plants it)
     c1 = (d < F.lit(lo).cast("date")) | (in_overlap & (F.col("event_id") % 2 == 0))
     chunk1 = F.coalesce(c1, F.lit(True))
-    chunks = [ev.where(chunk1), ev.where(~chunk1)]
-    _stage_chunks(chunks, scratch, src)
-    now = _time.time()
-    for i in range(len(chunks)):
-        t = now - 1000 + i * 100
-        os.utime(os.path.join(src, f"p{i}.parquet"), (t, t))
+    _stage_chunks([ev.where(chunk1), ev.where(~chunk1)], scratch, src)
 
     manifests: list = []
     ckpt = os.path.join(scratch, "ckpt")
@@ -1667,16 +1429,15 @@ def streaming_compaction_sink_executed(spark: SparkSession, sf_dir: str) -> Data
     # to a FRESH drain (the funnel/resume rows' idempotent-re-entry
     # discipline)
     fresh = not os.path.exists(ckpt)
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        run_partitioned_sink_with_compaction(
-            spark,
-            src,
-            out,
-            ckpt,
-            max_files=0,  # always-compact-touched: every batch maintains
-            manifests=manifests,
-            max_files_per_trigger=1,
-        )
+    run_partitioned_sink_with_compaction(
+        spark,
+        src,
+        out,
+        ckpt,
+        max_files=0,  # always-compact-touched: every batch maintains
+        manifests=manifests,
+        max_files_per_trigger=1,
+    )
 
     if fresh:
         assert len(manifests) == 2, f"expected 2 micro-batches, got {len(manifests)}"
@@ -1762,10 +1523,6 @@ def snapshot_time_travel_compacted(spark: SparkSession, sf_dir: str) -> DataFram
     import re as _re
 
     from ..operators.maintenance import compact_snapshot_version
-    from ..streaming.daily import (
-        read_snapshot,
-        run_conditional_upsert_available_now,
-    )
 
     scratch = keyed_dir(spark, "snaptt", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
@@ -1776,17 +1533,10 @@ def snapshot_time_travel_compacted(spark: SparkSession, sf_dir: str) -> DataFram
     d = F.to_date("ts")
     # null-ts rows coalesce into batch one: the chunks partition exactly
     c1 = F.coalesce(d < F.lit(_SNAP_TT_CUT).cast("date"), F.lit(True))
-    chunks = [ev.where(c1), ev.where(~c1)]
-    _stage_chunks(chunks, scratch, src)
-    now = __import__("time").time()
-    for i in range(len(chunks)):
-        t = now - 1000 + i * 100
-        os.utime(os.path.join(src, f"p{i}.parquet"), (t, t))
-
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        run_conditional_upsert_available_now(
-            spark, src, store, os.path.join(scratch, "ckpt"), max_files_per_trigger=1
-        )
+    _stage_chunks([ev.where(c1), ev.where(~c1)], scratch, src)
+    run_conditional_upsert_available_now(
+        spark, src, store, os.path.join(scratch, "ckpt"), max_files_per_trigger=1
+    )
 
     versions = sorted(
         int(m.group(1))
@@ -2525,11 +2275,7 @@ def streaming_compaction_restart_executed(spark: SparkSession, sf_dir: str) -> D
     (deploys, failures) — checkpoint resume plus touched-day-scoped
     maintenance means a 100 TB sink's compaction debt stays O(one
     trigger) through any number of restarts; nothing in the resume
-    path lists history. Shuffle width scoped to 8 around the drains."""
-    import time as _time
-
-    from ..streaming.daily import run_partitioned_sink_with_compaction
-
+    path lists history."""
     scratch = keyed_dir(spark, "streamcres", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
@@ -2550,33 +2296,25 @@ def streaming_compaction_restart_executed(spark: SparkSession, sf_dir: str) -> D
     chunks = [ev.where(early1), ev.where(~late & ~early1), ev.where(late)]
 
     fresh = not os.path.exists(ckpt)
-    now = _time.time()
     # batches one and two stage BEFORE the first drain; the late file
     # only after it completes (that is the restart under test)
     _stage_chunks(chunks[:2], scratch, src)
-    for i in (0, 1):
-        t = now - 1000 + i * 100
-        os.utime(os.path.join(src, f"p{i}.parquet"), (t, t))
 
     manifests: list = []
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        run_partitioned_sink_with_compaction(
-            spark, src, out, ckpt,
-            max_files=0, manifests=manifests, max_files_per_trigger=1,
-        )
-        if fresh:
-            assert len(manifests) == 2, f"first drain: {len(manifests)} batches"
-        # the late file arrives AFTER the completed drain; a NEW query
-        # on the SAME checkpoint resumes (re-entry with a committed
-        # checkpoint stages it too, then both drains are no-ops)
-        _stage_single_parquet(
-            chunks[2], os.path.join(scratch, "stage2"), os.path.join(src, "p2.parquet")
-        )
-        os.utime(os.path.join(src, "p2.parquet"), (now, now))
-        run_partitioned_sink_with_compaction(
-            spark, src, out, ckpt,
-            max_files=0, manifests=manifests, max_files_per_trigger=1,
-        )
+    run_partitioned_sink_with_compaction(
+        spark, src, out, ckpt,
+        max_files=0, manifests=manifests, max_files_per_trigger=1,
+    )
+    if fresh:
+        assert len(manifests) == 2, f"first drain: {len(manifests)} batches"
+    # the late file arrives AFTER the completed drain; a NEW query
+    # on the SAME checkpoint resumes (re-entry with a committed
+    # checkpoint stages it too, then both drains are no-ops)
+    _stage_chunks(chunks[2:], scratch, src, first=2)
+    run_partitioned_sink_with_compaction(
+        spark, src, out, ckpt,
+        max_files=0, manifests=manifests, max_files_per_trigger=1,
+    )
 
     if fresh:
         assert len(manifests) == 3, f"restart must add exactly one batch: {manifests}"
@@ -2668,16 +2406,12 @@ def streaming_manifest_sink_executed(spark: SparkSession, sf_dir: str) -> DataFr
     Plan/scale: per batch one clustered append (stats double as
     partition metadata) + one scoped OPTIMIZE; planning is O(manifest)
     driver metadata; the table serves pruned scans THROUGH ingest and
-    maintenance. Shuffle width scoped to 8 around the drain."""
-    import time as _time
-
+    maintenance."""
     from ..operators.lakehouse import (
         current_manifest,
         read_manifest_table,
         write_manifest_table,
     )
-    from ..streaming.daily import run_manifest_sink_with_compaction
-
     scratch = keyed_dir(spark, "manifestsink", sf_dir, ("events",))
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
@@ -2699,30 +2433,24 @@ def streaming_manifest_sink_executed(spark: SparkSession, sf_dir: str) -> DataFr
             n_files=2,
             cluster_by=["day"],
         )
-    chunks = [ev.where(mid), ev.where(~boot & ~mid)]
-    now = _time.time()
-    _stage_chunks(chunks, scratch, src)
-    for i in range(len(chunks)):
-        t = now - 1000 + i * 100
-        os.utime(os.path.join(src, f"p{i}.parquet"), (t, t))
+    _stage_chunks([ev.where(mid), ev.where(~boot & ~mid)], scratch, src)
 
     fresh = not os.path.exists(ckpt)
     manifests: list = []
     replayed: list = []
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _stream_width()}):
-        run_manifest_sink_with_compaction(
-            spark, src, root, ckpt,
-            manifests=manifests, max_files_per_trigger=1,
-        )
-        # FULL source replay on a FRESH checkpoint: foreachBatch
-        # re-delivers every batch, and every append must detect its own
-        # committed txn watermark and skip — the exactly-once property
-        # asserted in-band (no new manifest version, no OPTIMIZE runs)
-        v_drained = current_manifest(root)["version"]
-        run_manifest_sink_with_compaction(
-            spark, src, root, os.path.join(scratch, "ckpt_replay"),
-            manifests=replayed, max_files_per_trigger=1,
-        )
+    run_manifest_sink_with_compaction(
+        spark, src, root, ckpt,
+        manifests=manifests, max_files_per_trigger=1,
+    )
+    # FULL source replay on a FRESH checkpoint: foreachBatch
+    # re-delivers every batch, and every append must detect its own
+    # committed txn watermark and skip — the exactly-once property
+    # asserted in-band (no new manifest version, no OPTIMIZE runs)
+    v_drained = current_manifest(root)["version"]
+    run_manifest_sink_with_compaction(
+        spark, src, root, os.path.join(scratch, "ckpt_replay"),
+        manifests=replayed, max_files_per_trigger=1,
+    )
 
     if fresh:
         assert len(manifests) == 2, f"expected 2 micro-batches, got {len(manifests)}"

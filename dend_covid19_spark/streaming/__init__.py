@@ -1,3 +1,3 @@
 """Structured Streaming entry points."""
 
-from .daily import daily_counts_stream, read_events_stream, run_available_now  # noqa: F401
+from .daily import daily_counts_stream, drain, read_events_stream, run_available_now  # noqa: F401

@@ -15,8 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import EVENTS_SCHEMA_NS_LONG, SCHEMAS, events_ts_is_nanos
+from ..session import env_positive_int, session_conf
 
 
 def read_events_stream(
@@ -51,6 +53,39 @@ def read_events_stream(
             .withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
         )
     return reader.schema(SCHEMAS["events"]).parquet(src_dir)
+
+
+def stream_width() -> str:
+    """State/shuffle width of every drain. A state store freezes its
+    partition count at checkpoint creation, and each state partition
+    pays a per-batch floor (one task and one state-store delta file)
+    regardless of its rows, so the width tracks state volume, not the
+    session's batch-shuffle default. This package's drains keep KB-scale
+    state, and 8 is the measured local setting. A cluster run sizes it
+    from state bytes through ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``; a
+    value that is not a positive integer falls back to 8."""
+    return str(env_positive_int("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8))
+
+
+def drain(
+    spark: SparkSession, writer: DataStreamWriter, checkpoint_dir: str
+) -> StreamingQuery:
+    """Run ``writer`` (a sink spelled by the caller) as one availableNow
+    catch-up on ``checkpoint_dir`` and block until it ends. The session
+    runs at ``stream_width()`` from the start through the last batch,
+    then gets its own width back, also when the stream fails
+    (``awaitTermination`` raises ``StreamingQueryException``). The scope
+    holds session_conf's lock for the whole drain, so a foreachBatch
+    callback must not enter session_conf. Returns the finished query,
+    whose ``recentProgress`` holds its batches."""
+    with session_conf(spark, {"spark.sql.shuffle.partitions": stream_width()}):
+        q = (
+            writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return q
 
 
 def daily_counts_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
@@ -97,17 +132,9 @@ def run_dedup_available_now(
 ) -> None:
     """availableNow catch-up of the streaming dedup into a memory sink."""
     events = read_events_stream(spark, src_dir)
-    q = (
-        dedup_events_stream(events)
-        .select("event_id", "user_id", "event_type")
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = dedup_events_stream(events).select("event_id", "user_id", "event_type")
+    writer = out.writeStream.format("memory").queryName(sink_table)
+    drain(spark, writer.outputMode("append"), checkpoint_dir)
 
 
 def enrich_events_stream(events: DataFrame, customers: DataFrame) -> DataFrame:
@@ -130,16 +157,8 @@ def run_enriched_available_now(
     sink_table: str = "enriched_events_stream",
 ) -> None:
     events = read_events_stream(spark, src_dir)
-    q = (
-        enrich_events_stream(events, customers)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = enrich_events_stream(events, customers).writeStream.format("memory")
+    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
 
 
 def run_available_now(
@@ -152,16 +171,8 @@ def run_available_now(
     catch-up (the streaming equivalent of an Airflow backfill), into an
     in-memory sink table, then stop. Blocks until complete."""
     events = read_events_stream(spark, src_dir)
-    q = (
-        daily_counts_stream(events)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = daily_counts_stream(events).writeStream.format("memory")
+    drain(spark, writer.queryName(sink_table).outputMode("complete"), checkpoint_dir)
 
 
 def sessionize_stream(
@@ -202,16 +213,8 @@ def run_sessionize_available_now(
     only watermark-closed sessions emit — with availableNow over a finite
     source, that is every session)."""
     events = read_events_stream(spark, src_dir)
-    q = (
-        sessionize_stream(events)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = sessionize_stream(events).writeStream.format("memory")
+    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
 
 
 def attribution_stream(events: DataFrame, horizon: str = "1 hour") -> DataFrame:
@@ -265,16 +268,8 @@ def run_attribution_available_now(
     sink_table: str = "attribution_stream",
 ) -> None:
     events = read_events_stream(spark, src_dir)
-    q = (
-        attribution_stream(events)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = attribution_stream(events).writeStream.format("memory")
+    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
 
 
 def run_dedup_to_parquet(
@@ -296,17 +291,9 @@ def run_dedup_to_parquet(
     (operators/maintenance.py::compact_small_files)."""
     events = read_events_stream(spark, src_dir)
     deduped = dedup_events_stream(events).withColumn("day", F.to_date("ts"))
-    q = (
-        deduped.select("event_id", "user_id", "event_type", "value", "day")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .partitionBy("day")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = deduped.select("event_id", "user_id", "event_type", "value", "day")
+    writer = out.writeStream.format("parquet").option("path", out_dir)
+    drain(spark, writer.partitionBy("day").outputMode("append"), checkpoint_dir)
 
 
 def run_partitioned_sink_with_compaction(
@@ -360,14 +347,8 @@ def run_partitioned_sink_with_compaction(
         finally:
             batch_df.unpersist()
 
-    q = (
-        with_day.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = with_day.writeStream.foreachBatch(_sink)
+    drain(spark, writer.outputMode("append"), checkpoint_dir)
 
 
 def run_manifest_sink_with_compaction(
@@ -476,14 +457,8 @@ def run_manifest_sink_with_compaction(
         finally:
             batch_df.unpersist()
 
-    q = (
-        with_day.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = with_day.writeStream.foreachBatch(_sink)
+    drain(spark, writer.outputMode("append"), checkpoint_dir)
 
 
 def _lh_current_version(root: str) -> int:
@@ -596,14 +571,8 @@ def run_upsert_foreach_batch(
     events = read_events_stream(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     )
-    q = (
-        events.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = events.writeStream.foreachBatch(apply_batch)
+    drain(spark, writer.outputMode("update"), checkpoint_dir)
     assert state["path"] is not None, (
         "no micro-batch was processed and no prior committed snapshot exists"
     )
@@ -680,14 +649,8 @@ def run_conditional_upsert_available_now(
     events = read_events_stream(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     )
-    q = (
-        events.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = events.writeStream.foreachBatch(apply_batch)
+    drain(spark, writer.outputMode("update"), checkpoint_dir)
     assert state["path"] is not None, (
         "no micro-batch was processed and no prior committed snapshot exists"
     )
@@ -756,13 +719,7 @@ def run_counts_merge_available_now(
     events = read_events_stream(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     )
-    q = (
-        events.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = events.writeStream.foreachBatch(apply_batch)
+    drain(spark, writer.outputMode("update"), checkpoint_dir)
     assert state["path"] is not None, "no micro-batch was processed"
     return state["path"]

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .daily import drain, read_events_stream
+
 OUTPUT_SCHEMA = "user_id long, session_seq long, n_events long, session_date date"
 STATE_SCHEMA = "last_us long, session_seq long, n_events long, start_us long"
 
@@ -89,19 +91,9 @@ def sessionize_stateful(events: DataFrame) -> DataFrame:
 def run_sessionize_available_now(
     spark, src_dir: str, checkpoint_dir: str, sink_table: str = "sessions_stream"
 ) -> None:
-    from .daily import read_events_stream
-
     events = read_events_stream(spark, src_dir).select("user_id", "ts", "event_id")
-    q = (
-        sessionize_stateful(events)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = sessionize_stateful(events).writeStream.format("memory")
+    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
 
 
 def run_sessionize_to_parquet(
@@ -113,19 +105,9 @@ def run_sessionize_to_parquet(
     appends only the sessions those arrivals closed (the memory sink
     used by the test harness resets per run; the file sink is the shape
     that survives restarts)."""
-    from .daily import read_events_stream
-
     events = read_events_stream(spark, src_dir).select("user_id", "ts", "event_id")
-    q = (
-        sessionize_stateful(events)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = sessionize_stateful(events).writeStream.format("parquet")
+    drain(spark, writer.option("path", out_dir).outputMode("append"), checkpoint_dir)
 
 
 # --- ordered-sequence funnel as a custom stateful operator (round 13) -------
@@ -207,18 +189,8 @@ def run_funnel_available_now(
     sink_table: str = "funnel_stream",
     max_files_per_trigger: int = 1,
 ) -> None:
-    from .daily import read_events_stream
-
     events = read_events_stream(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     ).select("user_id", "ts", "event_id", "event_type")
-    q = (
-        funnel_stateful(events, stages, window_us)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = funnel_stateful(events, stages, window_us).writeStream.format("memory")
+    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)

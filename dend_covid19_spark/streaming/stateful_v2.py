@@ -37,6 +37,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .daily import drain, read_events_stream
+
 
 def transform_with_state_available() -> bool:
     """True when the optional protobuf dependency for the
@@ -131,16 +133,6 @@ def sessionize_tws(events: DataFrame) -> DataFrame:
 def run_sessionize_available_now(
     spark, src_dir: str, checkpoint_dir: str, sink_table: str = "sessions_tws"
 ) -> None:
-    from .daily import read_events_stream
-
     events = read_events_stream(spark, src_dir).select("user_id", "ts", "event_id")
-    q = (
-        sessionize_tws(events)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = sessionize_tws(events).writeStream.format("memory")
+    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)

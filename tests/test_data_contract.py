@@ -107,6 +107,34 @@ def test_dual_ts_read_paths_agree(spark, tmp_path):
     assert got_ns == expected
 
 
+def test_late_drop_row_on_nanos_dataset(spark, tmp_path):
+    """streaming_late_drop_executed stages all of its source files in
+    one ts unit, so a TIMESTAMP(NANOS) copy of the dataset drains to
+    the same rows as the timestamp[us] original (the stream reader
+    sniffs one footer for the whole source dir)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dend_covid19_spark.catalog import events_ts_is_nanos
+    from dend_covid19_spark.plans.ingest import streaming_late_drop_executed
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    ts = events.column("ts")
+    events = events.set_column(
+        events.schema.get_field_index("ts"),
+        "ts",
+        ts.cast(pa.timestamp("ns", tz=ts.type.tz)),
+    )
+    pq.write_table(events, str(tmp_path / "events.parquet"))
+    assert events_ts_is_nanos(str(tmp_path / "events.parquet"))
+
+    def rows(sf_dir: str) -> list:
+        return sorted(map(tuple, streaming_late_drop_executed(spark, sf_dir).collect()))
+
+    got = rows(str(tmp_path))
+    assert got and got == rows(SF_DIR)
+
+
 def test_ts_sniff_edge_cases(tmp_path):
     """events_ts_is_nanos accepts a file OR a directory of parts, and
     fails loudly (not silently-default) when no parquet exists."""

@@ -4,46 +4,26 @@ mtime-ordered batch admission and watermark arithmetic, so a seed
 family perturbs the batch SPLIT points, the replayed day range, and the
 watermark horizon — while keeping the expected output derivable from
 the same batch frame — to catch one-batch-behind regressions across
-Spark versions. Every drill reuses the production reader
-(streaming/daily.py::read_events_stream) and compares the sink's exact
-row multiset against the batch-derived truth."""
+Spark versions. Every drill reuses the production stager, reader and
+drain (plans/ingest.py::_stage_chunks, streaming/daily.py::
+read_events_stream and drain) and compares the sink's exact row
+multiset against the batch-derived truth."""
 
 from __future__ import annotations
 
-import glob
 import os
 import random
-import shutil
-import time as _t
 
 import pytest
 from pyspark.sql import functions as F
 
 from dend_covid19_spark.catalog import load_table
-from dend_covid19_spark.session import session_conf
-from dend_covid19_spark.streaming.daily import read_events_stream
+from dend_covid19_spark.plans.ingest import _day_chunks, _stage_chunks
+from dend_covid19_spark.streaming.daily import drain, read_events_stream
 
 from conftest import SF_DIR
 
 SEEDS = [67, 71]
-
-
-def _stage(df, scratch: str, dest: str, name: str) -> None:
-    # write ts as TIMESTAMP_MICROS: the stream reader footer-sniffs the
-    # source dir, and Spark's default INT96 output would sniff as ns
-    # (pyarrow reads INT96 as timestamp[ns]) while the file isn't INT64
-    micros = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
-    with session_conf(df.sparkSession, micros):
-        d = os.path.join(scratch, name)
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-    (part,) = glob.glob(os.path.join(d, "part-*.parquet"))
-    shutil.move(part, dest)
-
-
-def _mtime_order(paths: list[str]) -> None:
-    now = _t.time()
-    for i, p in enumerate(paths):
-        os.utime(p, (now - 1000 + i * 100,) * 2)
 
 
 def _day_span(ev):
@@ -53,14 +33,8 @@ def _day_span(ev):
     return row.lo, row.hi
 
 
-@pytest.fixture()
-def narrow_shuffle(spark):
-    with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        yield
-
-
 @pytest.mark.parametrize("seed", SEEDS)
-def test_fuzz_late_drop_choreography(spark, tmp_path, seed, narrow_shuffle):
+def test_fuzz_late_drop_choreography(spark, tmp_path, seed):
     """Seeded (watermark horizon, replay range, extra corpus split):
     the drained append output must equal the batch aggregate restricted
     to watermark-closed day windows, for every parameterization — the
@@ -85,21 +59,18 @@ def test_fuzz_late_drop_choreography(spark, tmp_path, seed, narrow_shuffle):
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    scratch = str(tmp_path / "stage")
-    f1 = os.path.join(src, "a_early.parquet")
-    f2 = os.path.join(src, "b_rest.parquet")
-    f3 = os.path.join(src, "c_tick.parquet")
-    f4 = os.path.join(src, "d_replay.parquet")
     d = F.to_date("ts")
-    _stage(ev.where(d <= F.lit(str(corpus_split))), scratch, f1, "early")
-    _stage(ev.where(d > F.lit(str(corpus_split))), scratch, f2, "rest")
     mx = ev.agg(F.max("ts").alias("m"))
-    _stage(ev.join(F.broadcast(mx), ev.ts == F.col("m")).drop("m"), scratch, f3, "tick")
-    _stage(ev.where(d <= F.lit(str(replay_last))), scratch, f4, "replay")
-    _mtime_order([f1, f2, f3, f4])
+    chunks = [
+        ev.where(d <= F.lit(str(corpus_split))),
+        ev.where(d > F.lit(str(corpus_split))),
+        ev.join(F.broadcast(mx), ev.ts == F.col("m")).drop("m"),  # the tick
+        ev.where(d <= F.lit(str(replay_last))),  # the late replay
+    ]
+    _stage_chunks(chunks, str(tmp_path), src)
 
     sink = f"fuzz_late_{seed}"
-    q = (
+    out = (
         read_events_stream(spark, src, max_files_per_trigger=1)
         .withWatermark("ts", f"{wm_days} days")
         .groupBy(F.window("ts", "1 day").alias("w"))
@@ -110,14 +81,9 @@ def test_fuzz_late_drop_choreography(spark, tmp_path, seed, narrow_shuffle):
             .alias("value_sum"),
         )
         .select(F.to_date("w.start").alias("day"), "n_events", "value_sum")
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
+    drain(spark, writer, str(tmp_path / "ckpt"))
 
     got = {
         (r.day, r.n_events, r.value_sum) for r in spark.table(sink).collect()
@@ -147,7 +113,7 @@ def test_fuzz_late_drop_choreography(spark, tmp_path, seed, narrow_shuffle):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_fuzz_update_and_complete_modes(spark, tmp_path, seed, narrow_shuffle):
+def test_fuzz_update_and_complete_modes(spark, tmp_path, seed):
     """Seeded batch split for the output-mode rows: UPDATE's sink must
     accumulate exactly (batch-1 prefix counts for early types) +
     (final totals for types batch 2 touched); COMPLETE's sink must hold
@@ -176,25 +142,15 @@ def test_fuzz_update_and_complete_modes(spark, tmp_path, seed, narrow_shuffle):
     for mode in ("update", "complete"):
         src = str(tmp_path / f"src_{mode}")
         os.makedirs(src)
-        scratch = str(tmp_path / f"stage_{mode}")
-        f1 = os.path.join(src, "a_early.parquet")
-        f2 = os.path.join(src, "b_late.parquet")
-        _stage(early, scratch, f1, "early")
-        _stage(late, scratch, f2, "late")
-        _mtime_order([f1, f2])
+        _stage_chunks([early, late], str(tmp_path / f"stage_{mode}"), src)
         sink = f"fuzz_{mode}_{seed}"
-        q = (
+        out = (
             read_events_stream(spark, src, max_files_per_trigger=1)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(mode)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{mode}"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        writer = out.writeStream.format("memory").queryName(sink).outputMode(mode)
+        drain(spark, writer, str(tmp_path / f"ckpt_{mode}"))
         got = sorted(
             (r.event_type, r.n_events) for r in spark.table(sink).collect()
         )
@@ -209,7 +165,7 @@ def test_fuzz_update_and_complete_modes(spark, tmp_path, seed, narrow_shuffle):
 
 
 @pytest.mark.parametrize("seed", [73, 79])
-def test_fuzz_funnel_state_cuts(spark, tmp_path, seed, narrow_shuffle):
+def test_fuzz_funnel_state_cuts(spark, tmp_path, seed):
     """Seeded CHRONOLOGICAL cut points for the stateful funnel (r13):
     split the corpus into 2-4 day-aligned micro-batches at random
     boundaries and drain through funnel_stateful — the per-user (stage,
@@ -236,26 +192,10 @@ def test_fuzz_funnel_state_cuts(spark, tmp_path, seed, narrow_shuffle):
     cuts = sorted(
         rng.sample(range(1, (hi - lo).days), n_cuts)
     )
-    bounds = (
-        [None]
-        + [lo + datetime.timedelta(days=c) for c in cuts]
-        + [None]
-    )
-    d = F.to_date("ts")
+    days = [str(lo + datetime.timedelta(days=c)) for c in cuts]
     src = str(tmp_path / "src")
     os.makedirs(src)
-    scratch = str(tmp_path / "stage")
-    paths = []
-    for i in range(len(bounds) - 1):
-        chunk = ev
-        if bounds[i] is not None:
-            chunk = chunk.where(d >= F.lit(str(bounds[i])))
-        if bounds[i + 1] is not None:
-            chunk = chunk.where(d < F.lit(str(bounds[i + 1])))
-        p = os.path.join(src, f"p{i}.parquet")
-        _stage(chunk, scratch, p, f"c{i}")
-        paths.append(p)
-    _mtime_order(paths)
+    _stage_chunks(_day_chunks(ev, days), str(tmp_path), src)
 
     sink = f"fuzz_funnel_{seed}"
     run_funnel_available_now(

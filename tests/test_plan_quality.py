@@ -803,3 +803,36 @@ def test_graph_loops_go_through_propagate():
             and call.func.attr in ("broadcast", "repartition")
         ]
         assert hits == [], hits
+
+
+def _owners(path: pathlib.Path, needle: str) -> list[str]:
+    """The innermost function around each line of ``path`` that
+    contains ``needle`` (``<module>`` outside every function)."""
+    text = path.read_text()
+    funcs = [n for n in ast.walk(ast.parse(text)) if isinstance(n, ast.FunctionDef)]
+    owners = []
+    for no, line in enumerate(text.splitlines(), 1):
+        if needle in line:
+            around = [f for f in funcs if f.lineno <= no <= f.end_lineno]
+            owners.append(max(around, key=lambda f: f.lineno).name if around else "<module>")
+    return owners
+
+
+def test_drains_go_through_drain():
+    """Every availableNow stream runs through ``streaming.daily.drain``,
+    which owns the trigger, the checkpoint and the state width, and
+    every drain source file is written by ``ingest._stage_chunks``,
+    which owns the ts unit and the admission order. A trigger, a width
+    scope or an mtime pin written anywhere else would bring back the
+    hand-copied drains and stagers those two replaced."""
+    root = pathlib.Path(dend_covid19_spark.__file__).parent
+    triggers = sorted(
+        f"{path.relative_to(root)}: {owner}"
+        for path in root.rglob("*.py")
+        for owner in _owners(path, "trigger(")
+    )
+    assert triggers == ["streaming/daily.py: drain"], triggers
+    ingest = root / "plans" / "ingest.py"
+    for name in ("spark.sql.shuffle.partitions", "_stream_width"):
+        assert name not in ingest.read_text(), name
+    assert _owners(ingest, "os.utime(") == ["_stage_chunks"]

@@ -301,10 +301,9 @@ def test_funnel_window_boundary_across_batches(spark, tmp_path):
     import datetime
     import os
 
+    from dend_covid19_spark.plans.ingest import _stage_chunks
     from dend_covid19_spark.plans.timeseries import FUNNEL_STAGES, FUNNEL_WINDOW_MIN
     from dend_covid19_spark.streaming.stateful import run_funnel_available_now
-
-    from test_fuzz_streaming_choreo import _mtime_order, _stage
 
     window_us = FUNNEL_WINDOW_MIN * 60 * 1_000_000
     t0 = datetime.datetime(2024, 1, 1)
@@ -324,12 +323,9 @@ def test_funnel_window_boundary_across_batches(spark, tmp_path):
     ]
     src = str(tmp_path / "src")
     os.makedirs(src)
-    for i, batch in enumerate((batch1, batch2)):
-        df = spark.createDataFrame(
-            batch, "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        _stage(df, str(tmp_path / f"stage{i}"), os.path.join(src, f"p{i}.parquet"), f"b{i}")
-    _mtime_order([os.path.join(src, f"p{i}.parquet") for i in range(2)])
+    schema = "user_id long, ts timestamp, event_id long, event_type string"
+    batches = [spark.createDataFrame(b, schema) for b in (batch1, batch2)]
+    _stage_chunks(batches, str(tmp_path), src)
 
     sink = "funnel_boundary_drill"
     run_funnel_available_now(

@@ -7,17 +7,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dend_covid19_spark.plans.timeseries import events_tumbling_daily
-from dend_covid19_spark.session import session_conf
 from dend_covid19_spark.streaming.daily import (
     run_available_now,
     run_dedup_available_now,
     run_enriched_available_now,
 )
 from tests.conftest import SF_DIR
-
-# the compaction-sink drills run at the narrow state width the ingest
-# drains use
-_NARROW_SHUFFLE = {"spark.sql.shuffle.partitions": "8"}
 
 
 def test_available_now_matches_batch(spark, tmp_path):
@@ -486,10 +481,9 @@ def test_partitioned_sink_compaction_keeps_pace(spark, tmp_path):
     ends at one file (max_files=0 = always-compact-touched), and the
     final content equals a batch read of the same source."""
     import os
-    import time
 
     from dend_covid19_spark.catalog import load_table
-    from dend_covid19_spark.plans.ingest import _stage_single_parquet
+    from dend_covid19_spark.plans.ingest import _stage_chunks
     from dend_covid19_spark.streaming.daily import (
         run_partitioned_sink_with_compaction,
     )
@@ -508,26 +502,19 @@ def test_partitioned_sink_compaction_keeps_pace(spark, tmp_path):
         ev.where((d < F.lit(cut_lo).cast("date")) | (in_overlap & (F.col("event_id") % 2 == 0))),
         ev.where((d > F.lit(cut_hi).cast("date")) | (in_overlap & (F.col("event_id") % 2 == 1))),
     ]
-    for i, chunk in enumerate(chunks):
-        _stage_single_parquet(
-            chunk, str(tmp_path / f"cpc_stage{i}"), str(src / f"p{i}.parquet")
-        )
-    now = time.time()
-    for i in range(len(chunks)):
-        os.utime(src / f"p{i}.parquet", (now - 100 + i * 10, now - 100 + i * 10))
+    _stage_chunks(chunks, str(tmp_path), str(src))
 
     out, ckpt = tmp_path / "cpc_out", tmp_path / "cpc_ckpt"
     manifests: list = []
-    with session_conf(spark, _NARROW_SHUFFLE):
-        run_partitioned_sink_with_compaction(
-            spark,
-            str(src),
-            str(out),
-            str(ckpt),
-            max_files=0,
-            manifests=manifests,
-            max_files_per_trigger=1,
-        )
+    run_partitioned_sink_with_compaction(
+        spark,
+        str(src),
+        str(out),
+        str(ckpt),
+        max_files=0,
+        manifests=manifests,
+        max_files_per_trigger=1,
+    )
 
     assert len(manifests) == 2, [m[0] for m in manifests]
     touched_sets = [set(m) for _bid, m in manifests]
@@ -636,11 +623,8 @@ def test_partitioned_sink_compaction_resumes_incrementally(spark, tmp_path):
     history is never re-listed, O(touched) holds across restarts), the
     re-touched days re-compact to one file, and the sink equals a
     batch read of everything."""
-    import os
-    import time
-
     from dend_covid19_spark.catalog import load_table
-    from dend_covid19_spark.plans.ingest import _stage_single_parquet
+    from dend_covid19_spark.plans.ingest import _stage_chunks
     from dend_covid19_spark.streaming.daily import (
         run_partitioned_sink_with_compaction,
     )
@@ -655,32 +639,22 @@ def test_partitioned_sink_compaction_resumes_incrementally(spark, tmp_path):
         ev.where((d >= cut1) & (d < cut2)),
         ev.where(d >= cut2),  # the late arrival, staged after drain one
     ]
-    for i, chunk in enumerate(chunks[:2]):
-        _stage_single_parquet(
-            chunk, str(tmp_path / f"cpr_stage{i}"), str(src / f"p{i}.parquet")
-        )
-    now = time.time()
-    for i in range(2):
-        os.utime(src / f"p{i}.parquet", (now - 100 + i * 10, now - 100 + i * 10))
+    _stage_chunks(chunks[:2], str(tmp_path), str(src))
 
     out, ckpt = tmp_path / "cpr_out", tmp_path / "cpr_ckpt"
     manifests: list = []
-    with session_conf(spark, _NARROW_SHUFFLE):
-        run_partitioned_sink_with_compaction(
-            spark, str(src), str(out), str(ckpt),
-            max_files=0, manifests=manifests, max_files_per_trigger=1,
-        )
-        assert len(manifests) == 2
+    run_partitioned_sink_with_compaction(
+        spark, str(src), str(out), str(ckpt),
+        max_files=0, manifests=manifests, max_files_per_trigger=1,
+    )
+    assert len(manifests) == 2
 
-        # the late file arrives; a NEW query on the SAME checkpoint
-        _stage_single_parquet(
-            chunks[2], str(tmp_path / "cpr_stage2"), str(src / "p2.parquet")
-        )
-        os.utime(src / "p2.parquet", (now, now))
-        run_partitioned_sink_with_compaction(
-            spark, str(src), str(out), str(ckpt),
-            max_files=0, manifests=manifests, max_files_per_trigger=1,
-        )
+    # the late file arrives; a NEW query on the SAME checkpoint
+    _stage_chunks(chunks[2:], str(tmp_path), str(src), first=2)
+    run_partitioned_sink_with_compaction(
+        spark, str(src), str(out), str(ckpt),
+        max_files=0, manifests=manifests, max_files_per_trigger=1,
+    )
 
     assert len(manifests) == 3, [m[0] for m in manifests]
     late_days = {
@@ -718,7 +692,6 @@ def test_manifest_sink_exactly_once_and_scoped_optimize(spark, tmp_path):
     NOTHING (the txn watermarks survive in the manifest): the
     exactly-once property foreachBatch alone cannot give."""
     import os
-    import time
 
     from dend_covid19_spark.catalog import load_table
     from dend_covid19_spark.operators.lakehouse import (
@@ -726,7 +699,7 @@ def test_manifest_sink_exactly_once_and_scoped_optimize(spark, tmp_path):
         read_manifest_table,
         write_manifest_table,
     )
-    from dend_covid19_spark.plans.ingest import _stage_single_parquet
+    from dend_covid19_spark.plans.ingest import _stage_chunks
     from dend_covid19_spark.streaming.daily import (
         run_manifest_sink_with_compaction,
     )
@@ -758,19 +731,13 @@ def test_manifest_sink_exactly_once_and_scoped_optimize(spark, tmp_path):
         evraw.where((draw >= cut0) & (draw < cut1)),
         evraw.where(draw >= cut1),
     ]
-    now = time.time()
-    for i, chunk in enumerate(raw_chunks):
-        _stage_single_parquet(
-            chunk, str(tmp_path / f"ms_stage{i}"), str(src_ev / f"p{i}.parquet")
-        )
-        os.utime(src_ev / f"p{i}.parquet", (now - 100 + i * 10, now - 100 + i * 10))
+    _stage_chunks(raw_chunks, str(tmp_path), str(src_ev))
 
     manifests: list = []
-    with session_conf(spark, _NARROW_SHUFFLE):
-        run_manifest_sink_with_compaction(
-            spark, str(src_ev), root, str(tmp_path / "ms_ckpt"),
-            manifests=manifests, max_files_per_trigger=1,
-        )
+    run_manifest_sink_with_compaction(
+        spark, str(src_ev), root, str(tmp_path / "ms_ckpt"),
+        manifests=manifests, max_files_per_trigger=1,
+    )
 
     assert len(manifests) == 2
     assert all(rec is not None and rec["files_rewritten"] >= 1 for _, rec in manifests)
@@ -791,11 +758,10 @@ def test_manifest_sink_exactly_once_and_scoped_optimize(spark, tmp_path):
     # FULL replay: fresh checkpoint re-delivers batches 0 and 1; the
     # committed watermarks make both appends no-ops — nothing commits
     v_before = m["version"]
-    with session_conf(spark, _NARROW_SHUFFLE):
-        run_manifest_sink_with_compaction(
-            spark, str(src_ev), root, str(tmp_path / "ms_ckpt_replay"),
-            manifests=manifests, max_files_per_trigger=1,
-        )
+    run_manifest_sink_with_compaction(
+        spark, str(src_ev), root, str(tmp_path / "ms_ckpt_replay"),
+        manifests=manifests, max_files_per_trigger=1,
+    )
     assert current_manifest(root)["version"] == v_before
     assert digest(read_manifest_table(spark, root)) == want
 
@@ -807,7 +773,6 @@ def test_manifest_sink_inband_retention(spark, tmp_path):
     manifest log trims to the retention horizon, and the final read is
     untouched."""
     import os
-    import time
 
     from dend_covid19_spark.catalog import load_table
     from dend_covid19_spark.operators.lakehouse import (
@@ -815,7 +780,7 @@ def test_manifest_sink_inband_retention(spark, tmp_path):
         read_manifest_table,
         write_manifest_table,
     )
-    from dend_covid19_spark.plans.ingest import _stage_single_parquet
+    from dend_covid19_spark.plans.ingest import _stage_chunks
     from dend_covid19_spark.streaming.daily import (
         run_manifest_sink_with_compaction,
     )
@@ -833,19 +798,13 @@ def test_manifest_sink_inband_retention(spark, tmp_path):
     src = tmp_path / "mr_src"
     src.mkdir()
     chunks = [ev.where((d >= cut0) & (d < cut1)), ev.where(d >= cut1)]
-    now = time.time()
-    for i, chunk in enumerate(chunks):
-        _stage_single_parquet(
-            chunk, str(tmp_path / f"mr_stage{i}"), str(src / f"p{i}.parquet")
-        )
-        os.utime(src / f"p{i}.parquet", (now - 100 + i * 10, now - 100 + i * 10))
+    _stage_chunks(chunks, str(tmp_path), str(src))
 
-    with session_conf(spark, _NARROW_SHUFFLE):
-        run_manifest_sink_with_compaction(
-            spark, str(src), root, str(tmp_path / "mr_ckpt"),
-            max_files_per_trigger=1,
-            vacuum_keep_last=2, vacuum_grace_seconds=0,
-        )
+    run_manifest_sink_with_compaction(
+        spark, str(src), root, str(tmp_path / "mr_ckpt"),
+        max_files_per_trigger=1,
+        vacuum_keep_last=2, vacuum_grace_seconds=0,
+    )
 
     hist = manifest_table_history(root)
     assert len(hist) == 2  # retention trimmed the 5-version chain
@@ -871,9 +830,6 @@ def test_manifest_sink_superset_replay_is_skipped_whole(spark, tmp_path):
     must be skipped WHOLE by its txn watermark — never merged, never
     partially appended. Exactly-once means the first delivery wins;
     the superset's extra rows belong to a later batch id or nowhere."""
-    import os
-    import time
-
     from dend_covid19_spark.catalog import load_table
     from dend_covid19_spark.operators.lakehouse import (
         append_manifest_table,
@@ -881,7 +837,7 @@ def test_manifest_sink_superset_replay_is_skipped_whole(spark, tmp_path):
         read_manifest_table,
         write_manifest_table,
     )
-    from dend_covid19_spark.plans.ingest import _stage_single_parquet
+    from dend_covid19_spark.plans.ingest import _stage_chunks
     from dend_covid19_spark.streaming.daily import run_manifest_sink_with_compaction
 
     root = str(tmp_path / "sr_table")
@@ -896,12 +852,9 @@ def test_manifest_sink_superset_replay_is_skipped_whole(spark, tmp_path):
     src = tmp_path / "sr_src"
     src.mkdir()
     batch = ev.where((d >= cut) & (d < "2024-01-15"))
-    _stage_single_parquet(batch, str(tmp_path / "sr_stage"), str(src / "p0.parquet"))
+    _stage_chunks([batch], str(tmp_path), str(src))
 
-    with session_conf(spark, _NARROW_SHUFFLE):
-        run_manifest_sink_with_compaction(
-            spark, str(src), root, str(tmp_path / "sr_ckpt")
-        )
+    run_manifest_sink_with_compaction(spark, str(src), root, str(tmp_path / "sr_ckpt"))
 
     m = current_manifest(root)
     assert m["txns"] == {"manifest_sink": 0}
@@ -929,9 +882,6 @@ def test_manifest_sink_allnull_day_batch_appends_without_optimize(spark, tmp_pat
     version bump), record the _ALL_NULL day marker — and a later
     real-day batch's scoped OPTIMIZE must leave the null file
     byte-untouched instead of rewriting it forever."""
-    import os
-    import time
-
     from dend_covid19_spark.catalog import load_table
     from dend_covid19_spark.operators.lakehouse import (
         _ALL_NULL,
@@ -939,7 +889,7 @@ def test_manifest_sink_allnull_day_batch_appends_without_optimize(spark, tmp_pat
         read_manifest_table,
         write_manifest_table,
     )
-    from dend_covid19_spark.plans.ingest import _stage_single_parquet
+    from dend_covid19_spark.plans.ingest import _stage_chunks
     from dend_covid19_spark.streaming.daily import run_manifest_sink_with_compaction
 
     root = str(tmp_path / "nn_table")
@@ -957,23 +907,14 @@ def test_manifest_sink_allnull_day_batch_appends_without_optimize(spark, tmp_pat
         "ts", F.lit(None).cast("timestamp")
     )
     real_batch = ev.where((d >= cut) & (d < "2024-01-15"))
-    now = time.time()
-    _stage_single_parquet(
-        null_batch, str(tmp_path / "nn_stage0"), str(src / "p0.parquet")
-    )
-    os.utime(src / "p0.parquet", (now - 100, now - 100))
-    _stage_single_parquet(
-        real_batch, str(tmp_path / "nn_stage1"), str(src / "p1.parquet")
-    )
-    os.utime(src / "p1.parquet", (now - 50, now - 50))
+    _stage_chunks([null_batch, real_batch], str(tmp_path), str(src))
 
     v0 = current_manifest(root)["version"]
     manifests: list = []
-    with session_conf(spark, _NARROW_SHUFFLE):
-        run_manifest_sink_with_compaction(
-            spark, str(src), root, str(tmp_path / "nn_ckpt"),
-            manifests=manifests, max_files_per_trigger=1,
-        )
+    run_manifest_sink_with_compaction(
+        spark, str(src), root, str(tmp_path / "nn_ckpt"),
+        manifests=manifests, max_files_per_trigger=1,
+    )
 
     # batch 0 (all-null days): append only — rec None, ONE version bump
     assert manifests[0][0] == 0 and manifests[0][1] is None, manifests
@@ -1001,7 +942,6 @@ def test_manifest_sink_restart_reoptimizes_already_clustered_day(spark, tmp_path
     file plus the late append back into one file — while every other
     day's files carry over byte-identical."""
     import os
-    import time
 
     from dend_covid19_spark.catalog import load_table
     from dend_covid19_spark.operators.lakehouse import (
@@ -1010,7 +950,7 @@ def test_manifest_sink_restart_reoptimizes_already_clustered_day(spark, tmp_path
         read_manifest_table,
         write_manifest_table,
     )
-    from dend_covid19_spark.plans.ingest import _stage_single_parquet
+    from dend_covid19_spark.plans.ingest import _stage_chunks
     from dend_covid19_spark.streaming.daily import run_manifest_sink_with_compaction
 
     root = str(tmp_path / "rc_table")
@@ -1028,32 +968,26 @@ def test_manifest_sink_restart_reoptimizes_already_clustered_day(spark, tmp_path
     first = on_x.where(F.col("event_id") % 2 == 0)
     late = on_x.where(F.col("event_id") % 2 == 1)
     assert first.count() > 0 and late.count() > 0
-    now = time.time()
-    _stage_single_parquet(first, str(tmp_path / "rc_stage0"), str(src / "p0.parquet"))
-    os.utime(src / "p0.parquet", (now - 100, now - 100))
+    _stage_chunks([first], str(tmp_path), str(src))
 
     manifests: list = []
-    with session_conf(spark, _NARROW_SHUFFLE):
-        run_manifest_sink_with_compaction(
-            spark, str(src), root, str(tmp_path / "rc_ckpt"), manifests=manifests
-        )
-        m1 = current_manifest(root)
-        assert len(files_for_values(m1, "day", [day_x])) == 1, (
-            "first drain must leave day X as one clustered file"
-        )
-        other_files = {
-            f: os.path.getmtime(os.path.join(root, f))
-            for f in m1["files"]
-            if f not in set(files_for_values(m1, "day", [day_x]))
-        }
-        # the late file arrives after the drain; restart on the SAME ckpt
-        _stage_single_parquet(
-            late, str(tmp_path / "rc_stage1"), str(src / "p1.parquet")
-        )
-        os.utime(src / "p1.parquet", (now, now))
-        run_manifest_sink_with_compaction(
-            spark, str(src), root, str(tmp_path / "rc_ckpt"), manifests=manifests
-        )
+    run_manifest_sink_with_compaction(
+        spark, str(src), root, str(tmp_path / "rc_ckpt"), manifests=manifests
+    )
+    m1 = current_manifest(root)
+    assert len(files_for_values(m1, "day", [day_x])) == 1, (
+        "first drain must leave day X as one clustered file"
+    )
+    other_files = {
+        f: os.path.getmtime(os.path.join(root, f))
+        for f in m1["files"]
+        if f not in set(files_for_values(m1, "day", [day_x]))
+    }
+    # the late file arrives after the drain; restart on the SAME ckpt
+    _stage_chunks([late], str(tmp_path), str(src), first=1)
+    run_manifest_sink_with_compaction(
+        spark, str(src), root, str(tmp_path / "rc_ckpt"), manifests=manifests
+    )
 
     assert len(manifests) == 2
     rec = manifests[-1][1]
