@@ -4,7 +4,12 @@ The reference implements quality checks as post-load SQL + a Python
 ``raise`` (/root/reference/airflow/dags/tasks/tweets.py:136-142,
 market.py:45-52). Here they are engine-side predicates over DataFrames —
 usable in any pipeline and cheap at scale (``limit(1)`` short-circuits
-the scan; no full count)."""
+the scan; no full count).
+
+``observe_metrics``/``expect_observed`` gate on metrics a caller's own
+action collects, with no job of their own. ``pipeline.run_daily`` uses
+``observe_metrics`` so each load's insert counts the rows its gates
+need; it calls ``expect_nonempty`` only for a gate whose count is 0."""
 
 from __future__ import annotations
 

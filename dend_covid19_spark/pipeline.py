@@ -8,35 +8,40 @@ tables; post-load SELECT gates -> operators/quality.py.
 Differences from the reference, by design (SURVEY.md §3.1 'new-engine
 shape'):
   - one lazy plan per side, ending in a write: no collect-then-pivot
-    round-trip (tweets.py:64-77), pivot is native with a fixed class
-    list (and absent classes coalesce to 0 instead of KeyError);
+    round-trip (tweets.py:64-77), the class histogram is one aggregate
+    over a fixed class list (an absent class counts 0 instead of
+    KeyError);
   - the market side fetches all series then performs a single batched
     write (vs one INSERT per index, market.py:29-42);
-  - quality gates short-circuit (limit(1)) instead of full fetches.
+  - quality gates ride the load: each insert counts its own matching
+    rows (``df.observe``), so a count >= 1 passes with no extra job;
+    only a count of 0 falls back to a short-circuited (limit(1)) scan
+    of the table, so reruns over earlier rows still pass.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .functions.annotator import annotate_sentiment
-from .operators.quality import expect_nonempty
+from .operators.quality import expect_nonempty, observe_metrics
 from .sources.ddl import reset_serving_tables
 from .sources.readers import external_timeseries
 
 SENTIMENT_CLASSES = ("positive", "negative", "na")
+DEFAULT_INDICES = ("NASDAQOMX/XQC",)
 
 
 def extract_sentiment(
     spark: SparkSession, sf_dir: str, date: str, language: str = "en"
 ) -> DataFrame:
     """The reference's Spark job (tweets.py:41-82) as ONE lazy plan:
-    filter -> annotate -> histogram -> native pivot -> enriched one-row
-    summary for ``date``.
+    filter -> annotate -> one-aggregate class histogram -> enriched
+    one-row summary for ``date``.
 
     documents stand in for the day's tweet shards; ``date`` plays the
     execution-date role (tweets are path-partitioned by it, tweets.py:44).
@@ -47,10 +52,9 @@ def extract_sentiment(
     )
     annotated = annotate_sentiment(filtered)
     d = F.to_date(F.lit(date))
+    label = F.col("overall_sentiment")
     return (
-        annotated.groupBy()
-        .pivot("overall_sentiment", list(SENTIMENT_CLASSES))
-        .count()
+        annotated.agg(*[F.count(F.when(label == c, 1)).alias(c) for c in SENTIMENT_CLASSES])
         .select(
             F.format_string("%s(%s)", F.lit(date), F.lit(language)).alias(
                 "tweets_sentiment_id"
@@ -60,10 +64,7 @@ def extract_sentiment(
             F.month(d).cast("short").alias("month"),
             F.dayofmonth(d).cast("short").alias("day"),
             F.lit(language).alias("language"),
-            *[
-                F.coalesce(F.col(c), F.lit(0)).cast("int").alias(f"{c}_count")
-                for c in SENTIMENT_CLASSES
-            ],
+            *[F.col(c).cast("int").alias(f"{c}_count") for c in SENTIMENT_CLASSES],
         )
     )
 
@@ -95,12 +96,32 @@ def scrap_market_data(
     )
 
 
+def _append_gated(
+    spark: SparkSession, df: DataFrame, table: str, gates: list[tuple[str, Column]]
+) -> None:
+    """Append ``df`` to ``table``, then pass each ``(name, predicate)``
+    gate on the rows the insert itself counted: ``observe_metrics``
+    counts the matches of every predicate during the write, so a count
+    >= 1 passes with no extra job (the committed append holds those
+    rows). A count of 0 falls back to ``expect_nonempty`` over the whole
+    table, so rows an earlier run loaded still pass and a gate nothing
+    satisfies still raises ``DataQualityError``."""
+    counts = [F.count(F.when(p, 1)).alias(f"n{i}") for i, (_, p) in enumerate(gates)]
+    if counts:
+        df, seen = observe_metrics(df, *counts)
+    df.write.mode("append").insertInto(table)
+    observed = seen.get if counts else {}
+    for i, (name, predicate) in enumerate(gates):
+        if observed[f"n{i}"] < 1:
+            expect_nonempty(spark.table(table), predicate, name=name)
+
+
 def run_daily(
     spark: SparkSession,
     sf_dir: str,
     date: str,
     fetch: Callable[[str, str], list],
-    indices: Iterable[str] = ("NASDAQOMX/XQC",),
+    indices: Iterable[str] = DEFAULT_INDICES,
     language: str = "en",
     db_prefix: str = "",
 ) -> None:
@@ -110,23 +131,20 @@ def run_daily(
     within each side. ``db_prefix`` (e.g. ``"mydb."``) redirects the
     serving tables into an alternate database — the warehouse-relocation
     knob the roundtrip query uses to stay cwd-independent."""
-    sentiment = extract_sentiment(spark, sf_dir, date, language)
-    sentiment.write.mode("append").insertInto(f"{db_prefix}tweets_sentiment")
-    market = scrap_market_data(spark, fetch, indices, date)
-    market.write.mode("append").insertInto(f"{db_prefix}markets_value")
-
-    d = F.to_date(F.lit(date)).cast("timestamp")
-    expect_nonempty(
-        spark.table(f"{db_prefix}tweets_sentiment"),
-        F.col("date") == d,
-        name=f"tweets@{date}",
+    indices = tuple(indices)  # read twice: by the fetch and by the gates
+    on_date = F.col("date") == F.to_date(F.lit(date)).cast("timestamp")
+    _append_gated(
+        spark,
+        extract_sentiment(spark, sf_dir, date, language),
+        f"{db_prefix}tweets_sentiment",
+        [(f"tweets@{date}", on_date)],
     )
-    for index in indices:
-        expect_nonempty(
-            spark.table(f"{db_prefix}markets_value"),
-            (F.col("date") == d) & (F.col("index") == index),
-            name=f"market@{date}/{index}",
-        )
+    _append_gated(
+        spark,
+        scrap_market_data(spark, fetch, indices, date),
+        f"{db_prefix}markets_value",
+        [(f"market@{date}/{ix}", on_date & (F.col("index") == ix)) for ix in indices],
+    )
 
 
 def backfill(
@@ -136,15 +154,17 @@ def backfill(
     fetch: Callable[[str, str], list],
     reset: bool = True,
     db_prefix: str = "",
+    indices: Iterable[str] = DEFAULT_INDICES,
     **kwargs,
 ) -> None:
     """O2: the bounded backfill window (tweets_and_market.py:15-17,
     2020-01-21..31 in the reference) as an explicit date loop, optionally
     after an O6 reset."""
+    indices = tuple(indices)  # every date fetches and gates all of them
     if reset:
         reset_serving_tables(spark, db_prefix)
     for date in dates:
-        run_daily(spark, sf_dir, date, fetch, db_prefix=db_prefix, **kwargs)
+        run_daily(spark, sf_dir, date, fetch, indices, db_prefix=db_prefix, **kwargs)
 
 
 def flagship_join(spark: SparkSession) -> DataFrame:

@@ -1672,8 +1672,9 @@ def temporal_split_embargo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan/scale: the split label is a map-side expression; the test-user
     set is split-cardinality-bounded (distinct users in test) and
-    broadcasts back onto one aggregate — one scan, one user-distinct
-    shuffle, three output rows."""
+    broadcasts back onto a two-level aggregate — per (split, user) first,
+    then per split — so the distinct counts plan no Expand: one scan,
+    two shuffles, three output rows."""
     ev = load_table(spark, "events", sf_dir).select("user_id", F.to_date("ts").alias("day"))
     lab = ev.select(
         "user_id",
@@ -1688,18 +1689,16 @@ def temporal_split_embargo(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("_in_test", F.lit(1))
     )
-    return (
+    per_user = (
         lab.join(F.broadcast(test_users), "user_id", "left")
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.countDistinct(
-                F.when(F.col("_in_test").isNotNull(), F.col("user_id"))
-            )
-            .cast("bigint")
-            .alias("n_users_also_in_test"),
-        )
+        .groupBy("split", "user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.max("_in_test").alias("t"))
+    )
+    # count("user_id"), not count(1): a NULL user is no distinct user
+    return per_user.groupBy("split").agg(
+        F.sum("n").alias("n_events"),
+        F.count("user_id").alias("n_users"),
+        F.count("t").alias("n_users_also_in_test"),
     )
 
 
@@ -1748,7 +1747,9 @@ def stratified_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group state, no shuffle to assign); the audit aggregate
     shuffles once on the K-bounded fold key with map-side partials;
     distinct users per fold is the only user-cardinality term, exactly
-    the cost any CV-split audit pays."""
+    the cost any CV-split audit pays. Event types are a small fixed
+    vocabulary, so their per-fold set is collected whole and sized:
+    with one exact distinct left, the plan needs no Expand."""
     ev = load_table(spark, "events", sf_dir).select("user_id", "event_type")
     key = f"'{KFOLD_SALT}' || CAST(user_id AS STRING)"
     lab = ev.withColumn(
@@ -1761,7 +1762,7 @@ def stratified_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.countDistinct("user_id").cast("bigint").alias("n_users"),
             F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_type").cast("bigint").alias("n_types"),
+            F.size(F.collect_set("event_type")).cast("bigint").alias("n_types"),
         )
         .select(
             "fold",

@@ -90,7 +90,7 @@ def serving_tables_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7+S10+S11+O2+O5+O6 executed under the value hash: DROP+CREATE
     the two serving tables (reset_tables.py:20-38), run the 3-day
     backfill window through the real ``run_daily`` path — sentiment
-    pivot insertInto tweets_sentiment, connector batch insertInto
+    histogram insertInto tweets_sentiment, connector batch insertInto
     markets_value, post-load quality gates — then read BOTH tables back
     and join them per execution date. A hash match certifies the DDL
     schemas, the positional INSERT contract, every derived column

@@ -146,3 +146,71 @@ def test_observe_metrics_free_telemetry(spark):
     observed2.write.format("noop").mode("overwrite").save()
     with pytest.raises(DataQualityError, match="n_rows"):
         expect_observed(obs2, lambda m: m["n_rows"] > 10**6, name="volume-floor")
+
+
+INDICES = ("NASDAQOMX/XQC", "NASDAQOMX/NQEU")
+
+
+def fetch_without(missing: str):
+    """fake_quandl, except that ``missing`` returns no point at all."""
+
+    def fetch(index: str, date: str) -> list:
+        return [] if index == missing else fake_quandl(index, date)
+
+    return fetch
+
+
+@pytest.fixture
+def fallback_scans(monkeypatch):
+    """Names of the gates that fell back to scanning the table, recorded
+    by patching the module attribute ``run_daily`` calls, as perfbench's
+    traced run does."""
+    from dend_covid19_spark import pipeline
+
+    names: list[str] = []
+    real = pipeline.expect_nonempty
+
+    def recorded(df, predicate=None, name="check"):
+        names.append(name)
+        return real(df, predicate, name=name)
+
+    monkeypatch.setattr(pipeline, "expect_nonempty", recorded)
+    return names
+
+
+def test_backfill_fetches_one_shot_indices_for_every_date(warehouse):
+    spark = warehouse
+    backfill(spark, SF_DIR, ["2020-01-21", "2020-01-22"], fake_quandl, indices=iter(INDICES))
+    assert spark.table("markets_value").count() == 2 * len(INDICES)
+
+
+@pytest.mark.parametrize("wrap", [tuple, iter])
+def test_missing_market_point_fails_its_gate(warehouse, wrap):
+    spark = warehouse
+    reset_serving_tables(spark)
+    date, missing = "2020-01-24", INDICES[1]
+    with pytest.raises(DataQualityError, match=f"market@{date}/{missing}"):
+        run_daily(spark, SF_DIR, date, fetch_without(missing), indices=wrap(INDICES))
+
+
+def test_gates_scan_the_table_only_on_a_zero_count(warehouse, fallback_scans):
+    """A load that carries its rows passes every gate on the counts its
+    own insert observed. A rerun that loads nothing for one index still
+    passes on the row an earlier run loaded, through the fallback scan."""
+    spark = warehouse
+    reset_serving_tables(spark)
+    date = "2020-01-25"
+    run_daily(spark, SF_DIR, date, fake_quandl, indices=INDICES)
+    assert fallback_scans == []
+    run_daily(spark, SF_DIR, date, fetch_without(INDICES[1]), indices=INDICES)
+    assert fallback_scans == [f"market@{date}/{INDICES[1]}"]
+    assert spark.table("markets_value").count() == 2 * len(INDICES) - 1
+
+
+def test_no_indices_loads_sentiment_only(warehouse, fallback_scans):
+    spark = warehouse
+    reset_serving_tables(spark)
+    run_daily(spark, SF_DIR, "2020-01-26", fake_quandl, indices=())
+    assert spark.table("tweets_sentiment").count() == 1
+    assert spark.table("markets_value").count() == 0
+    assert fallback_scans == []

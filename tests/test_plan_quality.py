@@ -836,3 +836,33 @@ def test_drains_go_through_drain():
     for name in ("spark.sql.shuffle.partitions", "_stream_width"):
         assert name not in ingest.read_text(), name
     assert _owners(ingest, "os.utime(") == ["_stage_chunks"]
+
+
+def test_daily_date_runs_three_jobs(spark, tmp_path):
+    """One execution date of the reference DAG is three jobs: the
+    sentiment summary's one shuffle and its insert (two), and the
+    market insert (one). Its quality gates ride those inserts; a gate
+    that scanned the serving table would add two jobs, and the old
+    two-shuffle pivot one more. The warm-up date keeps first-run work
+    out of the count."""
+    from dend_covid19_spark.pipeline import backfill, run_daily
+
+    db = "plan_quality_serving"
+    indices = ("A", "B", "C")
+
+    def fetch(index, date):
+        return [(index, 1.0)]
+
+    sc = spark.sparkContext
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{tmp_path}'")
+    try:
+        backfill(spark, SF_DIR, ["2020-01-21"], fetch, db_prefix=f"{db}.", indices=indices)
+        sc.setJobGroup("daily_date", "one run_daily date")
+        try:
+            run_daily(spark, SF_DIR, "2020-01-22", fetch, indices, db_prefix=f"{db}.")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("daily_date")
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    assert len(jobs) <= 3, f"{len(jobs)} jobs for one date"

@@ -84,6 +84,27 @@ def test_decontaminate_plan_has_no_expand(spark, name):
     assert dict(df.dtypes) == {"doc_id": "bigint", "n_overlap_ngrams": "bigint", "n_bench_docs": "bigint"}
 
 
+@pytest.mark.parametrize(
+    "name, counts",
+    [
+        ("table_stats_orders", ["n_rows", "ndv_custkey", "ndv_status"]),
+        ("temporal_split_embargo", ["n_events", "n_users", "n_users_also_in_test"]),
+        ("stratified_group_kfold", ["n_users", "n_events", "n_types"]),
+    ],
+)
+def test_distinct_counts_plan_has_no_expand(spark, name, counts):
+    """These rows count several distinct columns in one output row: one
+    exact distinct plus ``size(collect_set(...))`` over a bounded
+    domain, or a two-level aggregate. Neither plans an Expand, whose
+    projection order changes from one process to the next."""
+    from dend_covid19_spark.plans import all_queries
+
+    df = all_queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Expand" not in plan, f"multi-distinct Expand path resurfaced\n{plan}"
+    assert all(dict(df.dtypes)[c] == "bigint" for c in counts), df.dtypes
+
+
 def test_hourly_approx_matches_single_agg_form(spark):
     """The split form is a plan restructuring only: values must equal
     the original single-agg form row-for-row."""
