@@ -295,16 +295,20 @@ def broadcast_gate(sf_dir: str, table: str, nodes: DataFrame) -> bool:
     )
 
 
-def share_width(spark: SparkSession, sf_dir: str, table: str) -> int:
-    """Shuffle width of a cut over ``table``: ceil(source bytes /
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``), clamped to
-    [1, ``spark.sql.shuffle.partitions``]. That is the partition count
-    AQE would coalesce a shuffle of the source's bytes to, fixed up
-    front; below the advisory size (64 MB by default) it is 1."""
+def _bytes_width(spark: SparkSession, nbytes: int) -> int:
+    """Width of ``nbytes`` of input, for cuts and drains alike:
+    ceil(nbytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
+    clamped to [1, ``spark.sql.shuffle.partitions``], the partition count
+    AQE would coalesce them to; 1 below the advisory size (64 MB)."""
     to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
     advisory = to_bytes(spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    width = -(-_table_bytes(sf_dir, table) // advisory)
+    width = -(-nbytes // advisory)
     return max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")), width))
+
+
+def share_width(spark: SparkSession, sf_dir: str, table: str) -> int:
+    """Shuffle width of a cut over ``table``: its source's bytes' width."""
+    return _bytes_width(spark, _table_bytes(sf_dir, table))
 
 
 @contextmanager

@@ -464,7 +464,7 @@ def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type")
     )
     writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
-    drain(spark, writer, os.path.join(scratch, "ckpt"))
+    drain(spark, writer, os.path.join(scratch, "ckpt"), src)
     return (
         spark.table(sink)
         .groupBy("event_type")
@@ -515,7 +515,7 @@ def streaming_enrich_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "c_mktsegment")
     )
     writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
-    drain(spark, writer, os.path.join(scratch, "ckpt"))
+    drain(spark, writer, os.path.join(scratch, "ckpt"), src)
     return (
         spark.table(sink)
         .groupBy("c_mktsegment")
@@ -670,7 +670,7 @@ def streaming_session_window_executed(spark: SparkSession, sf_dir: str) -> DataF
         )
     )
     writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
-    drain(spark, writer, os.path.join(scratch, "ckpt"))
+    drain(spark, writer, os.path.join(scratch, "ckpt"), src)
     return spark.table(sink).select("user_id", "start_us", "end_us", "n_events")
 
 
@@ -717,7 +717,7 @@ def streaming_interval_join_executed(spark: SparkSession, sf_dir: str) -> DataFr
     sink = os.path.basename(scratch)
     events = read_events_stream(spark, src)
     writer = attribution_stream(events).writeStream.format("memory").queryName(sink)
-    drain(spark, writer.outputMode("append"), os.path.join(scratch, "ckpt"))
+    drain(spark, writer.outputMode("append"), os.path.join(scratch, "ckpt"), src)
     return spark.table(sink).select(
         "view_id", "purchase_id", "user_id", "seconds_to_purchase"
     )
@@ -782,7 +782,7 @@ def streaming_join_state_eviction_executed(spark: SparkSession, sf_dir: str) -> 
     sink = os.path.basename(scratch)
     events = read_events_stream(spark, src, max_files_per_trigger=1)
     writer = attribution_stream(events).writeStream.format("memory").queryName(sink)
-    q = drain(spark, writer.outputMode("append"), os.path.join(scratch, "ckpt"))
+    q = drain(spark, writer.outputMode("append"), os.path.join(scratch, "ckpt"), src)
     _STREAM_EVICT_METRICS[sf_dir] = [
         {
             "batch": p["batchId"],
@@ -878,7 +878,7 @@ def streaming_late_drop_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.to_date("w.start").alias("day"), "n_events", "value_sum")
     )
     writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
-    drain(spark, writer, os.path.join(scratch, "ckpt"))
+    drain(spark, writer, os.path.join(scratch, "ckpt"), src)
     return spark.table(sink).select("day", "n_events", "value_sum")
 
 
@@ -919,7 +919,7 @@ def _drain_mode(
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     writer = out.writeStream.format("memory").queryName(sink).outputMode(mode)
-    drain(spark, writer, os.path.join(scratch, "ckpt"))
+    drain(spark, writer, os.path.join(scratch, "ckpt"), src)
     return spark.table(sink).select("event_type", "n_events")
 
 
@@ -1107,7 +1107,7 @@ def streaming_restart_resume_executed(spark: SparkSession, sf_dir: str) -> DataF
             "event_id", "user_id", "event_type", "value", "ts"
         )
         writer = out.writeStream.format("parquet").option("path", sink)
-        drain(spark, writer, os.path.join(scratch, "ckpt"))
+        drain(spark, writer, os.path.join(scratch, "ckpt"), src)
 
     _stage_chunks([half1], scratch, src)
     _drain()

@@ -13,12 +13,15 @@ lateness); swap the source for Kafka without touching the aggregation.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import EVENTS_SCHEMA_NS_LONG, SCHEMAS, events_ts_is_nanos
-from ..session import env_positive_int, session_conf
+from ..catalog import _bytes_width, _part_files
+from ..session import session_conf
 
 
 def read_events_stream(
@@ -55,30 +58,31 @@ def read_events_stream(
     return reader.schema(SCHEMAS["events"]).parquet(src_dir)
 
 
-def stream_width() -> str:
-    """State/shuffle width of every drain. A state store freezes its
-    partition count at checkpoint creation, and each state partition
-    pays a per-batch floor (one task and one state-store delta file)
-    regardless of its rows, so the width tracks state volume, not the
-    session's batch-shuffle default. This package's drains keep KB-scale
-    state, and 8 is the measured local setting. A cluster run sizes it
-    from state bytes through ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``; a
-    value that is not a positive integer falls back to 8."""
-    return str(env_positive_int("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8))
+def stream_width(spark: SparkSession, src_dir: str) -> str:
+    """State/shuffle width of a drain over ``src_dir``: the lineage-cut
+    rule ``catalog._bytes_width`` over the bytes under the dir, read at
+    each drain start since a source grows between drains (a missing or
+    empty dir gives 1). Each state partition pays a per-batch floor (a
+    task, a state-store delta file, a Python runner) whatever its rows."""
+    try:
+        nbytes = sum(os.path.getsize(p) for p in _part_files(src_dir))
+    except FileNotFoundError:
+        nbytes = 0
+    return str(_bytes_width(spark, nbytes))
 
 
 def drain(
-    spark: SparkSession, writer: DataStreamWriter, checkpoint_dir: str
+    spark: SparkSession, writer: DataStreamWriter, checkpoint_dir: str, src_dir: str
 ) -> StreamingQuery:
-    """Run ``writer`` (a sink spelled by the caller) as one availableNow
-    catch-up on ``checkpoint_dir`` and block until it ends. The session
-    runs at ``stream_width()`` from the start through the last batch,
-    then gets its own width back, also when the stream fails
-    (``awaitTermination`` raises ``StreamingQueryException``). The scope
-    holds session_conf's lock for the whole drain, so a foreachBatch
-    callback must not enter session_conf. Returns the finished query,
-    whose ``recentProgress`` holds its batches."""
-    with session_conf(spark, {"spark.sql.shuffle.partitions": stream_width()}):
+    """Run ``writer`` (a sink over a stream of ``src_dir``) as one
+    availableNow catch-up on ``checkpoint_dir`` and block until it ends,
+    with the session at ``stream_width`` throughout; its own width comes
+    back also when the stream fails (``StreamingQueryException``). A
+    resumed checkpoint keeps its first width: Spark restores it from the
+    offset log. The scope holds session_conf's lock, so a foreachBatch
+    callback must not enter session_conf. Returns the finished query."""
+    width = stream_width(spark, src_dir)
+    with session_conf(spark, {"spark.sql.shuffle.partitions": width}):
         q = (
             writer.option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
@@ -134,7 +138,7 @@ def run_dedup_available_now(
     events = read_events_stream(spark, src_dir)
     out = dedup_events_stream(events).select("event_id", "user_id", "event_type")
     writer = out.writeStream.format("memory").queryName(sink_table)
-    drain(spark, writer.outputMode("append"), checkpoint_dir)
+    drain(spark, writer.outputMode("append"), checkpoint_dir, src_dir)
 
 
 def enrich_events_stream(events: DataFrame, customers: DataFrame) -> DataFrame:
@@ -157,8 +161,8 @@ def run_enriched_available_now(
     sink_table: str = "enriched_events_stream",
 ) -> None:
     events = read_events_stream(spark, src_dir)
-    writer = enrich_events_stream(events, customers).writeStream.format("memory")
-    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
+    writer = enrich_events_stream(events, customers).writeStream.queryName(sink_table)
+    drain(spark, writer.format("memory").outputMode("append"), checkpoint_dir, src_dir)
 
 
 def run_available_now(
@@ -171,8 +175,8 @@ def run_available_now(
     catch-up (the streaming equivalent of an Airflow backfill), into an
     in-memory sink table, then stop. Blocks until complete."""
     events = read_events_stream(spark, src_dir)
-    writer = daily_counts_stream(events).writeStream.format("memory")
-    drain(spark, writer.queryName(sink_table).outputMode("complete"), checkpoint_dir)
+    writer = daily_counts_stream(events).writeStream.outputMode("complete")
+    drain(spark, writer.format("memory").queryName(sink_table), checkpoint_dir, src_dir)
 
 
 def sessionize_stream(
@@ -213,8 +217,8 @@ def run_sessionize_available_now(
     only watermark-closed sessions emit — with availableNow over a finite
     source, that is every session)."""
     events = read_events_stream(spark, src_dir)
-    writer = sessionize_stream(events).writeStream.format("memory")
-    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
+    writer = sessionize_stream(events).writeStream.queryName(sink_table)
+    drain(spark, writer.format("memory").outputMode("append"), checkpoint_dir, src_dir)
 
 
 def attribution_stream(events: DataFrame, horizon: str = "1 hour") -> DataFrame:
@@ -268,8 +272,8 @@ def run_attribution_available_now(
     sink_table: str = "attribution_stream",
 ) -> None:
     events = read_events_stream(spark, src_dir)
-    writer = attribution_stream(events).writeStream.format("memory")
-    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
+    writer = attribution_stream(events).writeStream.queryName(sink_table)
+    drain(spark, writer.format("memory").outputMode("append"), checkpoint_dir, src_dir)
 
 
 def run_dedup_to_parquet(
@@ -292,8 +296,8 @@ def run_dedup_to_parquet(
     events = read_events_stream(spark, src_dir)
     deduped = dedup_events_stream(events).withColumn("day", F.to_date("ts"))
     out = deduped.select("event_id", "user_id", "event_type", "value", "day")
-    writer = out.writeStream.format("parquet").option("path", out_dir)
-    drain(spark, writer.partitionBy("day").outputMode("append"), checkpoint_dir)
+    writer = out.writeStream.format("parquet").option("path", out_dir).partitionBy("day")
+    drain(spark, writer.outputMode("append"), checkpoint_dir, src_dir)
 
 
 def run_partitioned_sink_with_compaction(
@@ -348,7 +352,7 @@ def run_partitioned_sink_with_compaction(
             batch_df.unpersist()
 
     writer = with_day.writeStream.foreachBatch(_sink)
-    drain(spark, writer.outputMode("append"), checkpoint_dir)
+    drain(spark, writer.outputMode("append"), checkpoint_dir, src_dir)
 
 
 def run_manifest_sink_with_compaction(
@@ -458,7 +462,7 @@ def run_manifest_sink_with_compaction(
             batch_df.unpersist()
 
     writer = with_day.writeStream.foreachBatch(_sink)
-    drain(spark, writer.outputMode("append"), checkpoint_dir)
+    drain(spark, writer.outputMode("append"), checkpoint_dir, src_dir)
 
 
 def _lh_current_version(root: str) -> int:
@@ -474,7 +478,6 @@ def _latest_snapshot(target_dir: str) -> str | None:
     run_upsert_foreach_batch — state must come from the filesystem, not
     a closure, to survive a driver restart."""
     import glob
-    import os
     import re
 
     best, best_id = None, -1
@@ -572,7 +575,7 @@ def run_upsert_foreach_batch(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     )
     writer = events.writeStream.foreachBatch(apply_batch)
-    drain(spark, writer.outputMode("update"), checkpoint_dir)
+    drain(spark, writer.outputMode("update"), checkpoint_dir, src_dir)
     assert state["path"] is not None, (
         "no micro-batch was processed and no prior committed snapshot exists"
     )
@@ -608,14 +611,10 @@ def run_conditional_upsert_available_now(
     snapshot rewrite per batch is the no-Delta cost — with a table
     format the same merge is a metadata-transactional MERGE INTO.
     Returns the final snapshot path."""
-    import os as _os
-
     from ..plans.cdc import _merge_total_order, merge_upsert_conditional
 
     prior = _latest_snapshot(target_dir)
-    base = (
-        int(_os.path.basename(prior)[1:]) + 1 if prior is not None else 0
-    )
+    base = int(os.path.basename(prior)[1:]) + 1 if prior is not None else 0
     state: dict[str, str | None] = {"path": prior}
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -650,7 +649,7 @@ def run_conditional_upsert_available_now(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     )
     writer = events.writeStream.foreachBatch(apply_batch)
-    drain(spark, writer.outputMode("update"), checkpoint_dir)
+    drain(spark, writer.outputMode("update"), checkpoint_dir, src_dir)
     assert state["path"] is not None, (
         "no micro-batch was processed and no prior committed snapshot exists"
     )
@@ -672,10 +671,8 @@ def apply_counts_batch(
     arithmetic; that contrast is the point of having both sinks.
 
     Returns the path of v{batch_id} (written or already committed)."""
-    import os as _os
-
     new_path = f"{target_dir}/v{batch_id}"
-    if _os.path.exists(_os.path.join(new_path, "_SUCCESS")):
+    if os.path.exists(os.path.join(new_path, "_SUCCESS")):
         return new_path  # replay of a committed batch: already applied
     s = batch_df.sparkSession
     delta = batch_df.groupBy(
@@ -720,6 +717,6 @@ def run_counts_merge_available_now(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     )
     writer = events.writeStream.foreachBatch(apply_batch)
-    drain(spark, writer.outputMode("update"), checkpoint_dir)
+    drain(spark, writer.outputMode("update"), checkpoint_dir, src_dir)
     assert state["path"] is not None, "no micro-batch was processed"
     return state["path"]

@@ -92,8 +92,8 @@ def run_sessionize_available_now(
     spark, src_dir: str, checkpoint_dir: str, sink_table: str = "sessions_stream"
 ) -> None:
     events = read_events_stream(spark, src_dir).select("user_id", "ts", "event_id")
-    writer = sessionize_stateful(events).writeStream.format("memory")
-    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
+    writer = sessionize_stateful(events).writeStream.queryName(sink_table)
+    drain(spark, writer.format("memory").outputMode("append"), checkpoint_dir, src_dir)
 
 
 def run_sessionize_to_parquet(
@@ -106,8 +106,8 @@ def run_sessionize_to_parquet(
     used by the test harness resets per run; the file sink is the shape
     that survives restarts)."""
     events = read_events_stream(spark, src_dir).select("user_id", "ts", "event_id")
-    writer = sessionize_stateful(events).writeStream.format("parquet")
-    drain(spark, writer.option("path", out_dir).outputMode("append"), checkpoint_dir)
+    writer = sessionize_stateful(events).writeStream.option("path", out_dir)
+    drain(spark, writer.format("parquet").outputMode("append"), checkpoint_dir, src_dir)
 
 
 # --- ordered-sequence funnel as a custom stateful operator (round 13) -------
@@ -192,5 +192,5 @@ def run_funnel_available_now(
     events = read_events_stream(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     ).select("user_id", "ts", "event_id", "event_type")
-    writer = funnel_stateful(events, stages, window_us).writeStream.format("memory")
-    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
+    writer = funnel_stateful(events, stages, window_us).writeStream.queryName(sink_table)
+    drain(spark, writer.format("memory").outputMode("append"), checkpoint_dir, src_dir)

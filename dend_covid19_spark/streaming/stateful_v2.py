@@ -134,5 +134,5 @@ def run_sessionize_available_now(
     spark, src_dir: str, checkpoint_dir: str, sink_table: str = "sessions_tws"
 ) -> None:
     events = read_events_stream(spark, src_dir).select("user_id", "ts", "event_id")
-    writer = sessionize_tws(events).writeStream.format("memory")
-    drain(spark, writer.queryName(sink_table).outputMode("append"), checkpoint_dir)
+    writer = sessionize_tws(events).writeStream.queryName(sink_table)
+    drain(spark, writer.format("memory").outputMode("append"), checkpoint_dir, src_dir)

@@ -83,7 +83,7 @@ def test_fuzz_late_drop_choreography(spark, tmp_path, seed):
         .select(F.to_date("w.start").alias("day"), "n_events", "value_sum")
     )
     writer = out.writeStream.format("memory").queryName(sink).outputMode("append")
-    drain(spark, writer, str(tmp_path / "ckpt"))
+    drain(spark, writer, str(tmp_path / "ckpt"), src)
 
     got = {
         (r.day, r.n_events, r.value_sum) for r in spark.table(sink).collect()
@@ -150,7 +150,7 @@ def test_fuzz_update_and_complete_modes(spark, tmp_path, seed):
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
         writer = out.writeStream.format("memory").queryName(sink).outputMode(mode)
-        drain(spark, writer, str(tmp_path / f"ckpt_{mode}"))
+        drain(spark, writer, str(tmp_path / f"ckpt_{mode}"), src)
         got = sorted(
             (r.event_type, r.n_events) for r in spark.table(sink).collect()
         )

@@ -824,18 +824,32 @@ def test_drains_go_through_drain():
     every drain source file is written by ``ingest._stage_chunks``,
     which owns the ts unit and the admission order. A trigger, a width
     scope or an mtime pin written anywhere else would bring back the
-    hand-copied drains and stagers those two replaced."""
+    hand-copied drains and stagers those two replaced. Widths come from
+    bytes by one rule, ``catalog._bytes_width``: only it reads the
+    advisory size and the shuffle width, only the session, the cut
+    scope and the drain set that width, and no env knob fixes it."""
     root = pathlib.Path(dend_covid19_spark.__file__).parent
-    triggers = sorted(
-        f"{path.relative_to(root)}: {owner}"
-        for path in root.rglob("*.py")
-        for owner in _owners(path, "trigger(")
-    )
-    assert triggers == ["streaming/daily.py: drain"], triggers
+    files = list(root.rglob("*.py"))
+
+    def owners(needle: str) -> list[str]:
+        return sorted(
+            f"{path.relative_to(root)}: {owner}"
+            for path in files
+            for owner in _owners(path, needle)
+        )
+
+    assert owners("trigger(") == ["streaming/daily.py: drain"]
     ingest = root / "plans" / "ingest.py"
-    for name in ("spark.sql.shuffle.partitions", "_stream_width"):
-        assert name not in ingest.read_text(), name
     assert _owners(ingest, "os.utime(") == ["_stage_chunks"]
+    assert owners("SPARK_GRAFT_STREAM_STATE_PARTITIONS") == []
+    advisory = '"spark.sql.adaptive.advisoryPartitionSizeInBytes"'
+    assert owners(f"get({advisory}") == ["catalog.py: _bytes_width"]
+    assert owners('"spark.sql.shuffle.partitions"') == [
+        "catalog.py: _bytes_width",
+        "catalog.py: share_scope",
+        "session.py: get_spark",
+        "streaming/daily.py: drain",
+    ]
 
 
 def test_daily_date_runs_three_jobs(spark, tmp_path):
