@@ -234,7 +234,7 @@ def widen_scan(df: DataFrame) -> DataFrame:
 GRAPH_BROADCAST_MAX_NODES = 50_000_000
 GRAPH_SHUFFLE_PARTS = 32
 
-CKPT_SOURCE_MAX_BYTES = 2 * 1024**3  # share_if_bounded's default gate
+CKPT_SOURCE_MAX_BYTES = 2 * 1024**3  # share_if_bounded's source gate
 
 
 def _part_files(path: str) -> list[str]:
@@ -361,17 +361,10 @@ def share_if_bounded(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     a small multiple of the source's, and ``localCheckpoint`` keeps them
     in the executor block store (disk-spillable but not fault-tolerant:
     losing an executor fails the job instead of recomputing). So above
-    ``SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES`` of source (default 2 GiB; a
-    malformed value falls back to the default) each consumer re-plans
-    the stream instead. An unreadable source counts as 0 bytes. Results
-    are identical either way; only the plan differs."""
-    try:
-        limit = int(
-            os.environ.get("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", CKPT_SOURCE_MAX_BYTES)
-        )
-    except ValueError:
-        limit = CKPT_SOURCE_MAX_BYTES
-    if _table_bytes(sf_dir, table) > limit:
+    ``CKPT_SOURCE_MAX_BYTES`` of source each consumer re-plans the
+    stream instead. An unreadable source counts as 0 bytes. Results are
+    identical either way; only the plan differs."""
+    if _table_bytes(sf_dir, table) > CKPT_SOURCE_MAX_BYTES:
         return df
     return share(df, sf_dir, table)
 

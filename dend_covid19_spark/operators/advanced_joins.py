@@ -12,42 +12,18 @@ Scale notes:
     semantics, one sort per key, no pair materialization.
   - range join: a point-in-interval join against a *bucketable* interval
     table becomes a pure equi-join on the bucket id — O(n) instead of a
-    nested-loop BETWEEN. The generic BETWEEN fallback stays available
-    via crossJoin for tiny interval sets.
+    nested-loop BETWEEN.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import SparkSession
 
 from ..catalog import load_table
 from ..plans.registry import query
 from ..sources.readers import from_rows
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    tie_break: str,
-) -> DataFrame:
-    """Generic as-of join: for each left row, the latest right row with
-    right_time <= left_time for the same ``on`` key (ties on right_time
-    broken by descending ``tie_break`` for reproducibility). Left rows
-    with no match are kept with NULL right columns."""
-    j = left.join(right, on=on, how="left").where(
-        F.col(right_time).isNull() | (F.col(right_time) <= F.col(left_time))
-    )
-    w = Window.partitionBy(*left.columns).orderBy(
-        F.col(right_time).desc_nulls_last(), F.col(tie_break).desc_nulls_last()
-    )
-    return j.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop(
-        "__rn"
-    )
 
 
 _ASOF_ORACLE = """
@@ -195,15 +171,6 @@ def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_value"),
         )
     )
-
-
-def range_join_generic(
-    points: DataFrame, intervals: DataFrame, point: Column, lo: Column, hi: Column
-) -> DataFrame:
-    """Generic BETWEEN range join (broadcast nested loop) for interval
-    sets too irregular to bucket — only safe when ``intervals`` is small
-    enough to broadcast."""
-    return points.join(F.broadcast(intervals), (point >= lo) & (point < hi))
 
 
 # Fuzzy-join blocking constants. LEV_MAX is the match threshold;

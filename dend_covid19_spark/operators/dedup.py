@@ -148,6 +148,49 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _duck_minhash_cte = duck_minhash_cte
 
 
+# the published (8 bands x 4 rows) banding of the K=32 signature
+_BAND_STRUCTS = H.spark_band_structs("sig")
+
+
+def _lsh_bands(
+    sigs: DataFrame, sf_dir: str, band_expr: str = _BAND_STRUCTS
+) -> DataFrame:
+    """(doc_id, band_id, band_key) rows of the banded signatures, behind
+    one lineage cut: every consumer of the band table (both self-join
+    sides, or a probe and its index) reads the md5 band-key explode once
+    (interleaved A/B at sf0.1 on dedup_ngram_jaccard: wins every
+    adjacent pair, 3.81->3.46, 3.91->2.66, 1.54->0.69, 1.50->0.83 s,
+    output identical)."""
+    bands = sigs.select(
+        "doc_id", F.explode(F.expr(band_expr)).alias("band")
+    ).select(
+        "doc_id",
+        F.col("band.band_id").alias("band_id"),
+        F.col("band.band_key").alias("band_key"),
+    )
+    return share(bands, sf_dir, "documents")
+
+
+def _lsh_pairs(
+    sigs: DataFrame, sf_dir: str, band_expr: str = _BAND_STRUCTS
+) -> DataFrame:
+    """Distinct LSH candidate pairs (doc_a < doc_b): documents sharing
+    any (band_id, band_key) bucket. The self-join key is the bucket, so
+    candidates stay data-size-linear instead of an O(n^2) cross join."""
+    bands = _lsh_bands(sigs, sf_dir, band_expr)
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
 _MINHASH_EST = (
     "list_sum(list_transform(range(1, {k} + 1), "
     "i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END)) / {k}.0"
@@ -176,25 +219,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact in binary), so the threshold compare is engine-stable.
     """
     sigs = _minhash_sigs(spark, sf_dir).select("doc_id", "sig")
-    bands = sigs.select(
-        "doc_id",
-        F.explode(F.expr(H.spark_band_structs("sig"))).alias("band"),
-    ).select("doc_id", F.col("band.band_id").alias("band_id"), F.col("band.band_key").alias("band_key"))
-    # both self-join sides consume the band table; the lineage cut runs
-    # the md5 band-key explode once (interleaved A/B on the identical
-    # jaccard shape: wins every adjacent pair, output equal)
-    bands = share(bands, sf_dir, "documents")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _lsh_pairs(sigs, sf_dir)
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     est = (
@@ -257,16 +282,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch recompute's subset
     (tests/test_components.py::test_incremental_delta_is_has_new_subset_of_full_lsh)."""
     sigs = _minhash_sigs(spark, sf_dir).select("doc_id", "sig")
-    bands = sigs.select(
-        "doc_id", F.explode(F.expr(H.spark_band_structs("sig"))).alias("band")
-    ).select(
-        "doc_id",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_key").alias("band_key"),
-    )
-    # delta probe and corpus side both derive from the band table; the
-    # lineage cut runs the md5 band-key explode once
-    bands = share(bands, sf_dir, "documents")
+    bands = _lsh_bands(sigs, sf_dir)
     new_bands = bands.where(F.col("doc_id") % DELTA_MOD == 0)
     n, a = F.broadcast(new_bands).alias("n"), bands.alias("a")
     cand = (
@@ -327,25 +343,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (find -> verify, the standard near-dup pipeline). Exact set Jaccard is
     a ratio of small ints — bit-identical across engines."""
     sigs = _minhash_sigs(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id", F.explode(F.expr(H.spark_band_structs("sig"))).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_key")
-    # both self-join sides consume the band table; the lineage cut runs
-    # the md5 band-key explode once (interleaved A/B at sf0.1: wins
-    # every adjacent pair — 3.81->3.46, 3.91->2.66, 1.54->0.69,
-    # 1.50->0.83 s — output identical)
-    bands = share(bands, sf_dir, "documents")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _lsh_pairs(sigs, sf_dir)
     sh_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sh_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     jac = F.expr(
@@ -387,22 +385,7 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear scale shape. Exact set ratio of small ints — engine-stable.
     """
     sigs = _minhash_sigs(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id", F.explode(F.expr(H.spark_band_structs("sig"))).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_key")
-    # lineage cut: md5 band-key explode once (see dedup_ngram_jaccard)
-    bands = share(bands, sf_dir, "documents")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _lsh_pairs(sigs, sf_dir)
     sh_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sh_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     containment = F.expr(
@@ -795,17 +778,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the batch; the corpus side is the incrementally-maintained
     signature table — nothing data-sized recomputes per day."""
     sigs = _minhash_sigs(spark, sf_dir).select("doc_id", "sig")
-    bands = sigs.select(
-        "doc_id",
-        F.explode(F.expr(H.spark_band_structs("sig"))).alias("band"),
-    ).select(
-        "doc_id",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_key").alias("band_key"),
-    )
-    # batch probe and corpus side both derive from the band table; the
-    # lineage cut runs the md5 band-key explode once
-    bands = share(bands, sf_dir, "documents")
+    bands = _lsh_bands(sigs, sf_dir)
     batch = bands.where(F.col("doc_id") % INCR_BATCH_MOD == 0)
     corpus = bands.where(F.col("doc_id") % INCR_BATCH_MOD != 0)
     a, b = batch.alias("a"), corpus.alias("b")
@@ -1415,29 +1388,7 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"j -> struct(j AS band_id, "
             f"md5(concat_ws('-', slice(sig, j * {r} + 1, {r}))) AS band_key))"
         )
-        bands = sigs.select(
-            "doc_id", F.explode(F.expr(band_expr)).alias("band")
-        ).select(
-            "doc_id",
-            F.col("band.band_id").alias("band_id"),
-            F.col("band.band_key").alias("band_key"),
-        )
-        # per config, both self-join sides consume this band table; the
-        # lineage cut runs each config's md5 band-key explode once
-        bands = share(bands, sf_dir, "documents")
-        x, y = bands.alias("a"), bands.alias("b")
-        cand = (
-            x.join(
-                y,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-            .distinct()
-        )
+        cand = _lsh_pairs(sigs, sf_dir, band_expr)
         per_config.append(
             cand.join(truth, ["doc_a", "doc_b"], "left").agg(
                 F.lit(b).cast("int").alias("n_bands"),
@@ -1507,28 +1458,7 @@ def dedup_crossmodal_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality, never an all-pairs vector pass. Per-pair cosine is one
     codegen zip_with fold over the (bounded, pinned-dim) vectors."""
     sigs = _minhash_sigs(spark, sf_dir).select("doc_id", "sig")
-    bands = sigs.select(
-        "doc_id", F.explode(F.expr(H.spark_band_structs("sig"))).alias("band")
-    ).select(
-        "doc_id",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_key").alias("band_key"),
-    )
-    # lineage cut: md5 band-key explode once (see dedup_ngram_jaccard)
-    bands = share(bands, sf_dir, "documents")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = _lsh_pairs(sigs, sf_dir)
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     emb = load_table(spark, "embeddings", sf_dir).select(

@@ -22,6 +22,8 @@ fraction to ~1/2^bits and is the shape an IVF index generalizes.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -469,15 +471,35 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_RECALL_NPROBE = 6
 
 
+def _ivf_cents(spark: SparkSession, cents_rows: list) -> DataFrame:
+    """The trained codebook as one broadcastable ``cents`` row."""
+    return spark.createDataFrame(
+        [([(int(cid), [float(x) for x in vec]) for cid, vec in cents_rows],)],
+        "cents array<struct<cid:int,cvec:array<double>>>",
+    )
+
+
+# A query's probe list over a row holding ``qv`` and ``cents``: the
+# IVF_RECALL_NPROBE nearest centroids by the rounded L2 the assignment
+# uses (struct sort = (d, cid) ascending, so ties go to the smaller
+# cid); _DUCK_PROBE_D2 is the same distance in the oracles.
+_IVF_PROBE = (
+    "transform(slice(array_sort(transform(cents, c -> struct("
+    "round(aggregate(zip_with(qv, c.cvec, (x, y) -> (x - y) * (x - y)), "
+    "0D, (acc, p) -> acc + p), 6) AS d, c.cid AS cid))), "
+    f"1, {IVF_RECALL_NPROBE}), s -> s.cid)"
+)
+_DUCK_PROBE_D2 = (
+    "round(list_reduce(list_transform(range(1, 65), "
+    "i -> (q.qv[i] - (cu.c).cvec[i]) * (q.qv[i] - (cu.c).cvec[i])), "
+    "(acc, x) -> acc + x), 6)"
+)
+
+
 def _ivf_recall_oracle() -> str:
     from .kmeans import ITERS, SEMDEDUP_SEED_IDS, _duck_kmeans_ctes
 
     qid_list = ", ".join(map(str, RECALL_QUERY_IDS))
-    d2 = (
-        "round(list_reduce(list_transform(range(1, 65), "
-        "i -> (q.qv[i] - (cu.c).cvec[i]) * (q.qv[i] - (cu.c).cvec[i])), "
-        "(acc, x) -> acc + x), 6)"
-    )
     return (
         "WITH "
         + _duck_kmeans_ctes(SEMDEDUP_SEED_IDS)
@@ -489,7 +511,7 @@ probed AS (
     SELECT query_id, cid FROM (
         SELECT q.query_id, (cu.c).cid AS cid,
                row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {d2}, (cu.c).cid) AS pr
+                                  ORDER BY {_DUCK_PROBE_D2}, (cu.c).cid) AS pr
         FROM q CROSS JOIN (SELECT unnest(cents) AS c FROM cl{ITERS}) cu
     ) WHERE pr <= {IVF_RECALL_NPROBE}
 ),
@@ -584,18 +606,7 @@ def ann_ivf_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "v", "nrm", F.col("cell").alias("cluster")
     )
 
-    # probe list per panel query: the NPROBE nearest centroids by the
-    # same rounded L2 the assignment uses (struct sort = (d2, cid) asc)
-    cents_df = spark.createDataFrame(
-        [([(int(cid), [float(x) for x in vec]) for cid, vec in cents_rows],)],
-        "cents array<struct<cid:int,cvec:array<double>>>",
-    )
-    probe_expr = (
-        "transform(slice(array_sort(transform(cents, c -> struct("
-        "round(aggregate(zip_with(qv, c.cvec, (x, y) -> (x - y) * (x - y)), "
-        "0D, (acc, p) -> acc + p), 6) AS d, c.cid AS cid))), "
-        f"1, {IVF_RECALL_NPROBE}), s -> s.cid)"
-    )
+    # probe list per panel query
     q = (
         fin.where(F.col("vec_id").isin(RECALL_QUERY_IDS))
         .select(
@@ -603,8 +614,8 @@ def ann_ivf_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").alias("qv"),
             F.col("nrm").alias("qn"),
         )
-        .join(F.broadcast(cents_df))
-        .select("query_id", "qv", "qn", F.expr(probe_expr).alias("probed"))
+        .join(F.broadcast(_ivf_cents(spark, cents_rows)))
+        .select("query_id", "qv", "qn", F.expr(_IVF_PROBE).alias("probed"))
     )
     cos = (
         fin.crossJoin(F.broadcast(q))
@@ -1028,13 +1039,19 @@ def _ivf_cell_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> 
     return path
 
 
-def _ivf_cell_probe_oracle() -> str:
+def _ivf_probe_oracle(query_id: int, *cols: str) -> str:
+    """Oracle of _ivf_probe_topk: the full-corpus kmeans trajectory, the
+    query's probed cells, then top-k cosine over them; ``cols`` are the
+    caller's extra SQL columns, placed between cell and cosine."""
     from .kmeans import ITERS, SEMDEDUP_SEED_IDS, _duck_kmeans_ctes
 
-    d2 = (
-        "round(list_reduce(list_transform(range(1, 65), "
-        "i -> (q.qv[i] - (cu.c).cvec[i]) * (q.qv[i] - (cu.c).cvec[i])), "
-        "(acc, x) -> acc + x), 6)"
+    out = ", ".join(
+        [
+            "f.vec_id",
+            "CAST(f.cluster AS INT) AS cell",
+            *cols,
+            "round(CAST(list_cosine_similarity(f.v, q.qv) AS DOUBLE), 6) AS cosine",
+        ]
     )
     return (
         "WITH "
@@ -1042,16 +1059,15 @@ def _ivf_cell_probe_oracle() -> str:
         + f""",
 fin AS (SELECT vec_id, v, cluster FROM a{ITERS + 1}),
 q AS (SELECT vec_id AS query_id, v AS qv FROM emb
-      WHERE vec_id = {QUERY_VEC_ID}),
+      WHERE vec_id = {query_id}),
 probed AS (
     SELECT cid FROM (
         SELECT (cu.c).cid AS cid,
-               row_number() OVER (ORDER BY {d2}, (cu.c).cid) AS pr
+               row_number() OVER (ORDER BY {_DUCK_PROBE_D2}, (cu.c).cid) AS pr
         FROM q CROSS JOIN (SELECT unnest(cents) AS c FROM cl{ITERS}) cu
     ) WHERE pr <= {IVF_RECALL_NPROBE}
 )
-SELECT f.vec_id, CAST(f.cluster AS INT) AS cell,
-       round(CAST(list_cosine_similarity(f.v, q.qv) AS DOUBLE), 6) AS cosine
+SELECT {out}
 FROM fin f CROSS JOIN q
 WHERE f.cluster IN (SELECT cid FROM probed) AND f.vec_id <> q.query_id
 ORDER BY cosine DESC, f.vec_id
@@ -1060,7 +1076,54 @@ LIMIT {RECALL_K}
     )
 
 
-@query("ann_ivf_cell_probe", oracle=_ivf_cell_probe_oracle())
+def _ivf_probe_topk(
+    spark: SparkSession, sf_dir: str, index_path: Callable, query_id: int, *cols
+) -> DataFrame:
+    """Top-RECALL_K cosine neighbours of embedding ``query_id`` over the
+    IVF index ``index_path(spark, sf_dir, cents_rows)`` builds from the
+    trained codebook, scanning only the query's IVF_RECALL_NPROBE
+    nearest cells (ann_ivf_cell_probe says why the probe list is
+    collected). Output: vec_id, cell, ``cols``, cosine."""
+    from .kmeans import SEMDEDUP_SEED_IDS, _trained_codebook
+
+    emb = load_table(spark, "embeddings", sf_dir).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    cents_rows = _trained_codebook(spark, emb, sf_dir, SEMDEDUP_SEED_IDS)
+    path = index_path(spark, sf_dir, cents_rows)
+
+    q_row = (
+        emb.where(F.col("vec_id") == query_id)
+        .select(F.col("v").alias("qv"))
+        .join(F.broadcast(_ivf_cents(spark, cents_rows)))
+        .select("qv", F.expr(_IVF_PROBE).alias("probed"))
+        .collect()
+    )[0]
+    probed_cells = sorted(int(c) for c in q_row.probed)
+
+    idx = read_ivf_index(spark, path).where(F.col("cell").isin(probed_cells))
+    q_df = F.broadcast(
+        spark.createDataFrame(
+            [([float(x) for x in q_row.qv],)], "qv array<double>"
+        ).withColumn("qn", F.expr("sqrt(aggregate(qv, 0D, (acc, x) -> acc + x * x))"))
+    )
+    return (
+        idx.where(F.col("vec_id") != query_id)
+        .join(q_df)
+        .withColumn(
+            "cosine",
+            F.expr(
+                "round(aggregate(zip_with(v, qv, (x, y) -> x * y), 0D, "
+                "(acc, p) -> acc + p) / (nrm * qn), 6)"
+            ),
+        )
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
+        .limit(RECALL_K)
+        .select("vec_id", F.col("cell").cast("int").alias("cell"), *cols, "cosine")
+    )
+
+
+@query("ann_ivf_cell_probe", oracle=_ivf_probe_oracle(QUERY_VEC_ID))
 def ann_ivf_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-query ANN serving against the CELL-PARTITIONED IVF index:
     top-k cosine for the pinned query vector, scanning only its
@@ -1087,56 +1150,7 @@ def ann_ivf_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the FAISS inverted-file shape on parquet); the probe itself reads
     nprobe directories, broadcasts the 1-row query, and TakeOrdereds
     top-k — no shuffle of corpus data at all."""
-    from .kmeans import SEMDEDUP_SEED_IDS, _trained_codebook
-
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents_rows = _trained_codebook(spark, emb, sf_dir, SEMDEDUP_SEED_IDS)
-    path = _ivf_cell_index_path(spark, sf_dir, cents_rows)
-
-    # rank centroids for the query IN SPARK (same rounded-L2 expression
-    # the oracle unrolls), then collect the 1-row probe list — literal
-    # cell ids are what lets Catalyst prune partitions statically
-    cents_df = spark.createDataFrame(
-        [([(int(cid), [float(x) for x in vec]) for cid, vec in cents_rows],)],
-        "cents array<struct<cid:int,cvec:array<double>>>",
-    )
-    probe_expr = (
-        "transform(slice(array_sort(transform(cents, c -> struct("
-        "round(aggregate(zip_with(qv, c.cvec, (x, y) -> (x - y) * (x - y)), "
-        "0D, (acc, p) -> acc + p), 6) AS d, c.cid AS cid))), "
-        f"1, {IVF_RECALL_NPROBE}), s -> s.cid)"
-    )
-    q_row = (
-        emb.where(F.col("vec_id") == QUERY_VEC_ID)
-        .select(F.col("v").alias("qv"))
-        .join(F.broadcast(cents_df))
-        .select("qv", F.expr(probe_expr).alias("probed"))
-        .collect()
-    )[0]
-    probed_cells = sorted(int(c) for c in q_row.probed)
-
-    idx = read_ivf_index(spark, path).where(F.col("cell").isin(probed_cells))
-    q_df = F.broadcast(
-        spark.createDataFrame(
-            [([float(x) for x in q_row.qv],)], "qv array<double>"
-        ).withColumn("qn", F.expr("sqrt(aggregate(qv, 0D, (acc, x) -> acc + x * x))"))
-    )
-    return (
-        idx.where(F.col("vec_id") != QUERY_VEC_ID)
-        .join(q_df)
-        .withColumn(
-            "cosine",
-            F.expr(
-                "round(aggregate(zip_with(v, qv, (x, y) -> x * y), 0D, "
-                "(acc, p) -> acc + p) / (nrm * qn), 6)"
-            ),
-        )
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(RECALL_K)
-        .select("vec_id", F.col("cell").cast("int").alias("cell"), "cosine")
-    )
+    return _ivf_probe_topk(spark, sf_dir, _ivf_cell_index_path, QUERY_VEC_ID)
 
 
 # --- incremental IVF index maintenance (round 14) ----------------------------
@@ -1155,6 +1169,7 @@ def ann_ivf_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 DELTA_MOD = 5  # delta slice: vec_id % DELTA_MOD == DELTA_REM (~20%)
 DELTA_REM = 3
 DELTA_QUERY_VEC_ID = 8  # query INSIDE the delta slice (8 % 5 == 3)
+_DUCK_IS_DELTA = f"f.vec_id % {DELTA_MOD} = {DELTA_REM} AS is_delta"
 
 
 def _ivf_delta_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> str:
@@ -1219,40 +1234,9 @@ def _ivf_delta_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) ->
     return path
 
 
-def _ivf_delta_probe_oracle(query_id: int = DELTA_QUERY_VEC_ID) -> str:
-    from .kmeans import ITERS, SEMDEDUP_SEED_IDS, _duck_kmeans_ctes
-
-    d2 = (
-        "round(list_reduce(list_transform(range(1, 65), "
-        "i -> (q.qv[i] - (cu.c).cvec[i]) * (q.qv[i] - (cu.c).cvec[i])), "
-        "(acc, x) -> acc + x), 6)"
-    )
-    return (
-        "WITH "
-        + _duck_kmeans_ctes(SEMDEDUP_SEED_IDS)
-        + f""",
-fin AS (SELECT vec_id, v, cluster FROM a{ITERS + 1}),
-q AS (SELECT vec_id AS query_id, v AS qv FROM emb
-      WHERE vec_id = {query_id}),
-probed AS (
-    SELECT cid FROM (
-        SELECT (cu.c).cid AS cid,
-               row_number() OVER (ORDER BY {d2}, (cu.c).cid) AS pr
-        FROM q CROSS JOIN (SELECT unnest(cents) AS c FROM cl{ITERS}) cu
-    ) WHERE pr <= {IVF_RECALL_NPROBE}
+@query(
+    "ann_ivf_delta_append", oracle=_ivf_probe_oracle(DELTA_QUERY_VEC_ID, _DUCK_IS_DELTA)
 )
-SELECT f.vec_id, CAST(f.cluster AS INT) AS cell,
-       f.vec_id % {DELTA_MOD} = {DELTA_REM} AS is_delta,
-       round(CAST(list_cosine_similarity(f.v, q.qv) AS DOUBLE), 6) AS cosine
-FROM fin f CROSS JOIN q
-WHERE f.cluster IN (SELECT cid FROM probed) AND f.vec_id <> q.query_id
-ORDER BY cosine DESC, f.vec_id
-LIMIT {RECALL_K}
-"""
-    )
-
-
-@query("ann_ivf_delta_append", oracle=_ivf_delta_probe_oracle())
 def ann_ivf_delta_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe the INCREMENTALLY MAINTAINED IVF index: the base slice
     (vec_id % 5 != 3) was written once, the delta slice appended later
@@ -1274,57 +1258,9 @@ def ann_ivf_delta_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the delta, zero of the base) — at 10^9 vectors a daily delta
     append costs O(|delta|), a rebuild O(|corpus|); probes stay
     nprobe/k of the files either way."""
-    from .kmeans import SEMDEDUP_SEED_IDS, _trained_codebook
-
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents_rows = _trained_codebook(spark, emb, sf_dir, SEMDEDUP_SEED_IDS)
-    path = _ivf_delta_index_path(spark, sf_dir, cents_rows)
-
-    cents_df = spark.createDataFrame(
-        [([(int(cid), [float(x) for x in vec]) for cid, vec in cents_rows],)],
-        "cents array<struct<cid:int,cvec:array<double>>>",
-    )
-    probe_expr = (
-        "transform(slice(array_sort(transform(cents, c -> struct("
-        "round(aggregate(zip_with(qv, c.cvec, (x, y) -> (x - y) * (x - y)), "
-        "0D, (acc, p) -> acc + p), 6) AS d, c.cid AS cid))), "
-        f"1, {IVF_RECALL_NPROBE}), s -> s.cid)"
-    )
-    q_row = (
-        emb.where(F.col("vec_id") == DELTA_QUERY_VEC_ID)
-        .select(F.col("v").alias("qv"))
-        .join(F.broadcast(cents_df))
-        .select("qv", F.expr(probe_expr).alias("probed"))
-        .collect()
-    )[0]
-    probed_cells = sorted(int(c) for c in q_row.probed)
-
-    idx = read_ivf_index(spark, path).where(F.col("cell").isin(probed_cells))
-    q_df = F.broadcast(
-        spark.createDataFrame(
-            [([float(x) for x in q_row.qv],)], "qv array<double>"
-        ).withColumn("qn", F.expr("sqrt(aggregate(qv, 0D, (acc, x) -> acc + x * x))"))
-    )
-    return (
-        idx.where(F.col("vec_id") != DELTA_QUERY_VEC_ID)
-        .join(q_df)
-        .withColumn(
-            "cosine",
-            F.expr(
-                "round(aggregate(zip_with(v, qv, (x, y) -> x * y), 0D, "
-                "(acc, p) -> acc + p) / (nrm * qn), 6)"
-            ),
-        )
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(RECALL_K)
-        .select(
-            "vec_id",
-            F.col("cell").cast("int").alias("cell"),
-            (F.col("vec_id") % DELTA_MOD == DELTA_REM).alias("is_delta"),
-            "cosine",
-        )
+    return _ivf_probe_topk(
+        spark, sf_dir, _ivf_delta_index_path, DELTA_QUERY_VEC_ID,
+        (F.col("vec_id") % DELTA_MOD == DELTA_REM).alias("is_delta"),
     )
 
 
@@ -1386,7 +1322,10 @@ def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str, cents_rows: list
     return path
 
 
-@query("ann_ivf_cell_compaction", oracle=_ivf_delta_probe_oracle(COMPACT_QUERY_VEC_ID))
+@query(
+    "ann_ivf_cell_compaction",
+    oracle=_ivf_probe_oracle(COMPACT_QUERY_VEC_ID, _DUCK_IS_DELTA),
+)
 def ann_ivf_cell_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe the COMPACTED incrementally-maintained IVF index — the
     read-side proof that closes the r14 append/compact maintenance
@@ -1411,57 +1350,9 @@ def ann_ivf_cell_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheduled cell compaction is what keeps probe open-cost flat while
     appends stay O(|delta|). Maintenance cost is O(fragmented cells'
     bytes): the stats rule reads driver-side listing metadata only."""
-    from .kmeans import SEMDEDUP_SEED_IDS, _trained_codebook
-
-    emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents_rows = _trained_codebook(spark, emb, sf_dir, SEMDEDUP_SEED_IDS)
-    path = _ivf_compacted_index_path(spark, sf_dir, cents_rows)
-
-    cents_df = spark.createDataFrame(
-        [([(int(cid), [float(x) for x in vec]) for cid, vec in cents_rows],)],
-        "cents array<struct<cid:int,cvec:array<double>>>",
-    )
-    probe_expr = (
-        "transform(slice(array_sort(transform(cents, c -> struct("
-        "round(aggregate(zip_with(qv, c.cvec, (x, y) -> (x - y) * (x - y)), "
-        "0D, (acc, p) -> acc + p), 6) AS d, c.cid AS cid))), "
-        f"1, {IVF_RECALL_NPROBE}), s -> s.cid)"
-    )
-    q_row = (
-        emb.where(F.col("vec_id") == COMPACT_QUERY_VEC_ID)
-        .select(F.col("v").alias("qv"))
-        .join(F.broadcast(cents_df))
-        .select("qv", F.expr(probe_expr).alias("probed"))
-        .collect()
-    )[0]
-    probed_cells = sorted(int(c) for c in q_row.probed)
-
-    idx = read_ivf_index(spark, path).where(F.col("cell").isin(probed_cells))
-    q_df = F.broadcast(
-        spark.createDataFrame(
-            [([float(x) for x in q_row.qv],)], "qv array<double>"
-        ).withColumn("qn", F.expr("sqrt(aggregate(qv, 0D, (acc, x) -> acc + x * x))"))
-    )
-    return (
-        idx.where(F.col("vec_id") != COMPACT_QUERY_VEC_ID)
-        .join(q_df)
-        .withColumn(
-            "cosine",
-            F.expr(
-                "round(aggregate(zip_with(v, qv, (x, y) -> x * y), 0D, "
-                "(acc, p) -> acc + p) / (nrm * qn), 6)"
-            ),
-        )
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(RECALL_K)
-        .select(
-            "vec_id",
-            F.col("cell").cast("int").alias("cell"),
-            (F.col("vec_id") % DELTA_MOD == DELTA_REM).alias("is_delta"),
-            "cosine",
-        )
+    return _ivf_probe_topk(
+        spark, sf_dir, _ivf_compacted_index_path, COMPACT_QUERY_VEC_ID,
+        (F.col("vec_id") % DELTA_MOD == DELTA_REM).alias("is_delta"),
     )
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, share_if_bounded
+from ..catalog import load_table
 from ..functions.annotator import _NEGATIVE, _POSITIVE, annotate_sentiment
 from .registry import query
 
@@ -465,7 +465,7 @@ def quality_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — then one doc_id join chain and an 8-group aggregate whose
     map-side partials reduce everything before the exchange."""
     from ..functions.model import annotate_topic
-    from .textops import LM_SCALE_PPM, _spark_hits
+    from .textops import _spark_hits, bigram_lm_scores
 
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "text", "n_chars"
@@ -489,38 +489,7 @@ def quality_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     heur = m.select(
         "doc_id", ((F.col("n_chars") >= 50) & (score >= 0.6)).alias("heur_keep")
     )
-    occ = tok.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "IF(size(toks) >= 2,"
-                " transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS tok_a,"
-                " element_at(toks, i + 1) AS tok_b)),"
-                " array())"
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.tok_a", "b.tok_b")
-    # shared bigram stream: model build + scoring probe both consume occ
-    # (same lineage cut as bigram_lm_doc_score)
-    occ = share_if_bounded(occ, sf_dir, "documents")
-    uc = (
-        tok.select(F.explode("toks").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bgc = occ.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c_ab"))
-    ca = uc.select(F.col("token").alias("tok_a"), F.col("c").alias("c_a"))
-    lm = (
-        occ.join(bgc, ["tok_a", "tok_b"])
-        .join(ca, "tok_a")
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                f"CAST(sum(c_ab * {LM_SCALE_PPM} DIV c_a) DIV count(*) AS BIGINT)"
-            ).alias("avg_cond_ppm")
-        )
-    )
+    lm = bigram_lm_scores(tok, ["doc_id"], sf_dir)
     j = (
         model.join(heur, "doc_id")
         .join(lm, "doc_id", "left")

@@ -84,6 +84,29 @@ def _digest(df: DataFrame) -> DataFrame:
     )
 
 
+# The events digest of the sink and lakehouse rows: order-independent,
+# engine-exact aggregates over an events slice (value in integer cents);
+# n_events == n_distinct_events catches a replayed or doubled row.
+_EVENTS_DIGEST_SQL = """count(*) AS n_events,
+       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
+       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
+       CAST(min(event_id) AS BIGINT) AS min_event_id,
+       CAST(max(event_id) AS BIGINT) AS max_event_id"""
+
+
+def _events_digest(df: DataFrame, *keys) -> DataFrame:
+    """``df`` grouped by ``keys`` into the columns of _EVENTS_DIGEST_SQL."""
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
+        F.sum(F.round(F.col("value") * 100).cast("long"))
+        .cast("bigint")
+        .alias("total_cents"),
+        F.min("event_id").cast("bigint").alias("min_event_id"),
+        F.max("event_id").cast("bigint").alias("max_event_id"),
+    )
+
+
 @query("ingest_jsonl_roundtrip", oracle=_DIGEST_SQL.format(where=""))
 def ingest_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 + S6: documents -> gzipped-JSONL sink -> glob scan -> digest.
@@ -607,6 +630,14 @@ def ingest_overwrite_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming session-window aggregation (executed) ------------------------
 
+# Imported here, not at the top: the batch twins' rows then register at
+# this point of the registry, whose order decides the driver's window.
+from .timeseries import (  # noqa: E402
+    ATTRIBUTION_ORACLE,
+    SESSION_WINDOW_ORACLE,
+    SESSIONIZE_ORACLE,
+)
+
 
 def _session_window_closed_oracle() -> str:
     """The batch twin's oracle restricted to sessions CLOSED by the
@@ -615,8 +646,6 @@ def _session_window_closed_oracle() -> str:
     end, so sessions whose last event lies within one gap of the corpus
     end are still open state at drain time — by definition, not by
     defect. The filter states that emission contract in SQL."""
-    from .timeseries import SESSION_WINDOW_ORACLE
-
     return f"""
 SELECT * FROM ({SESSION_WINDOW_ORACLE})
 WHERE end_us <= (SELECT epoch_us(max(ts)) FROM events)
@@ -677,20 +706,7 @@ def streaming_session_window_executed(spark: SparkSession, sf_dir: str) -> DataF
 # --- streaming interval join (executed) -------------------------------------
 
 
-@query(
-    "streaming_interval_join_executed",
-    oracle="""
-SELECT v.event_id AS view_id,
-       p.event_id AS purchase_id,
-       v.user_id,
-       (epoch_us(p.ts) - epoch_us(v.ts)) // 1000000 AS seconds_to_purchase
-FROM (SELECT * FROM events WHERE event_type = 'view') v
-JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-  ON p.user_id = v.user_id
- AND epoch_us(p.ts) >= epoch_us(v.ts)
- AND epoch_us(p.ts) <= epoch_us(v.ts) + 3600000000
-""",
-)
+@query("streaming_interval_join_executed", oracle=ATTRIBUTION_ORACLE)
 @session_memo
 def streaming_interval_join_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STREAM interval join executed live under the value hash —
@@ -731,20 +747,7 @@ def streaming_interval_join_executed(spark: SparkSession, sf_dir: str) -> DataFr
 _STREAM_EVICT_METRICS: dict[str, list] = {}
 
 
-@query(
-    "streaming_join_state_eviction_executed",
-    oracle="""
-SELECT v.event_id AS view_id,
-       p.event_id AS purchase_id,
-       v.user_id,
-       (epoch_us(p.ts) - epoch_us(v.ts)) // 1000000 AS seconds_to_purchase
-FROM (SELECT * FROM events WHERE event_type = 'view') v
-JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-  ON p.user_id = v.user_id
- AND epoch_us(p.ts) >= epoch_us(v.ts)
- AND epoch_us(p.ts) <= epoch_us(v.ts) + 3600000000
-""",
-)
+@query("streaming_join_state_eviction_executed", oracle=ATTRIBUTION_ORACLE)
 @session_memo
 def streaming_join_state_eviction_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join drained over FOUR chronological
@@ -989,29 +992,8 @@ def streaming_complete_mode_executed(spark: SparkSession, sf_dir: str) -> DataFr
 
 @query(
     "streaming_stateful_sessionize_executed",
-    oracle="""
-WITH ordered AS (
-    SELECT user_id, ts, event_id,
-           CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  OR lag(ts) OVER w IS NULL
-                THEN 1 ELSE 0 END AS is_new_session
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-    SELECT user_id, ts, event_id,
-           sum(is_new_session) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS session_seq
-    FROM ordered
-), agg AS (
-    SELECT user_id,
-           CAST(session_seq AS BIGINT) AS session_seq,
-           count(*) AS n_events,
-           CAST(min(ts) AS DATE) AS session_date
-    FROM sessions
-    GROUP BY user_id, session_seq
-)
+    oracle=f"""
+WITH agg AS ({SESSIONIZE_ORACLE})
 SELECT user_id, session_seq, n_events, session_date
 FROM agg
 WHERE session_seq < (SELECT max(a2.session_seq) FROM agg a2
@@ -1367,13 +1349,9 @@ _COMPACT_SINK_OVERLAP = ("2024-01-14", "2024-01-16")
 
 @query(
     "streaming_compaction_sink_executed",
-    oracle="""
+    oracle=f"""
 SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 GROUP BY 1
 """,
@@ -1445,18 +1423,8 @@ def streaming_compaction_sink_executed(spark: SparkSession, sf_dir: str) -> Data
             assert all(rec["rewritten"] for rec in m.values()), m
             assert all(rec["files_after"] == 1 for rec in m.values()), m
 
-    return (
-        spark.read.parquet(out)
-        .groupBy(F.col("day").cast("string").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("bigint")
-            .alias("total_cents"),
-            F.min("event_id").cast("bigint").alias("min_event_id"),
-            F.max("event_id").cast("bigint").alias("max_event_id"),
-        )
+    return _events_digest(
+        spark.read.parquet(out), F.col("day").cast("string").alias("day")
     )
 
 
@@ -1584,19 +1552,11 @@ WITH pre AS (
     WHERE CAST(ts AS DATE) < DATE '{_LAKEHOUSE_CUT}' OR ts IS NULL
 )
 SELECT 'v1' AS version_tag, event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM pre GROUP BY event_type
 UNION ALL
 SELECT 'latest' AS version_tag, event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events GROUP BY event_type
 """,
 )
@@ -1658,15 +1618,9 @@ def lakehouse_manifest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), "append/compaction touched a pinned manifest's files"
 
     def digest(df: DataFrame, tag: str) -> DataFrame:
-        return df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("bigint")
-            .alias("total_cents"),
-            F.min("event_id").cast("bigint").alias("min_event_id"),
-            F.max("event_id").cast("bigint").alias("max_event_id"),
-        ).select(F.lit(tag).alias("version_tag"), "*")
+        return _events_digest(df, "event_type").select(
+            F.lit(tag).alias("version_tag"), "*"
+        )
 
     return digest(read_manifest_table(spark, root, pin_v1), "v1").unionByName(
         digest(read_manifest_table(spark, root), "latest")
@@ -1931,14 +1885,10 @@ _LH_PRUNE_FILES = 8  # clustered width: disjoint event_id ranges
 
 @query(
     "lakehouse_pruned_scan",
-    oracle="""
+    oracle=f"""
 WITH b AS (SELECT min(event_id) AS mn, max(event_id) AS mx FROM events)
 SELECT event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events, b
 WHERE event_id BETWEEN b.mn + (b.mx - b.mn) // 10
                    AND b.mn + (3 * (b.mx - b.mn)) // 10
@@ -2007,31 +1957,19 @@ def lakehouse_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"stats did not prune: planned {len(planned)} of {len(m['files'])} files"
     )
 
-    return (
-        read_manifest_table(spark, root, m, prune=("event_id", lo, hi))
-        .where(F.col("event_id").between(lo, hi))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("bigint")
-            .alias("total_cents"),
-            F.min("event_id").cast("bigint").alias("min_event_id"),
-            F.max("event_id").cast("bigint").alias("max_event_id"),
-        )
+    return _events_digest(
+        read_manifest_table(spark, root, m, prune=("event_id", lo, hi)).where(
+            F.col("event_id").between(lo, hi)
+        ),
+        "event_type",
     )
 
 
 @query(
     "lakehouse_concurrent_commit",
-    oracle="""
+    oracle=f"""
 SELECT event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 GROUP BY event_type
 """,
@@ -2119,19 +2057,7 @@ def lakehouse_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "race choreography must end at v3 (v1 + winner's append + retried append)"
     )
 
-    return (
-        read_manifest_table(spark, root)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("bigint")
-            .alias("total_cents"),
-            F.min("event_id").cast("bigint").alias("min_event_id"),
-            F.max("event_id").cast("bigint").alias("max_event_id"),
-        )
-    )
+    return _events_digest(read_manifest_table(spark, root), "event_type")
 
 
 _LH_EVOLVE_CUT = "2024-01-16"  # schema-evolving append boundary
@@ -2234,13 +2160,9 @@ _RESTART_OVERLAP_DAY = "2024-01-20"
 
 @query(
     "streaming_compaction_restart_executed",
-    oracle="""
+    oracle=f"""
 SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 GROUP BY 1
 """,
@@ -2336,18 +2258,8 @@ def streaming_compaction_restart_executed(spark: SparkSession, sf_dir: str) -> D
             "the re-touched overlap day must re-compact after the restart"
         )
 
-    return (
-        spark.read.parquet(out)
-        .groupBy(F.col("day").cast("string").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("bigint")
-            .alias("total_cents"),
-            F.min("event_id").cast("bigint").alias("min_event_id"),
-            F.max("event_id").cast("bigint").alias("max_event_id"),
-        )
+    return _events_digest(
+        spark.read.parquet(out), F.col("day").cast("string").alias("day")
     )
 
 
@@ -2361,13 +2273,9 @@ def streaming_compaction_restart_executed(spark: SparkSession, sf_dir: str) -> D
 
 _MANIFEST_SINK_CUTS = ("2024-01-08", "2024-01-15")  # bootstrap | b0 | b1
 
-_MANIFEST_SINK_ORACLE = """
+_MANIFEST_SINK_ORACLE = f"""
 SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 GROUP BY 1
 """
@@ -2464,18 +2372,8 @@ def streaming_manifest_sink_executed(spark: SparkSession, sf_dir: str) -> DataFr
     m = current_manifest(root)
     assert m["txns"].get("manifest_sink") == 1, m.get("txns")
 
-    return (
-        read_manifest_table(spark, root)
-        .groupBy(F.col("day").cast("string").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("bigint")
-            .alias("total_cents"),
-            F.min("event_id").cast("bigint").alias("min_event_id"),
-            F.max("event_id").cast("bigint").alias("max_event_id"),
-        )
+    return _events_digest(
+        read_manifest_table(spark, root), F.col("day").cast("string").alias("day")
     )
 
 
@@ -2498,19 +2396,11 @@ WITH asof2 AS (
     WHERE CAST(ts AS DATE) < DATE '{_ASOF_CUTS[1]}' OR ts IS NULL
 )
 SELECT 'v2' AS version_tag, event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM asof2 GROUP BY event_type
 UNION ALL
 SELECT 'latest' AS version_tag, event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events GROUP BY event_type
 """
 
@@ -2587,15 +2477,9 @@ def lakehouse_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def digest(df: DataFrame, tag: str) -> DataFrame:
-        return df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("bigint")
-            .alias("total_cents"),
-            F.min("event_id").cast("bigint").alias("min_event_id"),
-            F.max("event_id").cast("bigint").alias("max_event_id"),
-        ).select(F.lit(tag).alias("version_tag"), "*")
+        return _events_digest(df, "event_type").select(
+            F.lit(tag).alias("version_tag"), "*"
+        )
 
     return digest(read_manifest_table(spark, root, pin2), "v2").unionByName(
         digest(read_manifest_table(spark, root), "latest")
@@ -2615,7 +2499,7 @@ def lakehouse_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Probe-day selection is pure rank arithmetic over the sorted distinct
 # non-null days so both engines derive the identical set at any SF:
 # ranks {min(2,n), n//2+1, max(n-1,1)} (1-indexed, deduped).
-_PART_EXACT_ORACLE = """
+_PART_EXACT_ORACLE = f"""
 WITH d AS (
     SELECT DISTINCT CAST(CAST(ts AS DATE) AS VARCHAR) AS day
     FROM events WHERE ts IS NOT NULL
@@ -2630,11 +2514,7 @@ probe AS (
     WHERE rk IN (LEAST(2, n), n // 2 + 1, GREATEST(n - 1, 1))
 )
 SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 WHERE CAST(CAST(ts AS DATE) AS VARCHAR) IN (SELECT day FROM probe)
 GROUP BY 1
@@ -2782,15 +2662,7 @@ def lakehouse_partition_exact_scan(spark: SparkSession, sf_dir: str) -> DataFram
     else:
         src = read_manifest_table(spark, root).where(F.lit(False))
 
-    return src.groupBy("day").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
-        .cast("bigint")
-        .alias("total_cents"),
-        F.min("event_id").cast("bigint").alias("min_event_id"),
-        F.max("event_id").cast("bigint").alias("max_event_id"),
-    )
+    return _events_digest(src, "day")
 
 
 # --- r18 candidate (PREBUILT, NOT REGISTERED): spec evolution scan -----------
@@ -2805,7 +2677,7 @@ def lakehouse_partition_exact_scan(spark: SparkSession, sf_dir: str) -> DataFram
 # The probe hour is rank n//2+1 over sorted distinct hours (the first
 # new-era hour by construction); the probe day is the global min day —
 # both pure arithmetic either engine computes identically.
-_SPEC_EVO_ORACLE = """
+_SPEC_EVO_ORACLE = f"""
 WITH h AS (
     SELECT DISTINCT strftime(ts, '%Y-%m-%d-%H') AS hr
     FROM events WHERE ts IS NOT NULL
@@ -2817,21 +2689,13 @@ r AS (
 ),
 ph AS (SELECT hr FROM r WHERE rk = n // 2 + 1)
 SELECT 'hour' AS probe, event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 WHERE strftime(ts, '%Y-%m-%d-%H') = (SELECT hr FROM ph)
 GROUP BY 2
 UNION ALL
 SELECT 'day' AS probe, event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 WHERE CAST(ts AS DATE) = (
     SELECT min(CAST(ts AS DATE)) FROM events WHERE ts IS NOT NULL
@@ -2952,19 +2816,7 @@ def lakehouse_spec_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         assert m.get("spec") == [["hour"]], m.get("spec")
 
     def digest(df: DataFrame, tag: str) -> DataFrame:
-        return (
-            df.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-                F.sum(F.round(F.col("value") * 100).cast("long"))
-                .cast("bigint")
-                .alias("total_cents"),
-                F.min("event_id").cast("bigint").alias("min_event_id"),
-                F.max("event_id").cast("bigint").alias("max_event_id"),
-            )
-            .select(F.lit(tag).alias("probe"), "*")
-        )
+        return _events_digest(df, "event_type").select(F.lit(tag).alias("probe"), "*")
 
     if probe_hour is not None:
         hp_files = files_for_values(m, "hour", [probe_hour])
@@ -2992,7 +2844,7 @@ def lakehouse_spec_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame
 # Probe hours are pure rank arithmetic over sorted distinct hours:
 # rank LEAST(2,n) (an old-era hour) and rank n//2+1 (the first
 # new-era hour) — identical on both engines.
-_TRANSFORM_MIG_ORACLE = """
+_TRANSFORM_MIG_ORACLE = f"""
 WITH h AS (
     SELECT DISTINCT strftime(ts, '%Y-%m-%d-%H') AS hr
     FROM events WHERE ts IS NOT NULL
@@ -3005,21 +2857,13 @@ r AS (
 po AS (SELECT hr FROM r WHERE rk = LEAST(2, n)),
 pn AS (SELECT hr FROM r WHERE rk = n // 2 + 1)
 SELECT 'old_era' AS probe, event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 WHERE strftime(ts, '%Y-%m-%d-%H') = (SELECT hr FROM po)
 GROUP BY 2
 UNION ALL
 SELECT 'new_era' AS probe, event_type,
-       count(*) AS n_events,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(min(event_id) AS BIGINT) AS min_event_id,
-       CAST(max(event_id) AS BIGINT) AS max_event_id
+       {_EVENTS_DIGEST_SQL}
 FROM events
 WHERE strftime(ts, '%Y-%m-%d-%H') = (SELECT hr FROM pn)
 GROUP BY 2
@@ -3148,18 +2992,6 @@ def lakehouse_transform_migration_scan(spark: SparkSession, sf_dir: str) -> Data
             src = read_manifest_table(spark, root, {**m, "files": files}).where(
                 F.expr(_HOUR_EXPR) == hr
             )
-        return (
-            src.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.countDistinct("event_id").cast("bigint").alias("n_distinct_events"),
-                F.sum(F.round(F.col("value") * 100).cast("long"))
-                .cast("bigint")
-                .alias("total_cents"),
-                F.min("event_id").cast("bigint").alias("min_event_id"),
-                F.max("event_id").cast("bigint").alias("max_event_id"),
-            )
-            .select(F.lit(tag).alias("probe"), "*")
-        )
+        return _events_digest(src, "event_type").select(F.lit(tag).alias("probe"), "*")
 
     return probed("old_era", old_hour).unionByName(probed("new_era", new_hour))

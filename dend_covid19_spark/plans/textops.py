@@ -577,6 +577,15 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 PMI_MIN_COUNT = 5
 PMI_TOP_N = 50
 
+# adjacent-token pairs of a ``toks`` array as (tok_a, tok_b) structs
+_BIGRAMS = (
+    "IF(size(toks) >= 2,"
+    " transform(sequence(1, size(toks) - 1),"
+    " i -> struct(element_at(toks, i) AS tok_a,"
+    " element_at(toks, i + 1) AS tok_b)),"
+    " array())"
+)
+
 _PMI_EXPR = (
     "round(ln((CAST(c_ab AS DOUBLE) * CAST(u_total AS DOUBLE)"
     " * CAST(u_total AS DOUBLE))"
@@ -647,17 +656,7 @@ def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.58-1.13s -> 0.21-0.34s every adjacent pair, output equal).
     uc = share(uc, sf_dir, "documents")
     u = uc.agg(F.expr("sum(c) AS u_total"))
-    bg = tok.select(
-        F.explode(
-            F.expr(
-                "IF(size(toks) >= 2,"
-                " transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS tok_a,"
-                " element_at(toks, i + 1) AS tok_b)),"
-                " array())"
-            )
-        ).alias("b")
-    )
+    bg = tok.select(F.explode(F.expr(_BIGRAMS)).alias("b"))
     bgc = (
         bg.select("b.tok_a", "b.tok_b")
         .groupBy("tok_a", "tok_b")
@@ -1774,6 +1773,41 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 LM_SCALE_PPM = 1_000_000
 
 
+def bigram_lm_scores(tok: DataFrame, keys: list, sf_dir: str, *aggs) -> DataFrame:
+    """Corpus bigram-LM fluency of each ``keys`` group of ``tok`` (which
+    holds ``keys`` and a ``toks`` array): ``aggs``, then avg_cond_ppm,
+    the mean exact-integer-ppm conditional probability p(b|a) =
+    c_ab/c_a of the group's own adjacent-token bigrams. Groups with no
+    bigram drop out.
+
+    The occurrence stream feeds both the bigram-count model build and
+    the scoring probe, so it is cut once (interleaved A/B at sf0.1:
+    1.01-1.34 s -> 0.81-1.00 s in every adjacent pair, digests equal);
+    past the source gate each consumer re-plans it instead."""
+    occ = tok.select(*keys, F.explode(F.expr(_BIGRAMS)).alias("b")).select(
+        *keys, "b.tok_a", "b.tok_b"
+    )
+    occ = share_if_bounded(occ, sf_dir, "documents")
+    uc = (
+        tok.select(F.explode("toks").alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    bgc = occ.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c_ab"))
+    ca = uc.select(F.col("token").alias("tok_a"), F.col("c").alias("c_a"))
+    return (
+        occ.join(bgc, ["tok_a", "tok_b"])
+        .join(ca, "tok_a")
+        .groupBy(*keys)
+        .agg(
+            *aggs,
+            F.expr(
+                f"CAST(sum(c_ab * {LM_SCALE_PPM} DIV c_a) DIV count(*) AS BIGINT)"
+            ).alias("avg_cond_ppm"),
+        )
+    )
+
+
 @query(
     "bigram_lm_doc_score",
     oracle=f"""
@@ -1824,44 +1858,14 @@ def bigram_lm_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     every length-floor quality gate."""
     docs = load_table(spark, "documents", sf_dir)
     tok = docs.select("doc_id", F.expr("split(text, ' ')").alias("toks"))
-    occ = tok.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "IF(size(toks) >= 2,"
-                " transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS tok_a,"
-                " element_at(toks, i + 1) AS tok_b)),"
-                " array())"
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.tok_a", "b.tok_b")
-    # occ feeds BOTH the bigram-count model build and the scoring probe;
-    # without a lineage cut Spark plans the scan+split+explode twice;
-    # the cut materializes the occurrence stream once and both
-    # consumers read the stored blocks (interleaved A/B at sf0.1:
-    # 1.01-1.34s -> 0.81-1.00s in every adjacent pair, digests equal).
-    occ = share_if_bounded(occ, sf_dir, "documents")
-    uc = (
-        tok.select(F.explode("toks").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bgc = occ.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c_ab"))
-    ca = uc.select(F.col("token").alias("tok_a"), F.col("c").alias("c_a"))
-    return (
-        occ.join(bgc, ["tok_a", "tok_b"])
-        .join(ca, "tok_a")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.expr(f"CAST(sum(c_ab * {LM_SCALE_PPM} DIV c_a) AS BIGINT)").alias(
-                "sum_cond_ppm"
-            ),
-            F.expr(
-                f"CAST(sum(c_ab * {LM_SCALE_PPM} DIV c_a) DIV count(*) AS BIGINT)"
-            ).alias("avg_cond_ppm"),
-        )
+    return bigram_lm_scores(
+        tok,
+        ["doc_id"],
+        sf_dir,
+        F.count(F.lit(1)).alias("n_bigrams"),
+        F.expr(f"CAST(sum(c_ab * {LM_SCALE_PPM} DIV c_a) AS BIGINT)").alias(
+            "sum_cond_ppm"
+        ),
     )
 
 
@@ -1937,39 +1941,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", "lang", F.expr("split(text, ' ')").alias("toks")
     )
-    occ = tok.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.expr(
-                "IF(size(toks) >= 2,"
-                " transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS tok_a,"
-                " element_at(toks, i + 1) AS tok_b)),"
-                " array())"
-            )
-        ).alias("b"),
-    ).select("doc_id", "lang", "b.tok_a", "b.tok_b")
-    # shared bigram stream: model build + scoring probe both consume occ
-    # (same lineage cut as bigram_lm_doc_score)
-    occ = share_if_bounded(occ, sf_dir, "documents")
-    uc = (
-        tok.select(F.explode("toks").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bgc = occ.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c_ab"))
-    ca = uc.select(F.col("token").alias("tok_a"), F.col("c").alias("c_a"))
-    doc_sc = (
-        occ.join(bgc, ["tok_a", "tok_b"])
-        .join(ca, "tok_a")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.expr(
-                f"CAST(sum(c_ab * {LM_SCALE_PPM} DIV c_a) DIV count(*) AS BIGINT)"
-            ).alias("avg_cond_ppm")
-        )
-    )
+    doc_sc = bigram_lm_scores(tok, ["doc_id", "lang"], sf_dir)
     w = Window.partitionBy("lang").orderBy(
         F.desc("avg_cond_ppm"), F.col("doc_id")
     )

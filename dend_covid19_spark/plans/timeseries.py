@@ -140,9 +140,7 @@ def events_hourly_activity_approx(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query(
-    "events_sessionize",
-    oracle="""
+SESSIONIZE_ORACLE = """
 WITH ordered AS (
     SELECT user_id, ts, event_id,
            CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
@@ -164,8 +162,10 @@ SELECT user_id,
        CAST(min(ts) AS DATE) AS session_date
 FROM sessions
 GROUP BY user_id, session_seq
-""",
-)
+"""
+
+
+@query("events_sessionize", oracle=SESSIONIZE_ORACLE)
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity gap): lag to flag
     session starts, running sum to number sessions, then per-session
@@ -428,9 +428,9 @@ def date_spine_daily_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "attribution_view_purchase",
-    oracle="""
+# view -> purchase pairs within one hour, per user; the streaming
+# interval-join rows in plans/ingest.py state the same contract
+ATTRIBUTION_ORACLE = """
 SELECT v.event_id AS view_id,
        p.event_id AS purchase_id,
        v.user_id,
@@ -440,8 +440,10 @@ JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
   ON p.user_id = v.user_id
  AND epoch_us(p.ts) >= epoch_us(v.ts)
  AND epoch_us(p.ts) <= epoch_us(v.ts) + 3600000000
-""",
-)
+"""
+
+
+@query("attribution_view_purchase", oracle=ATTRIBUTION_ORACLE)
 def attribution_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval self-join attribution: every (view, purchase) pair for
     the same user where the purchase lands within one hour of the view —

@@ -8,11 +8,11 @@ For each query: builds the DataFrame fresh each run, runs it through the
 noop sink (the bench's timed action), and reports per-run wall seconds
 plus how many jobs the run scheduled, split into build jobs (launched
 before the builder returned: its eager counts, collects and lineage
-cuts) and run jobs (the action's). Each phase runs in its own job
-group and the SparkStatusTracker counts the group's jobs — fixed
-scheduling overhead vs data work is the first split the optimization
-guide asks for. The last line sums run 0's build jobs over every named
-query; ``SPARK_GRAFT_PROFILE_RUNS=0`` skips the steady runs, so
+cuts) and run jobs (the action's), both counted by job id (see
+``last_job_id``) — fixed scheduling overhead vs data work is the first
+split the optimization guide asks for. The last line sums run 0's build
+jobs over every named query; ``SPARK_GRAFT_PROFILE_RUNS=0`` skips the
+steady runs, so
 
     SPARK_GRAFT_PROFILE_RUNS=0 python scripts/profile_query.py $(python -c \
         "from dend_covid19_spark import plans; print(*plans.all_queries())")
@@ -80,6 +80,17 @@ def cpu_split() -> dict[str, float]:
     }
 
 
+def last_job_id(sc) -> int:
+    """Id of the newest job the application has started, -1 before the
+    first. Job ids rise by one per job, so the difference of two
+    readings counts every job started in between, also those no job
+    group of the caller's would list: a streaming query's micro-batch
+    jobs and jobs started from pool threads."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
+    return -1 if jobs.isEmpty() else jobs.head().jobId()
+
+
 def main() -> None:
     names = sys.argv[1:]
     from dend_covid19_spark import plans
@@ -93,29 +104,22 @@ def main() -> None:
         load_table(spark, t, SF_DIR).count()
 
     reg = plans.all_queries()
-    tracker = sc.statusTracker()
-
-    def jobs(group: str) -> int:
-        return len(tracker.getJobIdsForGroup(group))
-
     build_total = 0
     for name in names:
         fn = reg[name]
         rows = []
         for i in range(RUNS + 1):  # run 0 = cold (plan/codegen), kept separate
-            group = f"profile:{name}:run{i}"
             cpu0 = cpu_split()
             t0 = time.perf_counter()
-            sc.setJobGroup(f"{group}:build", f"{group}:build")
+            j0 = last_job_id(sc)
             df = fn(spark, SF_DIR)
-            sc.setJobGroup(f"{group}:run", f"{group}:run")
+            j1 = last_job_id(sc)
             df.write.format("noop").mode("overwrite").save()
+            j2 = last_job_id(sc)
             dt = time.perf_counter() - t0
             cpu1 = cpu_split()
-            build, run = jobs(f"{group}:build"), jobs(f"{group}:run")
-            rows.append((dt, build, run, {k: cpu1[k] - cpu0[k] for k in CPU_PARTS}))
+            rows.append((dt, j1 - j0, j2 - j1, {k: cpu1[k] - cpu0[k] for k in CPU_PARTS}))
             spark.catalog.clearCache()
-        sc.setLocalProperty("spark.jobGroup.id", None)
         build_total += rows[0][1]
         cold, steady_rows = rows[0], rows[1:]
         line = f"{name}: cold={cold[0]:.3f}s/{cold[1]}+{cold[2]}jobs"

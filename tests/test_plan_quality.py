@@ -667,12 +667,12 @@ def test_corpus_stream_ckpt_gated_on_scale(spark, name, monkeypatch):
     sharing regression in results), and the default gate keeps the cut."""
     import dend_covid19_spark.catalog as cat
 
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", "0")
+    monkeypatch.setattr(cat, "CKPT_SOURCE_MAX_BYTES", 0)
     cat._source_bytes.cache_clear()
     try:
         plan = formatted_plan(spark, name)
     finally:
-        monkeypatch.delenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES")
+        monkeypatch.undo()
         cat._source_bytes.cache_clear()
     gen_nodes = len(re.findall(r"^\(\d+\) Generate", plan, re.M))
     assert gen_nodes >= 2, f"gate ignored: stream still checkpointed\n{plan}"
@@ -682,22 +682,12 @@ def _is_checkpointed(df) -> bool:
     return "LogicalRDD" in df._jdf.queryExecution().analyzed().toString()
 
 
-def test_ckpt_gate_malformed_env_falls_back_to_default(spark, monkeypatch):
-    """An env override must never crash plan construction: a value that
-    is not an integer falls back to the 2 GiB default, so the cut is
-    still taken at test scale."""
-    import dend_covid19_spark.catalog as cat
-
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", "2GiB")
-    assert _is_checkpointed(cat.share_if_bounded(spark.range(3), SF_DIR, "documents"))
-
-
 def test_ckpt_gate_missing_source_not_cached(spark, monkeypatch, tmp_path):
     """A source path that does not exist yet reads as 0 bytes for that
     call only — once the source lands, its real size gates the cut."""
     import dend_covid19_spark.catalog as cat
 
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", "0")
+    monkeypatch.setattr(cat, "CKPT_SOURCE_MAX_BYTES", 0)
     df = spark.range(3)
     assert _is_checkpointed(cat.share_if_bounded(df, str(tmp_path), "documents"))
     (tmp_path / "documents.parquet").write_bytes(b"x" * 10)
@@ -850,6 +840,36 @@ def test_drains_go_through_drain():
         "session.py: get_spark",
         "streaming/daily.py: drain",
     ]
+
+
+def test_query_bodies_go_through_their_helpers():
+    """Four query bodies exist once each: the events digest
+    (``ingest._events_digest``; the three variant digests keep their
+    own aggregates), the LSH candidate pairs (``dedup._lsh_pairs`` over
+    the one published banding), the IVF probe list
+    (``similarity._IVF_PROBE``) and the bigram explode of the LM score
+    (``textops.bigram_lm_scores``). A copy of any of them elsewhere
+    would bring back the hand-copied query bodies they replaced."""
+    root = pathlib.Path(dend_covid19_spark.__file__).parent
+    files = list(root.rglob("*.py"))
+
+    def owners(needle: str) -> list[str]:
+        return sorted(
+            f"{path.relative_to(root)}: {owner}"
+            for path in files
+            for owner in _owners(path, needle)
+        )
+
+    assert owners('F.sum(F.round(F.col("value") * 100)') == [
+        "plans/ingest.py: _events_digest",
+        "plans/ingest.py: compaction_incremental_events",
+        "plans/ingest.py: lakehouse_schema_evolution",
+    ]
+    assert owners("H.spark_band_structs(") == ["operators/dedup.py: <module>"]
+    assert owners("array_sort(transform(cents, c -> struct(") == [
+        "operators/similarity.py: <module>"
+    ]
+    assert owners("element_at(toks, i + 1) AS tok_b") == ["plans/textops.py: <module>"]
 
 
 def test_daily_date_runs_three_jobs(spark, tmp_path):
