@@ -348,7 +348,20 @@ def share(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     that reads it — which still runs with AQE on. The width ``w`` comes
     from ``share_width``, sized from the source's bytes and not from the
     core count: one task per core in every tiny stage cost more CPU than
-    the parallelism saved."""
+    the parallelism saved.
+
+    It refuses a plan holding an ``observe``: metrics collected below a
+    lazy cut read as zero, so an ``expect_observed`` gate there would
+    pass without having seen a row. The check reads the analyzed plan
+    and runs no job."""
+    trees = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees
+    if df._jdf.queryExecution().analyzed().containsPattern(
+        trees.TreePattern.withName("COLLECT_METRICS")
+    ):
+        raise ValueError(
+            "share cannot cut an observed plan: its metrics would read as "
+            "zero; observe the frame share returns instead"
+        )
     with share_scope(df.sparkSession, sf_dir, table):
         return df.localCheckpoint(eager=False)
 

@@ -191,6 +191,29 @@ def _lsh_pairs(
     )
 
 
+def _minhash_scored(
+    cand: DataFrame, sigs: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """Candidate pairs ``(a, b)`` joined to both signatures, with the
+    MinHash estimate ``est_jaccard`` (matching positions / K), kept at
+    >= 0.25."""
+    sa = sigs.select(F.col("doc_id").alias(a), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("doc_id").alias(b), F.col("sig").alias("sig_b"))
+    est = (
+        F.expr(
+            "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)), 0,"
+            " (acc, v) -> acc + v)"
+        )
+        / F.lit(float(H.K))
+    )
+    return (
+        cand.join(sa, a)
+        .join(sb, b)
+        .withColumn("est_jaccard", est)
+        .where(F.col("est_jaccard") >= 0.25)
+    )
+
+
 _MINHASH_EST = (
     "list_sum(list_transform(range(1, {k} + 1), "
     "i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END)) / {k}.0"
@@ -219,21 +242,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact in binary), so the threshold compare is engine-stable.
     """
     sigs = _minhash_sigs(spark, sf_dir).select("doc_id", "sig")
-    cand = _lsh_pairs(sigs, sf_dir)
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.expr(
-            "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)"
-        )
-        / F.lit(float(H.K))
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= 0.25)
-        .select("doc_a", "doc_b", "est_jaccard")
+    return _minhash_scored(_lsh_pairs(sigs, sf_dir), sigs).select(
+        "doc_a", "doc_b", "est_jaccard"
     )
 
 
@@ -298,29 +308,13 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.expr(
-            "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)), "
-            "0, (acc, v) -> acc + v)"
-        )
-        / F.lit(float(H.K))
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= 0.25)
-        .select(
-            "doc_a",
-            "doc_b",
-            "est_jaccard",
-            (
-                (F.col("doc_a") % DELTA_MOD == 0)
-                & (F.col("doc_b") % DELTA_MOD == 0)
-            ).alias("both_new"),
-        )
+    return _minhash_scored(cand, sigs).select(
+        "doc_a",
+        "doc_b",
+        "est_jaccard",
+        (
+            (F.col("doc_a") % DELTA_MOD == 0) & (F.col("doc_b") % DELTA_MOD == 0)
+        ).alias("both_new"),
     )
 
 
@@ -794,21 +788,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sa = sigs.select(F.col("doc_id").alias("batch_doc"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("corpus_doc"), F.col("sig").alias("sig_b"))
-    est = (
-        F.expr(
-            "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)), 0,"
-            " (acc, v) -> acc + v)"
-        )
-        / F.lit(float(H.K))
-    )
-    return (
-        cand.join(sa, "batch_doc")
-        .join(sb, "corpus_doc")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= 0.25)
-        .select("batch_doc", "corpus_doc", "est_jaccard")
+    return _minhash_scored(cand, sigs, "batch_doc", "corpus_doc").select(
+        "batch_doc", "corpus_doc", "est_jaccard"
     )
 
 
@@ -1459,8 +1440,6 @@ def dedup_crossmodal_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen zip_with fold over the (bounded, pinned-dim) vectors."""
     sigs = _minhash_sigs(spark, sf_dir).select("doc_id", "sig")
     cand = _lsh_pairs(sigs, sf_dir)
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     emb = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).withColumn(
@@ -1476,22 +1455,12 @@ def dedup_crossmodal_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("y_v"),
         F.col("nrm").alias("y_n"),
     )
-    est = (
-        F.expr(
-            "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)), 0,"
-            " (acc, v) -> acc + v)"
-        )
-        / F.lit(float(H.K))
-    )
     cos = F.expr(
         "round(aggregate(zip_with(x_v, y_v, (p, q) -> p * q), 0D,"
         " (acc, p) -> acc + p) / (x_n * y_n), 6)"
     )
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= 0.25)
+        _minhash_scored(cand, sigs)
         .join(ea, "doc_a")
         .join(eb, "doc_b")
         .withColumn("cosine", cos)

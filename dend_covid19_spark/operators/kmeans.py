@@ -49,6 +49,14 @@ def _dist_scores(cents_expr: str, v: str = "v") -> str:
     )
 
 
+def _codebook_row(spark: SparkSession, cents_rows: list) -> DataFrame:
+    """The trained codebook as one broadcastable ``cents`` row."""
+    return spark.createDataFrame(
+        [([(int(cid), [float(x) for x in vec]) for cid, vec in cents_rows],)],
+        "cents array<struct<cid:int,cvec:array<double>>>",
+    )
+
+
 def _assign(emb: DataFrame, cents_rows: list[tuple[int, list[float]]]) -> DataFrame:
     """Append (cluster, dist2) via a broadcast one-row codebook.
 
@@ -59,14 +67,9 @@ def _assign(emb: DataFrame, cents_rows: list[tuple[int, list[float]]]) -> DataFr
     ~50 s of driver-side plan work for the 3-iteration trajectory
     (the r11 cold-start finding). Same arithmetic, same 6 dp rounding,
     same smaller-cid tie-break; the argmin still runs inside codegen."""
-    spark = emb.sparkSession
-    cents_df = spark.createDataFrame(
-        [([(int(cid), [float(x) for x in vec]) for cid, vec in cents_rows],)],
-        "cents array<struct<cid:int,cvec:array<double>>>",
-    )
     best = f"array_max({_dist_scores('cents')})"
     return (
-        emb.join(F.broadcast(cents_df))
+        emb.join(F.broadcast(_codebook_row(emb.sparkSession, cents_rows)))
         .withColumn("_best", F.expr(best))
         .withColumn("cluster", F.expr("-_best.negcid"))
         .withColumn("dist2", F.expr("-_best.negd"))

@@ -42,7 +42,8 @@ after it, with zero coordination.
 DESIGN NOTE — converging the two maintenance stories (r15 verdict
 stretch item; migration deferred to keep the r16 window's zero-recheck
 budget). The engine currently carries two maintenance paths:
-``maintenance.compact_partitions`` (hive key=value dirs, per-partition
+``maintenance.compact_partitions`` (hive key=value dirs, one
+partitioned rewrite of every breaching leaf followed by a per-leaf
 hidden-sibling swap, single-writer window, O(touched) via
 ``only_partitions``) and this module's manifest commit (concurrent-
 safe, stats-pruned, vacuum-with-grace). They converge by making the
@@ -58,7 +59,7 @@ path minus its safety:
   2. ``compact_manifest_table(only_partitions=...)`` rewrites only the
      named partitions' files and commits (old − touched) ∪ rewritten:
      exactly compact_partitions' O(touched fragmented bytes) cost
-     model, but the per-dir swap becomes one pointer flip — no
+     model, but the per-leaf swaps become one pointer flip — no
      lost-file window, pinned readers unaffected, crash-before-commit
      invisible (vs. the swap's entry-time debris recovery).
   3. The streaming sink's foreachBatch appends through (1) with the

@@ -8,8 +8,8 @@ min/max row-group pruning. The reference never needs these (its output
 is ~1 row/day — SURVEY.md §6), but any engine serving its workload at
 scale does.
 
-No new execution machinery: compaction is a size-aware coalesce-write,
-clustering is repartitionByRange + sortWithinPartitions — both pure
+No new execution machinery: compaction is a size-aware partitioned
+write, clustering is repartitionByRange + sortWithinPartitions — both pure
 DataFrame plans, so they distribute like any other query.
 """
 
@@ -75,73 +75,61 @@ def compact_partitions(
     max_files: int = 4,
     target_file_bytes: int = 128 * 1024 * 1024,
     only_partitions: set[str] | None = None,
-    max_concurrent_rewrites: int = 8,
 ) -> dict[str, dict]:
     """Selective (stats-driven) partition compaction — the incremental
     OPTIMIZE: rewrite ONLY the leaf partitions whose small-file count
-    breaches ``max_files``, coalescing each to ceil(bytes/target) files;
-    healthy partitions are left byte-untouched (not re-read, not
-    re-written). Returns a manifest ``{rel_partition: {files_before,
-    bytes_before, files_after, rewritten}}``.
+    breaches ``max_files`` (driver-side listing metadata: the cost is
+    O(fragmented bytes), never O(table)), each to 1..ceil(bytes/target)
+    files; healthy leaves stay byte-untouched. Returns ``{rel_partition:
+    {files_before, bytes_before, files_after, rewritten}}``.
 
-    Why selective matters at 100 TB: streaming ingest fragments only the
-    partitions it touched (today's), so daily maintenance must cost
-    O(fragmented bytes), not O(table) — a blind ``compact_small_files``
-    over the root re-shuffles years of already-compact history. The
-    breach rule reads driver-side listing metadata only.
+    All breaching leaves are rewritten together, in a number of jobs
+    that does not depend on how many breach (three under AQE): the
+    schema merge, then one shuffle on (leaf, hash of input file mod the
+    leaf's budget) — input files stay whole, as under a coalesce — and
+    one partitioned write into a hidden stage in ``root``. The leaves are read as ONE frame with mergeSchema (appends
+    may have EVOLVED a leaf's schema; a single-footer read would drop
+    the added column), so every rewritten file carries the merged schema
+    of all breaching leaves. Partition values are read as strings, so
+    leaf names survive (``007`` stays ``007``, null stays null).
 
-    Each rewrite is a per-partition read->coalesce->write into a DOT-
-    PREFIXED sibling temp dir, then a swap (retire old dir to a dot-
-    prefixed name, rename temp in, drop old). The dot prefix matters:
-    a bare ``part.__compacting`` sibling still PARSES as a key=value
-    partition directory ("0.__compacting" as the value), so crash
-    debris would be scanned as a phantom partition — hidden names are
-    invisible to FileSourceScan by the same rule that hides _SUCCESS.
-    Every crash window is recovered on the next run (``_recover_swaps``
-    below): orphaned temp dirs are discarded, a retired dir whose live
-    partition is missing (death between the two renames) is restored.
-    Readers that listed files BEFORE the swap can lose them —
-    single-writer maintenance-window semantics, the same contract as
-    Hive/plain-parquet compaction; a lakehouse table format turns this
-    swap into an atomic metadata commit and that is the production
-    deployment for concurrent readers. The minimal form of that commit
-    (immutable data files + immutable manifests + an atomic pointer
-    flip, readers pin a manifest) is prototyped in
-    ``operators/lakehouse.py`` with the concurrent-reader property
-    under test — the upgrade path when this table must serve reads
-    DURING maintenance. coalesce (not repartition) keeps
-    the rewrite shuffle-free: each output task reads whole input files.
+    Each staged leaf then swaps in on the driver: retire the live dir to
+    a dot-prefixed sibling, rename the staged copy in, drop the retired
+    one. Hidden names are invisible to scans (a bare ``x.__retired``
+    would parse as a partition value). ``_recover_swaps`` repairs every
+    crash window on the next run. Readers that listed files before a
+    swap can lose them: single-writer maintenance-window semantics, as
+    in Hive; ``operators/lakehouse.py`` turns the swap into an atomic
+    manifest commit for tables that must serve reads during maintenance.
     """
     import os
     import shutil
+    from urllib.parse import unquote
 
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    stage = os.path.join(root, _STAGE)
     if only_partitions is not None:
         # post-ingest mode: a micro-batch writer knows exactly which
         # partitions it touched (distinct partition values of the batch
         # — a tiny aggregate), so maintenance lists ONLY those leaf
         # dirs and recovers swap debris only beside them — O(touched)
-        # driver metadata instead of O(table), for real: the full
-        # recursive walk below never runs (before r15 this mode still
-        # paid two O(table) listings per micro-batch). Debris parked
-        # beside an UNTOUCHED partition stays hidden (invisible to
-        # scans) until the next full-table run repairs it. Rel paths,
-        # e.g. {"event_date=2024-01-03"}.
+        # driver metadata instead of O(table): the full recursive walk
+        # below never runs. Debris parked beside an UNTOUCHED partition
+        # stays hidden (invisible to scans) until the next full-table
+        # run repairs it. Rel paths, e.g. {"event_date=2024-01-03"}.
+        shutil.rmtree(stage, ignore_errors=True)
         stats = {}
         for part in sorted(only_partitions):
             # a touched "partition" must be a relative path strictly
             # inside the root: "." / "" / ".." / an absolute path would
             # make the swap below retire the dataset root (or a dir
             # outside it) wholesale — reject loudly, these can only be
-            # caller bugs
-            # reject exactly the traversal forms ('..' itself or a
-            # '../'-prefixed path) — a partition VALUE that merely
-            # begins with two dots (key=..x) is a legal leaf dir name
+            # caller bugs. A partition VALUE that merely begins with two
+            # dots (key=..x) is a legal leaf dir name.
             norm = os.path.normpath(part)
-            if (
-                norm in (".", "", "..")
-                or norm.startswith(".." + os.sep)
-                or os.path.isabs(norm)
-            ):
+            if norm in (".", "..") or norm.startswith((".." + os.sep, os.sep)):
                 raise ValueError(f"invalid touched-partition path {part!r}")
             live = os.path.join(root, part)
             _recover_swap_debris(live)
@@ -156,64 +144,59 @@ def compact_partitions(
                 "data files at the dataset root — not a key=value partitioned "
                 "layout; use compact_small_files for flat directories"
             )
-    def _rewrite(part: str) -> int:
-        """Rewrite one breaching partition (read -> coalesce -> write ->
-        swap) and return its post-swap file count. Each rewrite touches
-        only its own leaf dir, so rewrites are fully independent."""
-        ent = stats[part]
+    manifest = {
+        p: {"files_before": e["n_files"], "bytes_before": e["bytes"],
+            "files_after": e["n_files"], "rewritten": False}
+        for p, e in sorted(stats.items())
+    }
+    breaching = [p for p in manifest if stats[p]["n_files"] > max_files]
+    if not breaching:
+        return manifest
+
+    def values(part: str) -> list[tuple[str, str | None]]:
+        """(key, value) of each level of ``part``, as Spark reads it."""
+        pairs = [seg.split("=", 1) for seg in part.split(os.sep)]
+        return [(k, None if v == _NULL_PARTITION else unquote(v)) for k, v in pairs]
+
+    keys = [k for k, _ in values(breaching[0])]
+    dirs = [os.path.join(root, p) for p in breaching]
+    merged = spark.read.option("mergeSchema", True).option("basePath", root)
+    inferred = merged.parquet(*dirs).schema
+    schema = StructType(
+        [StructField(f.name, StringType()) if f.name in keys else f for f in inferred]
+    )
+    n_out = {p: max(1, -(-stats[p]["bytes"] // target_file_bytes)) for p in breaching}
+    budget = F.lit(1)  # n_out of the row's leaf, keyed on its values as read
+    for part in (p for p in breaching if n_out[p] > 1):
+        leaf = F.lit(True)
+        for k, v in values(part):
+            leaf = leaf & F.col(k).eqNullSafe(F.lit(v))
+        budget = F.when(leaf, n_out[part]).otherwise(budget)
+    salt = F.pmod(F.hash(F.input_file_name()), budget)
+    df = spark.read.schema(schema).option("basePath", root).parquet(*dirs)
+    df = df.repartition(sum(n_out.values()), *keys, salt)
+    df.write.partitionBy(*keys).parquet(stage)
+    for part in breaching:
+        staged = os.path.join(stage, part)
+        if not os.path.isdir(staged):
+            continue  # a leaf of empty files stages no rows: left as is
         src = os.path.join(root, part)
-        tmp = _hidden_sibling(src, _COMPACTING_SUFFIX)
         retired = _hidden_sibling(src, _RETIRED_SUFFIX)
-        n_out = max(1, -(-ent["bytes"] // target_file_bytes))
-        # mergeSchema: micro-batch appends may have EVOLVED a
-        # partition's file schema (an added column present only in
-        # newer files); a single-footer read would silently drop
-        # that column from the files that had it — a lossy
-        # "lossless" compaction. The merge costs one footer per
-        # file of THIS breaching partition only (bounded by the
-        # breach threshold, never an O(table) sweep).
-        spark.read.option("mergeSchema", True).parquet(src).coalesce(
-            n_out
-        ).write.parquet(tmp)
         os.rename(src, retired)
-        os.rename(tmp, src)
+        os.rename(staged, src)
         shutil.rmtree(retired)
-        return len(partition_file_stats(src).get(".", {"files": {}})["files"])
-
-    manifest: dict[str, dict] = {}
-    for part in sorted(stats):
-        ent = stats[part]
-        manifest[part] = {
-            "files_before": ent["n_files"],
-            "bytes_before": ent["bytes"],
-            "files_after": ent["n_files"],
-            "rewritten": False,
-        }
-    breaching = [p for p in sorted(stats) if stats[p]["n_files"] > max_files]
-    if len(breaching) == 1:
-        manifest[breaching[0]]["files_after"] = _rewrite(breaching[0])
-        manifest[breaching[0]]["rewritten"] = True
-    elif breaching:
-        # Overlap the independent per-partition rewrite jobs from a small
-        # driver thread pool instead of draining them one Spark job at a
-        # time: each rewrite is a tiny single-partition job whose tail
-        # would otherwise leave the cluster idle, and a micro-batch that
-        # touched N days pays ~N sequential job latencies. Bounded pool —
-        # enough in flight to fill the tail, not enough to fight for
-        # executors; each thread's renames stay confined to its own leaf.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(len(breaching), max_concurrent_rewrites)
-        ) as pool:
-            for part, n_after in zip(breaching, pool.map(_rewrite, breaching)):
-                manifest[part]["files_after"] = n_after
-                manifest[part]["rewritten"] = True
+        manifest[part]["files_after"] = len(partition_file_stats(src)["."]["files"])
+        manifest[part]["rewritten"] = True
+    shutil.rmtree(stage)
     return manifest
 
 
 _COMPACTING_SUFFIX = ".__compacting"
 _RETIRED_SUFFIX = ".__retired"
+# compact_partitions' staging root inside the dataset root: hidden, and
+# named so that _recover_swaps discards it like any orphaned temp
+_STAGE = ".stage" + _COMPACTING_SUFFIX
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _hidden_sibling(path: str, suffix: str) -> str:

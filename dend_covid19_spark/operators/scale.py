@@ -399,6 +399,9 @@ _SKEW_CONFS = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2KB",
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
     "spark.sql.autoBroadcastJoinThreshold": "-1",
+    # the reducer width matches the fact side's repartition(8): a
+    # one-reducer session would leave no partition to call skewed
+    "spark.sql.shuffle.partitions": "8",
 }
 
 

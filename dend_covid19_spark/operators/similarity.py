@@ -471,14 +471,6 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_RECALL_NPROBE = 6
 
 
-def _ivf_cents(spark: SparkSession, cents_rows: list) -> DataFrame:
-    """The trained codebook as one broadcastable ``cents`` row."""
-    return spark.createDataFrame(
-        [([(int(cid), [float(x) for x in vec]) for cid, vec in cents_rows],)],
-        "cents array<struct<cid:int,cvec:array<double>>>",
-    )
-
-
 # A query's probe list over a row holding ``qv`` and ``cents``: the
 # IVF_RECALL_NPROBE nearest centroids by the rounded L2 the assignment
 # uses (struct sort = (d, cid) ascending, so ties go to the smaller
@@ -595,7 +587,7 @@ def ann_ivf_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval anyway."""
     from pyspark.sql import Window
 
-    from .kmeans import SEMDEDUP_SEED_IDS, _trained_codebook
+    from .kmeans import SEMDEDUP_SEED_IDS, _codebook_row, _trained_codebook
 
     emb = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -614,7 +606,7 @@ def ann_ivf_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").alias("qv"),
             F.col("nrm").alias("qn"),
         )
-        .join(F.broadcast(_ivf_cents(spark, cents_rows)))
+        .join(F.broadcast(_codebook_row(spark, cents_rows)))
         .select("query_id", "qv", "qn", F.expr(_IVF_PROBE).alias("probed"))
     )
     cos = (
@@ -1084,7 +1076,7 @@ def _ivf_probe_topk(
     trained codebook, scanning only the query's IVF_RECALL_NPROBE
     nearest cells (ann_ivf_cell_probe says why the probe list is
     collected). Output: vec_id, cell, ``cols``, cosine."""
-    from .kmeans import SEMDEDUP_SEED_IDS, _trained_codebook
+    from .kmeans import SEMDEDUP_SEED_IDS, _codebook_row, _trained_codebook
 
     emb = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -1095,7 +1087,7 @@ def _ivf_probe_topk(
     q_row = (
         emb.where(F.col("vec_id") == query_id)
         .select(F.col("v").alias("qv"))
-        .join(F.broadcast(_ivf_cents(spark, cents_rows)))
+        .join(F.broadcast(_codebook_row(spark, cents_rows)))
         .select("qv", F.expr(_IVF_PROBE).alias("probed"))
         .collect()
     )[0]

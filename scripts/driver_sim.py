@@ -11,10 +11,15 @@ Usage:
     SPARK_GRAFT_SIM_SF=/root/testdata/sf0.001 python scripts/driver_sim.py
     python scripts/driver_sim.py name1 name2 ...     # only these queries
     python scripts/driver_sim.py --first50           # driver's checked window
+    python scripts/driver_sim.py --master local[1] --conf spark.sql.shuffle.partitions=1 name1
+
+``--master`` (default ``local[8]``, the driver's) and any number of
+``--conf key=value`` set up the session; query names follow them.
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
 import sys
@@ -41,11 +46,16 @@ def norm(v):
 
 
 def main() -> int:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    ap = argparse.ArgumentParser(description="driver oracle check")
+    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--conf", action="append", default=[], metavar="KEY=VALUE")
+    ap.add_argument("--first50", action="store_true")
+    ap.add_argument("names", nargs="*")
+    opts = ap.parse_args()
+    builder = SparkSession.builder.master(opts.master).config("spark.ui.enabled", "false")
+    for kv in opts.conf:
+        builder = builder.config(*kv.split("=", 1))
+    spark = builder.getOrCreate()
     import __spark_entry__ as contract
 
     con = duckdb.connect()
@@ -60,13 +70,12 @@ def main() -> int:
     assert n > 0, "entry() returned 0 rows"
 
     qs, osql = contract.queries(), contract.oracle_sql()
-    args = sys.argv[1:]
-    if args == ["--first50"]:
+    if opts.first50:
         qs = dict(list(qs.items())[:50])
-    elif args:
-        unknown = [a for a in args if a not in qs]
+    elif opts.names:
+        unknown = [a for a in opts.names if a not in qs]
         assert not unknown, f"unknown query names: {unknown}"
-        qs = {a: qs[a] for a in args}
+        qs = {a: qs[a] for a in opts.names}
     fails: list[str] = []
     for name, fn in sorted(qs.items()):
         try:

@@ -539,11 +539,9 @@ def test_compact_partitions_rejects_escaping_touched_paths(spark, tmp_path):
 
 
 def test_compact_partitions_pool_saturated_many_breaching(spark, tmp_path):
-    """The independent per-partition rewrites run overlapped from a
-    bounded driver thread pool; with more breaching partitions than
-    pool workers every partition must still be rewritten exactly once,
-    the manifest must record all of them in deterministic (sorted)
-    order, and no swap debris may remain."""
+    """With many breaching partitions every partition must still be
+    rewritten exactly once, the manifest must record all of them in
+    deterministic (sorted) order, and no swap debris may remain."""
     import os
 
     from pyspark.sql import functions as F
@@ -558,12 +556,10 @@ def test_compact_partitions_pool_saturated_many_breaching(spark, tmp_path):
         "bucket", (F.col("o_orderkey") % 12).cast("int")
     )
     n_rows = orders.count()
-    # all 12 buckets fragmented (3 files each) with a pool of 4 workers
+    # all 12 buckets fragmented (3 files each)
     orders.repartition(3).write.partitionBy("bucket").parquet(root)
 
-    manifest = compact_partitions(
-        spark, root, max_files=1, max_concurrent_rewrites=4
-    )
+    manifest = compact_partitions(spark, root, max_files=1)
     post = partition_file_stats(root)
 
     assert list(manifest) == sorted(manifest)
@@ -575,3 +571,54 @@ def test_compact_partitions_pool_saturated_many_breaching(spark, tmp_path):
         name.endswith(("__compacting", "__retired")) for name in os.listdir(root)
     )
     assert spark.read.parquet(root).count() == n_rows
+
+
+def _fragmented_buckets(spark, root: str, n_buckets: int):
+    """orders written under ``bucket=0..n_buckets-1``, 3 files each."""
+    from pyspark.sql import functions as F
+
+    orders = load_table(spark, "orders", SF_DIR).withColumn(
+        "bucket", (F.col("o_orderkey") % n_buckets).cast("int")
+    )
+    orders.repartition(3).write.partitionBy("bucket").parquet(root)
+    return orders
+
+
+def test_compact_partitions_job_count_is_constant(spark, tmp_path):
+    """One rewrite covers every breaching leaf: compacting one leaf and
+    compacting eight launch the same number of jobs (counted by job id,
+    so jobs from any thread count)."""
+    from test_profile_query import _profile_query
+
+    from dend_covid19_spark.operators.maintenance import compact_partitions
+
+    last_job_id = _profile_query().last_job_id
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (1, 8):
+        root = str(tmp_path / f"b{n}")
+        _fragmented_buckets(spark, root, n)
+        before = last_job_id(sc)
+        manifest = compact_partitions(spark, root, max_files=1)
+        jobs[n] = last_job_id(sc) - before
+        assert sum(r["rewritten"] for r in manifest.values()) == n
+    assert jobs[1] == jobs[8], jobs
+
+
+def test_compact_partitions_splits_a_leaf_to_its_budget(spark, tmp_path):
+    """A leaf over ``target_file_bytes`` is rewritten to between 1 and
+    ceil(bytes / target) files (whole input files per output file), and
+    the rows are unchanged."""
+    from dend_covid19_spark.operators.maintenance import compact_partitions
+
+    root = str(tmp_path / "part")
+    orders = _fragmented_buckets(spark, root, 2)
+    want = sorted(map(tuple, orders.collect()))
+    manifest = compact_partitions(spark, root, max_files=1, target_file_bytes=1 << 12)
+    budgets = {p: -(-r["bytes_before"] // (1 << 12)) for p, r in manifest.items()}
+    assert max(budgets.values()) >= 2, budgets
+    for p, r in manifest.items():
+        assert r["rewritten"]
+        assert 1 <= r["files_after"] <= budgets[p], (p, r)
+    got = spark.read.parquet(root).select(*orders.columns)
+    assert sorted(map(tuple, got.collect())) == want

@@ -817,7 +817,10 @@ def test_drains_go_through_drain():
     hand-copied drains and stagers those two replaced. Widths come from
     bytes by one rule, ``catalog._bytes_width``: only it reads the
     advisory size and the shuffle width, only the session, the cut
-    scope and the drain set that width, and no env knob fixes it."""
+    scope and the drain set that width, and no env knob fixes it. The
+    one fixed width is the AQE skew demo's (``scale._SKEW_CONFS``): its
+    split needs more than one reducer, so it scopes 8, the width of its
+    fact side's ``repartition(8)``."""
     root = pathlib.Path(dend_covid19_spark.__file__).parent
     files = list(root.rglob("*.py"))
 
@@ -837,17 +840,20 @@ def test_drains_go_through_drain():
     assert owners('"spark.sql.shuffle.partitions"') == [
         "catalog.py: _bytes_width",
         "catalog.py: share_scope",
+        "operators/scale.py: <module>",
         "session.py: get_spark",
         "streaming/daily.py: drain",
     ]
 
 
 def test_query_bodies_go_through_their_helpers():
-    """Four query bodies exist once each: the events digest
+    """Six query bodies exist once each: the events digest
     (``ingest._events_digest``; the three variant digests keep their
     own aggregates), the LSH candidate pairs (``dedup._lsh_pairs`` over
-    the one published banding), the IVF probe list
-    (``similarity._IVF_PROBE``) and the bigram explode of the LM score
+    the one published banding), the MinHash estimate
+    (``dedup._minhash_scored``), the IVF probe list
+    (``similarity._IVF_PROBE``), the one-row codebook
+    (``kmeans._codebook_row``) and the bigram explode of the LM score
     (``textops.bigram_lm_scores``). A copy of any of them elsewhere
     would bring back the hand-copied query bodies they replaced."""
     root = pathlib.Path(dend_covid19_spark.__file__).parent
@@ -870,6 +876,10 @@ def test_query_bodies_go_through_their_helpers():
         "operators/similarity.py: <module>"
     ]
     assert owners("element_at(toks, i + 1) AS tok_b") == ["plans/textops.py: <module>"]
+    assert owners("zip_with(sig_a, sig_b") == ["operators/dedup.py: _minhash_scored"]
+    assert owners("cents array<struct<cid:int,cvec:array<double>>>") == [
+        "operators/kmeans.py: _codebook_row"
+    ]
 
 
 def test_daily_date_runs_three_jobs(spark, tmp_path):

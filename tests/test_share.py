@@ -53,6 +53,18 @@ def test_share_over_a_shuffle_launches_no_job(spark):
     assert cut.count() > 0  # the cut materializes in the first action
 
 
+def test_share_refuses_an_observed_plan(spark):
+    """Metrics observed below a lazy cut read as zero, so ``share``
+    refuses to cut a plan that holds an ``observe``; the frame it
+    returns can still be observed."""
+    observed = _per_part(spark).observe("below", F.count(F.lit(1)).alias("n"))
+    with pytest.raises(ValueError, match="observed plan"):
+        share(observed, SF_DIR, "lineitem")
+    share(_per_part(spark), SF_DIR, "lineitem").observe(
+        "above", F.count(F.lit(1)).alias("n")
+    )
+
+
 def test_share_keeps_hash_partitioning_at_its_width(spark):
     w = share_width(spark, SF_DIR, "lineitem")
     cut = share(_per_part(spark), SF_DIR, "lineitem")
